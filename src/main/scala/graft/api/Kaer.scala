@@ -987,11 +987,12 @@ final class Collection(
   /** Record ids removed by a delete into the index's TOMBSTONE sidecar
     * (r13) — the O(delta) alternative to rebuild-on-delete: the
     * inverted lists keep the dead rows physically, the sidecar counts
-    * them out of the coverage arithmetic, and query join-back (which
-    * equi-joins probed candidates to the live collection by id)
-    * already drops them from every result. Only ids the lists actually
-    * cover (id ≤ indexedLastId) are recorded; compaction happens on
-    * the next full rebuild. No-op without a persisted index. */
+    * them out of the coverage arithmetic, and [[queryApprox]] (which
+    * keeps only live collection rows whose id is among the probed
+    * candidates — a left semi join) already drops them from every
+    * result. Only ids the lists actually cover (id ≤ indexedLastId)
+    * are recorded; compaction happens on the next full rebuild. No-op
+    * without a persisted index. */
   /** Single-id form of [[recordTombstones]] (deleteOne /
     * findOneAndDelete — the id is already on the driver). */
   private def recordTombstoneId(id: Long): Unit =
@@ -1220,15 +1221,28 @@ final class Collection(
     * the nearest `nprobe` lists, apply the MQL filter to the probed
     * subset (the reference's pre-filter ∧ ANN composite with the same
     * candidate-restriction semantics — its HNSW also only filters what
-    * the index visits), then exact top-k among survivors. Join back to
-    * the collection row by id. Requires [[buildIndex]]. */
+    * the index visits), then exact top-k among survivors.
+    *
+    * Plan: the centroids are read on the driver (no Spark job), the
+    * probed lists are read with their known schema and project only
+    * `vec_id`, and the collection keeps its rows by a broadcast
+    * LEFT SEMI join on id. Building the DataFrame launches no job;
+    * running it launches two (the probe's broadcast, then the scan).
+    * Ids the lists hold but the collection no longer does (tombstones)
+    * and ids inserted after the last [[ensureIndex]] are not returned.
+    * Requires an index ([[ensureIndex]] / [[buildIndex]]). */
   def queryApprox(document: String, k: Int, nprobe: Int = 4,
       filterJson: String = null): DataFrame = {
+    require(nprobe >= 1, s"queryApprox needs nprobe >= 1, got $nprobe")
+    val idx = indexDir
+    val cents = new Path(idx, "centroids")
+    require(cents.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      .exists(cents), s"collection '$name' has no IVF index — " +
+      "queryApprox needs one; call ensureIndex() first")
     val qv = embedder.embedOne(document)
-    val probed = graft.operators.IvfIndex.probeCandidates(spark,
-        new Path(dir, "index").toString, qv, nprobe)
+    val probed = graft.operators.IvfIndex.probeIds(spark, idx, qv, nprobe)
       .select(col("vec_id").as(Schema.IdCol))
-    val base = df.join(broadcast(probed), Schema.IdCol)
+    val base = df.join(broadcast(probed), Seq(Schema.IdCol), "left_semi")
     val filtered = if (filterJson == null || filterJson.trim.isEmpty) base
     else base.filter(MqlFilter.toColumn(filterJson,
       MqlFilter.JsonResolver(col(Schema.MetaCol))))

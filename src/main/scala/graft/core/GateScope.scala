@@ -36,6 +36,10 @@ object GateScope {
     df
   }
 
+  /** Whether an RDD id is a pinned session cache (StorageBridge.release
+    * refuses to drop those). */
+  def isPinned(rddId: Int): Boolean = pinned.contains(rddId)
+
   /** Gate boundary: drop every non-pinned persistent RDD's blocks
     * (async — the freed memory matters to the NEXT gate's GC, not to
     * this call). */

@@ -125,12 +125,30 @@ object IvfIndex {
   }
 
   /** Persisted centroids of an existing index, in cid order — the k-sized
-    * driver-side read shared by [[appendTail]] and probe selection. */
+    * driver-side read shared by [[appendTail]] and probe selection. The
+    * table is a few KB in one file, so it is read on the driver with
+    * parquet-hadoop's record reader: no Spark job, no schema inference.
+    * Columns are found by name (`cid` BIGINT, `cv` the 3-level parquet
+    * LIST of FLOAT that [[build]] writes). */
   def readCentroids(s: SparkSession, indexDir: String)
-      : Seq[(Long, Array[Float])] =
-    s.read.parquet(s"$indexDir/centroids").collect()
-      .map(r => (r.getLong(0), r.getSeq[Float](1).toArray))
-      .sortBy(_._1).toSeq
+      : Seq[(Long, Array[Float])] = {
+    import org.apache.parquet.hadoop.ParquetReader
+    import org.apache.parquet.hadoop.example.GroupReadSupport
+    val conf = s.sparkContext.hadoopConfiguration
+    val dir = new org.apache.hadoop.fs.Path(s"$indexDir/centroids")
+    dir.getFileSystem(conf).listStatus(dir).toSeq.map(_.getPath)
+      .filterNot(p => p.getName.startsWith("_") || p.getName.startsWith("."))
+      .flatMap { f =>
+        val r = ParquetReader.builder(new GroupReadSupport, f)
+          .withConf(conf).build()
+        try Iterator.continually(r.read()).takeWhile(_ != null).map { g =>
+          val cv = g.getGroup("cv", 0)
+          (g.getLong("cid", 0), Array.tabulate(cv.getFieldRepetitionCount(0))(
+            i => cv.getGroup(0, i).getFloat(0, 0)))
+        }.toVector
+        finally r.close()
+      }.sortBy(_._1)
+  }
 
   /** Incremental maintenance: assign `tail` (vec_id, embedding — rows NOT
     * yet covered by the index) against the index's OWN persisted centroids
@@ -166,8 +184,7 @@ object IvfIndex {
   }
 
   /** Driver-side squared L2 — same double math + index fold order as the
-    * column/oracle paths (shared by probe selection here and in
-    * Similarity.annIvf). */
+    * column/oracle paths (the distance behind [[nearestLists]]). */
   private[graft] def l2sqLocal(a: Array[Float], b: Array[Float]): Double = {
     var acc = 0.0; var i = 0
     while (i < a.length) {
@@ -176,19 +193,35 @@ object IvfIndex {
     acc
   }
 
-  /** Candidate rows of the `nprobe` nearest lists — no ordering, no
-    * limit: callers that re-filter/re-rank (Collection.queryApprox)
-    * take this and avoid a pointless global sort of every probed row.
-    * The cid filter is a PARTITION filter — unprobed lists are pruned
-    * at file level. */
-  def probeCandidates(s: SparkSession, indexDir: String, q: Array[Float],
-      nprobe: Int): DataFrame = {
-    val probes = readCentroids(s, indexDir)
-      .map { case (cid, cv) => (cid, l2sqLocal(cv, q)) }
+  /** Probe selection: ids of the `nprobe` centroids nearest to `q`
+    * (driver-side [[l2sqLocal]]), nearest first, ties to the lower cid.
+    * `nprobe = cents.size` is the full probe order. */
+  private[graft] def nearestLists(cents: Seq[(Long, Array[Float])],
+      q: Array[Float], nprobe: Int): Seq[Long] =
+    cents.map { case (cid, cv) => (cid, l2sqLocal(cv, q)) }
       .sortBy { case (cid, d) => (d, cid) }.take(nprobe).map(_._1)
+
+  /** Candidate rows of the `nprobe` nearest lists, every list column
+    * plus `cid` — no ordering, no limit, for callers that re-rank on
+    * the list rows themselves ([[probe]]). The cid filter is a
+    * PARTITION filter — unprobed lists are pruned at file level. */
+  def probeCandidates(s: SparkSession, indexDir: String, q: Array[Float],
+      nprobe: Int): DataFrame =
     s.read.parquet(s"$indexDir/lists")
-      .filter(col("cid").isin(probes: _*))
-  }
+      .filter(col("cid").isin(nearestLists(readCentroids(s, indexDir), q,
+        nprobe): _*))
+
+  /** Ids (`vec_id`) of the `nprobe` nearest lists, for callers that
+    * join back to the source rows (Collection.queryApprox). The lists
+    * are read with their known schema — `vec_id` BIGINT plus the `cid`
+    * partition column — so building this DataFrame infers nothing and
+    * launches no Spark job; the same partition pruning applies. */
+  private[graft] def probeIds(s: SparkSession, indexDir: String,
+      q: Array[Float], nprobe: Int): DataFrame =
+    s.read.schema("vec_id BIGINT, cid BIGINT").parquet(s"$indexDir/lists")
+      .filter(col("cid").isin(nearestLists(readCentroids(s, indexDir), q,
+        nprobe): _*))
+      .select("vec_id")
 
   /** Probe + exact top-k within the probed lists (TakeOrderedAndProject
     * over the pruned scan). Projects every non-index column through. */
@@ -288,9 +321,7 @@ object IvfIndex {
       q: Array[Float], k: Int, nprobe: Int, budget: Int,
       excludeId: Long = -1L): DataFrame = {
     val centsF = readCentroids(s, indexDir)
-    val probes = centsF
-      .map { case (cid, cv) => (cid, l2sqLocal(cv, q)) }
-      .sortBy { case (cid, d) => (d, cid) }.take(nprobe).map(_._1)
+    val probes = nearestLists(centsF, q, nprobe)
     val cd = centsF.map(_._2.map(_.toDouble)).toArray
     val qlit = array(q.map(lit(_)): _*)
     val cand = s.read.parquet(s"$indexDir/lists")

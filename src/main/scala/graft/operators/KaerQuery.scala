@@ -88,8 +88,9 @@ object KaerQuery {
     * probed: ensureIndex → queryApprox(nprobe = nlist). Full probing
     * makes the index exact, so this shares kaer_query's oracle — what
     * it adds to the gate is the index build + probe machinery end to
-    * end (KMeans fit, partitioned lists, pruned probe scan, id
-    * join-back). */
+    * end (KMeans fit, partitioned lists, driver-side centroid read,
+    * pruned id-only probe scan, broadcast semi-join back to the
+    * collection). */
   def flagshipIndexed(s: SparkSession, dir: String): DataFrame = {
     val coll = openOrBuild(s, dir)
     val NList = 8

@@ -327,9 +327,7 @@ object Quantize {
   def annIvfPq(s: SparkSession, dir: String): DataFrame = {
     val e = s.read.parquet(s"$dir/embeddings.parquet")
     val (centsF, qF) = IvfIndex.fixedCentroidsAndQuery(e)
-    val probes = centsF
-      .map { case (cid, cv) => (cid, IvfIndex.l2sqLocal(cv, qF)) }
-      .sortBy { case (cid, d) => (d, cid) }.take(4).map(_._1)
+    val probes = IvfIndex.nearestLists(centsF, qF, 4)
     val cents: Array[Array[Double]] =
       centsF.map(_._2.map(_.toDouble)).toArray
     val q: Array[Double] = qF.map(_.toDouble)
@@ -361,9 +359,7 @@ object Quantize {
   def annIvfSq(s: SparkSession, dir: String): DataFrame = {
     val e = s.read.parquet(s"$dir/embeddings.parquet")
     val (centsF, qF) = IvfIndex.fixedCentroidsAndQuery(e)
-    val probes = centsF
-      .map { case (cid, cv) => (cid, IvfIndex.l2sqLocal(cv, qF)) }
-      .sortBy { case (cid, d) => (d, cid) }.take(4).map(_._1)
+    val probes = IvfIndex.nearestLists(centsF, qF, 4)
     val qlit = array(qF.map(lit(_)): _*)
     e.withColumn("cid", IvfIndex.assignCid(centsF, col("embedding")))
       .filter(col("cid").isin(probes: _*) && col("vec_id") =!= 77)
@@ -438,9 +434,7 @@ object Quantize {
   def annIvfPqRes(s: SparkSession, dir: String): DataFrame = {
     val e = s.read.parquet(s"$dir/embeddings.parquet")
     val (centsF, qF) = IvfIndex.fixedCentroidsAndQuery(e)
-    val probes = centsF
-      .map { case (cid, cv) => (cid, IvfIndex.l2sqLocal(cv, qF)) }
-      .sortBy { case (cid, d) => (d, cid) }.take(4).map(_._1)
+    val probes = IvfIndex.nearestLists(centsF, qF, 4)
     val cents: Array[Array[Double]] =
       centsF.map(_._2.map(_.toDouble)).toArray
     val q: Array[Double] = qF.map(_.toDouble)

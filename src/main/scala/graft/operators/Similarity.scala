@@ -83,9 +83,7 @@ object Similarity {
 
     // driver-side probe selection + per-row broadcast argmin are the
     // shared IvfIndex helpers (one copy of the tie-break semantics)
-    val probes = cents
-      .map { case (cid, cv) => (cid, IvfIndex.l2sqLocal(cv, q)) }
-      .sortBy { case (cid, dq) => (dq, cid) }.take(4).map(_._1)
+    val probes = IvfIndex.nearestLists(cents, q, 4)
 
     val qlit = array(q.map(lit(_)): _*)
     e.withColumn("cid", IvfIndex.assignCid(cents.toSeq, col("embedding")))
@@ -120,9 +118,7 @@ object Similarity {
       .withColumn("d", l2Sq(col("embedding"), qlit))
       .orderBy(col("d").asc, col("vec_id").asc).limit(10)
       .select("vec_id").localCheckpoint()
-    val order = cents
-      .map { case (cid, cv) => (cid, IvfIndex.l2sqLocal(cv, q)) }
-      .sortBy { case (cid, dq) => (dq, cid) }.map(_._1)
+    val order = IvfIndex.nearestLists(cents, q, cents.size)
     Seq(1, 2, 4, 8, 16).map { np =>
       val probes = order.take(np)
       val cand = assigned.filter(col("cid").isin(probes: _*))

@@ -26,10 +26,15 @@ object StorageBridge {
     }
 
   /** Drop the storage blocks of a localCheckpoint'ed Dataset NOW
-    * (async). No-op for non-checkpoint plans. The Dataset must never
-    * be evaluated again afterwards. */
+    * (async). No-op for non-checkpoint plans, and a logged no-op for a
+    * checkpoint [[_root_.graft.core.GateScope.pin]]ned as a session
+    * cache: later gates still read it, and it cannot be recomputed.
+    * Otherwise the Dataset must never be evaluated again afterwards. */
   def release(df: Dataset[_]): Unit =
     df.queryExecution.analyzed match {
+      case l: LogicalRDD if _root_.graft.core.GateScope.isPinned(l.rdd.id) =>
+        System.err.println(s"[storage] release of pinned checkpoint " +
+          s"rdd ${l.rdd.id} skipped: it is a session cache")
       case l: LogicalRDD => l.rdd.unpersist(blocking = false)
       case _ => ()
     }

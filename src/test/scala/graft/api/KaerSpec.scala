@@ -158,6 +158,85 @@ class KaerSpec extends SparkTestBase {
       ids.mkString(","))
   }
 
+  test("queryApprox is loud on bad input: no IVF index, nprobe < 1") {
+    val c = newSession(tmpDir("kaer-ivf-loud")).createCollection("v")
+    c.insert(Data().withDocuments((0 until 8).map(i => s"loud doc $i")))
+    val noIndex = intercept[IllegalArgumentException] {
+      c.queryApprox("loud doc 3", 2)
+    }
+    assert(noIndex.getMessage.contains("ensureIndex()"), noIndex.getMessage)
+    c.ensureIndex(nlist = 2, iters = 1)
+    val zero = intercept[IllegalArgumentException] {
+      c.queryApprox("loud doc 3", 2, nprobe = 0)
+    }
+    assert(zero.getMessage.contains("nprobe"), zero.getMessage)
+    assert(c.queryApprox("loud doc 3", 2, nprobe = 1).collect().nonEmpty)
+  }
+
+  test("queryApprox: no Spark job while building, at most 2 when run; " +
+      "a job-free centroid read; tombstone and tail semantics kept") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val root = tmpDir("kaer-ivf-jobs")
+    val c = newSession(root).createCollection("v")
+    c.insert(Data()
+      .withDocuments((0 until 40).map(i => s"job doc $i topic ${i % 5}"))
+      .withMetadatas((0 until 40).map(i => Map[String, Any]("g" -> i))))
+    c.ensureIndex(nlist = 4, iters = 2)
+    // the driver-side read equals Spark's read of the same table, bit
+    // for bit, in cid order
+    val cents = graft.operators.IvfIndex.readCentroids(spark, s"$root/v/index")
+    val viaSpark = spark.read.parquet(s"$root/v/index/centroids").collect()
+      .map(r => (r.getLong(0), r.getSeq[Float](1).toArray)).sortBy(_._1)
+    def bits(cs: Seq[(Long, Array[Float])]) =
+      cs.map { case (cid, cv) =>
+        (cid, cv.map(java.lang.Float.floatToRawIntBits).toSeq) }
+    assert(cents.size == 4 && bits(cents) == bits(viaSpark.toSeq))
+
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    def jobsOf[T](body: => T): (T, Int) = {
+      org.apache.spark.graft.ListenerBridge.drain(sc)
+      jobs.set(0)
+      val out = body
+      org.apache.spark.graft.ListenerBridge.drain(sc)
+      (out, jobs.get)
+    }
+    sc.addSparkListener(listener)
+    try {
+      val f = """{"g": {"$gte": 5}}"""
+      val (q, built) = jobsOf(c.queryApprox("job doc 12 topic 2", 5, 2, f))
+      assert(built == 0, s"building queryApprox launched $built jobs")
+      assert(q.queryExecution.optimizedPlan.toString.contains("LeftSemi"))
+      val (_, ran) = jobsOf(q.collect())
+      assert(ran <= 2, s"queryApprox collect launched $ran jobs")
+      // the known-schema probe still prunes lists by partition
+      val p = q.queryExecution.executedPlan.toString
+      assert("PartitionFilters: \\[[^\\]]*cid".r.findFirstIn(p).nonEmpty, p)
+    } finally sc.removeSparkListener(listener)
+
+    def ids(df: org.apache.spark.sql.DataFrame) =
+      df.select("_m_id").collect().map(_.getLong(0)).toSeq
+    // full probe: the index is exact, filtered or not
+    for (f <- Seq(null, """{"g": {"$lt": 30}}""")) {
+      val exact = ids(c.query("job doc 7 topic 2", 6, f))
+      assert(ids(c.queryApprox("job doc 7 topic 2", 6, 4, f)) == exact)
+    }
+    // tombstoned ids (still in the lists) are never returned
+    assert(c.delete("""{"g": {"$gte": 10, "$lt": 15}}""") == 5L)
+    val all = ids(c.queryApprox("job doc 12 topic 2", 100, 4))
+    assert(all.size == 35 && !all.exists((11L to 15L).contains), all)
+    // ids inserted after the last ensureIndex are not in the lists, so
+    // they are not returned, though exact search finds them
+    c.insert(Data().withDocuments(Seq("job doc 12 topic 2")))
+    assert(ids(c.query("job doc 12 topic 2", 1)) == Seq(41L))
+    val after = ids(c.queryApprox("job doc 12 topic 2", 100, 4))
+    assert(after == all, after)
+  }
+
   test("ensureIndex reuses a valid persisted index, rebuilds a stale one") {
     val root = tmpDir("kaer-ensure")
     val k = newSession(root)

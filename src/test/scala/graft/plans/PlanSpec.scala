@@ -1150,22 +1150,25 @@ class PlanSpec extends SparkTestBase {
     // parquet source, not a LocalRelation, so the filter shape survives
     val dir = java.nio.file.Files
       .createTempDirectory("mqlmixed").toString
-    spark.range(0, 100)
-      .selectExpr("id", "to_json(named_struct('k', id % 10)) AS props")
-      .write.mode("overwrite").parquet(dir)
-    val df = spark.read.parquet(dir)
-    val out = graft.filter.MqlPipeline.aggregate(df, col("props"),
-      """[{"$match": {"id": {"$gt": 50}, "k": {"$gte": 7}}}]""")
-    val p = plan(out)
-    // pre-split, the WHOLE predicate (id conjunct included) sat inside
-    // the forall lambda; now the plan is <plain id conjunct> AND forall
-    assert(p.contains("AND forall"), p)
-    // the typed conjunct never references the parsed document
-    assert(p.indexOf("id#") < p.indexOf("forall"), p)
-    // the document half still binds exactly ONE parse per row
-    assert("parseJson".r.findAllIn(p).length == 1, p)
-    // value identity with the relational computation
-    assert(out.count() ==
-      df.filter("id > 50 AND id % 10 >= 7").count())
+    try {
+      spark.range(0, 100)
+        .selectExpr("id", "to_json(named_struct('k', id % 10)) AS props")
+        .write.mode("overwrite").parquet(dir)
+      val df = spark.read.parquet(dir)
+      val out = graft.filter.MqlPipeline.aggregate(df, col("props"),
+        """[{"$match": {"id": {"$gt": 50}, "k": {"$gte": 7}}}]""")
+      val p = plan(out)
+      // pre-split, the WHOLE predicate (id conjunct included) sat inside
+      // the forall lambda; now the plan is <plain id conjunct> AND forall
+      assert(p.contains("AND forall"), p)
+      // the typed conjunct never references the parsed document
+      assert(p.indexOf("id#") < p.indexOf("forall"), p)
+      // the document half still binds exactly ONE parse per row
+      assert("parseJson".r.findAllIn(p).length == 1, p)
+      // value identity with the relational computation
+      assert(out.count() ==
+        df.filter("id > 50 AND id % 10 >= 7").count())
+    } finally org.apache.commons.io.FileUtils.deleteDirectory(
+      new java.io.File(dir))
   }
 }
