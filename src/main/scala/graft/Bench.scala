@@ -211,6 +211,7 @@ object Bench {
     // so a payer gate's min reflects its cache-warm cost; the
     // "cache_payers" map says which gate paid which cache so per-gate
     // numbers stay interpretable either way.
+    // With min_of > 1, every per-gate minimum is SessionMemo-warm.
     val minOf = math.max(1,
       sys.env.getOrElse("SPARK_GRAFT_MIN_OF", "1").toInt)
     // SPARK_GRAFT_ONLY=a,b,c: benchmark a subset (scale probes, local

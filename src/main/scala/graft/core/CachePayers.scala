@@ -1,12 +1,13 @@
 package graft.core
 
-/** Bench-interpretability registry for the session caches (BPE merges,
-  * co-purchase edges, basket stats, …): per-gate bench numbers are
-  * order-dependent when a shared deterministic cache exists — the FIRST
-  * gate in a family pays the build, its siblings ride — so the bench
-  * records WHICH gate paid each cache (`"cache_payers"` in the detail
-  * line) instead of leaving the reader to reverse-engineer the
-  * alphabetical run order.
+/** Bench-interpretability registry for the [[SessionMemo]] entries
+  * (near-dup and exact pair sets, BPE merges, basket stats, …): per-gate
+  * bench numbers are order-dependent when a shared deterministic entry
+  * exists — the FIRST gate that needs it pays the build, its siblings
+  * ride — so the bench records WHICH gate paid each entry
+  * (`"cache_payers"` in the detail line) instead of leaving the reader
+  * to reverse-engineer the alphabetical run order. SessionMemo records
+  * the payer on every miss; no other code calls [[paid]].
   *
   * Zero-coupling contract: callers that never set a current gate (unit
   * tests, Verify, library users) pay nothing — `paid` is a no-op when
@@ -27,8 +28,8 @@ object CachePayers {
     GateScope.flip()
   }
 
-  /** Cache build lambdas: record that the current gate (if any) paid
-    * for `cache`. First writer wins — exactly the gate that built it. */
+  /** Record that the current gate (if any) paid for `cache`. First
+    * writer wins — exactly the gate that built it. */
   def paid(cache: String): Unit = {
     val g = current.get()
     if (g != null) payers.putIfAbsent(cache, g)

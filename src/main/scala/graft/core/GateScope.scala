@@ -1,6 +1,6 @@
 package graft.core
 
-import org.apache.spark.sql.{Dataset, SparkSession}
+import org.apache.spark.sql.SparkSession
 
 /** Gate-boundary storage release (r19, guide §5): every
   * `localCheckpoint()` in an operator parks its materialized partitions
@@ -10,44 +10,28 @@ import org.apache.spark.sql.{Dataset, SparkSession}
   * until the r18 driver measured 10-30 s GC stalls per dedup gate.
   * This makes the release deterministic: when the bench marks the next
   * gate current ([[CachePayers.setCurrent]] — called OUTSIDE the timed
-  * region), every persistent RDD except the explicitly [[pin]]ned
-  * session caches is dropped. A finished gate's checkpoints have no
-  * remaining consumers by construction (the bench discards each gate's
-  * DataFrame after its one noop write), so the release cannot be
-  * observed by any later gate.
+  * region), every persistent RDD is dropped. A finished gate's
+  * checkpoints have no remaining consumers (the bench discards each
+  * gate's DataFrame after its one noop write), and nothing shared
+  * across gates lives in the block manager: session state is a
+  * [[SessionMemo]], whose frames are scratch parquet. The released ids
+  * go to stderr, so a destroyed cache is diagnosable.
   *
   * Zero-coupling contract (the CachePayers discipline): callers that
   * never set a current gate — unit tests, Verify, library users — never
-  * trigger a release, and pinning is only bookkeeping. Results are
-  * never affected either way; only when blocks are freed. */
+  * trigger a release. Results are never affected; only when blocks are
+  * freed. */
 object GateScope {
 
-  /** RDD ids of session-cached checkpoints that later gates re-read
-    * (co-purchase edges, basket stats): NEVER released — a released
-    * checkpoint cannot be recomputed. */
-  private val pinned =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
-
-  /** Pin a session-cached checkpointed Dataset against gate-boundary
-    * release. Returns `df` so cache-build sites can wrap in place. */
-  def pin[T](df: Dataset[T]): Dataset[T] = {
-    org.apache.spark.sql.graft.StorageBridge.checkpointRddId(df)
-      .foreach(pinned.add(_))
-    df
-  }
-
-  /** Whether an RDD id is a pinned session cache (StorageBridge.release
-    * refuses to drop those). */
-  def isPinned(rddId: Int): Boolean = pinned.contains(rddId)
-
-  /** Gate boundary: drop every non-pinned persistent RDD's blocks
-    * (async — the freed memory matters to the NEXT gate's GC, not to
-    * this call). */
+  /** Gate boundary: drop every persistent RDD's blocks (async — the
+    * freed memory matters to the NEXT gate's GC, not to this call), and
+    * log their ids when there were any. */
   private[core] def flip(): Unit =
     for (s <- SparkSession.getDefaultSession) {
-      val sc = s.sparkContext
-      sc.getPersistentRDDs.valuesIterator.foreach { rdd =>
-        if (!pinned.contains(rdd.id)) rdd.unpersist(blocking = false)
-      }
+      val rdds = s.sparkContext.getPersistentRDDs.values.toSeq.sortBy(_.id)
+      rdds.foreach(_.unpersist(blocking = false))
+      if (rdds.nonEmpty)
+        System.err.println(
+          s"[gate] released persistent rdd ${rdds.map(_.id).mkString(",")}")
     }
 }

@@ -109,26 +109,21 @@ object Bpe {
     out.result()
   }
 
-  /** Merge tables learned per corpus dir this session — bpe_train and
-    * bpe_encode train the SAME merges from the SAME corpus, so the second
-    * gate reuses the first's result instead of re-running the 10-round
-    * iterative job (the one driver-roundtrip-heavy workload per round).
-    * Results are deterministic, so caching cannot change any gate's
-    * answer; keyed on the corpus dir. */
-  private val mergeCache =
-    new java.util.concurrent.ConcurrentHashMap[String, Seq[(Long, String, String, String, Long)]]()
-
-  /** Corpus word dict → [[Merges]] learned merges. */
+  /** Corpus word dict → [[Merges]] learned merges. bpe_train and
+    * bpe_encode train the same merges, and training is the 10-round
+    * iterative job. The merges depend only on documents.parquet, so
+    * they are a [[graft.core.SessionMemo]] value over that input: one
+    * training per session, and a regenerated corpus retrains. */
   def trainMerges(s: SparkSession, dir: String): Seq[(Long, String, String, String, Long)] =
-    mergeCache.computeIfAbsent(dir, _ => {
-      graft.core.CachePayers.paid("bpe_merges")
+    graft.core.SessionMemo.value(s, "bpe_merges",
+      Seq(s"$dir/documents.parquet")) {
       trainOn(
         docs(s, dir)
           .select(explode(tokens(col("text"))).as("word"))
           .groupBy("word").agg(count(lit(1)).as("freq"))
           .select(charSyms(col("word")).as("syms"), col("freq")),
         Merges)
-    })
+    }
 
   /** Gate: the learned merge table itself. */
   def bpeTrain(s: SparkSession, dir: String): DataFrame = {

@@ -12,8 +12,9 @@ import org.apache.spark.sql.functions._
   * whole query lifetime; PlanSpec asserts the exchange-free plan.
   *
   * Tables are managed (bucketBy requires saveAsTable); the session's
-  * warehouse dir holds them and names are per-sf-dir so scale factors
-  * don't collide.
+  * warehouse dir holds them, and each name carries its source's
+  * file-listing fingerprint, so neither two scale factors nor a
+  * regenerated source can share a table.
   */
 object Bucketing {
 
@@ -29,18 +30,19 @@ object Bucketing {
   private def bucketsFor(rows: Long): Int =
     math.max(8L, math.min(4096L, (rows + 999999L) / 1000000L)).toInt
 
-  private def suffix(dir: String): String =
-    graft.core.Scratch.key(dir)
-
   /** The in-memory catalog dies with the JVM but the warehouse files
     * don't. When the files are already there from a previous session,
     * re-register them as an EXTERNAL bucketed table (bucket-to-file
     * mapping is encoded in the file names Spark wrote) instead of paying
     * the bucketing shuffle again — that is the whole point of the
-    * layout: bucket once, reuse forever. */
+    * layout: bucket once, reuse forever. The name is `<base>_<source
+    * fingerprint>_<buckets>`: a source regenerated under the same dir,
+    * even with the same row count, gets a new table instead of the old
+    * one. */
   private def ensureTable(s: SparkSession, base: String, src: String,
       key: String, buckets: Int, srcRows: Long): String = {
-    val table0 = s"${base}_$buckets"
+    val table0 =
+      s"${base}_${graft.core.Scratch.fingerprint(s, src)}_$buckets"
     // explicit database qualification: the <warehouse>/<table> location
     // below only holds for the default database, so pin it rather than
     // depending on the session's current database
@@ -73,43 +75,33 @@ object Bucketing {
     table
   }
 
-  /** Warm-path memo (r17): once a (session, corpus) pair has ensured
-    * its tables, later calls run ZERO jobs — not even the footer
-    * counts (the r15 ADVICE ask). Keyed on the source FILE-LISTING
-    * fingerprint, not the path, so a corpus regenerated under the
-    * same dir re-ensures (one driver-side listStatus per call, no
-    * Spark job). Single slot — the round pattern is one session, one
-    * SF. */
-  @volatile private var warmMemo
-      : Option[(SparkSession, String, (String, String))] = None
-
+  /** The two bucketed table names. They depend on orders.parquet and
+    * lineitem.parquet, so they are a [[graft.core.SessionMemo]] value
+    * over both: a warm call runs zero jobs (two driver-side listings,
+    * no footer counts), and a regenerated source re-ensures. A catalog
+    * miss (an external DROP TABLE) re-ensures too; tableExists is a
+    * driver-side lookup, no job. */
   def ensureBucketed(s: SparkSession, dir: String): (String, String) = {
-    val memoKey = dir + "@" +
-      graft.core.Scratch.fingerprint(s, s"$dir/orders.parquet") + ":" +
-      graft.core.Scratch.fingerprint(s, s"$dir/lineitem.parquet")
-    warmMemo match {
-      // tableExists is a driver-side catalog lookup (no job): the memo
-      // must not trust through an external DROP TABLE
-      case Some((ms, mk, tables)) if (ms eq s) && mk == memoKey &&
-          s.catalog.tableExists(tables._1) &&
-          s.catalog.tableExists(tables._2) =>
-        tables
-      case _ =>
-        // ONE bucket count for both sides, sized by the larger table —
-        // a bucketed SMJ is exchange-free only when the counts MATCH.
-        // The counts feed ensureTable's Trust check too, so each
-        // source is counted exactly once per ENSURE (and only
-        // metadata-cheaply: parquet count() reads footers, not data).
-        val oRows = s.read.parquet(s"$dir/orders.parquet").count()
-        val lRows = s.read.parquet(s"$dir/lineitem.parquet").count()
-        val buckets = bucketsFor(math.max(oRows, lRows))
-        val ot = ensureTable(s, s"orders_b_${suffix(dir)}",
-          s"$dir/orders.parquet", "o_orderkey", buckets, oRows)
-        val lt = ensureTable(s, s"lineitem_b_${suffix(dir)}",
-          s"$dir/lineitem.parquet", "l_orderkey", buckets, lRows)
-        warmMemo = Some((s, memoKey, (ot, lt)))
-        (ot, lt)
-    }
+    val tables = graft.core.SessionMemo.value(s, "bucketed_tables",
+      Seq(s"$dir/orders.parquet", s"$dir/lineitem.parquet"))(ensure(s, dir))
+    if (s.catalog.tableExists(tables._1) && s.catalog.tableExists(tables._2))
+      tables
+    else ensure(s, dir)
+  }
+
+  private def ensure(s: SparkSession, dir: String): (String, String) = {
+    // ONE bucket count for both sides, sized by the larger table — a
+    // bucketed SMJ is exchange-free only when the counts MATCH. The
+    // counts feed ensureTable's Trust check too, so each source is
+    // counted exactly once per ensure (and only metadata-cheaply:
+    // parquet count() reads footers, not data).
+    val oRows = s.read.parquet(s"$dir/orders.parquet").count()
+    val lRows = s.read.parquet(s"$dir/lineitem.parquet").count()
+    val buckets = bucketsFor(math.max(oRows, lRows))
+    (ensureTable(s, "orders_b", s"$dir/orders.parquet", "o_orderkey",
+      buckets, oRows),
+      ensureTable(s, "lineitem_b", s"$dir/lineitem.parquet", "l_orderkey",
+        buckets, lRows))
   }
 
   /** The co-located join: revenue by order status, joining the two

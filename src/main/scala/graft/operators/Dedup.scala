@@ -286,38 +286,19 @@ object Dedup {
   def dedupMinhashLsh(s: SparkSession, dir: String): DataFrame =
     nearPairs(s, dir).orderBy("id_a", "id_b")
 
-  /** Round-scoped memo of the DEFAULT-DIAL verified near-dup pair set
-    * over [[nearCorpus]] (r19 — the [[exactPairs]] discipline applied
-    * to the other side of the audit): dedup_minhash_lsh, dedup_clusters,
-    * dedup_cluster_sizes and dedup_keep_best all derive from this SAME
-    * pair set, and each cold derivation re-runs the full
-    * shingle+minhash+bucket pipeline (~80 s of the r19 baseline cold
-    * pass across the four gates). Derived once per (session, corpus
-    * fingerprint), materialized through scratch PARQUET — never the
-    * block manager — and stored UNordered; every gate applies its own
-    * orderBy. The pair set is a pure function of (documents.parquet,
-    * dials), so the memo cannot change any gate's answer; the
-    * fingerprint key rebuilds on a regenerated corpus. */
-  @volatile private var nearPairsMemo
-      : Option[(SparkSession, String, DataFrame)] = None
+  /** The verified near-dup pair set over [[nearCorpus]] at the
+    * session's text-LSH dials: dedup_minhash_lsh, dedup_clusters,
+    * dedup_cluster_sizes and dedup_keep_best all derive from it, and a
+    * cold derivation re-runs the full shingle+minhash+bucket pipeline.
+    * It depends on documents.parquet and the (k, bands) dials, so it is
+    * a [[graft.core.SessionMemo]] frame over exactly those — a
+    * regenerated corpus or a mid-session dial change rebuilds. Stored
+    * unordered; every gate applies its own orderBy. */
   private def nearPairs(s: SparkSession, dir: String): DataFrame = {
-    val fp = graft.core.Scratch.fingerprint(s, s"$dir/documents.parquet")
-    // the pair set follows the session's text-LSH dials — key the memo
-    // (and the scratch dir) on them so a mid-session conf change can
-    // never serve a stale dial's pairs
     val (k, bands) = textDials(s)
-    val memoKey = s"$dir@$fp@k${k}b$bands"
-    nearPairsMemo match {
-      case Some((ms, md, df)) if (ms eq s) && md == memoKey => df
-      case _ =>
-        graft.core.CachePayers.paid("near_pairs")
-        val out = graft.core.Scratch.dir(
-          s"npairs-k${k}b$bands-${s.sparkContext.applicationId}-$fp", dir)
-        minhashPairs(nearCorpus(s, dir)).write.mode("overwrite").parquet(out)
-        val df = s.read.parquet(out)
-        nearPairsMemo = Some((s, memoKey, df))
-        df
-    }
+    graft.core.SessionMemo.frame(s, "near_pairs", "npairs",
+      Seq(s"$dir/documents.parquet"), k, bands)(
+      minhashPairs(nearCorpus(s, dir), k, bands))
   }
 
   /** INCREMENTAL near-dup detection — dedup a new batch against a
@@ -1164,42 +1145,15 @@ object Dedup {
   def dedupJaccardExact(s: SparkSession, dir: String): DataFrame =
     exactPairs(s, dir).orderBy("id_a", "id_b")
 
-  /** Round-scoped memo of the exact-Jaccard ground-truth pair set:
-    * dedup_jaccard_exact, dedup_lsh_eval and dedup_lsh_sweep all audit
-    * the SAME subject, so within one (session, corpus) it is derived
-    * once and localCheckpointed — a tiny pair set whose LINEAGE is the
-    * full corpus pass (the sweep's one-signature-pass economics applied
-    * across gates; sf10 r15: eval alone re-paid 60.5 s re-deriving it).
-    * Single slot: a different (session, dir) key rebuilds — the round
-    * pattern is every gate on one session and one SF. Stored UNordered;
-    * each gate applies its own orderBy (checkpoint partition order is
-    * not a row-order contract). */
-  @volatile private var exactPairsMemo
-      : Option[(SparkSession, String, DataFrame)] = None
-  private def exactPairs(s: SparkSession, dir: String): DataFrame = {
-    // memo + scratch are keyed on the CORPUS FINGERPRINT (file listing
-    // lengths/mtimes), not the path alone: a corpus regenerated under
-    // the same dir — even within one long-lived application — changes
-    // the fingerprint and rebuilds; applicationId additionally isolates
-    // concurrent applications' writes from each other
-    val fp = graft.core.Scratch.fingerprint(s, s"$dir/documents.parquet")
-    val memoKey = s"$dir@$fp"
-    exactPairsMemo match {
-      case Some((ms, md, df)) if (ms eq s) && md == memoKey => df
-      case _ =>
-        // materialize through scratch PARQUET, not the block manager: a
-        // localCheckpoint parks partitions in unified STORAGE memory,
-        // and the execution share it evicts made the prefix self-join
-        // spill 7.8 GB at sf10 — the pair set is tiny on disk and the
-        // read-back a plain scan
-        val out = graft.core.Scratch.dir(
-          s"jexact-${s.sparkContext.applicationId}-$fp", dir)
-        jaccardExactPlan(s, dir).write.mode("overwrite").parquet(out)
-        val df = s.read.parquet(out)
-        exactPairsMemo = Some((s, memoKey, df))
-        df
-    }
-  }
+  /** The exact-Jaccard ground-truth pair set: dedup_jaccard_exact,
+    * dedup_lsh_eval and dedup_lsh_sweep all audit it, and its lineage is
+    * the full corpus pass (sf10 r15: eval alone re-paid 60.5 s
+    * re-deriving it). It depends only on documents.parquet, so it is a
+    * [[graft.core.SessionMemo]] frame over that input. Stored
+    * unordered; each gate applies its own orderBy. */
+  private def exactPairs(s: SparkSession, dir: String): DataFrame =
+    graft.core.SessionMemo.frame(s, "exact_pairs", "jexact",
+      Seq(s"$dir/documents.parquet"))(jaccardExactPlan(s, dir))
 
   private def jaccardExactPlan(s: SparkSession, dir: String): DataFrame = {
     val ex = nearCorpus(s, dir).select(col("id"),

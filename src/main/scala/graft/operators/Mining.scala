@@ -55,39 +55,33 @@ object Mining {
     * key. All ratios are integer DIV in DECIMAL(38) — exact at any
     * corpus size, same device as the anomaly/chi-square gates.
     */
-  /** The shared basket statistics: distinct (basket, item), per-item
-    * basket counts, unordered co-occurrence pairs (≥2 floor — both
-    * consumers filter at-or-above it), and the basket total. Session-
-    * cached per corpus dir (the coPurchaseEdges/BPE precedent — the
-    * pair expansion is the dominant cost of BOTH mining gates and is
-    * deterministic, so caching cannot change any gate's answer). */
-  private val basketCache = new java.util.concurrent.ConcurrentHashMap[
-    String, (DataFrame, DataFrame, Long)]()
-
-  private[operators] def basketStats(s: SparkSession, dir: String)
-      : (DataFrame, DataFrame, Long) =
-    // keyed on (application, dir): a cached DataFrame is bound to the
-    // session that checkpointed it — a later session reusing the dir
-    // must rebuild, not inherit dead RDD blocks
-    basketCache.computeIfAbsent(
-      s"${s.sparkContext.applicationId}#$dir", _ => {
-      graft.core.CachePayers.paid("basket_stats")
-      // cross-gate cache: pin every checkpoint against gate-boundary
-      // release (GateScope) — later gates re-read these frames
-      val op = graft.core.GateScope.pin(t(s, dir, "lineitem")
-        .select(col("l_orderkey").as("ok"), col("l_partkey").as("pk"))
-        .distinct()
-        .localCheckpoint(true))
-      val itemCnt = graft.core.GateScope.pin(op.groupBy(col("pk"))
-        .agg(count(lit(1)).as("c_item")).localCheckpoint(true))
-      val pairCnt = graft.core.GateScope.pin(op.as("a").join(op.as("b"),
-          col("a.ok") === col("b.ok") && col("a.pk") < col("b.pk"))
-        .groupBy(col("a.pk").as("u"), col("b.pk").as("v"))
-        .agg(count(lit(1)).as("c_both"))
-        .filter(col("c_both") >= 2)
-        .localCheckpoint(true))
-      (itemCnt, pairCnt, op.select("ok").distinct().count())
-    })
+  /** The shared basket statistics: per-item basket counts, unordered
+    * co-occurrence pairs (≥2 floor — both consumers filter at-or-above
+    * it), and the basket total. The pair expansion is the dominant cost
+    * of both mining gates and of the co-purchase graph gates. Everything
+    * here depends only on lineitem.parquet, so each part is a
+    * [[graft.core.SessionMemo]] entry over that input: the frames as
+    * scratch parquet, the total in memory. */
+  private[graft] def basketStats(s: SparkSession, dir: String)
+      : (DataFrame, DataFrame, Long) = {
+    val in = Seq(s"$dir/lineitem.parquet")
+    def memo(part: String)(build: => DataFrame) =
+      graft.core.SessionMemo.frame(s, "basket_stats", s"basket-$part", in)(
+        build)
+    val op = memo("items")(t(s, dir, "lineitem")
+      .select(col("l_orderkey").as("ok"), col("l_partkey").as("pk"))
+      .distinct())
+    val itemCnt = memo("itemcnt")(op.groupBy(col("pk"))
+      .agg(count(lit(1)).as("c_item")))
+    val pairCnt = memo("paircnt")(op.as("a").join(op.as("b"),
+        col("a.ok") === col("b.ok") && col("a.pk") < col("b.pk"))
+      .groupBy(col("a.pk").as("u"), col("b.pk").as("v"))
+      .agg(count(lit(1)).as("c_both"))
+      .filter(col("c_both") >= 2))
+    val nBaskets = graft.core.SessionMemo.value(s, "basket_stats", in)(
+      op.select("ok").distinct().count())
+    (itemCnt, pairCnt, nBaskets)
+  }
 
   def assocRules(s: SparkSession, dir: String): DataFrame = {
     val (itemCnt, pairs2, nBaskets) = basketStats(s, dir)

@@ -96,31 +96,12 @@ private[graft] trait RelationalGraph { this: Relational.type =>
     trianglesOver(coPurchaseEdges(s, dir))
 
   /** The shared co-purchase edge set: part pairs co-ordered in ≥2
-    * distinct orders, undirected as (u < v). Session-cached per corpus
-    * dir (the [[Bpe]] merge-table precedent — the build is
-    * deterministic, so caching cannot change any gate's answer): the
-    * 600k-row pair generation is the dominant cost of BOTH graph
-    * gates, and triangles + kcore in one bench pass should pay it
-    * once. */
-  private val coPurchaseCache =
-    new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
-
+    * distinct orders, undirected as (u < v) — the basket pair counts
+    * ([[Mining.basketStats]], a session memo) without their count
+    * column. */
   private[graft] def coPurchaseEdges(s: SparkSession,
       dir: String): DataFrame =
-    // keyed on (application, dir) — same session-binding rationale as
-    // Mining.basketStats: checkpointed DataFrames die with their session
-    coPurchaseCache.computeIfAbsent(
-      s"${s.sparkContext.applicationId}#$dir", _ => {
-      graft.core.CachePayers.paid("co_purchase_edges")
-      // r19: the co-purchase edge set IS the basket pair-count frame
-      // minus its count column — the previous build re-ran the
-      // identical lineitem distinct + basket self-join + groupBy that
-      // Mining.basketStats already checkpoints (≥2 co-occurrence floor
-      // on both sides), costing a second ~3 s build and a duplicate
-      // checkpoint. A projection on the pinned basket checkpoint is
-      // row-identical (same join, same floor) and free.
-      graft.operators.Mining.basketStats(s, dir)._2.select("u", "v")
-    })
+    graft.operators.Mining.basketStats(s, dir)._2.select("u", "v")
 
   /** Bounded k-core peel over the co-purchase graph — the graph-hygiene
     * operator that strips low-connectivity fringe before community/
@@ -154,8 +135,8 @@ private[graft] trait RelationalGraph { this: Relational.type =>
         .join(keep.select(col("n").as("v")), "v", "left_semi")
         .select("u", "v").localCheckpoint(true)
       // superseded round's checkpoint has no consumer left (r19, §5);
-      // round 1 releases the peel's own entry checkpoint, never the
-      // pinned co-purchase cache (undIn itself is untouched)
+      // round 1 releases the peel's own entry checkpoint (undIn itself
+      // is untouched)
       org.apache.spark.sql.graft.StorageBridge.release(prev)
     }
     edges.select(col("u").as("n"))

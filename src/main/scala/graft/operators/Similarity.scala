@@ -439,32 +439,17 @@ object Similarity {
     * TakeOrderedAndProject; dense = broadcast-query kNN heap) and the
     * rank windows + full-outer fusion run on ≤ k1+k2 ROWS TOTAL — the
     * corpus is never touched again after the two heaps, so fusion cost
-    * is independent of corpus size. */
-  /** Round-scoped memo (r19 — the exactPairs/nearPairs discipline):
-    * rag_hybrid_rrf and rag_eval_metrics (whose fusion leg re-runs
-    * this whole pipeline — both retrieval legs included) derive from
-    * the SAME 10-row fused ranking, a pure function of
-    * (documents.parquet, embeddings.parquet). Built once per (session,
-    * corpus fingerprints), materialized through scratch parquet,
-    * stored UNordered; [[ragHybridRrf]] re-applies the fused order. */
-  @volatile private var rrfMemo
-      : Option[(SparkSession, String, DataFrame)] = None
-  private def rrfFused(s: SparkSession, dir: String): DataFrame = {
-    val fp = graft.core.Scratch.fingerprint(s, s"$dir/documents.parquet") +
-      "-" + graft.core.Scratch.fingerprint(s, s"$dir/embeddings.parquet")
-    val memoKey = s"$dir@$fp"
-    rrfMemo match {
-      case Some((ms, md, df)) if (ms eq s) && md == memoKey => df
-      case _ =>
-        graft.core.CachePayers.paid("rag_rrf")
-        val out = graft.core.Scratch.dir(
-          s"ragrrf-${s.sparkContext.applicationId}-$fp", dir)
-        rrfBuild(s, dir).write.mode("overwrite").parquet(out)
-        val df = s.read.parquet(out)
-        rrfMemo = Some((s, memoKey, df))
-        df
-    }
-  }
+    * is independent of corpus size.
+    *
+    * The unordered 10-row fused ranking depends only on
+    * documents.parquet and embeddings.parquet, so it is a
+    * [[graft.core.SessionMemo]] frame over both: rag_hybrid_rrf and
+    * rag_eval_metrics's fusion leg share one build per session;
+    * [[ragHybridRrf]] re-applies the fused order. */
+  private def rrfFused(s: SparkSession, dir: String): DataFrame =
+    graft.core.SessionMemo.frame(s, "rag_rrf", "ragrrf",
+      Seq(s"$dir/documents.parquet", s"$dir/embeddings.parquet"))(
+      rrfBuild(s, dir))
 
   def ragHybridRrf(s: SparkSession, dir: String): DataFrame =
     rrfFused(s, dir).orderBy(col("rrf").desc, col("doc_id").asc)

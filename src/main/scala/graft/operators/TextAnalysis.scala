@@ -237,30 +237,15 @@ object TextAnalysis {
     * input to the float formula is an exact integer (tf, dl, df, N,
     * Σdl); per-term scores sum in FIXED source order and round to 6
     * decimals, absorbing libm log ulp differences between engines (the
-    * quantile/stddev float stance). */
-  /** Round-scoped memo (r19 — the vocabCore discipline): the scan-path
-    * BM25 top-15 is computed by the bm25_search gate AND re-run inside
-    * the RRF fusion build (rag_hybrid_rrf / rag_eval_metrics's lexical
-    * leg). Pure function of documents.parquet; 15 rows; stored
-    * UNordered through scratch parquet, ranking order re-applied. */
-  @volatile private var bm25Memo
-      : Option[(SparkSession, String, DataFrame)] = None
-  def bm25Search(s: SparkSession, dir: String): DataFrame = {
-    val fp = graft.core.Scratch.fingerprint(s, s"$dir/documents.parquet")
-    val memoKey = s"$dir@$fp"
-    val cached = bm25Memo match {
-      case Some((ms, md, df)) if (ms eq s) && md == memoKey => df
-      case _ =>
-        graft.core.CachePayers.paid("bm25_scan")
-        val out = graft.core.Scratch.dir(
-          s"bm25-${s.sparkContext.applicationId}-$fp", dir)
-        bm25Build(s, dir).write.mode("overwrite").parquet(out)
-        val df = s.read.parquet(out)
-        bm25Memo = Some((s, memoKey, df))
-        df
-    }
-    cached.orderBy(col("bm25").desc, col("doc_id").asc)
-  }
+    * quantile/stddev float stance).
+    *
+    * The unordered top-15 depends only on documents.parquet, so it is a
+    * [[graft.core.SessionMemo]] frame over that input: bm25_search and
+    * the RRF fusion's lexical leg share one build per session. */
+  def bm25Search(s: SparkSession, dir: String): DataFrame =
+    graft.core.SessionMemo.frame(s, "bm25_scan", "bm25",
+      Seq(s"$dir/documents.parquet"))(bm25Build(s, dir))
+      .orderBy(col("bm25").desc, col("doc_id").asc)
 
   private[graft] def bm25Build(s: SparkSession, dir: String): DataFrame = {
     val terms = Seq("hash", "join", "merge")
@@ -768,32 +753,14 @@ object TextAnalysis {
         Window.orderBy(col("n").desc, col("token"))).cast("long"))
   }
 
-  /** Round-scoped memo of the learned vocabulary (r19 — the
-    * exactPairs/nearPairs discipline): build_vocab, encode_ids and
-    * decode_ids each re-ran the full-corpus token aggregation — FOUR
-    * evaluations per bench pass (decode's two broadcasts don't share
-    * the subtree). The vocab is a pure deterministic function of the
-    * corpus (count desc, token asc tiebreak), V=200 rows — built once
-    * per (session, corpus fingerprint), materialized through scratch
-    * parquet, consumers apply their own order (joins are
-    * order-insensitive; build_vocab orderBys vid). */
-  @volatile private var vocabMemo
-      : Option[(SparkSession, String, DataFrame)] = None
-  private def vocabCore(s: SparkSession, dir: String): DataFrame = {
-    val fp = graft.core.Scratch.fingerprint(s, s"$dir/documents.parquet")
-    val memoKey = s"$dir@$fp"
-    vocabMemo match {
-      case Some((ms, md, df)) if (ms eq s) && md == memoKey => df
-      case _ =>
-        graft.core.CachePayers.paid("vocab_core")
-        val out = graft.core.Scratch.dir(
-          s"vocab-${s.sparkContext.applicationId}-$fp", dir)
-        vocabBuild(s, dir).write.mode("overwrite").parquet(out)
-        val df = s.read.parquet(out)
-        vocabMemo = Some((s, memoKey, df))
-        df
-    }
-  }
+  /** The learned vocabulary (V=200 rows, count desc, token asc) depends
+    * only on documents.parquet, so it is a [[graft.core.SessionMemo]]
+    * frame over that input: build_vocab, encode_ids and decode_ids share
+    * one corpus token aggregation per session. Consumers apply their own
+    * order (joins are order-insensitive; build_vocab orders by vid). */
+  private def vocabCore(s: SparkSession, dir: String): DataFrame =
+    graft.core.SessionMemo.frame(s, "vocab_core", "vocab",
+      Seq(s"$dir/documents.parquet"))(vocabBuild(s, dir))
 
   def buildVocab(s: SparkSession, dir: String): DataFrame =
     vocabCore(s, dir).select("vid", "token", "n").orderBy("vid")

@@ -13,28 +13,17 @@ import org.apache.spark.sql.execution.LogicalRDD
   * driver pass measured 10-30 s per-gate GC stalls against it).
   * Releasing is only sound once every consumer of the checkpoint has
   * run: a released checkpoint CANNOT be recomputed (lineage was
-  * truncated) — callers own that proof. */
+  * truncated) — callers own that proof. Every call site releases a
+  * checkpoint local to one operator call; session state shared across
+  * calls is a [[_root_.graft.core.SessionMemo]] and never a
+  * checkpoint. */
 object StorageBridge {
 
-  /** Storage-backing RDD id of a localCheckpoint'ed Dataset (None for
-    * any other plan shape — callers use it to pin session-cached
-    * checkpoints against gate-boundary release). */
-  def checkpointRddId(df: Dataset[_]): Option[Int] =
-    df.queryExecution.analyzed match {
-      case l: LogicalRDD => Some(l.rdd.id)
-      case _ => None
-    }
-
   /** Drop the storage blocks of a localCheckpoint'ed Dataset NOW
-    * (async). No-op for non-checkpoint plans, and a logged no-op for a
-    * checkpoint [[_root_.graft.core.GateScope.pin]]ned as a session
-    * cache: later gates still read it, and it cannot be recomputed.
-    * Otherwise the Dataset must never be evaluated again afterwards. */
+    * (async). No-op for non-checkpoint plans. The Dataset must never be
+    * evaluated again afterwards. */
   def release(df: Dataset[_]): Unit =
     df.queryExecution.analyzed match {
-      case l: LogicalRDD if _root_.graft.core.GateScope.isPinned(l.rdd.id) =>
-        System.err.println(s"[storage] release of pinned checkpoint " +
-          s"rdd ${l.rdd.id} skipped: it is a session cache")
       case l: LogicalRDD => l.rdd.unpersist(blocking = false)
       case _ => ()
     }

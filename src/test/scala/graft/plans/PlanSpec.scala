@@ -170,6 +170,41 @@ class PlanSpec extends SparkTestBase {
     assert(jobs == 0, s"warm ensureBucketed ran $jobs Spark job(s)")
   }
 
+  test("bucketing: a source regenerated with the same row count is " +
+      "re-bucketed, never served stale") {
+    import graft.operators.Bucketing
+    import org.apache.spark.sql.functions.{col, concat, count, lit}
+    val dir = tmpDir("bucket-regen")
+    val orders = spark.read.parquet(s"$sf0001/orders.parquet")
+    orders.write.parquet(s"$dir/orders.parquet")
+    spark.read.parquet(s"$sf0001/lineitem.parquet")
+      .write.parquet(s"$dir/lineitem.parquet")
+    def direct() = spark.read.parquet(s"$dir/lineitem.parquet")
+      .join(spark.read.parquet(s"$dir/orders.parquet"),
+        col("l_orderkey") === col("o_orderkey"))
+      .groupBy("o_orderstatus").agg(count(lit(1)).as("n_items"))
+      .orderBy("o_orderstatus").collect().toSeq
+    def bucketed() = Bucketing.bucketedJoin(spark, dir)
+      .select("o_orderstatus", "n_items").collect().toSeq
+    val tables = collection.mutable.Set.empty[String]
+    try {
+      tables ++= Bucketing.ensureBucketed(spark, dir).productIterator
+        .map(_.toString)
+      assert(bucketed() == direct())
+      // same dir, same row count, different values
+      orders.withColumn("o_orderstatus", concat(lit("x"), col("o_orderstatus")))
+        .write.mode("overwrite").parquet(s"$dir/orders.parquet")
+      tables ++= Bucketing.ensureBucketed(spark, dir).productIterator
+        .map(_.toString)
+      val now = bucketed()
+      assert(now.forall(_.getString(0).startsWith("x")), now)
+      assert(now == direct())
+    } finally {
+      tables.foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
+      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
+    }
+  }
+
   test("kmeansFitMl (MLlib path): deterministic, and SSE beats raw seed vectors") {
     import graft.operators.IvfIndex
     import org.apache.spark.sql.functions.col
