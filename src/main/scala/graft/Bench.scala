@@ -1,14 +1,30 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.QueryExecution
+import scala.jdk.CollectionConverters._
 
-/** Per-round benchmark: runs every registered query on
-  * SPARK_GRAFT_SF_DIR and prints ONE JSON line with per-query seconds.
+/** Per-round benchmark: runs every registered query once, cold, on
+  * SPARK_GRAFT_SF_DIR in a [[GraftSession.local]] session and prints two
+  * JSON lines: a long detail line with per-gate numbers, then a short
+  * `total` line.
   *
   * Each query executes against the `noop` sink — full result
   * materialization on executors with zero sink cost — so scan/projection
   * queries can't be satisfied by column-pruned shortcuts the way a bare
   * `.count()` could (VERDICT r1 §wrong-9).
+  *
+  * Every gate's wall time splits into three parts ([[timeGate]]):
+  * build, the registered builder including its eager checkpoints and
+  * collects; plan, the analysis, optimization and physical planning of
+  * the noop write, read from that write's own QueryExecution; and exec,
+  * the rest (job launch and compute). The gate's Spark job count rides
+  * along. The detail line carries the split per gate (`"split"`), the
+  * total line its pass totals (`build_s`, `plan_s`, `exec_s`, `jobs`).
+  *
+  * Environment: SPARK_GRAFT_SF_DIR, SPARK_GRAFT_CPUS (via
+  * [[GraftSession]]), SPARK_GRAFT_WAIT_IDLE, SPARK_GRAFT_WAIT_IDLE_MAX_S,
+  * SPARK_GRAFT_ONLY, SPARK_GRAFT_SKIP and SPARK_GRAFT_PASS_RETRY.
   */
 object Bench {
   /** 1-minute load average per hardware thread, sampled via the OS mx
@@ -108,16 +124,17 @@ object Bench {
     * duckdb adds ~0.03; a concurrent sbt build adds 0.3+. */
   private val ExtLoadGate = 0.15
 
-  /** Per-gate shuffle-write and spill accounting (r14, VERDICT r13
-    * item 9): a stage-completion listener sums shuffle bytes written
-    * and disk spill across every stage a gate ran — the two numbers
-    * that predict 100 TB behavior (a shuffle-heavy gate is the one
-    * whose exchange becomes the bottleneck at scale; ANY spill on
-    * sf0.1 data means executor memory was the constraint already).
-    * The listener bus is drained between gates so async events land
-    * on the gate that caused them. */
-  private final class StageBytes
-      extends org.apache.spark.scheduler.SparkListener {
+  /** Per-gate accounting listener: shuffle-write and spill (r14, VERDICT
+    * r13 item 9 — a shuffle-heavy gate is the one whose exchange becomes
+    * the bottleneck at scale; ANY spill on sf0.1 data means executor
+    * memory was the constraint already), GC and peak execution memory,
+    * the number of Spark jobs started, and — as a QueryExecutionListener
+    * — the planning time of every query that finished. Register it with
+    * [[attach]]; drain the listener bus before reading, so async events
+    * land on the gate that caused them. */
+  private[graft] final class StageBytes
+      extends org.apache.spark.scheduler.SparkListener
+      with org.apache.spark.sql.util.QueryExecutionListener {
     private val shuffle = new java.util.concurrent.atomic.AtomicLong
     private val spill = new java.util.concurrent.atomic.AtomicLong
     // r15: GC time (Σ per-task jvmGCTime — overlapping tasks in one
@@ -128,6 +145,10 @@ object Bench {
     // vs 16.6 s at sf10) to heap pressure in numbers
     private val gc = new java.util.concurrent.atomic.AtomicLong
     private val peak = new java.util.concurrent.atomic.AtomicLong
+    private val jobs = new java.util.concurrent.atomic.AtomicInteger
+    // per finished query: (first phase start, Σ phase durations) in ms
+    private val plans =
+      new java.util.concurrent.ConcurrentLinkedQueue[(Long, Long)]
     override def onStageCompleted(
         sc: org.apache.spark.scheduler.SparkListenerStageCompleted)
         : Unit = {
@@ -139,10 +160,102 @@ object Bench {
         peak.updateAndGet(p => math.max(p, m.peakExecutionMemory))
       }
     }
-    def reset(): Unit =
-      { shuffle.set(0L); spill.set(0L); gc.set(0L); peak.set(0L) }
-    def snapshot: (Long, Long, Long, Long) =
-      (shuffle.get(), spill.get(), gc.get(), peak.get())
+    override def onJobStart(
+        js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+      jobs.incrementAndGet()
+    override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+      planned(qe)
+    override def onFailure(f: String, qe: QueryExecution,
+        e: Exception): Unit = planned(qe)
+    private def planned(qe: QueryExecution): Unit = {
+      val ph = qe.tracker.phases.values
+      if (ph.nonEmpty)
+        plans.add((ph.map(_.startTimeMs).min, ph.map(_.durationMs).sum))
+    }
+    def attach(s: SparkSession): this.type = {
+      s.sparkContext.addSparkListener(this)
+      s.listenerManager.register(this)
+      this
+    }
+    def reset(): Unit = {
+      shuffle.set(0L); spill.set(0L); gc.set(0L); peak.set(0L)
+      jobs.set(0); plans.clear()
+    }
+    def snapshot: (Long, Long, Long, Long, Int) =
+      (shuffle.get(), spill.get(), gc.get(), peak.get(), jobs.get())
+    /** The queries whose planning started at or after `sinceMs`: their
+      * count and summed planning ms. */
+    def plannedSince(sinceMs: Long): (Int, Long) = {
+      val p = plans.asScala.filter(_._1 >= sinceMs)
+      (p.size, p.iterator.map(_._2).sum)
+    }
+  }
+
+  /** One gate's run. `sec` is its wall time, and
+    * `buildS + planS + execS == sec`. `plans` counts the queries whose
+    * planning `planS` sums: 1 for a gate whose write ran. */
+  private[graft] final case class GateRun(name: String, ok: Boolean,
+      sec: Double, buildS: Double, planS: Double, execS: Double, jobs: Int,
+      plans: Int, shuffle: Long, spill: Long, gcMs: Long, peak: Long)
+
+  /** Run one gate: call `build`, then write its frame to the `noop` sink.
+    * Build is the time in `build`. Plan comes from the write's own
+    * QueryExecution — the noop write builds one and plans it once; the
+    * frame is never planned separately, which would plan every gate
+    * twice. The write's query is told apart from the builder's eager
+    * ones by time: its planning starts after `build` returned. Exec is
+    * the rest of the wall time. A failure anywhere is recorded as
+    * `ok = false` (the time to failure, split the same way), never
+    * thrown. `probe` must be [[StageBytes.attach]]ed to `spark`. */
+  private[graft] def timeGate(spark: SparkSession, probe: StageBytes,
+      name: String)(build: => DataFrame): GateRun = {
+    org.apache.spark.graft.ListenerBridge.drain(spark.sparkContext)
+    probe.reset()
+    val t0 = System.nanoTime()
+    var t1 = -1L
+    var writeMs = Long.MaxValue
+    val ok =
+      try {
+        val df = build
+        t1 = System.nanoTime()
+        writeMs = System.currentTimeMillis()
+        df.write.format("noop").mode("overwrite").save()
+        true
+      } catch { case e: Throwable =>
+        System.err.println(s"[bench] $name failed: ${e.getMessage}")
+        false
+      }
+    val t2 = System.nanoTime()
+    if (t1 < 0) t1 = t2
+    org.apache.spark.graft.ListenerBridge.drain(spark.sparkContext)
+    val (plans, planMs) = probe.plannedSince(writeMs)
+    val planS = math.min(planMs / 1e3, (t2 - t1) / 1e9)
+    val (sh, sp, gcMs, pk, jobs) = probe.snapshot
+    GateRun(name, ok, (t2 - t0) / 1e9, (t1 - t0) / 1e9, planS,
+      (t2 - t1) / 1e9 - planS, jobs, plans, sh, sp, gcMs, pk)
+  }
+
+  /** One pass: every gate in `gates` once, in order, each marked current
+    * for [[graft.core.CachePayers]] outside its timed region. A failed
+    * gate is recorded and the pass goes on. Returns the runs and the
+    * pass's external load per core. */
+  private[graft] def runPass(spark: SparkSession, probe: StageBytes,
+      sfDir: String, pass: Int,
+      gates: Seq[(String, (SparkSession, String) => DataFrame)])
+      : (Seq[GateRun], Double) = {
+    val s0 = cpuSample()
+    val runs = gates.map { case (name, fn) =>
+      graft.core.CachePayers.setCurrent(name)
+      val g = timeGate(spark, probe, name)(fn(spark, sfDir))
+      System.err.println(f"[bench] $name ${g.sec}%.2fs (pass $pass)" +
+        (if (g.ok) "" else " FAILED"))
+      g
+    }
+    graft.core.CachePayers.setCurrent(null)
+    val ext = externalUtilSince(s0)
+    System.err.println(f"[bench] pass $pass external load/core $ext%.3f" +
+      (if (ext >= ExtLoadGate) " — CONTENDED" else ""))
+    (runs, ext)
   }
 
   def main(args: Array[String]): Unit = {
@@ -150,15 +263,9 @@ object Bench {
     // a comma-decimal default locale would emit invalid JSON — pin ROOT
     java.util.Locale.setDefault(java.util.Locale.ROOT)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val contended = waitForIdle()
     val loadStart = loadPerCore()
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.local()
     spark.sparkContext.setLogLevel("WARN")
     // untimed warmup: pay one-off JVM/codegen/scan-infra startup AND the
     // C2-compilation of the native hash/vector loops here, so the first
@@ -205,15 +312,6 @@ object Bench {
         .groupBy("k").agg(sum("v").as("s"), count(lit(1)).as("n"))
         .write.format("noop").mode("overwrite").save()
     }
-    // SPARK_GRAFT_MIN_OF=N (default 1): run the full suite N times and
-    // keep each query's MINIMUM — the standard ambient-noise floor.
-    // Caveat recorded in the output: session caches pay only in pass 1,
-    // so a payer gate's min reflects its cache-warm cost; the
-    // "cache_payers" map says which gate paid which cache so per-gate
-    // numbers stay interpretable either way.
-    // With min_of > 1, every per-gate minimum is SessionMemo-warm.
-    val minOf = math.max(1,
-      sys.env.getOrElse("SPARK_GRAFT_MIN_OF", "1").toInt)
     // SPARK_GRAFT_ONLY=a,b,c: benchmark a subset (scale probes, local
     // iteration). Unknown names are loud — a typo must not silently
     // shrink the run. Unset = the full registered suite (the driver).
@@ -238,90 +336,40 @@ object Bench {
     require(skipMissing.isEmpty,
       s"SPARK_GRAFT_SKIP names not registered: ${skipMissing.mkString(",")}")
     val selected = names.filterNot { case (n, _) => skip(n) }
-    // One pass = the full suite once, plus the pass's external-load
-    // verdict. A query failure records (time-to-failure, ok=false) —
-    // the min below only ever takes FAILED times when NO pass
-    // succeeded, so a transient failure can't masquerade as the
-    // fastest pass (it lands in the "failed" list instead).
-    val stageBytes = new StageBytes
-    spark.sparkContext.addSparkListener(stageBytes)
-    // per-gate (shuffle write, disk spill) bytes — MAX across passes
-    // (bytes are plan-determined; max also catches an AQE re-plan)
-    val gateBytes =
-      collection.mutable.Map.empty[String, (Long, Long)]
-    // per-gate (sec, gc_ms, peak_bytes) from the fastest pass so far
-    val gateGc =
-      collection.mutable.Map.empty[String, (Double, Long, Long)]
-    def runPass(pass: Int): (Seq[(String, Double, Boolean)], Double) = {
-      val s0 = cpuSample()
-      val res = selected.map { case (name, fn) =>
-        graft.core.CachePayers.setCurrent(name)
-        org.apache.spark.graft.ListenerBridge.drain(spark.sparkContext)
-        stageBytes.reset()
-        val t0 = System.nanoTime()
-        val ok =
-          try {
-            fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-            true
-          } catch { case e: Throwable =>
-            System.err.println(s"[bench] $name failed: ${e.getMessage}")
-            false
-          }
-        val sec = (System.nanoTime() - t0) / 1e9
-        org.apache.spark.graft.ListenerBridge.drain(spark.sparkContext)
-        val (sh, sp, gcMs, pk) = stageBytes.snapshot
-        val (psh, psp) = gateBytes.getOrElse(name, (0L, 0L))
-        gateBytes(name) = (math.max(psh, sh), math.max(psp, sp))
-        // gc/peak are kept FROM THE MIN-TIME PASS — the pass whose
-        // seconds the detail line reports, so the GC number explains
-        // that exact measurement (a max-merge would pair a cold pass's
-        // GC with a warm pass's time)
-        if (!gateGc.get(name).exists(_._1 <= sec))
-          gateGc(name) = (sec, gcMs, pk)
-        System.err.println(f"[bench] $name $sec%.2fs (pass $pass)" +
-          (if (ok) "" else " FAILED"))
-        (name, sec, ok)
-      }
-      val ext = externalUtilSince(s0)
-      System.err.println(f"[bench] pass $pass external load/core $ext%.3f" +
-        (if (ext >= ExtLoadGate) " — CONTENDED" else ""))
-      (res, ext)
-    }
-    val passes = collection.mutable.Buffer.empty[
-      (Seq[(String, Double, Boolean)], Double)]
-    (1 to minOf).foreach(p => passes += runPass(p))
-    // every pass externally contended ⇒ the min is still hot — wait
-    // for idle once and run ONE replacement pass before giving up
-    if (passes.forall { case (_, e) => e >= ExtLoadGate } &&
-        !sys.env.get("SPARK_GRAFT_PASS_RETRY").contains("0")) {
-      System.err.println("[bench] every pass was externally contended" +
-        " — waiting for idle and running one replacement pass")
-      waitForIdle()
-      passes += runPass(minOf + 1)
-    }
-    val contaminated =
-      passes.forall { case (_, e) => e >= ExtLoadGate }
-    graft.core.CachePayers.setCurrent(null)
-    val byName: Map[String, Seq[(Double, Boolean)]] =
-      passes.flatMap(_._1).groupBy(_._1).view
-        .mapValues(_.map(t => (t._2, t._3)).toSeq).toMap
-    val results = selected.map { case (name, _) =>
-      val runs = byName(name)
-      val okRuns = runs.filter(_._2)
-      if (okRuns.nonEmpty) (name, okRuns.map(_._1).min, true)
-      else (name, runs.map(_._1).min, false)
-    }
-    val failed = results.collect { case (n, _, false) => n }
+    val probe = new StageBytes().attach(spark)
+    val first = runPass(spark, probe, sfDir, 1, selected)
+    // an externally contended pass measured the neighbours: wait for
+    // idle once and run ONE replacement pass. It must be as cold as the
+    // pass it replaces, so the memo forgets every entry first and the
+    // replacement pays what a fresh JVM pays; its runs replace pass 1's.
+    val passes =
+      if (first._2 >= ExtLoadGate &&
+          !sys.env.get("SPARK_GRAFT_PASS_RETRY").contains("0")) {
+        System.err.println("[bench] pass 1 was externally contended" +
+          " — waiting for idle and running one cold replacement pass")
+        waitForIdle()
+        graft.core.SessionMemo.end(spark.sparkContext)
+        Seq(first, runPass(spark, probe, sfDir, 2, selected))
+      } else Seq(first)
+    val contaminated = passes.forall(_._2 >= ExtLoadGate)
+    val results = passes.last._1
+    val failed = results.filterNot(_.ok).map(_.name)
+    def obj(kvs: Seq[String]): String = kvs.mkString("{", ",", "}")
     // stdout contract: the per-query detail line (~4 KB at 78 queries)
     // goes FIRST; the LAST line is short so a tail-capture that truncates
     // long lines still parses it (r2/r3 driver records had parsed:null
     // from truncating the single long line). Both lines are complete,
     // self-sufficient JSON.
-    val qs = results.map { case (k, v, _) => f""""$k":$v%.3f""" }
-      .mkString("{", ",", "}")
-    val payers = graft.core.CachePayers.snapshot.toSeq.sorted
-      .map { case (c, g) => s""""$c":"$g"""" }.mkString("{", ",", "}")
-    val total = results.map(_._2).sum
+    val qs = obj(results.map(g => f""""${g.name}":${g.sec}%.3f"""))
+    // per gate [build_s, plan_s, exec_s, jobs]
+    val split = obj(results.map(g =>
+      f""""${g.name}":[${g.buildS}%.3f,${g.planS}%.3f,${g.execS}%.3f,${g.jobs}]"""))
+    val payers = obj(graft.core.CachePayers.snapshot.toSeq.sorted
+      .map { case (c, g) => s""""$c":"$g"""" })
+    // per memo entry name [hits, misses]
+    val memo = obj(graft.core.CachePayers.memoCounts.toSeq.sorted
+      .map { case (c, (h, m)) => s""""$c":[$h,$m]""" })
+    val total = results.map(_.sec).sum
     val loadEnd = loadPerCore()
     val load = f""""load_per_core_start":$loadStart%.2f,"load_per_core_end":$loadEnd%.2f""" +
       (if (contended) ""","contended":true""" else "") +
@@ -332,13 +380,12 @@ object Bench {
         s""","failed":${failed.map(n => s""""$n"""")
           .mkString("[", ",", "]")}"""
       else "") +
-      (if (minOf > 1) s""","min_of":$minOf""" else "") +
       // pass_totals UNCONDITIONALLY (r19, VERDICT item 7): the driver's
       // tail capture keeps only the END of stdout, and the single-cold-
       // pass total is the contract's objective function — it must
-      // survive in the short final line even when min_of is 1
+      // survive in the short final line
       s""","pass_totals":${
-        passes.map { case (p, _) => f"${p.map(_._2).sum}%.1f" }
+        passes.map { case (p, _) => f"${p.map(_.sec).sum}%.1f" }
           .mkString("[", ",", "]")}""" +
       (if (skip.nonEmpty)
         s""","skipped":${skip.toSeq.sorted.map(n => s""""$n"""")
@@ -347,35 +394,26 @@ object Bench {
     // shuffle/spill detail: gates with nonzero shuffle write, in MB
     // (1 decimal); spill map lists ONLY spilling gates — any entry at
     // these SFs is a memory-pressure flag worth reading
-    val shuffleMb = results.collect { case (n, _, _)
-        if gateBytes.get(n).exists(_._1 > 0) =>
-      f""""$n":${gateBytes(n)._1 / 1048576.0}%.1f"""
-    }.mkString("{", ",", "}")
-    val spillMb = results.collect { case (n, _, _)
-        if gateBytes.get(n).exists(_._2 > 0) =>
-      f""""$n":${gateBytes(n)._2 / 1048576.0}%.1f"""
-    }.mkString("{", ",", "}")
-    // gc_ms / peak_mb (min-time pass) list only gates past the flag
-    // thresholds — GC over 100 ms or peak execution memory over 256 MB
-    // is worth a reader's attention; below that it's line noise at
-    // 350 gates
-    val gcMs = results.collect { case (n, _, _)
-        if gateGc.get(n).exists(_._2 >= 100L) =>
-      s""""$n":${gateGc(n)._2}"""
-    }.mkString("{", ",", "}")
-    val peakMb = results.collect { case (n, _, _)
-        if gateGc.get(n).exists(_._3 >= 256L * 1048576) =>
-      f""""$n":${gateGc(n)._3 / 1048576.0}%.0f"""
-    }.mkString("{", ",", "}")
+    val shuffleMb = obj(results.filter(_.shuffle > 0)
+      .map(g => f""""${g.name}":${g.shuffle / 1048576.0}%.1f"""))
+    val spillMb = obj(results.filter(_.spill > 0)
+      .map(g => f""""${g.name}":${g.spill / 1048576.0}%.1f"""))
+    // gc_ms / peak_mb list only gates past the flag thresholds — GC over
+    // 100 ms or peak execution memory over 256 MB is worth a reader's
+    // attention; below that it's line noise at 350 gates
+    val gcMs = obj(results.filter(_.gcMs >= 100L)
+      .map(g => s""""${g.name}":${g.gcMs}"""))
+    val peakMb = obj(results.filter(_.peak >= 256L * 1048576)
+      .map(g => f""""${g.name}":${g.peak / 1048576.0}%.0f"""))
     // gc_top (r19, VERDICT item 7): the 8 worst per-gate GC numbers ride
     // the SHORT final line — the r18 failure class (multi-second GC
     // stalls on a handful of gates) self-diagnoses even when the tail
     // capture truncates the full detail line's gc_ms map
-    val gcTop = gateGc.toSeq.sortBy { case (n, (_, g, _)) => (-g, n) }
-      .take(8).map { case (n, (_, g, _)) => s""""$n":$g""" }
-      .mkString("{", ",", "}")
-    println(s"""{"metric":"detail","unit":"sec","queries":$qs,"cache_payers":$payers,"shuffle_mb":$shuffleMb,"spill_mb":$spillMb,"gc_ms":$gcMs,"peak_mb":$peakMb,"sf":"$sfDir",$load}""")
-    println(f"""{"metric":"total","value":$total%.3f,"unit":"sec","n_queries":${results.size},"sf":"$sfDir","gc_top":$gcTop,$load}""")
+    val gcTop = obj(results.sortBy(g => (-g.gcMs, g.name)).take(8)
+      .map(g => s""""${g.name}":${g.gcMs}"""))
+    val layers = f""""build_s":${results.map(_.buildS).sum}%.1f,"plan_s":${results.map(_.planS).sum}%.1f,"exec_s":${results.map(_.execS).sum}%.1f,"jobs":${results.map(_.jobs).sum}"""
+    println(s"""{"metric":"detail","unit":"sec","queries":$qs,"split":$split,"cache_payers":$payers,"memo":$memo,"shuffle_mb":$shuffleMb,"spill_mb":$spillMb,"gc_ms":$gcMs,"peak_mb":$peakMb,"sf":"$sfDir",$load}""")
+    println(f"""{"metric":"total","value":$total%.3f,"unit":"sec","n_queries":${results.size},"sf":"$sfDir",$layers,"gc_top":$gcTop,$load}""")
     spark.stop()
   }
 }

@@ -1,12 +1,13 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
-/** Plan-capture harness for the optimization rounds: writes
-  * `.explain("formatted")` of each named registered query to
-  * `<outDir>/<name>_<tag>.txt`. Usage:
+/** The plan-dump tool: writes `.explain("formatted")` of each named
+  * registered query to `<outDir>/<name>_<tag>.txt`, built on
+  * SPARK_GRAFT_SF_DIR in a [[GraftSession.local]] session. Usage:
   *
   *   sbt "runMain graft.Explain plans/r18 before q1_agg rag_eval_metrics"
+  *
+  * Per-gate timings, including the build/plan/exec split, come from
+  * [[Bench]] (`SPARK_GRAFT_ONLY` narrows it to the gates under work).
   *
   * The formatted plan is the optimizer's INITIAL physical plan (AQE
   * final plans only materialize at execution); that is the artifact the
@@ -21,13 +22,7 @@ object Explain {
     val tag = args(1)
     val names = args.drop(2).toSeq
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.local()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
     for (name <- names) {

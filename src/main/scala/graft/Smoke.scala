@@ -1,16 +1,11 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev smoke: drives the public surface end-to-end — the driver's entry
   * smoke, the literal main.go:35-52 scenario, edge-case queries, and
   * reopen-recovery. Exits non-zero on any violated expectation. */
 object Smoke {
   def main(args: Array[String]): Unit = {
-    val s = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val s = GraftSession.local()
     s.sparkContext.setLogLevel("ERROR")
     def check(cond: Boolean, what: String): Unit = {
       println((if (cond) "OK   " else "FAIL ") + what)

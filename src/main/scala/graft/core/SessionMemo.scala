@@ -17,8 +17,9 @@ import scala.collection.mutable
   * A DataFrame entry ([[frame]]) is materialized as scratch parquet at
   * [[Scratch.dir]]`(dir, key)` and read back, never held in the block
   * manager, so a gate-boundary release ([[GateScope]]) cannot destroy
-  * it. Any other entry ([[value]]) is held in memory. A miss records the
-  * current gate as the entry's payer ([[CachePayers.paid]]).
+  * it. Any other entry ([[value]]) is held in memory. Every lookup is
+  * reported to [[CachePayers.looked]], which counts hits and misses and
+  * records the current gate as the payer of a miss.
   *
   * When the application ends, every scratch dir the memo created for it
   * is deleted and its entries are forgotten. No dir is deleted earlier:
@@ -62,12 +63,8 @@ object SessionMemo {
     val key = (s"$name/$dir" +: inputs.map(Scratch.fingerprint(s, _)) ++:
       dials.map(String.valueOf)).mkString("|")
     val slot = slots.getOrElseUpdate(s, watch(s.sparkContext))
-    slot.entries.getOrElse(key, {
-      CachePayers.paid(name)
-      val v = build(slot, key)
-      slot.entries(key) = v
-      v
-    }).asInstanceOf[T]
+    CachePayers.looked(name, hit = slot.entries.contains(key))
+    slot.entries.getOrElseUpdate(key, build(slot, key)).asInstanceOf[T]
   }
 
   private def watch(sc: SparkContext): Slot = {
@@ -79,11 +76,12 @@ object SessionMemo {
   }
 
   /** Application end: delete the scratch dirs of every session on `sc`
-    * and forget their entries. Idempotent. */
+    * and forget their entries, payers and hit counts. Idempotent. */
   private[graft] def end(sc: SparkContext): Unit = synchronized {
     val done = slots.filter(_._2.sc eq sc)
     done.valuesIterator.flatMap(_.dirs)
       .foreach(d => org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(d)))
     slots --= done.keys
+    CachePayers.clear()
   }
 }

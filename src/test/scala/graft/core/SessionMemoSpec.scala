@@ -136,6 +136,25 @@ class SessionMemoSpec extends SparkTestBase {
     assert(builds == 2, "a forgotten entry must rebuild")
   }
 
+  test("under a current gate each lookup counts as a hit or a miss, and " +
+      "the miss names the payer") {
+    val dir = tmpDir("memo-count")
+    writeDocs(dir, Seq("x y"))
+    val in = Seq(s"$dir/documents.parquet")
+    def get(name: String) = SessionMemo.value(spark, name, in)(name.length)
+    get("spec_quiet")
+    CachePayers.setCurrent("gate_a")
+    try { get("spec_count"); get("spec_count"); get("spec_quiet") }
+    finally CachePayers.setCurrent(null)
+    get("spec_count")
+    assert(CachePayers.memoCounts.get("spec_count").contains((1L, 1L)))
+    assert(CachePayers.memoCounts.get("spec_quiet").contains((1L, 0L)))
+    assert(CachePayers.snapshot.get("spec_count").contains("gate_a"))
+    assert(!CachePayers.snapshot.contains("spec_quiet"))
+    SessionMemo.end(spark.sparkContext)
+    assert(CachePayers.memoCounts.isEmpty && CachePayers.snapshot.isEmpty)
+  }
+
   test("source guard: no hand-rolled session cache in operators/") {
     val ops = Paths.get("src/main/scala/graft/operators")
     val files = Files.list(ops).iterator.asScala
@@ -149,6 +168,27 @@ class SessionMemoSpec extends SparkTestBase {
       if banned.exists(_.findFirstIn(line).isDefined)
     } yield s"${f.getFileName}:${i + 1}: ${line.trim}"
     assert(hits.isEmpty, "use graft.core.SessionMemo instead:\n" +
+      hits.mkString("\n"))
+  }
+
+  test("source guard: sessions are built only by GraftSession, and the " +
+      "removed bench knobs stay gone") {
+    val files = Seq("src/main/scala", "src/test/scala").flatMap { r =>
+      val w = Files.walk(Paths.get(r))
+      try w.iterator.asScala.filter(_.toString.endsWith(".scala")).toList
+      finally w.close()
+    }
+    val (factory, rest) =
+      files.partition(_.getFileName.toString == "GraftSession.scala")
+    assert(factory.size == 1, s"GraftSession.scala not found once: $factory")
+    val banned = Seq("""SparkSession\s*\.\s*builder""".r,
+      "SPARK_GRAFT_(MIN_OF|ITERS)".r)
+    val hits = for {
+      f <- rest
+      (line, i) <- Files.readAllLines(f).asScala.zipWithIndex
+      if banned.exists(_.findFirstIn(line).isDefined)
+    } yield s"$f:${i + 1}: ${line.trim}"
+    assert(hits.isEmpty, "build sessions with graft.GraftSession.local:\n" +
       hits.mkString("\n"))
   }
 }

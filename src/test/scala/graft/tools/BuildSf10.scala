@@ -39,10 +39,7 @@ object BuildSf10 {
   val Off = 10000000L
 
   def main(args: Array[String]): Unit = {
-    val s = org.apache.spark.sql.SparkSession.builder()
-      .master("local[32]").config("spark.sql.shuffle.partitions", "64")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val s = graft.GraftSession.local()
     s.sparkContext.setLogLevel("ERROR")
     val sf = "/root/testdata/sf0.1"
 

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Scale probe: measures [[graft.operators.Dedup.dedupEmbedCosine]] at
@@ -15,9 +14,7 @@ import org.apache.spark.sql.functions._
   */
 object ProbeEmbedDial {
   def main(args: Array[String]): Unit = {
-    val s = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val s = graft.GraftSession.local()
     s.sparkContext.setLogLevel("ERROR")
     val dir = if (args.nonEmpty) args(0) else "/tmp/graft-probe-sf10"
     val e = s.read.parquet(s"$dir/embeddings.parquet")

@@ -19,10 +19,7 @@ import org.apache.spark.sql.functions._
   */
 object ScaleProbeR10b {
   def main(args: Array[String]): Unit = {
-    val s = org.apache.spark.sql.SparkSession.builder()
-      .master("local[32]").config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val s = graft.GraftSession.local()
     s.sparkContext.setLogLevel("ERROR")
     val sf = "/root/testdata/sf0.1"
     val docs = s.read.parquet(s"$sf/documents.parquet")

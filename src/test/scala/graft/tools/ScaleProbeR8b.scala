@@ -23,10 +23,7 @@ import org.apache.spark.sql.functions._
   */
 object ScaleProbeR8b {
   def main(args: Array[String]): Unit = {
-    val s = org.apache.spark.sql.SparkSession.builder()
-      .master("local[32]").config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val s = graft.GraftSession.local()
     s.sparkContext.setLogLevel("ERROR")
     val e = s.read.parquet("/root/testdata/sf0.1/embeddings.parquet")
     val d = s.read.parquet("/root/testdata/sf0.1/documents.parquet")

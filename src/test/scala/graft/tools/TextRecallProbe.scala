@@ -12,9 +12,7 @@ package graft.tools
 object TextRecallProbe {
   def main(args: Array[String]): Unit = {
     val sf = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val s = org.apache.spark.sql.SparkSession.builder()
-      .master("local[32]").config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val s = graft.GraftSession.local()
     s.sparkContext.setLogLevel("ERROR")
     def pairSet(df: org.apache.spark.sql.DataFrame): Set[(Long, Long)] =
       df.select("id_a", "id_b").collect()
