@@ -1,7 +1,7 @@
 package graft.api
 
 import com.fasterxml.jackson.databind.ObjectMapper
-import graft.core.{CollectionMeta, IndexMeta, Meta, Schema}
+import graft.core.{CollectionMeta, GraftConfig, IndexMeta, Meta, Schema}
 import graft.embed.{BatchedEmbedder, Embedder, HashingEmbedder,
   HttpEmbedTransport}
 import graft.filter.MqlFilter
@@ -285,7 +285,19 @@ final class KaerSession(
 }
 
 /** A named collection: parquet data + JSON sidecar + embedder
-  * (/root/reference/db/db.go:49-58).
+  * (the reference's db/db.go:49-58), with two optional persisted side
+  * indexes (IVF lists, text postings) and an optional change log.
+  *
+  * One write path. Inserts append to `data` and rewrite the sidecar.
+  * Every other mutation is copy-on-write through ONE commit step,
+  * `commitGeneration`: it writes the next generation, captures its
+  * change events, swaps it in with `swapDir`, updates rows and
+  * watermark, writes the sidecar once, then records the change in the
+  * side indexes (tombstones for removed ids, a `stale` poison for an
+  * in-place rewrite). `swapDir` also swaps the compacted change log, and
+  * one reopen repair restores either directory from its `_old` copy.
+  * Both side indexes keep coverage through one maintenance ladder,
+  * `SideIndex` (no-op → O(tail) append → rebuild).
   *
   * Recovery semantics (db/db.go:209-226): the id watermark is
   * max(sidecar.lastId, max(_m_id) in data) — the *intent* of the
@@ -735,6 +747,17 @@ object Collection {
   /** Default driver-side cap for [[Collection.distinctValues]] —
     * conf-overridable via `graft.distinct.max_values`. */
   private[graft] val MaxDistinctValues = 100000
+
+  /** What a copy-on-write generation changed, as the side indexes see
+    * it — the commit step's input next to the new generation. */
+  private[api] sealed trait Change
+  /** Nothing an index covers changed: compaction, metadata updates. */
+  private[api] case object Untouched extends Change
+  /** Document text and embedding rewritten under a live id. */
+  private[api] case object Rewritten extends Change
+  /** These ids are gone. The frame may read the generation being
+    * replaced: the commit step materializes it before the swap. */
+  private[api] final case class Removed(ids: DataFrame) extends Change
 }
 
 final class Collection(
@@ -744,6 +767,8 @@ final class Collection(
     val embedder: Embedder) {
 
   private val dataDir = new Path(dir, "data").toString
+  private def fs: FileSystem =
+    new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
   // recovered watermark + row count — see class doc. When the sidecar is
   // stale (data holds ids past its watermark: crash between append and
   // sidecar write, or a rebuilt sidecar), the row count is re-synced from
@@ -757,20 +782,11 @@ final class Collection(
   private var captureChanges: Boolean = false
   private var lastOpTime: Option[Long] = None
   locally {
-    // crash-window repair for compact(): if the data dir vanished mid-swap,
-    // the previous generation is intact in data_old — restore it before
-    // reading anything
-    val fsr = new Path(dir).getFileSystem(
-      spark.sparkContext.hadoopConfiguration)
-    val dataP = new Path(dataDir)
-    val oldP = new Path(dir, "data_old")
-    if (!fsr.exists(dataP) && fsr.exists(oldP)) fsr.rename(oldP, dataP)
-    // same crash-window repair for compactChangeLog()'s swap: a crash
-    // between its two renames leaves the log stranded at changes_old
-    val chP = new Path(dir, "changes")
-    val chOldP = new Path(dir, "changes_old")
-    if (!fsr.exists(chP) && fsr.exists(chOldP)) fsr.rename(chOldP, chP)
-    captureChanges = fsr.exists(chP)
+    // crash-window repair for swapDir, before reading anything: a data
+    // generation or change log that vanished between the swap's two
+    // renames is intact at <name>_old
+    Seq(dataDir, changesDir).foreach(d => restoreSwap(new Path(d)))
+    captureChanges = fs.exists(new Path(changesDir))
     val meta = Meta.read(spark, dir)
     val sidecarLast = meta.map(_.lastId).getOrElse(0L)
     val dataMax = maxIdInData()
@@ -782,7 +798,6 @@ final class Collection(
 
   private def hasData: Boolean = {
     val p = new Path(dataDir)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     fs.exists(p) && fs.listStatus(p).exists(_.getPath.getName.endsWith(".parquet"))
   }
 
@@ -821,9 +836,10 @@ final class Collection(
     * `graft.distinct.max_values` (default 100k) — a user who actually
     * wants the full value set should aggregate() to a sink instead. */
   def distinctValues(field: String, filterJson: String = null): Seq[String] = {
+    val cap = GraftConfig.confInt(spark, "graft.distinct.max_values")
+      .getOrElse(Collection.MaxDistinctValues)
+    require(cap >= 1, s"graft.distinct.max_values must be >= 1, got $cap")
     if (!hasData) return Nil
-    val cap = spark.conf.getOption("graft.distinct.max_values")
-      .map(_.toInt).getOrElse(Collection.MaxDistinctValues)
     val base = if (filterJson == null || filterJson.trim.isEmpty) df
     else df.filter(MqlFilter.toColumn(filterJson,
       MqlFilter.JsonResolver(col(Schema.MetaCol))))
@@ -853,17 +869,26 @@ final class Collection(
     * update. Id assignment uses zipWithIndex (per-partition offsets, no
     * global sort, no driver materialization) so the same code scales out.
     */
-  def insert(data: Data): Unit = {
+  def insert(data: Data): Unit = insertDF(batchFrame(data))
+
+  /** An insert batch as (_m_doc, _m_meta) rows, lengths validated. */
+  private def batchFrame(data: Data): DataFrame = {
     if (data.metadatas.nonEmpty &&
       data.documents.length != data.metadatas.length)
       throw new FieldLengthMismatch // db/db.go:61-63
     val rows = if (data.metadatas.isEmpty)
       data.documents.map(d => (d, null: String))
     else data.documents.zip(data.metadatas)
-    val base = spark.createDataFrame(rows)
-      .toDF(Schema.DocCol, Schema.MetaCol)
-    insertDF(base)
+    spark.createDataFrame(rows).toDF(Schema.DocCol, Schema.MetaCol)
   }
+
+  /** An id-assigned batch embedded, in the stored column order.
+    * embedDF, not a per-row column transform: remote-backed embedders
+    * batch ≤96 texts per request through it (BatchedEmbedder). */
+  private def embedded(withIds: DataFrame): DataFrame =
+    embedder.embedDF(withIds, Schema.DocCol, Schema.EmbeddingCol)
+      .select(col(Schema.IdCol), col(Schema.DocCol),
+        col(Schema.EmbeddingCol), col(Schema.MetaCol))
 
   /** Bulk path: any DataFrame with (_m_doc STRING, _m_meta STRING).
     *
@@ -877,19 +902,10 @@ final class Collection(
     val start = lastId
     val (withIds, n) = zipWithId(base, start)
     if (n > 0) {
-      // embedDF, not a per-row column transform: remote-backed embedders
-      // batch ≤96 texts per request through it (BatchedEmbedder); the
-      // default embedder's override-free path is the same withColumn as
-      // before
-      val indexed = embedder.embedDF(
-          withIds, Schema.DocCol, Schema.EmbeddingCol)
-        .select(col(Schema.IdCol), col(Schema.DocCol),
-          col(Schema.EmbeddingCol), col(Schema.MetaCol))
-      indexed.write.mode("append").parquet(dataDir)
+      embedded(withIds).write.mode("append").parquet(dataDir)
       lastId = start + n
       rowsCount += n
-      Meta.write(spark, dir,
-        CollectionMeta(name, lastId, embedder.dim, embedder.id, rowsCount))
+      writeSidecar()
       if (captureChanges) {
         // insert events straight off the just-written id range: a
         // pushed-down rescan of the data dir, never a re-embed
@@ -949,217 +965,158 @@ final class Collection(
     (withId, n)
   }
 
-  // maintenance observability: how many times ensureIndex chose each
-  // path since this handle opened — the spec's proof that inserts take
-  // the O(tail) append, not the O(collection) rebuild
-  private var rebuildCount = 0L
-  private var appendCount = 0L
-  def indexRebuilds: Long = rebuildCount
-  def indexAppends: Long = appendCount
-  private def indexDir: String = new Path(dir, "index").toString
+  // ---- persisted side indexes ---------------------------------------
+  // Two indexes sit beside the data: the IVF lists (the Spark-native
+  // analogue of the reference's HNSW side-index, db/hnsw.go) and the
+  // $text postings (r14). Both keep one maintenance contract,
+  // [[SideIndex]]; each supplies only its directory, build, tail append
+  // and storage trust check.
 
-  /** Build (or rebuild) the collection's persisted IVF index — the
-    * Spark-native analogue of the reference's HNSW side-index
-    * (db/hnsw.go): inverted lists partitioned by centroid id under
-    * `dir/index`. Centroids come from the deterministic KMeans fitter;
-    * at production scale swap in the MLlib path
-    * ([[graft.operators.IvfIndex.kmeansFitMl]]). Records the covered
-    * (watermark, rows, nlist) in an index sidecar so later inserts can
-    * append incrementally instead of rebuilding. No-op on an empty
-    * collection. */
-  def buildIndex(nlist: Int = 16, iters: Int = 3): Unit = {
-    val vecs = df.select(col(Schema.IdCol).as("vec_id"),
-      col(Schema.EmbeddingCol).as("embedding"))
-    if (!vecs.isEmpty) {
-      val cents = graft.operators.IvfIndex.kmeansFit(vecs, nlist, iters)
-      graft.operators.IvfIndex.build(spark, vecs, indexDir, cents)
-      // a rebuild covers exactly the live rows: compact tombstones away
-      val tp = new Path(tombDir)
-      val tfs = tp.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      if (tfs.exists(tp)) tfs.delete(tp, true)
-      Meta.writeIndex(spark, indexDir, IndexMeta(lastId, rowsCount, nlist))
-      rebuildCount += 1
+  /** One persisted side index under `root`, with its `IndexMeta`
+    * sidecar. `trusted(nlist, rows)` is its storage trust check,
+    * `appendTail(from)` adds the ids above `from` (O(tail)), and `idCol`
+    * names the id column of its tombstone table. The rest is shared:
+    *
+    * [[ensure]] takes the cheapest step that restores coverage —
+    * reference parity with loadIndexIfExists + updateIndexFromLastId
+    * (db/db.go:176-207): the reference reopens its persisted HNSW
+    * snapshot and replays only the id tail into it; it never rebuilds
+    * on insert.
+    *  1. the sidecar's live coverage is current and storage passes the
+    *     trust check → no-op;
+    *  2. a pure id-tail gap: live rows grew by exactly the id range
+    *     above the covered watermark. Ids are dense by construction and
+    *     deletes of covered ids are counted by the tombstones, so a
+    *     delete of a NEW id breaks the equality. Both counters are
+    *     arithmetic: zero scans → append ONLY the tail;
+    *  3. no sidecar, but storage trusted for the current rows (a
+    *     pre-sidecar layout) → adopt it;
+    *  4. anything else — another nlist, a `stale` sidecar, a NEW-id
+    *     delete, missing or corrupt storage → rebuild (O(collection)).
+    *
+    * Deletes ride the tombstone table ([[entomb]]): storage keeps the
+    * dead rows, the sidecar counts them out of the live coverage, and
+    * both query paths join back to the live collection, so dead ids
+    * never surface. A rebuild covers exactly the live rows and drops the
+    * tombstones. An in-place content rewrite [[poison]]s the sidecar. */
+  private final class SideIndex(root: String, idCol: String,
+      trusted: (Int, Long) => Boolean, appendTail: Long => Unit) {
+    private val tombDir = s"$root/tombstones"
+    // how many times the ladder chose each path since this handle
+    // opened — the spec's proof that inserts take the O(tail) append
+    var rebuilds = 0L
+    var appends = 0L
+
+    def sidecar: Option[IndexMeta] = Meta.readIndex(spark, root)
+
+    private def storageTrusted(m: IndexMeta): Boolean =
+      trusted(m.nlist, m.indexedRows) && (m.tombstones == 0L ||
+        graft.core.Trust.parquetDir(spark, tombDir, m.tombstones))
+
+    /** The ladder; `rebuildAll` is the index's full [[rebuild]]. */
+    def ensure(nlist: Int)(rebuildAll: => Unit): Unit = sidecar match {
+      case Some(m) if !m.stale && m.nlist == nlist &&
+          m.indexedLastId == lastId &&
+          m.indexedRows - m.tombstones == rowsCount && storageTrusted(m) =>
+        ()
+      case Some(m) if !m.stale && m.nlist == nlist &&
+          m.indexedLastId < lastId &&
+          rowsCount - (m.indexedRows - m.tombstones) ==
+            lastId - m.indexedLastId && storageTrusted(m) =>
+        appendTail(m.indexedLastId)
+        Meta.writeIndex(spark, root, m.copy(indexedLastId = lastId,
+          indexedRows = m.indexedRows + (lastId - m.indexedLastId)))
+        appends += 1
+      case None if trusted(nlist, rowsCount) =>
+        Meta.writeIndex(spark, root, IndexMeta(lastId, rowsCount, nlist))
+      case _ => rebuildAll
     }
-  }
 
-  private def tombDir: String = s"$indexDir/tombstones"
+    /** `build` the storage over every live row, then record that
+      * coverage. No-op on an empty collection. */
+    def rebuild(nlist: Int)(build: => Unit): Unit =
+      if (hasData && rowsCount > 0) {
+        build
+        val tp = new Path(tombDir)
+        if (fs.exists(tp)) fs.delete(tp, true)
+        Meta.writeIndex(spark, root, IndexMeta(lastId, rowsCount, nlist))
+        rebuilds += 1
+      }
 
-  /** Record ids removed by a delete into the index's TOMBSTONE sidecar
-    * (r13) — the O(delta) alternative to rebuild-on-delete: the
-    * inverted lists keep the dead rows physically, the sidecar counts
-    * them out of the coverage arithmetic, and [[queryApprox]] (which
-    * keeps only live collection rows whose id is among the probed
-    * candidates — a left semi join) already drops them from every
-    * result. Only ids the lists actually cover (id ≤ indexedLastId)
-    * are recorded; compaction happens on the next full rebuild. No-op
-    * without a persisted index. */
-  /** Single-id form of [[recordTombstones]] (deleteOne /
-    * findOneAndDelete — the id is already on the driver). */
-  private def recordTombstoneId(id: Long): Unit =
-    recordTombstones(spark.range(1).select(lit(id).as(Schema.IdCol)))
-
-  private def recordTombstones(deadIds: DataFrame): Unit =
-    Meta.readIndex(spark, indexDir).foreach { m =>
-      val covered = deadIds
-        .filter(col(Schema.IdCol) <= m.indexedLastId)
-        .select(col(Schema.IdCol).as("vec_id"))
+    /** Record the removed ids the storage covers (id ≤ indexedLastId). */
+    def entomb(dead: DataFrame): Unit = sidecar.foreach { m =>
+      val covered = dead.filter(col(Schema.IdCol) <= m.indexedLastId)
+        .select(col(Schema.IdCol).as(idCol))
       val n = covered.count()
       if (n > 0) {
         covered.coalesce(1).write.mode("append").parquet(tombDir)
-        Meta.writeIndex(spark, indexDir,
-          m.copy(tombstones = m.tombstones + n))
+        Meta.writeIndex(spark, root, m.copy(tombstones = m.tombstones + n))
       }
     }
 
-  /** Make the persisted index cover the CURRENT data, doing the least
-    * work that restores coverage — reference parity with
-    * loadIndexIfExists + updateIndexFromLastId (db/db.go:176-207): the
-    * reference reopens its persisted HNSW snapshot and replays only the
-    * id tail into it; it never rebuilds on insert.
-    *
-    * Decision ladder, cheapest first:
-    *  1. sidecar says coverage is current (+ storage trust-check:
-    *     _SUCCESS markers, list rows == collection rows, centroids ==
-    *     nlist) → no-op;
-    *  2. sidecar shows a pure id-tail gap — rows grew by exactly the id
-    *     range, i.e. inserts only, no deletes (both counters are
-    *     arithmetic, so this costs zero scans) and the indexed prefix
-    *     passes the trust check → assign ONLY the tail against the
-    *     persisted centroids and append to the lists (O(tail));
-    *  3. anything else — different nlist, deletes, missing/corrupt
-    *     storage — → full rebuild (O(collection), the correct fallback:
-    *     deletes invalidate arbitrary list rows). */
-  def ensureIndex(nlist: Int = 16, iters: Int = 3): Unit = {
-    val idx = indexDir
-    def storageTrusted(listRows: Long): Boolean =
-      graft.core.Trust.parquetDir(spark, s"$idx/centroids", nlist.toLong) &&
-      graft.core.Trust.parquetDir(spark, s"$idx/lists", listRows)
-    // tombstone sidecar trust: row count matches the meta counter
-    // (vacuously true at zero — the dir need not exist)
-    def tombTrusted(n: Long): Boolean =
-      n == 0L || graft.core.Trust.parquetDir(spark, tombDir, n)
-    Meta.readIndex(spark, idx) match {
-      // a STALE sidecar (in-place rewrite under an unchanged watermark,
-      // see replaceOne) defeats every arithmetic check — rebuild
-      case Some(m) if !m.stale &&
-          m.nlist == nlist && m.indexedLastId == lastId &&
-          m.indexedRows - m.tombstones == rowsCount &&
-          storageTrusted(m.indexedRows) && tombTrusted(m.tombstones) =>
-        () // live coverage current (deletes ride the tombstone
-           // sidecar, recorded at delete time) — nothing to do
-      case Some(m) if !m.stale &&
-          m.nlist == nlist && m.indexedLastId < lastId &&
-          rowsCount - (m.indexedRows - m.tombstones) ==
-            lastId - m.indexedLastId &&
-          storageTrusted(m.indexedRows) && tombTrusted(m.tombstones) =>
-        // pure append gap above the watermark: ids are dense by
-        // construction and pre-watermark deletes are accounted by the
-        // tombstone counter, so live rows can only have grown by
-        // exactly (lastId - indexedLastId) when no NEW-id delete
-        // intervened — that would break the equality and fall through
-        // to rebuild
-        val tail = df.filter(col(Schema.IdCol) > m.indexedLastId)
-          .select(col(Schema.IdCol).as("vec_id"),
-            col(Schema.EmbeddingCol).as("embedding"))
-        graft.operators.IvfIndex.appendTail(spark, tail, idx)
-        Meta.writeIndex(spark, idx, IndexMeta(lastId,
-          m.indexedRows + (lastId - m.indexedLastId), nlist,
-          m.tombstones))
-        appendCount += 1
-      case None if storageTrusted(rowsCount) =>
-        // pre-sidecar index that happens to be fully current (legacy
-        // scratch layout): adopt it instead of rebuilding
-        Meta.writeIndex(spark, idx, IndexMeta(lastId, rowsCount, nlist))
-      case _ => buildIndex(nlist, iters)
-    }
+    /** Content changed under live ids, which neither counters nor
+      * tombstones can express: the next ensure must rebuild. */
+    def poison(): Unit = sidecar.foreach(m =>
+      Meta.writeIndex(spark, root, m.copy(stale = true)))
   }
 
-  // ---- persisted TEXT index (r14) -----------------------------------
-  // The $text twin of the IVF machinery above: same sidecar contract
-  // (IndexMeta with nlist ≡ the bucket count), same decision ladder
-  // (trust-reuse → O(tail) append → rebuild), same delete tombstones
-  // (recorded at delete time, compacted on rebuild, counted out of the
-  // live-coverage arithmetic). Mongo requires a text index before any
-  // $text query; this engine mirrors that — textFind without a built
-  // index is loud.
-  private var textRebuildCount = 0L
-  private var textAppendCount = 0L
-  def textIndexRebuilds: Long = textRebuildCount
-  def textIndexAppends: Long = textAppendCount
+  private def indexDir: String = new Path(dir, "index").toString
   private def textIndexDir: String = new Path(dir, "textindex").toString
-  private def textTombDir: String = s"$textIndexDir/tombstones"
+  private val ivf = new SideIndex(indexDir, "vec_id",
+    (nlist, rows) =>
+      graft.operators.IvfIndex.trusted(spark, indexDir, nlist, rows),
+    from => graft.operators.IvfIndex.appendTail(spark,
+      vectors.filter(col("vec_id") > from), indexDir))
+  private val text = new SideIndex(textIndexDir, "doc_id",
+    (_, docs) => graft.operators.TextIndex.trusted(spark, textIndexDir, docs),
+    from => graft.operators.TextIndex.appendTail(spark,
+      docsFrame.filter(col("doc_id") > from), textIndexDir))
 
+  private def vectors: DataFrame = df.select(col(Schema.IdCol).as("vec_id"),
+    col(Schema.EmbeddingCol).as("embedding"))
   private def docsFrame: DataFrame = df.select(
     col(Schema.IdCol).as("doc_id"), col(Schema.DocCol).as("text"))
 
+  def indexRebuilds: Long = ivf.rebuilds
+  def indexAppends: Long = ivf.appends
+  def textIndexRebuilds: Long = text.rebuilds
+  def textIndexAppends: Long = text.appends
+
+  /** Build (or rebuild) the collection's persisted IVF index: inverted
+    * lists partitioned by centroid id under `dir/index`. Centroids come
+    * from the deterministic KMeans fitter; at production scale swap in
+    * the MLlib path ([[graft.operators.IvfIndex.kmeansFitMl]]). Records
+    * the covered (watermark, rows, nlist) in the index sidecar so later
+    * inserts append instead of rebuilding. No-op on an empty
+    * collection. */
+  def buildIndex(nlist: Int = 16, iters: Int = 3): Unit =
+    ivf.rebuild(nlist) {
+      val v = vectors
+      graft.operators.IvfIndex.build(spark, v, indexDir,
+        graft.operators.IvfIndex.kmeansFit(v, nlist, iters))
+    }
+
+  /** Make the persisted IVF index cover the CURRENT data with the least
+    * work — the [[SideIndex]] ladder. Its trust check: _SUCCESS
+    * markers, `nlist` centroids, list rows == covered rows. */
+  def ensureIndex(nlist: Int = 16, iters: Int = 3): Unit =
+    ivf.ensure(nlist)(buildIndex(nlist, iters))
+
   /** Build (or rebuild) the persisted inverted text index: postings
     * partitioned by term bucket under `dir/textindex` (see
-    * [[graft.operators.TextIndex]]). A rebuild covers exactly the live
-    * rows, so tombstones compact away. No-op on an empty collection. */
-  def buildTextIndex(): Unit = if (hasData && rowsCount > 0) {
-    graft.operators.TextIndex.build(spark, docsFrame, textIndexDir)
-    val tp = new Path(textTombDir)
-    val tfs = tp.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (tfs.exists(tp)) tfs.delete(tp, true)
-    Meta.writeIndex(spark, textIndexDir,
-      IndexMeta(lastId, rowsCount, graft.operators.TextIndex.NBuckets))
-    textRebuildCount += 1
-  }
+    * [[graft.operators.TextIndex]]). Mongo requires a text index before
+    * any $text query; this engine mirrors that — [[textFind]] without a
+    * built index is loud. No-op on an empty collection. */
+  def buildTextIndex(): Unit =
+    text.rebuild(graft.operators.TextIndex.NBuckets)(
+      graft.operators.TextIndex.build(spark, docsFrame, textIndexDir))
 
-  private def recordTextTombstoneId(id: Long): Unit =
-    recordTextTombstones(spark.range(1).select(lit(id).as(Schema.IdCol)))
-
-  /** [[recordTombstones]]' text twin — only ids the postings cover. */
-  private def recordTextTombstones(deadIds: DataFrame): Unit =
-    Meta.readIndex(spark, textIndexDir).foreach { m =>
-      val covered = deadIds
-        .filter(col(Schema.IdCol) <= m.indexedLastId)
-        .select(col(Schema.IdCol).as("doc_id"))
-      val n = covered.count()
-      if (n > 0) {
-        covered.coalesce(1).write.mode("append").parquet(textTombDir)
-        Meta.writeIndex(spark, textIndexDir,
-          m.copy(tombstones = m.tombstones + n))
-      }
-    }
-
-  /** [[ensureIndex]]'s text twin — the same cheapest-first ladder:
-    * coverage current → no-op; pure id-tail gap → tokenize ONLY the
-    * tail and append into the partitioned buckets (O(tail)); anything
+  /** [[ensureIndex]]'s text twin, the same [[SideIndex]] ladder with
+    * nlist ≡ the bucket count: coverage current → no-op; pure id-tail
+    * gap → tokenize ONLY the tail and append into the buckets; anything
     * else → rebuild. */
-  def ensureTextIndex(): Unit = {
-    val idx = textIndexDir
-    def storageTrusted(docRows: Long): Boolean =
-      graft.operators.TextIndex.layoutCurrent(spark, idx) &&
-      graft.core.Trust.parquetDir(spark, s"$idx/meta", 1L) && {
-        val mm = spark.read.parquet(s"$idx/meta").head()
-        mm.getAs[Long]("n_docs") == docRows &&
-        graft.core.Trust.parquetDir(spark, s"$idx/docstats", docRows) &&
-        graft.core.Trust.parquetDir(spark, s"$idx/postings",
-          mm.getAs[Long]("n_postings"))
-      }
-    def tombTrusted(n: Long): Boolean =
-      n == 0L || graft.core.Trust.parquetDir(spark, textTombDir, n)
-    Meta.readIndex(spark, idx) match {
-      // stale = in-place text rewrite (replaceOne): counters all match
-      // but the postings describe the OLD text — rebuild, never serve
-      case Some(m) if !m.stale && m.indexedLastId == lastId &&
-          m.indexedRows - m.tombstones == rowsCount &&
-          storageTrusted(m.indexedRows) && tombTrusted(m.tombstones) =>
-        () // live coverage current
-      case Some(m) if !m.stale && m.indexedLastId < lastId &&
-          rowsCount - (m.indexedRows - m.tombstones) ==
-            lastId - m.indexedLastId &&
-          storageTrusted(m.indexedRows) && tombTrusted(m.tombstones) =>
-        graft.operators.TextIndex.appendTail(spark,
-          docsFrame.filter(col("doc_id") > m.indexedLastId), idx)
-        Meta.writeIndex(spark, idx, IndexMeta(lastId,
-          m.indexedRows + (lastId - m.indexedLastId), m.nlist,
-          m.tombstones))
-        textAppendCount += 1
-      case _ => buildTextIndex()
-    }
-  }
+  def ensureTextIndex(): Unit =
+    text.ensure(graft.operators.TextIndex.NBuckets)(buildTextIndex())
 
   /** Mongo `find({$text: {$search}, ...extra})` SERVED FROM the
     * persisted text index (r14): search terms map to partition-pruned
@@ -1175,7 +1132,7 @@ final class Collection(
     * insert-only path. */
   def textFind(search: String, k: Int = 10,
       filterJson: String = "{}"): DataFrame = {
-    require(Meta.readIndex(spark, textIndexDir).isDefined,
+    require(text.sidecar.isDefined,
       s"collection '$name' has no text index — $$text queries need " +
         "one (Mongo contract); call ensureTextIndex() first")
     ensureTextIndex()
@@ -1201,9 +1158,7 @@ final class Collection(
     val hits = q.phrases.foldLeft(hits0)((h, ph) => h.join(
       graft.operators.TextIndex.phraseDocs(spark, textIndexDir, ph),
       "doc_id"))
-    val pred = coalesce(MqlFilter.toColumn(filterJson,
-      MqlFilter.JsonResolver(col(Schema.MetaCol))), lit(false))
-    df.filter(pred)
+    df.filter(matching(filterJson))
       .join(hits, col(Schema.IdCol) === col("doc_id"))
       .orderBy(col("score").desc, col(Schema.IdCol).asc)
       .limit(k)
@@ -1257,24 +1212,19 @@ final class Collection(
       .limit(k)
   }
 
-  /** Maintenance: compact the append-per-batch small files into
-    * `targetFiles` id-ranged files (read → range-repartition on _m_id →
-    * atomic-ish swap via rename). The insert path appends one file set
-    * per batch; at high batch counts scan planning degrades — the
-    * standard cure is periodic compaction, exactly as a LSM/lakehouse
-    * would. Ids, rows, and sidecar are unchanged. */
   // ---- change streams ---------------------------------------------------
   // Mongo `collection.watch()` analogue (the most-used Mongo API with no
   // FerretDB-1.x/reference counterpart — extension tier): an oplog-style
-  // event log captured at the store's two narrow-waist write points.
-  // `insertDF` appends emit insert events straight from the just-written
-  // id range (a pushed-down rescan — the embeddings are NOT recomputed);
-  // every copy-on-write `rewriteData` swap emits update/delete events
-  // from a full-outer diff of the old generation vs the already-
-  // materialized tmp generation, keyed on `_m_id` with null-safe
-  // payload compare (so a compact(), which changes no logical content,
-  // emits nothing). Events carry the AFTER image (doc+meta; null for
-  // deletes) — Mongo's fullDocument=updateLookup shape.
+  // event log captured at the store's two write points. `insertDF`
+  // appends emit insert events straight from the just-written id range
+  // (a pushed-down rescan — the embeddings are NOT recomputed); every
+  // copy-on-write mutation commits through [[commitGeneration]], which
+  // emits insert/update/delete events from a full-outer diff of the
+  // live generation vs the already-written new one before it swaps
+  // them, keyed on `_m_id` with null-safe payload compare (so a
+  // compact(), which changes no logical content, emits nothing). Events
+  // carry the AFTER image (doc+meta; null for deletes) — Mongo's
+  // fullDocument=updateLookup shape.
   //
   // Capture is OPT-IN per collection (`enableChangeStream()`), exactly
   // because the diff costs one extra join per mutation: a non-watched
@@ -1344,76 +1294,56 @@ final class Collection(
     * watch(resumeAfter) pass the floor check and silently return a
     * partial stream — the exact silent-skip the floor exists to
     * prevent. The file is a few bytes; the read is noise next to any
-    * parquet scan. Read with a fill loop — FSDataInputStream.read may
-    * return short counts, and truncated digits would parse a SMALLER
-    * floor, re-opening the silent-resume window. */
-  private def readChangeFloor(): Long = {
-    val fs = floorPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(floorPath)) 0L
-    else {
-      val in = fs.open(floorPath)
-      try {
-        val buf = new Array[Byte](64)
-        var off = 0
-        var n = 0
-        while (off < buf.length && { n = in.read(buf, off, buf.length - off); n > 0 })
-          off += n
-        new String(buf, 0, off,
-          java.nio.charset.StandardCharsets.UTF_8).trim.toLong
-      } catch { case _: NumberFormatException => 0L }
-      finally in.close()
+    * parquet scan. An unparsable floor is loud: reading it as 0 would
+    * let old resume tokens pass and restart `op_time` below events
+    * already handed out. */
+  private def readChangeFloor(): Long =
+    Meta.readSmall(spark, floorPath).fold(0L) { b =>
+      val v = new String(b, java.nio.charset.StandardCharsets.UTF_8).trim
+      try v.toLong
+      catch { case _: NumberFormatException =>
+        throw new IllegalStateException(s"change-log floor $floorPath " +
+          s"is unreadable ('$v'); the trim point is unknown, so no resume " +
+          "token can be checked — restore the file or re-enable capture")
+      }
     }
-  }
 
-  private def writeChangeFloor(dirPath: Path, v: Long): Unit = {
-    val fs = dirPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val out = fs.create(new Path(dirPath, "_floor"), true)
-    try out.write(v.toString.getBytes(
-      java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
-  }
+  /** Write the floor with [[Meta]]'s temp + rename, never in place: a
+    * torn floor must not read as a lower one. */
+  private def writeChangeFloor(logDir: Path, v: Long): Unit =
+    Meta.writeAtomic(spark, logDir.toString, "_floor",
+      v.toString.getBytes(java.nio.charset.StandardCharsets.UTF_8))
 
   /** Trim the change log: drop every event with `op_time <=
-    * retainAfter` and set the log floor there. Copy-on-write tmp+swap
-    * like [[rewriteData]] (underscore-prefixed floor marker rides the
-    * directory, invisible to the parquet scans). Floors never move
-    * backwards. Scale: the rewrite reads only the RETAINED tail — at
-    * a production cadence (compact up to the slowest consumer's
-    * checkpoint) that is the small live window, and the trimmed
-    * history is one directory delete. */
+    * retainAfter` and set the log floor there. The retained events and
+    * the new floor are written to a fresh directory that [[swapDir]]
+    * swaps in, as [[commitGeneration]] does for the data
+    * (underscore-prefixed floor marker rides the directory, invisible
+    * to the parquet scans). Floors never move backwards. Scale: the
+    * rewrite reads only the RETAINED tail — at a production cadence
+    * (compact up to the slowest consumer's checkpoint) that is the
+    * small live window, and the trimmed history is one directory
+    * delete. */
   def compactChangeLog(retainAfter: Long): Unit = {
     require(captureChanges,
       s"change stream not enabled for collection '$name' — nothing " +
         "to compact")
     val newFloor = math.max(retainAfter, readChangeFloor())
-    val fs = new Path(changesDir).getFileSystem(
-      spark.sparkContext.hadoopConfiguration)
+    val live = new Path(changesDir)
     // Empty log (capture enabled, nothing written yet — the dir holds
     // at most the _floor marker): nothing to rewrite; just advance the
-    // floor in place. Guards the parquet read AND skips a no-op swap.
-    val hasEvents = fs.exists(new Path(changesDir)) &&
-      fs.listStatus(new Path(changesDir)).exists { st =>
-        val n = st.getPath.getName
-        !n.startsWith("_") && !n.startsWith(".")
-      }
-    if (!hasEvents) { writeChangeFloor(new Path(changesDir), newFloor); return }
-    val tmp = new Path(dir, "changes_compact")
-    if (fs.exists(tmp)) fs.delete(tmp, true)
+    // floor. Guards the parquet read AND skips a no-op swap.
+    val hasEvents = fs.exists(live) && fs.listStatus(live).exists { st =>
+      val n = st.getPath.getName
+      !n.startsWith("_") && !n.startsWith(".")
+    }
+    if (!hasEvents) { writeChangeFloor(live, newFloor); return }
+    val tmp = clearedTmp(live)
     spark.read.schema(changeSchema).parquet(changesDir)
       .filter(col("op_time") > retainAfter)
       .write.parquet(tmp.toString)
     writeChangeFloor(tmp, newFloor)
-    val old = new Path(dir, "changes_old")
-    if (fs.exists(old)) fs.delete(old, true)
-    if (!fs.rename(new Path(changesDir), old))
-      throw new java.io.IOException(s"change-log compact: rename " +
-        s"$changesDir -> $old failed")
-    if (!fs.rename(tmp, new Path(changesDir))) {
-      fs.rename(old, new Path(changesDir)) // roll back, like rewriteData
-      throw new java.io.IOException(s"change-log compact: rename " +
-        s"$tmp -> $changesDir failed")
-    }
-    fs.delete(old, true)
+    swapDir(tmp, live)
   }
 
   private def appendChangeEvents(t: Long, events: DataFrame): Unit = {
@@ -1452,38 +1382,60 @@ final class Collection(
       .parquet(changesDir)
   }
 
-  def compact(targetFiles: Int = 4): Unit = {
-    if (!hasData) return
-    rewriteData(df.repartitionByRange(targetFiles, col(Schema.IdCol)))
-  }
+  /** Maintenance: compact the append-per-batch small files into
+    * `targetFiles` id-ranged files (read → range-repartition on _m_id →
+    * [[commitGeneration]]). The insert path appends one file set per
+    * batch; at high batch counts scan planning degrades — the standard
+    * cure is periodic compaction, exactly as a LSM/lakehouse would.
+    * Ids, rows, and sidecar are unchanged. */
+  def compact(targetFiles: Int = 4): Unit = if (hasData)
+    commitGeneration(df.repartitionByRange(targetFiles, col(Schema.IdCol)),
+      rowsCount, Collection.Untouched)
 
-  /** Copy-on-write rewrite of the data directory with an atomic-ish
-    * rename swap — the shared machinery of [[compact]], [[delete]] and
-    * [[update]] (parquet is immutable; every lakehouse DELETE/UPDATE is
-    * this under the hood). A crash between the two renames is repaired
-    * by the open-time recovery above (data_old restored). */
-  private def rewriteData(next: DataFrame): Unit = {
-    val fs = new Path(dataDir).getFileSystem(
-      spark.sparkContext.hadoopConfiguration)
-    val tmp = new Path(dir, "data_compact")
-    if (fs.exists(tmp)) fs.delete(tmp, true)
+  // ---- the write path ---------------------------------------------------
+
+  /** The collection sidecar for the current watermark and row count. */
+  private def writeSidecar(): Unit = Meta.write(spark, dir,
+    CollectionMeta(name, lastId, embedder.dim, embedder.id, rowsCount))
+
+  /** The ONE commit step of every copy-on-write mutation — compact,
+    * delete, findOneAndDelete, replaceOne, the update paths and
+    * [[Txn.commit]] (parquet is immutable; every lakehouse
+    * DELETE/UPDATE is this under the hood). It writes `next` as a new
+    * generation, then, in order:
+    *  1. swaps it in with [[swapDir]], appending its change events
+    *     first when capture is on;
+    *  2. sets the row count to `rows` and the watermark to `watermark`;
+    *  3. writes the collection sidecar;
+    *  4. records `change` in each side index whose sidecar exists:
+    *     removed ids become tombstones, an in-place rewrite poisons it.
+    * Removed ids read the generation being replaced, so they are
+    * materialized before the swap — and only when an index will record
+    * them. */
+  private def commitGeneration(next: DataFrame, rows: Long,
+      change: Collection.Change, watermark: Long = lastId): Unit = {
+    val indexed = Seq(ivf, text).filter(_.sidecar.isDefined)
+    val dead = change match {
+      case Collection.Removed(ids) if indexed.nonEmpty =>
+        Some(ids.localCheckpoint())
+      case _ => None
+    }
+    val live = new Path(dataDir)
+    val tmp = clearedTmp(live)
     next.write.parquet(tmp.toString)
     if (captureChanges) {
-      // diff the old generation (still live in dataDir) against the
-      // materialized tmp generation — both are plain parquet scans, no
-      // recomputation of `next`'s plan. Null-safe payload compare, so
-      // identical rows (e.g. a compact()) emit nothing.
+      // diff the old generation (still live) against the written one —
+      // both are plain parquet scans, no recomputation of `next`'s plan
       val t = nextOpTime()
       val o = df.select(col(Schema.IdCol),
         col(Schema.DocCol).as("doc_a"), col(Schema.MetaCol).as("meta_a"),
         lit(true).as("present_a"))
-      val nw = spark.read
-        .schema(graft.core.Schema.collectionSchema(embedder.dim))
+      val nw = spark.read.schema(Schema.collectionSchema(embedder.dim))
         .parquet(tmp.toString)
         .select(col(Schema.IdCol),
           col(Schema.DocCol).as("doc_b"), col(Schema.MetaCol).as("meta_b"),
           lit(true).as("present_b"))
-      val events = o.join(nw, Seq(Schema.IdCol), "full_outer")
+      appendChangeEvents(t, o.join(nw, Seq(Schema.IdCol), "full_outer")
         .withColumn("op",
           when(col("present_a").isNull, lit("insert"))
             .when(col("present_b").isNull, lit("delete"))
@@ -1491,19 +1443,73 @@ final class Collection(
               !(col("meta_a") <=> col("meta_b")), lit("update")))
         .filter(col("op").isNotNull)
         .select(lit(t).as("op_time"), col("op"), col(Schema.IdCol),
-          col("doc_b").as(Schema.DocCol), col("meta_b").as(Schema.MetaCol))
-      appendChangeEvents(t, events)
+          col("doc_b").as(Schema.DocCol), col("meta_b").as(Schema.MetaCol)))
     }
-    val old = new Path(dir, "data_old")
+    swapDir(tmp, live)
+    lastId = watermark
+    rowsCount = rows
+    writeSidecar()
+    indexed.foreach { ix =>
+      if (change == Collection.Rewritten) ix.poison()
+      dead.foreach(ix.entomb)
+    }
+  }
+
+  /** `<live>_compact`, emptied: where a replacement for `live` is
+    * written before [[swapDir]]. */
+  private def clearedTmp(live: Path): Path = {
+    val tmp = new Path(live.getParent, live.getName + "_compact")
+    if (fs.exists(tmp)) fs.delete(tmp, true)
+    tmp
+  }
+
+  private def oldOf(live: Path): Path =
+    new Path(live.getParent, live.getName + "_old")
+
+  /** Replace directory `live` by the fully written `tmp` — the data
+    * generation and the change log both swap through here: delete a
+    * leftover `<live>_old`, rename live → `<live>_old`, rename tmp →
+    * live (renaming `_old` back when that fails), delete `_old`. A
+    * crash between the two renames leaves the before-state at
+    * `<live>_old`, which [[restoreSwap]] puts back on reopen. */
+  private def swapDir(tmp: Path, live: Path): Unit = {
+    val old = oldOf(live)
     if (fs.exists(old)) fs.delete(old, true)
-    if (!fs.rename(new Path(dataDir), old))
-      throw new java.io.IOException(s"rewrite: rename data->data_old failed")
-    if (!fs.rename(tmp, new Path(dataDir))) {
-      fs.rename(old, new Path(dataDir)) // roll back
-      throw new java.io.IOException(s"rewrite: rename rewrite->data failed")
+    if (!fs.rename(live, old))
+      throw new java.io.IOException(s"swap: rename $live -> $old failed")
+    if (!fs.rename(tmp, live)) {
+      fs.rename(old, live)
+      throw new java.io.IOException(s"swap: rename $tmp -> $live failed")
     }
     fs.delete(old, true)
   }
+
+  /** Reopen repair of [[swapDir]]'s crash window. */
+  private def restoreSwap(live: Path): Unit = {
+    val old = oldOf(live)
+    if (!fs.exists(live) && fs.exists(old)) fs.rename(old, live)
+  }
+
+  /** Rows matching an MQL filter; a null verdict (missing field) is no
+    * match. */
+  private def matching(filterJson: String): Column =
+    coalesce(MqlFilter.toColumn(filterJson,
+      MqlFilter.JsonResolver(col(Schema.MetaCol))), lit(false))
+
+  /** The FIRST document matching the filter — lowest `_m_id`, the
+    * store's deterministic stand-in for Mongo's natural (storage)
+    * order — as `(id, metadata)`; the one lookup behind replaceOne and
+    * the findOneAnd* family. */
+  private def firstMatch(filterJson: String): Option[(Long, String)] =
+    if (!hasData) None
+    else df.filter(matching(filterJson))
+      .orderBy(col(Schema.IdCol).asc).limit(1)
+      .select(col(Schema.IdCol), col(Schema.MetaCol)).collect()
+      .headOption.map(r => (r.getLong(0), r.getString(1)))
+
+  private def metaOf(id: Long): String =
+    df.filter(col(Schema.IdCol) === id)
+      .select(col(Schema.MetaCol)).head().getString(0)
 
   /** Delete documents matching an MQL filter — copy-on-write rewrite.
     * Surviving ids are unchanged and deleted ids are NOT reused (the
@@ -1514,28 +1520,12 @@ final class Collection(
     * capability a real user of a document+vector store expects. */
   def delete(filterJson: String): Long = {
     if (!hasData) return 0L
-    val pred = coalesce(MqlFilter.toColumn(filterJson,
-      MqlFilter.JsonResolver(col(Schema.MetaCol))), lit(false))
-    // capture removed ids BEFORE the rewrite swaps the generation —
-    // only when an index sidecar exists (the tombstone recording is
-    // what keeps delete-heavy index maintenance O(delta)); skip the
-    // extra job entirely on unindexed collections
-    val hasIvf = Meta.readIndex(spark, indexDir).isDefined
-    val hasText = Meta.readIndex(spark, textIndexDir).isDefined
-    val dead = if (hasIvf || hasText)
-      Some(df.filter(pred).select(col(Schema.IdCol)).localCheckpoint())
-    else None
+    val pred = matching(filterJson)
     val keep = df.filter(!pred)
     val kept = keep.count()
     val removed = rowsCount - kept
-    if (removed > 0L) {
-      rewriteData(keep)
-      rowsCount = kept
-      Meta.write(spark, dir,
-        CollectionMeta(name, lastId, embedder.dim, embedder.id, rowsCount))
-      if (hasIvf) dead.foreach(recordTombstones)
-      if (hasText) dead.foreach(recordTextTombstones)
-    }
+    if (removed > 0L) commitGeneration(keep, kept,
+      Collection.Removed(df.filter(pred).select(col(Schema.IdCol))))
     removed
   }
 
@@ -1548,40 +1538,37 @@ final class Collection(
     * replace). Copy-on-write rewrite; returns 1 when a document
     * matched, 0 otherwise. */
   def replaceOne(filterJson: String, document: String,
-      metadata: Map[String, Any] = Map.empty): Long = {
-    if (!hasData) return 0L
-    val pred = coalesce(MqlFilter.toColumn(filterJson,
-      MqlFilter.JsonResolver(col(Schema.MetaCol))), lit(false))
-    val hit = df.filter(pred).agg(min(col(Schema.IdCol))).head()
-    if (hit.isNullAt(0)) return 0L
-    val id = hit.getLong(0)
+      metadata: Map[String, Any] = Map.empty): Long =
+    firstMatch(filterJson).fold(0L) { case (id, _) =>
+      replaceId(id, document, metadata); 1L
+    }
+
+  /** Replace document `id`'s text, embedding and metadata in place. The
+    * rewrite changes content UNDER an unchanged id / watermark /
+    * rowcount, so both index families' coverage arithmetic still passes
+    * while their entries describe the OLD content (stale postings would
+    * keep matching the old text; the IVF entry pins the id to the old
+    * embedding's list). Tombstone+reinsert can't express this —
+    * tombstones drop dead ids at join-back, and this id stays live — so
+    * the commit poisons the sidecars and the next ensure rebuilds: the
+    * same cost class as this O(n) copy-on-write, paid once, lazily, by
+    * the next index consumer. */
+  private def replaceId(id: Long, document: String,
+      metadata: Map[String, Any]): Unit = {
     val emb = embedder.embedOne(document)
     val embLit = array(emb.map(v => lit(v)): _*)
     val metaJson =
       if (metadata.isEmpty) lit(null).cast("string")
       else lit(Data.toJson(metadata))
     val isHit = col(Schema.IdCol) === id
-    rewriteData(df
+    commitGeneration(df
       .withColumn(Schema.DocCol,
         when(isHit, lit(document)).otherwise(col(Schema.DocCol)))
       .withColumn(Schema.EmbeddingCol,
         when(isHit, embLit).otherwise(col(Schema.EmbeddingCol)))
       .withColumn(Schema.MetaCol,
-        when(isHit, metaJson).otherwise(col(Schema.MetaCol))))
-    // the rewrite changed text + embedding UNDER an unchanged id /
-    // watermark / rowcount, so both index families' coverage arithmetic
-    // still passes while their entries describe the OLD content (stale
-    // postings would keep matching the old text; the IVF entry pins the
-    // id to the old embedding's list). Tombstone+reinsert can't express
-    // this — tombstones drop dead ids at join-back, and this id stays
-    // live — so poison the sidecars: the next ensure rebuilds. replaceOne
-    // is already an O(n) copy-on-write, so the rebuild is the same cost
-    // class, paid once, lazily, by the next index consumer.
-    Meta.readIndex(spark, indexDir).foreach(m =>
-      Meta.writeIndex(spark, indexDir, m.copy(stale = true)))
-    Meta.readIndex(spark, textIndexDir).foreach(m =>
-      Meta.writeIndex(spark, textIndexDir, m.copy(stale = true)))
-    1L
+        when(isHit, metaJson).otherwise(col(Schema.MetaCol))),
+      rowsCount, Collection.Rewritten)
   }
 
   /** Mongo-style $set on metadata for documents matching an MQL filter —
@@ -1590,28 +1577,6 @@ final class Collection(
     if (set.isEmpty) 0L
     else updateDoc(filterJson, s"""{"$$set": ${Data.toJson(set)}}""")
 
-  /** Mongo update document over metadata: `{"$set": {...}, "$inc":
-    * {...}, "$unset": {...}, "$push": {...}, "$addToSet": {...},
-    * "$pull": {...}, "$rename": {...}}` applied to every document
-    * matching the MQL filter — the FerretDB update-operator surface.
-    * $inc adds to a numeric field (missing field starts at 0,
-    * integral+integral stays integral — Mongo's long-vs-double
-    * behavior); $inc on a non-numeric value fails the job loudly (Mongo
-    * errors too); $unset removes keys. $push/$addToSet append to an
-    * array field (created when missing; `{$each: [...]}` appends many;
-    * $addToSet skips structurally-equal existing elements); both fail
-    * loudly on a non-array value, as Mongo does. $pull removes all
-    * elements structurally equal to the operand (missing field: no-op).
-    * $pop removes the last (1) or first (−1) element (empty/missing:
-    * no-op). $min/$max keep the smaller/larger of current and operand
-    * (missing: operand wins); $mul multiplies (missing → 0 — Mongo's
-    * convention), integral×integral staying integral like $inc.
-    * $rename moves a key (missing source: no-op — Mongo's contract).
-    * Operators apply in the fixed order $set, $inc, $unset, $min,
-    * $max, $mul, $push, $addToSet, $pull, $pop, $rename. Copy-on-write rewrite; document text
-    * and embeddings untouched. The merge is a per-row JSON transform
-    * off the hot query path — maintenance ops trade codegen for exact
-    * JSON semantics. */
   /** Mongo upsert: run the update; when NOTHING matched, create the
     * document — metadata seeded from the filter's top-level EQUALITY
     * conditions (`{f: lit}` / `{f: {$eq: lit}}` — Mongo's seeding
@@ -1684,6 +1649,28 @@ final class Collection(
     0L
   }
 
+  /** Mongo update document over metadata: `{"$set": {...}, "$inc":
+    * {...}, "$unset": {...}, "$push": {...}, "$addToSet": {...},
+    * "$pull": {...}, "$rename": {...}}` applied to every document
+    * matching the MQL filter — the FerretDB update-operator surface.
+    * $inc adds to a numeric field (missing field starts at 0,
+    * integral+integral stays integral — Mongo's long-vs-double
+    * behavior); $inc on a non-numeric value fails the job loudly (Mongo
+    * errors too); $unset removes keys. $push/$addToSet append to an
+    * array field (created when missing; `{$each: [...]}` appends many;
+    * $addToSet skips structurally-equal existing elements); both fail
+    * loudly on a non-array value, as Mongo does. $pull removes all
+    * elements structurally equal to the operand (missing field: no-op).
+    * $pop removes the last (1) or first (−1) element (empty/missing:
+    * no-op). $min/$max keep the smaller/larger of current and operand
+    * (missing: operand wins); $mul multiplies (missing → 0 — Mongo's
+    * convention), integral×integral staying integral like $inc.
+    * $rename moves a key (missing source: no-op — Mongo's contract).
+    * Operators apply in the fixed order $set, $inc, $unset, $min,
+    * $max, $mul, $push, $addToSet, $pull, $pop, $rename. Copy-on-write rewrite; document text
+    * and embeddings untouched. The merge is a per-row JSON transform
+    * off the hot query path — maintenance ops trade codegen for exact
+    * JSON semantics. */
   def updateDoc(filterJson: String, updateJson: String): Long =
     updateDoc(filterJson, updateJson, arrayFiltersJson = null)
 
@@ -1693,8 +1680,7 @@ final class Collection(
   def updateDoc(filterJson: String, updateJson: String,
       arrayFiltersJson: String): Long = {
     if (!hasData) return 0L
-    val pred = coalesce(MqlFilter.toColumn(filterJson,
-      MqlFilter.JsonResolver(col(Schema.MetaCol))), lit(false))
+    val pred = matching(filterJson)
     // Mongo 4.2 update PIPELINES: `[{"$set": {f: <aggregation expr>}}]`
     // — values COMPUTED from the document itself (the literal-operand
     // operators above can't express "a = b + c"). Scope: $set stages
@@ -1790,21 +1776,12 @@ final class Collection(
       m.writeValueAsString(base)
     }
     val updated = df.filter(pred).count()
-    if (updated > 0L) {
-      rewriteData(df.withColumn(Schema.MetaCol,
-        when(pred, mergeUdf(col(Schema.MetaCol), patch))
-          .otherwise(col(Schema.MetaCol))))
-    }
+    if (updated > 0L) commitGeneration(df.withColumn(Schema.MetaCol,
+      when(pred, mergeUdf(col(Schema.MetaCol), patch))
+        .otherwise(col(Schema.MetaCol))), rowsCount, Collection.Untouched)
     updated
   }
 
-  /** Mongo `findOneAndUpdate`: apply the update document to the FIRST
-    * matching document only (lowest `_m_id` — the store's
-    * deterministic natural order, the [[replaceOne]] contract) and
-    * return `(id, metadata)`: the PRE-image by default, the POST-image
-    * with `returnNew` (Mongo's returnNewDocument). None when nothing
-    * matches. Single-writer store — atomicity IS the copy-on-write
-    * rewrite + rename swap. */
   /** Mongo ORDERED bulkWrite: a JSON array of operations executed
     * sequentially — each op sees the previous ops' effects (Mongo's
     * ordered mode; the unordered mode's only contract is "all ops
@@ -1876,22 +1853,7 @@ final class Collection(
             case None => ()
           }
         case "deleteMany" => nDel += delete(fj)
-        case "deleteOne" =>
-          if (hasData) {
-            val pred = coalesce(MqlFilter.toColumn(fj,
-              MqlFilter.JsonResolver(col(Schema.MetaCol))), lit(false))
-            val hit = df.filter(pred).agg(min(col(Schema.IdCol))).head()
-            if (!hit.isNullAt(0)) {
-              val id = hit.getLong(0)
-              rewriteData(df.filter(col(Schema.IdCol) =!= id))
-              rowsCount -= 1
-              Meta.write(spark, dir, CollectionMeta(name, lastId,
-                embedder.dim, embedder.id, rowsCount))
-              recordTombstoneId(id)
-              recordTextTombstoneId(id)
-              nDel += 1
-            }
-          }
+        case "deleteOne" => nDel += findOneAndDelete(fj).size
         case "replaceOne" =>
           nMatch += replaceOne(fj, docText(spec.get("document")))
         case other => throw new IllegalArgumentException(
@@ -1940,9 +1902,6 @@ final class Collection(
     private var done: Option[String] = None
     private def live(): Unit = require(done.isEmpty,
       s"transaction already ${done.get}")
-    private def predOf(filterJson: String) =
-      coalesce(MqlFilter.toColumn(filterJson,
-        MqlFilter.JsonResolver(col(Schema.MetaCol))), lit(false))
 
     /** Truncate the staged lineage after every mutation (r13): without
       * this, each op's matched-count job re-evaluates EVERY prior
@@ -1966,21 +1925,10 @@ final class Collection(
       * embedded now, visible to later ops in THIS transaction only. */
     def insert(data: Data): Unit = {
       live()
-      if (data.metadatas.nonEmpty &&
-        data.documents.length != data.metadatas.length)
-        throw new FieldLengthMismatch
+      val base = batchFrame(data)
       if (data.documents.isEmpty) return
-      val rows = if (data.metadatas.isEmpty)
-        data.documents.map(d => (d, null: String))
-      else data.documents.zip(data.metadatas)
-      val base = spark.createDataFrame(rows)
-        .toDF(Schema.DocCol, Schema.MetaCol)
       val n = data.documents.length.toLong
-      val indexed = embedder.embedDF(
-          zipWithId(base, nextId)._1, Schema.DocCol, Schema.EmbeddingCol)
-        .select(col(Schema.IdCol), col(Schema.DocCol),
-          col(Schema.EmbeddingCol), col(Schema.MetaCol))
-      stage(frame.unionByName(indexed))
+      stage(frame.unionByName(embedded(zipWithId(base, nextId)._1)))
       nextId += n
       insertedN += n
     }
@@ -1990,7 +1938,7 @@ final class Collection(
       * the staged frame — one count job, no write). */
     def updateMany(filterJson: String, updateJson: String): Long = {
       live()
-      val pred = predOf(filterJson)
+      val pred = matching(filterJson)
       val mergeUdf = validatedUpdateUdf(updateJson,
         arrayFiltersJson = null, queryFilterJson = filterJson)
       val matched = frame.filter(pred).count()
@@ -2007,7 +1955,7 @@ final class Collection(
       * returns the removed count. */
     def deleteMany(filterJson: String): Long = {
       live()
-      val pred = predOf(filterJson)
+      val pred = matching(filterJson)
       val removed = frame.filter(pred).count()
       if (removed > 0L) {
         stage(frame.filter(!pred))
@@ -2018,20 +1966,23 @@ final class Collection(
 
     /** Publish every staged operation through ONE copy-on-write
       * rewrite. Loud WriteConflict when the collection moved since
-      * begin; no-op commit when nothing was staged. */
+      * begin; no-op commit when nothing was staged. Deleted ids are
+      * the live ids missing from the staged frame — the conflict check
+      * guarantees the live generation still holds exactly the ids the
+      * transaction began with — and become index tombstones, so the
+      * next ensure stays O(delta). */
     def commit(): Unit = {
       live()
       require(lastId == startLastId && rowsCount == startRows,
         s"write conflict: collection '$name' changed since this " +
           "transaction began (watermark moved) — abort and retry")
-      if (insertedN > 0 || deletedN > 0 || updatedAny) {
-        rewriteData(frame)
-        lastId = nextId
-        rowsCount = startRows + insertedN - deletedN
-        Meta.write(spark, dir,
-          CollectionMeta(name, lastId, embedder.dim, embedder.id,
-            rowsCount))
-      }
+      if (insertedN > 0 || deletedN > 0 || updatedAny)
+        commitGeneration(frame, startRows + insertedN - deletedN,
+          if (deletedN == 0) Collection.Untouched
+          else Collection.Removed(df.select(col(Schema.IdCol))
+            .join(frame.select(col(Schema.IdCol)), Seq(Schema.IdCol),
+              "left_anti")),
+          watermark = nextId)
       done = Some("committed")
     }
 
@@ -2063,65 +2014,42 @@ final class Collection(
     * (lowest `_m_id` — the store's deterministic natural order) and
     * return its `(id, metadata)` pre-image; None when nothing
     * matches. Copy-on-write rewrite like [[delete]]. */
-  def findOneAndDelete(filterJson: String): Option[(Long, String)] = {
-    if (!hasData) return None
-    val pred = coalesce(MqlFilter.toColumn(filterJson,
-      MqlFilter.JsonResolver(col(Schema.MetaCol))), lit(false))
-    val hit = df.filter(pred)
-      .orderBy(col(Schema.IdCol).asc).limit(1)
-      .select(col(Schema.IdCol), col(Schema.MetaCol)).collect()
-    if (hit.isEmpty) return None
-    val id = hit(0).getLong(0)
-    rewriteData(df.filter(col(Schema.IdCol) =!= id))
-    rowsCount -= 1
-    Meta.write(spark, dir,
-      CollectionMeta(name, lastId, embedder.dim, embedder.id, rowsCount))
-    recordTombstoneId(id)
-    recordTextTombstoneId(id)
-    Some((id, hit(0).getString(1)))
-  }
+  def findOneAndDelete(filterJson: String): Option[(Long, String)] =
+    firstMatch(filterJson).map { hit =>
+      commitGeneration(df.filter(col(Schema.IdCol) =!= hit._1),
+        rowsCount - 1, Collection.Removed(
+          spark.range(1).select(lit(hit._1).as(Schema.IdCol))))
+      hit
+    }
 
   /** Mongo `findOneAndReplace`: [[replaceOne]] that returns the
     * replaced document's `(id, metadata)` pre-image (or the
     * post-image with `returnNew`); None when nothing matches. */
   def findOneAndReplace(filterJson: String, document: String,
       metadata: Map[String, Any] = Map.empty,
-      returnNew: Boolean = false): Option[(Long, String)] = {
-    if (!hasData) return None
-    val pred = coalesce(MqlFilter.toColumn(filterJson,
-      MqlFilter.JsonResolver(col(Schema.MetaCol))), lit(false))
-    val hit = df.filter(pred)
-      .orderBy(col(Schema.IdCol).asc).limit(1)
-      .select(col(Schema.IdCol), col(Schema.MetaCol)).collect()
-    if (hit.isEmpty) return None
-    val id = hit(0).getLong(0)
-    val pre = hit(0).getString(1)
-    replaceOne(filterJson, document, metadata)
-    if (!returnNew) Some((id, pre))
-    else Some((id, df.filter(col(Schema.IdCol) === id)
-      .select(col(Schema.MetaCol)).head().getString(0)))
-  }
+      returnNew: Boolean = false): Option[(Long, String)] =
+    firstMatch(filterJson).map { case (id, pre) =>
+      replaceId(id, document, metadata)
+      (id, if (returnNew) metaOf(id) else pre)
+    }
 
+  /** Mongo `findOneAndUpdate`: apply the update document to the FIRST
+    * matching document only (lowest `_m_id` — the store's
+    * deterministic natural order, the [[replaceOne]] contract) and
+    * return `(id, metadata)`: the PRE-image by default, the POST-image
+    * with `returnNew` (Mongo's returnNewDocument). None when nothing
+    * matches. Single-writer store — atomicity IS the copy-on-write
+    * rewrite + directory swap. */
   def findOneAndUpdate(filterJson: String, updateJson: String,
       returnNew: Boolean = false,
-      arrayFiltersJson: String = null): Option[(Long, String)] = {
-    if (!hasData) return None
-    val pred = coalesce(MqlFilter.toColumn(filterJson,
-      MqlFilter.JsonResolver(col(Schema.MetaCol))), lit(false))
-    val hit = df.filter(pred)
-      .orderBy(col(Schema.IdCol).asc).limit(1)
-      .select(col(Schema.IdCol), col(Schema.MetaCol)).collect()
-    if (hit.isEmpty) return None
-    val id = hit(0).getLong(0)
-    val pre = hit(0).getString(1)
-    // the id restricts the rewrite; the ORIGINAL filter still resolves
-    // any positional '$' segments
-    updateWhere(col(Schema.IdCol) === id, updateJson,
-      arrayFiltersJson, filterJson)
-    if (!returnNew) Some((id, pre))
-    else Some((id, df.filter(col(Schema.IdCol) === id)
-      .select(col(Schema.MetaCol)).head().getString(0)))
-  }
+      arrayFiltersJson: String = null): Option[(Long, String)] =
+    firstMatch(filterJson).map { case (id, pre) =>
+      // the id restricts the rewrite; the ORIGINAL filter still
+      // resolves any positional '$' segments
+      updateWhere(col(Schema.IdCol) === id, updateJson,
+        arrayFiltersJson, filterJson)
+      (id, if (returnNew) metaOf(id) else pre)
+    }
 
   /** [[updateDoc]]'s core over an arbitrary row predicate — shared
     * with [[findOneAndUpdate]]'s single-id restriction.
@@ -2133,11 +2061,9 @@ final class Collection(
     val mergeUdf =
       validatedUpdateUdf(updateJson, arrayFiltersJson, queryFilterJson)
     val updated = df.filter(pred).count()
-    if (updated > 0L) {
-      rewriteData(df.withColumn(Schema.MetaCol,
-        when(pred, mergeUdf(col(Schema.MetaCol)))
-          .otherwise(col(Schema.MetaCol))))
-    }
+    if (updated > 0L) commitGeneration(df.withColumn(Schema.MetaCol,
+      when(pred, mergeUdf(col(Schema.MetaCol)))
+        .otherwise(col(Schema.MetaCol))), rowsCount, Collection.Untouched)
     updated
   }
 

@@ -75,6 +75,21 @@ object GraftConfig {
   /** Defaults — the analogue of the reference's `defaultCfg`. */
   def default: GraftConfig = GraftConfig()
 
+  /** A `graft.*` session-conf integer, the runtime layer over these
+    * defaults, with the conf key named in the failure — a malformed
+    * value ('8x') must fail as actionably as an out-of-range one, not
+    * with a bare NumberFormatException. Range checks stay with the
+    * caller. */
+  private[graft] def confInt(s: org.apache.spark.sql.SparkSession,
+      key: String): Option[Int] =
+    s.conf.getOption(key).map { v =>
+      try v.trim.toInt
+      catch { case _: NumberFormatException =>
+        throw new IllegalArgumentException(
+          s"$key must be an integer, got: '$v'")
+      }
+    }
+
   /** Bits-per-band sized to the corpus: with bucket count 2^bits per
     * band, expected bucket membership ≈ N / 2^bits, so holding buckets
     * near `targetBucket` needs bits ≥ log2(N / targetBucket). Floored at

@@ -21,26 +21,25 @@ final case class CollectionMeta(
     embedderId: String,
     rows: Long)
 
-/** Index-coverage sidecar for a persisted IVF index: the id watermark and
-  * row count the index covers, plus its nlist. The incremental-maintenance
-  * analogue of the reference's hnswId/hnswSize bookkeeping
-  * (/root/reference/db/meta.go:11-16, db/db.go:191-207): on reopen-or-
-  * insert the engine appends only ids past `indexedLastId` instead of
-  * rebuilding — the reference replays the tail into its HNSW the same way.
-  */
-/** Persisted-index coverage sidecar. `indexedRows` counts rows IN THE
-  * LISTS (including tombstoned ones — the storage trust check compares
-  * against physical list rows); live coverage is
-  * `indexedRows - tombstones`. `tombstones` (r13) counts deleted ids
-  * recorded in the index's tombstone sidecar table — delete-heavy
-  * maintenance stays O(delta) instead of forcing a rebuild. */
-/** Index-coverage sidecar. `stale` is the in-place-rewrite poison pill
-  * (r15): replaceOne swaps document text + embedding UNDER an unchanged
+/** Index-coverage sidecar of a persisted side index (the IVF lists or
+  * the text postings): the id watermark and row count it covers, plus
+  * its nlist (the text index records its bucket count). The
+  * incremental-maintenance analogue of the reference's hnswId/hnswSize
+  * bookkeeping (the reference's db/meta.go:11-16, db/db.go:191-207): on
+  * reopen-or-insert the engine appends only ids past `indexedLastId`
+  * instead of rebuilding, as the reference replays the tail into its
+  * HNSW.
+  *
+  * `indexedRows` counts rows IN STORAGE, tombstoned ones included (the
+  * storage trust check compares against physical rows); live coverage
+  * is `indexedRows - tombstones`. `tombstones` counts deleted ids
+  * recorded in the index's tombstone table, so deletes stay O(delta)
+  * instead of forcing a rebuild. `stale` is the in-place-rewrite poison
+  * pill: replaceOne swaps document text + embedding under an unchanged
   * id/watermark/rowcount, so every arithmetic coverage check still
-  * passes while the postings/list entries describe the OLD content —
-  * the ensure ladders must treat a stale sidecar as "rebuild required"
-  * no matter what the counters say. Absent in pre-r15 sidecars ⇒ false
-  * (those stores had no in-place rewrite yet). */
+  * passes while the entries describe the OLD content — a stale sidecar
+  * means "rebuild required" whatever the counters say. Absent in older
+  * sidecars ⇒ false. */
 final case class IndexMeta(indexedLastId: Long, indexedRows: Long,
     nlist: Int, tombstones: Long = 0L, stale: Boolean = false)
 
@@ -63,10 +62,13 @@ object Meta {
   }
 
   /** write-temp + rename, NOT truncate-in-place: a crash between
-    * create() and close() would leave an empty/partial sidecar, and the
-    * sidecar is the recovery anchor this module exists to protect. */
-  private def writeAtomic(spark: SparkSession, dir: String, name: String,
-      bytes: Array[Byte]): Unit = {
+    * create() and close() would leave an empty/partial file, and these
+    * small files (the sidecars, the change-log floor) are the recovery
+    * anchors this module exists to protect. A crash between the delete
+    * and the rename leaves only `name.tmp`, complete: the file then
+    * reads as absent. */
+  private[graft] def writeAtomic(spark: SparkSession, dir: String,
+      name: String, bytes: Array[Byte]): Unit = {
     val p = new Path(dir, name)
     val tmp = new Path(dir, name + ".tmp")
     val f = fs(spark, p)
@@ -87,78 +89,54 @@ object Meta {
     writeAtomic(spark, indexDir, IndexFileName, mapper.writeValueAsBytes(node))
   }
 
-  /** Same corrupt-reads-as-absent contract as [[read]]: an unreadable
-    * index sidecar means "coverage unknown" and the caller falls back to
-    * the trust-check-then-rebuild path — never throws. */
-  def readIndex(spark: SparkSession, indexDir: String): Option[IndexMeta] = {
-    val p = new Path(indexDir, IndexFileName)
+  /** The bytes of a small file, or None when it does not exist.
+    * `readAllBytes` loops to end of stream, so a short read never
+    * truncates the content. A torn file surfaces as a
+    * `ChecksumException` or `EOFException` for the caller to judge. */
+  private[graft] def readSmall(spark: SparkSession, p: Path)
+      : Option[Array[Byte]] = {
     val f = fs(spark, p)
     if (!f.exists(p)) None
-    else try {
+    else {
       val in = f.open(p)
-      val bytes =
-        try {
-          val buf = new java.io.ByteArrayOutputStream()
-          val tmp = new Array[Byte](4096)
-          var n = in.read(tmp)
-          while (n > 0) { buf.write(tmp, 0, n); n = in.read(tmp) }
-          buf.toByteArray
-        } finally in.close()
-      val node = mapper.readTree(new String(bytes, StandardCharsets.UTF_8))
-      if (node == null || !node.isObject || node.get("indexedLastId") == null)
-        None
-      else Some(IndexMeta(
+      try Some(in.readAllBytes()) finally in.close()
+    }
+  }
+
+  /** A sidecar's JSON object carrying `key`, or None when the file is
+    * absent, torn or unparsable: a corrupt sidecar must read as ABSENT,
+    * not throw. The data directory is intact and the open-time recovery
+    * (max(_m_id) fallback) or the index trust-check-then-rebuild path
+    * re-derives what it held — throwing here would brick the collection
+    * the recovery exists to heal. */
+  private def readJson(spark: SparkSession, p: Path, key: String)
+      : Option[com.fasterxml.jackson.databind.JsonNode] =
+    try readSmall(spark, p)
+      .map(b => mapper.readTree(new String(b, StandardCharsets.UTF_8)))
+      .filter(n => n != null && n.isObject && n.get(key) != null)
+    catch {
+      case _: org.apache.hadoop.fs.ChecksumException |
+          _: java.io.EOFException |
+          _: com.fasterxml.jackson.core.JacksonException => None
+    }
+
+  def readIndex(spark: SparkSession, indexDir: String): Option[IndexMeta] =
+    readJson(spark, new Path(indexDir, IndexFileName), "indexedLastId")
+      .map(node => IndexMeta(
         node.get("indexedLastId").asLong(),
         node.get("indexedRows").asLong(),
         node.get("nlist").asInt(),
         Option(node.get("tombstones")).map(_.asLong()).getOrElse(0L),
         Option(node.get("stale")).exists(_.asBoolean())))
-    } catch {
-      case _: org.apache.hadoop.fs.ChecksumException |
-          _: java.io.EOFException => None
-      case _: com.fasterxml.jackson.core.JacksonException => None
-    }
-  }
 
-  def read(spark: SparkSession, dir: String): Option[CollectionMeta] = {
-    val p = new Path(dir, FileName)
-    val f = fs(spark, p)
-    if (!f.exists(p)) None
-    else {
-      val bytes =
-        try {
-          val in = f.open(p)
-          try {
-            val buf = new java.io.ByteArrayOutputStream()
-            val tmp = new Array[Byte](4096)
-            var n = in.read(tmp)
-            while (n > 0) { buf.write(tmp, 0, n); n = in.read(tmp) }
-            buf.toByteArray
-          } finally in.close()
-        } catch {
-          // bytes-level corruption (torn write): checksum mismatch or
-          // truncation — same treatment as unparseable JSON below
-          case _: org.apache.hadoop.fs.ChecksumException |
-              _: java.io.EOFException => return None
-        }
-      // a corrupt/truncated sidecar must read as ABSENT, not throw:
-      // the data directory is intact and the open-time recovery path
-      // (max(_m_id) fallback) re-derives the watermark — throwing here
-      // would brick the collection the recovery exists to heal
-      try {
-        val node = mapper.readTree(new String(bytes, StandardCharsets.UTF_8))
-        if (node == null || !node.isObject || node.get("name") == null) None
-        else Some(CollectionMeta(
-          node.get("name").asText(),
-          node.get("lastId").asLong(),
-          node.get("dim").asInt(),
-          node.get("embedderId").asText(),
-          node.get("rows").asLong()))
-      } catch {
-        case _: com.fasterxml.jackson.core.JacksonException => None
-      }
-    }
-  }
+  def read(spark: SparkSession, dir: String): Option[CollectionMeta] =
+    readJson(spark, new Path(dir, FileName), "name").map(node =>
+      CollectionMeta(
+        node.get("name").asText(),
+        node.get("lastId").asLong(),
+        node.get("dim").asInt(),
+        node.get("embedderId").asText(),
+        node.get("rows").asLong()))
 
   def drop(spark: SparkSession, dir: String): Unit = {
     val p = new Path(dir, FileName)

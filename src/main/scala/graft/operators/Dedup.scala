@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.core.GraftConfig.confInt
 import graft.expr.CosineDupRemovedExpr
 import graft.functions.TextFunctions._
 import graft.functions.VectorFunctions._
@@ -1289,18 +1290,6 @@ object Dedup {
   // plan shape is fixed either way.
   private val BitsPerBand = graft.core.GraftConfig.default.dedupBitsPerBand
   private val NBands = graft.core.GraftConfig.default.dedupBands
-
-  /** Session-conf integer with the conf key named in the failure — a
-    * malformed value ('8x') must fail as actionably as an out-of-range
-    * one, not with a bare NumberFormatException. */
-  private def confInt(s: SparkSession, key: String): Option[Int] =
-    s.conf.getOption(key).map { v =>
-      try v.trim.toInt
-      catch { case _: NumberFormatException =>
-        throw new IllegalArgumentException(
-          s"$key must be an integer, got: '$v'")
-      }
-    }
 
   /** Runtime embed-LSH dials: session conf overrides layered over the
     * GraftConfig defaults — how a deployment raises selectivity without

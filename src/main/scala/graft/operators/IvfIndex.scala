@@ -168,20 +168,24 @@ object IvfIndex {
       .parquet(s"$indexDir/lists")
   }
 
+  /** The storage trust check of an index at `indexDir` (flat or PQ):
+    * committer _SUCCESS markers present, `nCents` centroids and exactly
+    * `listRows` list rows — the [[graft.core.Trust]] contract. The list
+    * row count is evaluated only when the centroids pass. */
+  def trusted(s: SparkSession, indexDir: String, nCents: Long,
+      listRows: => Long): Boolean =
+    graft.core.Trust.parquetDir(s, s"$indexDir/centroids", nCents) &&
+      graft.core.Trust.parquetDir(s, s"$indexDir/lists", listRows)
+
   /** [[build]] unless a previous build of the SAME vectors already sits
-    * at `outDir` — trust contract as elsewhere (Bucketing reuse,
-    * Collection.ensureIndex): committer _SUCCESS markers present, list
-    * rows == source rows, centroid count == |cents|. Index layout is a
-    * pure function of (vectors, cents), so a trusted leftover is
-    * equivalent; the reference likewise reopens its persisted HNSW
-    * snapshot instead of rebuilding (db/db.go:176-189). */
+    * at `outDir` ([[trusted]] with one list row per vector). Index
+    * layout is a pure function of (vectors, cents), so a trusted
+    * leftover is equivalent; the reference likewise reopens its
+    * persisted HNSW snapshot instead of rebuilding (db/db.go:176-189). */
   def ensureBuilt(s: SparkSession, vectors: DataFrame, outDir: String,
-      cents: Seq[(Long, Array[Float])]): String = {
-    val trusted =
-      graft.core.Trust.parquetDir(s, s"$outDir/centroids", cents.size.toLong) &&
-      graft.core.Trust.parquetDir(s, s"$outDir/lists", vectors.count())
-    if (trusted) outDir else build(s, vectors, outDir, cents)
-  }
+      cents: Seq[(Long, Array[Float])]): String =
+    if (trusted(s, outDir, cents.size, vectors.count())) outDir
+    else build(s, vectors, outDir, cents)
 
   /** Driver-side squared L2 — same double math + index fold order as the
     * column/oracle paths (the distance behind [[nearestLists]]). */
@@ -305,13 +309,9 @@ object IvfIndex {
 
   /** [[buildPq]] with the same trust-reuse contract as [[ensureBuilt]]. */
   def ensureBuiltPq(s: SparkSession, vectors: DataFrame, outDir: String,
-      cents: Seq[(Long, Array[Float])]): String = {
-    val trusted =
-      graft.core.Trust.parquetDir(s, s"$outDir/centroids",
-        cents.size.toLong) &&
-      graft.core.Trust.parquetDir(s, s"$outDir/lists", vectors.count())
-    if (trusted) outDir else buildPq(s, vectors, outDir, cents)
-  }
+      cents: Seq[(Long, Array[Float])]): String =
+    if (trusted(s, outDir, cents.size, vectors.count())) outDir
+    else buildPq(s, vectors, outDir, cents)
 
   /** Probe the PQ index: partition-pruned scan of the probed lists'
     * CODES, ADC rank to `budget` candidates (lookup-table sums, no float

@@ -64,14 +64,11 @@ object KaerQuery {
             to_json(struct(col("doc_id"), col("lang"), col("source"),
               col("n_chars"))).as(Schema.MetaCol))
             .orderBy("doc_id"))
-        // compact the fresh build (id-ranged rewrite + rename swap) so
-        // the maintenance machinery runs UNDER the oracle hash every
+        // compact the fresh build (id-ranged rewrite + directory swap)
+        // so the maintenance machinery runs UNDER the oracle hash every
         // build — results are layout-independent, so a compaction bug
-        // that corrupted rows/ids would break the gate. Conf-off for
-        // experiments that want the raw append layout.
-        if (s.conf.getOption("graft.kaer.compact_on_build")
-            .forall(_.toBoolean))
-          coll.compact()
+        // that corrupted rows/ids would break the gate
+        coll.compact()
         coll
       }
   }

@@ -103,26 +103,32 @@ object TextIndex {
         .exists(new org.apache.hadoop.fs.Path(s"$indexDir/terms"))
     catch { case _: Exception => false }
 
-  /** Same trust contract as [[IvfIndex.ensureBuilt]]: _SUCCESS markers
-    * + exact row counts (from meta) + the corpus hasn't grown + the
-    * analyzer flag matches (r18 — a pre-r18 meta without the flag
-    * reads as untrusted and rebuilds, the same heal path as an old
-    * layout). */
-  def ensureBuilt(s: SparkSession, d: DataFrame, outDir: String,
-      analyzed: Boolean = false): String = {
-    val trusted = layoutCurrent(s, outDir) &&
-      graft.core.Trust.parquetDir(s, s"$outDir/meta", 1L) && {
-        val m = s.read.parquet(s"$outDir/meta").head()
+  /** The storage trust check of an index at `indexDir`, the
+    * [[IvfIndex.trusted]] contract for postings: current layout,
+    * _SUCCESS markers with the exact row counts its meta records, the
+    * analyzer flag matches (r18 — a pre-r18 meta without the flag reads
+    * as untrusted and rebuilds, the same heal path as an old layout),
+    * and it covers exactly `docs` documents (evaluated last). */
+  def trusted(s: SparkSession, indexDir: String, docs: => Long,
+      analyzed: Boolean = false): Boolean =
+    layoutCurrent(s, indexDir) &&
+      graft.core.Trust.parquetDir(s, s"$indexDir/meta", 1L) && {
+        val m = s.read.parquet(s"$indexDir/meta").head()
         m.schema.fieldNames.contains("analyzed") &&
         m.getAs[Boolean]("analyzed") == analyzed &&
-        graft.core.Trust.parquetDir(s, s"$outDir/docstats",
+        graft.core.Trust.parquetDir(s, s"$indexDir/docstats",
           m.getAs[Long]("n_docs")) &&
-        graft.core.Trust.parquetDir(s, s"$outDir/postings",
+        graft.core.Trust.parquetDir(s, s"$indexDir/postings",
           m.getAs[Long]("n_postings")) &&
-        m.getAs[Long]("n_docs") == d.count()
+        m.getAs[Long]("n_docs") == docs
       }
-    if (trusted) outDir else build(s, d, outDir, analyzed)
-  }
+
+  /** [[build]] unless a trusted index of the same corpus already sits
+    * at `outDir`. */
+  def ensureBuilt(s: SparkSession, d: DataFrame, outDir: String,
+      analyzed: Boolean = false): String =
+    if (trusted(s, outDir, d.count(), analyzed)) outDir
+    else build(s, d, outDir, analyzed)
 
   /** Incremental maintenance — [[IvfIndex.appendTailPq]]'s text twin:
     * tokenize ONLY the new docs, append their postings into the

@@ -662,6 +662,24 @@ class KaerSpec extends SparkTestBase {
     } finally spark.conf.unset("graft.distinct.max_values")
   }
 
+  test("distinctValues: graft.distinct.max_values parses loudly and " +
+      "must be >= 1") {
+    val c = newSession(tmpDir("kaer-distinct-conf")).createCollection("c")
+    c.insert(Data().withDocuments(Seq("a", "b"))
+      .withMetadatas(Seq(Map("uid" -> "u1"), Map("uid" -> "u2"))))
+    val key = "graft.distinct.max_values"
+    for (bad <- Seq("8x", "0", "-1")) {
+      spark.conf.set(key, bad)
+      try {
+        val e = intercept[IllegalArgumentException] {
+          c.distinctValues("uid") }
+        assert(e.getMessage.contains(key) && e.getMessage.contains(bad),
+          s"$bad: ${e.getMessage}")
+      } finally spark.conf.unset(key)
+    }
+    assert(c.distinctValues("uid") == Seq("u1", "u2"))
+  }
+
   test("count(filter) and query projection (document-store find shape)") {
     val root = tmpDir("kaer-proj")
     val k = newSession(root)
@@ -1356,5 +1374,112 @@ class KaerSpec extends SparkTestBase {
       s"staged plan depth grew across ops: $depths")
     t.commit()
     assert(c.count() > 0)
+  }
+
+  test("transaction: deleteMany records index tombstones — both ensures " +
+      "stay no-ops and the deleted ids are never served") {
+    val root = tmpDir("kaer-txn-tomb")
+    val c = newSession(root).createCollection("c")
+    c.insert(Data()
+      .withDocuments((0 until 20).map(i => s"txn doc $i topic ${i % 3}"))
+      .withMetadatas((0 until 20).map(i => Map[String, Any]("g" -> i))))
+    c.ensureIndex(nlist = 2, iters = 1)
+    c.ensureTextIndex()
+    def counters =
+      (c.indexRebuilds, c.indexAppends, c.textIndexRebuilds,
+        c.textIndexAppends)
+    assert(counters == ((1L, 0L, 1L, 0L)))
+    c.transaction { t =>
+      assert(t.deleteMany("""{"g": {"$gte": 5, "$lt": 9}}""") == 4L)
+    }
+    val dead = Set(6L, 7L, 8L, 9L) // doc i is id i + 1
+    assert(c.count() == 16 && c.rows == 16)
+    c.ensureIndex(nlist = 2, iters = 1)
+    c.ensureTextIndex()
+    assert(counters == ((1L, 0L, 1L, 0L)),
+      s"a transactional delete forced index work: $counters")
+    def tombs(d: String) =
+      spark.read.parquet(s"$root/c/$d/tombstones").collect()
+        .map(_.getLong(0)).toSet
+    assert(tombs("index") == dead && tombs("textindex") == dead)
+    def ids(q: org.apache.spark.sql.DataFrame) =
+      q.select("_m_id").collect().map(_.getLong(0)).toSeq
+    val approx = ids(c.queryApprox("txn doc 7 topic 1", 100, nprobe = 2))
+    assert(approx.size == 16 && !approx.exists(dead), approx)
+    val text = ids(c.textFind("txn", 100))
+    assert(text.size == 16 && !text.exists(dead), text)
+    assert(counters == ((1L, 0L, 1L, 0L)))
+  }
+
+  test("change-log floor: an unparsable _floor is loud, never read as 0") {
+    val root = tmpDir("kaer-floor")
+    val c = newSession(root).createCollection("c")
+    c.insert(Data().withDocuments(Seq("a")).withMetadatas(Seq(Map("g" -> 1))))
+    c.enableChangeStream()
+    c.updateDoc("""{"g": 1}""", """{"$set": {"s": 1}}""") // op 1
+    c.updateDoc("""{"g": 1}""", """{"$set": {"s": 2}}""") // op 2
+    c.compactChangeLog(1)
+    assert(c.watch(1).collect().map(_.getLong(0)).toSeq == Seq(2L))
+    val floor = new org.apache.hadoop.fs.Path(s"$root/c/changes/_floor")
+    val fs = floor.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    for (torn <- Seq("", "12x")) {
+      val out = fs.create(floor, true)
+      try out.write(torn.getBytes("UTF-8")) finally out.close()
+      val w = intercept[IllegalStateException] { c.watch(1) }
+      assert(w.getMessage.contains("changes/_floor"), w.getMessage)
+      val cl = intercept[IllegalStateException] { c.compactChangeLog(1) }
+      assert(cl.getMessage.contains("changes/_floor"), cl.getMessage)
+    }
+  }
+
+  test("source guard: Kaer.scala has one directory swap, one commit " +
+      "step, and only the side-index ladder writes index sidecars") {
+    import java.nio.file.{Files, Paths}
+    import scala.jdk.CollectionConverters._
+    val lines = Files.readAllLines(
+      Paths.get("src/main/scala/graft/api/Kaer.scala")).asScala.toVector
+    val decl = ("""^(\s*)(?:(?:private|protected)(?:\[\w+\])?\s+|""" +
+      """final\s+|override\s+|sealed\s+|case\s+|lazy\s+)*""" +
+      """(?:def|class|object|trait)\s+(\w+)""").r.unanchored
+    // the declarations enclosing line i, innermost first, by indentation
+    def enclosing(i: Int): List[String] = {
+      var indent = lines(i).takeWhile(_ == ' ').length
+      val out = List.newBuilder[String]
+      lines(i) match { case decl(_, n) => out += n; case _ => }
+      for (j <- i - 1 to 0 by -1) lines(j) match {
+        case decl(ws, n) if ws.length < indent =>
+          out += n; indent = ws.length
+        case _ =>
+      }
+      out.result()
+    }
+    def isComment(l: String) = {
+      val t = l.trim
+      t.startsWith("*") || t.startsWith("//") || t.startsWith("/**")
+    }
+    def sites(token: String): Seq[(Int, List[String])] =
+      lines.indices.filter(i => lines(i).contains(token) &&
+        !isComment(lines(i))).map(i => (i + 1, enclosing(i)))
+    def only(token: String, allowed: Set[String]): Unit = {
+      val ss = sites(token)
+      assert(ss.nonEmpty, s"$token not found")
+      val bad = ss.filterNot(s => allowed(s._2.head))
+      assert(bad.isEmpty, s"$token outside ${allowed.mkString("/")}: " +
+        bad.map(b => s"line ${b._1} in ${b._2.mkString("<")}")
+          .mkString(", "))
+    }
+    only(".rename(", Set("swapDir", "restoreSwap", "renameCollection"))
+    only("CollectionMeta(",
+      Set("createCollection", "getCollection", "writeSidecar"))
+    only("writeSidecar()", Set("writeSidecar", "commitGeneration", "insertDF"))
+    only("Meta.writeIndex", Set("ensure", "rebuild", "entomb", "poison"))
+    val writers = sites("Meta.writeIndex")
+    assert(writers.forall(_._2.contains("SideIndex")), writers)
+    assert(!writers.exists(_._2.exists(n => n == "Txn" ||
+      n.startsWith("delete") || n.startsWith("update"))), writers)
+    for (d <- Seq("def swapDir(", "def commitGeneration(",
+        "class SideIndex("))
+      assert(lines.count(_.contains(d)) == 1, s"$d defined more than once")
+    assert(!lines.exists(_.contains("rewriteData")))
   }
 }
