@@ -20,7 +20,9 @@ import scala.jdk.CollectionConverters._
   * the noop write, read from that write's own QueryExecution; and exec,
   * the rest (job launch and compute). The gate's Spark job count rides
   * along. The detail line carries the split per gate (`"split"`), the
-  * total line its pass totals (`build_s`, `plan_s`, `exec_s`, `jobs`).
+  * total line its pass totals (`build_s`, `plan_s`, `exec_s`, `jobs`)
+  * and the seconds per gate group (`"groups"`, see [[groups]]), so a
+  * reader that keeps only the last line still sees where the time went.
   *
   * Environment: SPARK_GRAFT_SF_DIR, SPARK_GRAFT_CPUS (via
   * [[GraftSession]]), SPARK_GRAFT_WAIT_IDLE, SPARK_GRAFT_WAIT_IDLE_MAX_S,
@@ -235,6 +237,20 @@ object Bench {
       (t2 - t1) / 1e9 - planS, jobs, plans, sh, sp, gcMs, pk)
   }
 
+  /** Seconds per gate group as a JSON object, groups in name order: a
+    * gate's group is its name up to the first `_` (`kaer`, `mql`,
+    * `dedup`, …) when another gate shares it, else `other`. The suite
+    * has about 80 one-gate prefixes; keyed alone they would push the
+    * `total` line past the 2000 characters a tail capture keeps. */
+  private[graft] def groups(results: Seq[GateRun]): String = {
+    val byPrefix = results.groupBy(_.name.takeWhile(_ != '_'))
+    byPrefix.toSeq
+      .map { case (p, rs) => (if (rs.size > 1) p else "other", rs.map(_.sec).sum) }
+      .groupMapReduce(_._1)(_._2)(_ + _)
+      .toSeq.sorted.map { case (g, sec) => f""""$g":$sec%.1f""" }
+      .mkString("{", ",", "}")
+  }
+
   /** One pass: every gate in `gates` once, in order, each marked current
     * for [[graft.core.CachePayers]] outside its timed region. A failed
     * gate is recorded and the pass goes on. Returns the runs and the
@@ -413,7 +429,7 @@ object Bench {
       .map(g => s""""${g.name}":${g.gcMs}"""))
     val layers = f""""build_s":${results.map(_.buildS).sum}%.1f,"plan_s":${results.map(_.planS).sum}%.1f,"exec_s":${results.map(_.execS).sum}%.1f,"jobs":${results.map(_.jobs).sum}"""
     println(s"""{"metric":"detail","unit":"sec","queries":$qs,"split":$split,"cache_payers":$payers,"memo":$memo,"shuffle_mb":$shuffleMb,"spill_mb":$spillMb,"gc_ms":$gcMs,"peak_mb":$peakMb,"sf":"$sfDir",$load}""")
-    println(f"""{"metric":"total","value":$total%.3f,"unit":"sec","n_queries":${results.size},"sf":"$sfDir",$layers,"gc_top":$gcTop,$load}""")
+    println(f"""{"metric":"total","value":$total%.3f,"unit":"sec","n_queries":${results.size},"sf":"$sfDir",$layers,"gc_top":$gcTop,"groups":${groups(results)},$load}""")
     spark.stop()
   }
 }

@@ -299,6 +299,12 @@ final class KaerSession(
   * Both side indexes keep coverage through one maintenance ladder,
   * `SideIndex` (no-op → O(tail) append → rebuild).
   *
+  * Layout: `data` is flat until the first IVF build. From then on every
+  * generation is IVF-clustered — rows stored `partitionBy(cid)`, the
+  * centroids at `data/_centroids` — and every writer keeps it so (the
+  * commit step recomputes `cid`, an insert assigns it), so the ANN path
+  * reads only the probed lists' documents. `cid` never appears in `df`.
+  *
   * Recovery semantics (db/db.go:209-226): the id watermark is
   * max(sidecar.lastId, max(_m_id) in data) — the *intent* of the
   * reference's getNextID, not its min-id bug (db/db.go:145-174; SURVEY.md
@@ -767,6 +773,11 @@ final class Collection(
     val embedder: Embedder) {
 
   private val dataDir = new Path(dir, "data").toString
+  // an IVF-clustered generation stores its rows partitionBy(cid) and the
+  // centroids those cids came from here, inside the directory it swaps
+  // with; Spark's file listing skips `_`-prefixed paths
+  private val centroidsDir = new Path(dataDir, "_centroids")
+  private val CidCol = "cid"
   private def fs: FileSystem =
     new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
   // recovered watermark + row count — see class doc. When the sidecar is
@@ -798,7 +809,27 @@ final class Collection(
 
   private def hasData: Boolean = {
     val p = new Path(dataDir)
-    fs.exists(p) && fs.listStatus(p).exists(_.getPath.getName.endsWith(".parquet"))
+    fs.exists(p) && fs.listStatus(p).exists { st =>
+      val n = st.getPath.getName
+      n.endsWith(".parquet") || n.startsWith(s"$CidCol=")
+    }
+  }
+
+  /** The centroids of the current generation when it is IVF-clustered
+    * (read on the driver, no job); None for a flat generation. */
+  private def dataCentroids: Option[Seq[(Long, Array[Float])]] =
+    if (fs.exists(centroidsDir))
+      Some(graft.operators.IvfIndex.readCentroidTable(spark,
+        centroidsDir.toString))
+    else None
+
+  /** The stored rows: the public columns plus, in a clustered
+    * generation, the `cid` partition column. */
+  private def stored: DataFrame = {
+    val schema = Schema.collectionSchema(embedder.dim)
+    spark.read.schema(
+      if (fs.exists(centroidsDir)) schema.add(CidCol, LongType) else schema)
+      .parquet(dataDir)
   }
 
   private def maxIdInData(): Long =
@@ -808,13 +839,17 @@ final class Collection(
       case Row(v: Long) => v
     }
 
-  /** The collection as a DataFrame (canonical schema, SURVEY.md §1.2). */
+  /** The collection as a DataFrame (canonical schema, SURVEY.md §1.2;
+    * never the storage-only `cid`). */
   def df: DataFrame =
-    if (hasData) spark.read.schema(Schema.collectionSchema(embedder.dim))
-      .parquet(dataDir)
+    if (hasData) publicCols(stored)
     else spark.createDataFrame(
       spark.sparkContext.emptyRDD[Row],
       Schema.collectionSchema(embedder.dim))
+
+  /** `rows` projected to the canonical schema. */
+  private def publicCols(rows: DataFrame): DataFrame =
+    rows.select(Schema.collectionSchema(embedder.dim).fieldNames.map(col): _*)
 
   def count(): Long = if (hasData) df.count() else 0L
 
@@ -882,6 +917,26 @@ final class Collection(
     spark.createDataFrame(rows).toDF(Schema.DocCol, Schema.MetaCol)
   }
 
+  /** Write `rows` (canonical columns) to `path` IVF-clustered by
+    * `cents`: each row's `cid` is its nearest centroid, and the rows are
+    * shuffled by `cid` so each list gets one file, `partitionBy(cid)` —
+    * not one per list per input partition. */
+  private def writeClustered(rows: DataFrame,
+      cents: Seq[(Long, Array[Float])], path: String, mode: String): Unit =
+    rows.withColumn(CidCol, graft.operators.IvfIndex.assignCid(cents,
+        col(Schema.EmbeddingCol)))
+      .repartition(col(CidCol))
+      .write.mode(mode).partitionBy(CidCol).parquet(path)
+
+  /** Copy the generation's centroid table to `to`, replacing it: the
+    * bytes move without a Spark job. */
+  private def copyCentroids(to: Path): Unit = {
+    if (fs.exists(to)) fs.delete(to, true)
+    if (!org.apache.hadoop.fs.FileUtil.copy(fs, centroidsDir, fs, to, false,
+        spark.sparkContext.hadoopConfiguration))
+      throw new java.io.IOException(s"copy $centroidsDir -> $to failed")
+  }
+
   /** An id-assigned batch embedded, in the stored column order.
     * embedDF, not a per-row column transform: remote-backed embedders
     * batch ≤96 texts per request through it (BatchedEmbedder). */
@@ -897,12 +952,23 @@ final class Collection(
     * dominate ingest; the reference never rescans either, it counts ids in
     * memory, db/db.go:75-76). The batch is counted once up front; ids are
     * then `start+1 .. start+n` by construction.
+    *
+    * In an IVF-clustered generation each new row is assigned its `cid`
+    * against the generation's own centroids (a driver-side read, no job)
+    * and the batch is appended one file per list, so the layout stays
+    * clustered without a rewrite. The rows are not in the index until
+    * the next [[ensureIndex]]: [[queryApprox]] serves ids up to the
+    * index's covered watermark only.
     */
   def insertDF(base: DataFrame): Unit = {
     val start = lastId
     val (withIds, n) = zipWithId(base, start)
     if (n > 0) {
-      embedded(withIds).write.mode("append").parquet(dataDir)
+      val rows = embedded(withIds)
+      dataCentroids match {
+        case Some(cs) => writeClustered(rows, cs, dataDir, "append")
+        case None => rows.write.mode("append").parquet(dataDir)
+      }
       lastId = start + n
       rowsCount += n
       writeSidecar()
@@ -996,9 +1062,10 @@ final class Collection(
     *
     * Deletes ride the tombstone table ([[entomb]]): storage keeps the
     * dead rows, the sidecar counts them out of the live coverage, and
-    * both query paths join back to the live collection, so dead ids
-    * never surface. A rebuild covers exactly the live rows and drops the
-    * tombstones. An in-place content rewrite [[poison]]s the sidecar. */
+    * both query paths read the live collection (the text path joins
+    * back to it, the IVF path scans it), so dead ids never surface. A
+    * rebuild covers exactly the live rows and drops the tombstones. An
+    * in-place content rewrite [[poison]]s the sidecar. */
   private final class SideIndex(root: String, idCol: String,
       trusted: (Int, Long) => Boolean, appendTail: Long => Unit) {
     private val tombDir = s"$root/tombstones"
@@ -1033,9 +1100,13 @@ final class Collection(
     }
 
     /** `build` the storage over every live row, then record that
-      * coverage. No-op on an empty collection. */
+      * coverage. The sidecar is marked `stale` first, so a crash at any
+      * step of the build leaves a sidecar the next ensure rebuilds. No-op
+      * on an empty collection. */
     def rebuild(nlist: Int)(build: => Unit): Unit =
       if (hasData && rowsCount > 0) {
+        Meta.writeIndex(spark, root, sidecar
+          .getOrElse(IndexMeta(lastId, rowsCount, nlist)).copy(stale = true))
         build
         val tp = new Path(tombDir)
         if (fs.exists(tp)) fs.delete(tp, true)
@@ -1062,11 +1133,12 @@ final class Collection(
 
   private def indexDir: String = new Path(dir, "index").toString
   private def textIndexDir: String = new Path(dir, "textindex").toString
+  // the IVF storage is trusted only over a generation clustered by the
+  // index's own centroids; its tail append copies (id, cid) off the data
   private val ivf = new SideIndex(indexDir, "vec_id",
-    (nlist, rows) =>
+    (nlist, rows) => clusteredByIndex &&
       graft.operators.IvfIndex.trusted(spark, indexDir, nlist, rows),
-    from => graft.operators.IvfIndex.appendTail(spark,
-      vectors.filter(col("vec_id") > from), indexDir))
+    from => writeLists(stored.filter(col(Schema.IdCol) > from), "append"))
   private val text = new SideIndex(textIndexDir, "doc_id",
     (_, docs) => graft.operators.TextIndex.trusted(spark, textIndexDir, docs),
     from => graft.operators.TextIndex.appendTail(spark,
@@ -1077,28 +1149,51 @@ final class Collection(
   private def docsFrame: DataFrame = df.select(
     col(Schema.IdCol).as("doc_id"), col(Schema.DocCol).as("text"))
 
+  /** The current generation is clustered by exactly the centroids the
+    * index holds (bit for bit, both read on the driver). */
+  private def clusteredByIndex: Boolean = dataCentroids.exists { dc =>
+    fs.exists(new Path(indexDir, "centroids")) && {
+      val ic = graft.operators.IvfIndex.readCentroids(spark, indexDir)
+      dc.size == ic.size && dc.zip(ic).forall { case ((a, av), (b, bv)) =>
+        a == b && java.util.Arrays.equals(av, bv) }
+    }
+  }
+
+  /** The slim inverted lists: `(vec_id, cid)` of `rows`, read off a
+    * clustered generation, written `partitionBy(cid)` with `mode`. */
+  private def writeLists(rows: DataFrame, mode: String): Unit =
+    rows.select(col(Schema.IdCol).as("vec_id"), col(CidCol))
+      .write.mode(mode).partitionBy(CidCol).parquet(s"$indexDir/lists")
+
   def indexRebuilds: Long = ivf.rebuilds
   def indexAppends: Long = ivf.appends
   def textIndexRebuilds: Long = text.rebuilds
   def textIndexAppends: Long = text.appends
 
-  /** Build (or rebuild) the collection's persisted IVF index: inverted
-    * lists partitioned by centroid id under `dir/index`. Centroids come
-    * from the deterministic KMeans fitter; at production scale swap in
-    * the MLlib path ([[graft.operators.IvfIndex.kmeansFitMl]]). Records
-    * the covered (watermark, rows, nlist) in the index sidecar so later
-    * inserts append instead of rebuilding. No-op on an empty
-    * collection. */
+  /** Build (or rebuild) the collection's persisted IVF index. The
+    * centroids come from the deterministic KMeans fitter (at production
+    * scale swap in the MLlib path,
+    * [[graft.operators.IvfIndex.kmeansFitMl]]). The build then commits a
+    * clustered generation — every row `partitionBy(cid)`, one file per
+    * list, the centroids inside it at `data/_centroids` — and writes
+    * `dir/index` from it: the same centroids and the slim lists
+    * `(vec_id, cid)` projected from the new data. The index is thus a
+    * read of the document store. The sidecar is marked stale before the
+    * swap and records the covered (watermark, rows, nlist) last, so later
+    * inserts append instead of rebuilding and a crash mid-build leads to
+    * a rebuild. No-op on an empty collection. */
   def buildIndex(nlist: Int = 16, iters: Int = 3): Unit =
     ivf.rebuild(nlist) {
-      val v = vectors
-      graft.operators.IvfIndex.build(spark, v, indexDir,
-        graft.operators.IvfIndex.kmeansFit(v, nlist, iters))
+      commitGeneration(df, rowsCount, Collection.Untouched, fitted =
+        Some(graft.operators.IvfIndex.kmeansFit(vectors, nlist, iters)))
+      copyCentroids(new Path(indexDir, "centroids"))
+      writeLists(stored, "overwrite")
     }
 
   /** Make the persisted IVF index cover the CURRENT data with the least
-    * work — the [[SideIndex]] ladder. Its trust check: _SUCCESS
-    * markers, `nlist` centroids, list rows == covered rows. */
+    * work — the [[SideIndex]] ladder. Its trust check: the generation is
+    * clustered by the index's centroids, _SUCCESS markers, `nlist`
+    * centroids, list rows == covered rows. */
   def ensureIndex(nlist: Int = 16, iters: Int = 3): Unit =
     ivf.ensure(nlist)(buildIndex(nlist, iters))
 
@@ -1172,32 +1267,37 @@ final class Collection(
   def watermark: Long = lastId
   def rows: Long = rowsCount
 
-  /** Approximate flagship query through the persisted IVF index: probe
+  /** Approximate flagship query through the IVF-clustered data: probe
     * the nearest `nprobe` lists, apply the MQL filter to the probed
     * subset (the reference's pre-filter ∧ ANN composite with the same
     * candidate-restriction semantics — its HNSW also only filters what
     * the index visits), then exact top-k among survivors.
     *
-    * Plan: the centroids are read on the driver (no Spark job), the
-    * probed lists are read with their known schema and project only
-    * `vec_id`, and the collection keeps its rows by a broadcast
-    * LEFT SEMI join on id. Building the DataFrame launches no job;
-    * running it launches two (the probe's broadcast, then the scan).
-    * Ids the lists hold but the collection no longer does (tombstones)
-    * and ids inserted after the last [[ensureIndex]] are not returned.
-    * Requires an index ([[ensureIndex]] / [[buildIndex]]). */
+    * The documents themselves are pruned: the probe reads the centroids
+    * stored with the current generation on the driver (no job), and the
+    * query is one scan of `data` with `cid IN probed` as a PARTITION
+    * filter — unprobed lists' files are never opened — then the id
+    * bound and the MQL predicate, then top-k. No join; building the
+    * DataFrame launches no job, running it launches one. Deleted ids
+    * are gone from the data, and ids above the index sidecar's covered
+    * watermark (inserted after the last [[ensureIndex]]) are not
+    * returned. Requires an index: without an index sidecar, or over a
+    * generation that is not clustered (an index built before this
+    * layout), it fails naming [[ensureIndex]]. */
   def queryApprox(document: String, k: Int, nprobe: Int = 4,
       filterJson: String = null): DataFrame = {
     require(nprobe >= 1, s"queryApprox needs nprobe >= 1, got $nprobe")
-    val idx = indexDir
-    val cents = new Path(idx, "centroids")
-    require(cents.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      .exists(cents), s"collection '$name' has no IVF index — " +
-      "queryApprox needs one; call ensureIndex() first")
+    val (covered, cents) = (ivf.sidecar, dataCentroids) match {
+      case (Some(m), Some(cs)) => (m.indexedLastId, cs)
+      case _ => throw new IllegalArgumentException(s"collection '$name' " +
+        "has no IVF index over its current data — queryApprox needs " +
+        "one; call ensureIndex() first")
+    }
     val qv = embedder.embedOne(document)
-    val probed = graft.operators.IvfIndex.probeIds(spark, idx, qv, nprobe)
-      .select(col("vec_id").as(Schema.IdCol))
-    val base = df.join(broadcast(probed), Seq(Schema.IdCol), "left_semi")
+    val probed = stored.filter(col(CidCol).isin(
+        graft.operators.IvfIndex.nearestLists(cents, qv, nprobe): _*) &&
+      col(Schema.IdCol) <= covered)
+    val base = publicCols(probed)
     val filtered = if (filterJson == null || filterJson.trim.isEmpty) base
     else base.filter(MqlFilter.toColumn(filterJson,
       MqlFilter.JsonResolver(col(Schema.MetaCol))))
@@ -1382,14 +1482,18 @@ final class Collection(
       .parquet(changesDir)
   }
 
-  /** Maintenance: compact the append-per-batch small files into
-    * `targetFiles` id-ranged files (read → range-repartition on _m_id →
+  /** Maintenance: compact the append-per-batch small files (read →
     * [[commitGeneration]]). The insert path appends one file set per
     * batch; at high batch counts scan planning degrades — the standard
-    * cure is periodic compaction, exactly as a LSM/lakehouse would.
-    * Ids, rows, and sidecar are unchanged. */
+    * cure is periodic compaction, exactly as a LSM/lakehouse would. A
+    * flat generation is range-repartitioned on _m_id into `targetFiles`
+    * id-ranged files; an IVF-clustered one is rewritten with one file
+    * per list, and `targetFiles` does not apply. Ids, rows, and sidecar
+    * are unchanged. */
   def compact(targetFiles: Int = 4): Unit = if (hasData)
-    commitGeneration(df.repartitionByRange(targetFiles, col(Schema.IdCol)),
+    commitGeneration(
+      if (fs.exists(centroidsDir)) df
+      else df.repartitionByRange(targetFiles, col(Schema.IdCol)),
       rowsCount, Collection.Untouched)
 
   // ---- the write path ---------------------------------------------------
@@ -1401,8 +1505,16 @@ final class Collection(
   /** The ONE commit step of every copy-on-write mutation — compact,
     * delete, findOneAndDelete, replaceOne, the update paths and
     * [[Txn.commit]] (parquet is immutable; every lakehouse
-    * DELETE/UPDATE is this under the hood). It writes `next` as a new
-    * generation, then, in order:
+    * DELETE/UPDATE is this under the hood) — and of [[buildIndex]]. It
+    * writes `next` (canonical columns) as a new generation. The layout
+    * carries forward: flat stays flat; a clustered generation's
+    * centroids are copied into the new one and every row's `cid` is
+    * computed against them, so no caller handles `cid`. [[buildIndex]]
+    * passes `fitted` centroids instead, which cluster a flat generation
+    * or replace the old clustering. A clustered generation is written
+    * `partitionBy(cid)`, one file per list, with its centroid table
+    * inside it at `_centroids`, so the swap commits assignments and
+    * centroids together. Then, in order:
     *  1. swaps it in with [[swapDir]], appending its change events
     *     first when capture is on;
     *  2. sets the row count to `rows` and the watermark to `watermark`;
@@ -1413,7 +1525,8 @@ final class Collection(
     * materialized before the swap — and only when an index will record
     * them. */
   private def commitGeneration(next: DataFrame, rows: Long,
-      change: Collection.Change, watermark: Long = lastId): Unit = {
+      change: Collection.Change, watermark: Long = lastId,
+      fitted: Option[Seq[(Long, Array[Float])]] = None): Unit = {
     val indexed = Seq(ivf, text).filter(_.sidecar.isDefined)
     val dead = change match {
       case Collection.Removed(ids) if indexed.nonEmpty =>
@@ -1422,7 +1535,15 @@ final class Collection(
     }
     val live = new Path(dataDir)
     val tmp = clearedTmp(live)
-    next.write.parquet(tmp.toString)
+    val tmpCentroids = new Path(tmp, centroidsDir.getName)
+    fitted.orElse(dataCentroids) match {
+      case Some(cs) =>
+        writeClustered(next, cs, tmp.toString, "errorifexists")
+        if (fitted.isDefined) graft.operators.IvfIndex.writeCentroids(spark,
+          cs, tmpCentroids.toString)
+        else copyCentroids(tmpCentroids)
+      case None => next.write.parquet(tmp.toString)
+    }
     if (captureChanges) {
       // diff the old generation (still live) against the written one —
       // both are plain parquet scans, no recomputation of `next`'s plan
@@ -2183,7 +2304,18 @@ final class Collection(
     * query. */
   def explainQuery(document: String, k: Int,
       filterJson: String = null): String =
-    query(document, k, filterJson).queryExecution.explainString(
+    formatted(query(document, k, filterJson))
+
+  /** [[explainQuery]] for [[queryApprox]] at `nprobe`: its formatted
+    * plan, where the data scan's `PartitionFilters` show which lists'
+    * documents the probe reads — the `cid` pruning, without running the
+    * query. */
+  def explainQuery(document: String, k: Int, filterJson: String,
+      nprobe: Int): String =
+    formatted(queryApprox(document, k, nprobe, filterJson))
+
+  private def formatted(q: DataFrame): String =
+    q.queryExecution.explainString(
       org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
 
   /** [[query]] with a Mongo-style metadata projection: each requested

@@ -15,6 +15,14 @@ import org.apache.spark.sql.functions._
   * with nlist=4096 and nprobe=64, a probe touches ~1.6% of storage; the
   * plan shape is identical to this test-scale build.
   *
+  * A collection (graft.api.Collection) goes one step further: once it
+  * has an index, its documents themselves are stored `partitionBy(cid)`
+  * with the centroids beside them, so its approximate query prunes the
+  * documents and its index directory is a slim `(vec_id, cid)` map
+  * read off the data. This object supplies the shared pieces: the
+  * centroid fit, [[assignCid]], the centroid table ([[writeCentroids]],
+  * [[readCentroidTable]]) and probe selection ([[nearestLists]]).
+  *
   * Centroids: callers either pass fixed seed vectors (oracle-replicable,
   * what the registered query uses) or fit real ones with [[kmeansFit]] —
   * deterministic Lloyd iterations (fixed init = lowest-id vectors,
@@ -113,29 +121,42 @@ object IvfIndex {
     * centroid table. Returns the index directory. */
   def build(s: SparkSession, vectors: DataFrame, outDir: String,
       cents: Seq[(Long, Array[Float])]): String = {
-    import s.implicits._
     vectors
       .withColumn("cid", assignCid(cents, col("embedding")))
       .write.mode("overwrite").partitionBy("cid")
       .parquet(s"$outDir/lists")
-    cents.map { case (cid, cv) => (cid, cv.toSeq) }
-      .toDF("cid", "cv")
-      .repartition(1).write.mode("overwrite").parquet(s"$outDir/centroids")
+    writeCentroids(s, cents, s"$outDir/centroids")
     outDir
   }
 
-  /** Persisted centroids of an existing index, in cid order — the k-sized
-    * driver-side read shared by [[appendTail]] and probe selection. The
-    * table is a few KB in one file, so it is read on the driver with
-    * parquet-hadoop's record reader: no Spark job, no schema inference.
-    * Columns are found by name (`cid` BIGINT, `cv` the 3-level parquet
-    * LIST of FLOAT that [[build]] writes). */
+  /** Write `cents` as a centroid table at `table`: one file of
+    * (`cid` BIGINT, `cv` ARRAY<FLOAT>), the layout
+    * [[readCentroidTable]] reads. */
+  private[graft] def writeCentroids(s: SparkSession,
+      cents: Seq[(Long, Array[Float])], table: String): Unit = {
+    import s.implicits._
+    cents.map { case (cid, cv) => (cid, cv.toSeq) }
+      .toDF("cid", "cv")
+      .repartition(1).write.mode("overwrite").parquet(table)
+  }
+
+  /** Persisted centroids of an existing index, in cid order. */
   def readCentroids(s: SparkSession, indexDir: String)
+      : Seq[(Long, Array[Float])] =
+    readCentroidTable(s, s"$indexDir/centroids")
+
+  /** The centroid table at `table`, in cid order — the k-sized
+    * driver-side read behind probe selection. The table is a few KB in
+    * one file, so it is read on the driver with parquet-hadoop's record
+    * reader: no Spark job, no schema inference. Columns are found by
+    * name (`cid` BIGINT, `cv` the 3-level parquet LIST of FLOAT that
+    * [[writeCentroids]] writes). */
+  private[graft] def readCentroidTable(s: SparkSession, table: String)
       : Seq[(Long, Array[Float])] = {
     import org.apache.parquet.hadoop.ParquetReader
     import org.apache.parquet.hadoop.example.GroupReadSupport
     val conf = s.sparkContext.hadoopConfiguration
-    val dir = new org.apache.hadoop.fs.Path(s"$indexDir/centroids")
+    val dir = new org.apache.hadoop.fs.Path(table)
     dir.getFileSystem(conf).listStatus(dir).toSeq.map(_.getPath)
       .filterNot(p => p.getName.startsWith("_") || p.getName.startsWith("."))
       .flatMap { f =>
@@ -148,24 +169,6 @@ object IvfIndex {
         }.toVector
         finally r.close()
       }.sortBy(_._1)
-  }
-
-  /** Incremental maintenance: assign `tail` (vec_id, embedding — rows NOT
-    * yet covered by the index) against the index's OWN persisted centroids
-    * and append the new rows into the partitioned lists. Pre-existing list
-    * files are untouched — parquet append adds files inside the cid=
-    * directories — so the cost is O(tail), not O(collection): the
-    * reference's per-insert `Add` / tail-replay semantics
-    * (/root/reference/db/hnsw.go:16-23, db/db.go:191-207) rather than a
-    * rebuild. Centroids intentionally do NOT move (same as the reference:
-    * its HNSW graph never re-fits earlier structure on insert); callers
-    * that want re-fit centroids rebuild explicitly. */
-  def appendTail(s: SparkSession, tail: DataFrame, indexDir: String): Unit = {
-    val cents = readCentroids(s, indexDir)
-    tail
-      .withColumn("cid", assignCid(cents, col("embedding")))
-      .write.mode("append").partitionBy("cid")
-      .parquet(s"$indexDir/lists")
   }
 
   /** The storage trust check of an index at `indexDir` (flat or PQ):
@@ -214,18 +217,6 @@ object IvfIndex {
     s.read.parquet(s"$indexDir/lists")
       .filter(col("cid").isin(nearestLists(readCentroids(s, indexDir), q,
         nprobe): _*))
-
-  /** Ids (`vec_id`) of the `nprobe` nearest lists, for callers that
-    * join back to the source rows (Collection.queryApprox). The lists
-    * are read with their known schema — `vec_id` BIGINT plus the `cid`
-    * partition column — so building this DataFrame infers nothing and
-    * launches no Spark job; the same partition pruning applies. */
-  private[graft] def probeIds(s: SparkSession, indexDir: String,
-      q: Array[Float], nprobe: Int): DataFrame =
-    s.read.schema("vec_id BIGINT, cid BIGINT").parquet(s"$indexDir/lists")
-      .filter(col("cid").isin(nearestLists(readCentroids(s, indexDir), q,
-        nprobe): _*))
-      .select("vec_id")
 
   /** Probe + exact top-k within the probed lists (TakeOrderedAndProject
     * over the pruned scan). Projects every non-index column through. */
@@ -276,7 +267,6 @@ object IvfIndex {
     * truth. */
   def buildPq(s: SparkSession, vectors: DataFrame, outDir: String,
       cents: Seq[(Long, Array[Float])]): String = {
-    import s.implicits._
     val cd = cents.map(_._2.map(_.toDouble)).toArray
     vectors
       .withColumn("cid", assignCid(cents, col("embedding")))
@@ -284,17 +274,15 @@ object IvfIndex {
         Quantize.pqCodeCols(cd, col("embedding"), asByte = true): _*)
       .write.mode("overwrite").partitionBy("cid")
       .parquet(s"$outDir/lists")
-    cents.map { case (cid, cv) => (cid, cv.toSeq) }
-      .toDF("cid", "cv")
-      .repartition(1).write.mode("overwrite").parquet(s"$outDir/centroids")
+    writeCentroids(s, cents, s"$outDir/centroids")
     outDir
   }
 
-  /** Incremental PQ-index maintenance — [[appendTail]]'s twin: encode
-    * the uncovered tail against the index's OWN centroids/codebook
-    * contract and append into the partitioned code lists. O(tail), list
-    * files untouched, centroids fixed (the reference's tail-replay
-    * semantics). */
+  /** Incremental PQ-index maintenance: encode the uncovered tail
+    * against the index's OWN centroids/codebook contract and append into
+    * the partitioned code lists. O(tail), list files untouched,
+    * centroids fixed (the reference's tail-replay semantics: its HNSW
+    * graph never re-fits earlier structure on insert, db/hnsw.go:16-23). */
   def appendTailPq(s: SparkSession, tail: DataFrame,
       indexDir: String): Unit = {
     val cents = readCentroids(s, indexDir)

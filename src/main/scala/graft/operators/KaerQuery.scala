@@ -85,9 +85,10 @@ object KaerQuery {
     * probed: ensureIndex → queryApprox(nprobe = nlist). Full probing
     * makes the index exact, so this shares kaer_query's oracle — what
     * it adds to the gate is the index build + probe machinery end to
-    * end (KMeans fit, partitioned lists, driver-side centroid read,
-    * pruned id-only probe scan, broadcast semi-join back to the
-    * collection). */
+    * end (KMeans fit, the IVF-clustered data generation and its slim
+    * lists, driver-side centroid read, one partition-pruned scan of the
+    * documents). The build leaves the shared collection clustered; the
+    * other gates over it are layout-independent. */
   def flagshipIndexed(s: SparkSession, dir: String): DataFrame = {
     val coll = openOrBuild(s, dir)
     val NList = 8

@@ -62,6 +62,17 @@ class BenchSpec extends SparkTestBase {
     }
   }
 
+  test("groups: seconds per gate-name prefix, in name order, one-gate " +
+      "prefixes under other, for the total line") {
+    def run(name: String, sec: Double) =
+      Bench.GateRun(name, ok = true, sec, sec, 0.0, 0.0, 1, 1, 0L, 0L, 0L, 0L)
+    val runs = Seq(run("mql_window_nacc", 1.25), run("kaer_query", 0.5),
+      run("mql_match", 2.0), run("kaer_txn", 0.75), run("zorder", 0.04),
+      run("xml_roundtrip", 0.3))
+    assert(Bench.groups(runs) == """{"kaer":1.3,"mql":3.3,"other":0.3}""")
+    assert(Bench.groups(Nil) == "{}")
+  }
+
   test("a failing gate is recorded with ok = false and the pass goes on") {
     withProbe { p =>
       val gates = Seq[(String, (SparkSession, String) => DataFrame)](

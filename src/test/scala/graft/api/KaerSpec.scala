@@ -173,7 +173,7 @@ class KaerSpec extends SparkTestBase {
     assert(c.queryApprox("loud doc 3", 2, nprobe = 1).collect().nonEmpty)
   }
 
-  test("queryApprox: no Spark job while building, at most 2 when run; " +
+  test("queryApprox: no Spark job while building, at most 1 when run; " +
       "a job-free centroid read; tombstone and tail semantics kept") {
     import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
     val root = tmpDir("kaer-ivf-jobs")
@@ -210,12 +210,20 @@ class KaerSpec extends SparkTestBase {
       val f = """{"g": {"$gte": 5}}"""
       val (q, built) = jobsOf(c.queryApprox("job doc 12 topic 2", 5, 2, f))
       assert(built == 0, s"building queryApprox launched $built jobs")
-      assert(q.queryExecution.optimizedPlan.toString.contains("LeftSemi"))
+      val opt = q.queryExecution.optimizedPlan
+      assert(opt.collectFirst {
+        case j: org.apache.spark.sql.catalyst.plans.logical.Join => j
+      }.isEmpty, opt)
       val (_, ran) = jobsOf(q.collect())
-      assert(ran <= 2, s"queryApprox collect launched $ran jobs")
-      // the known-schema probe still prunes lists by partition
-      val p = q.queryExecution.executedPlan.toString
-      assert("PartitionFilters: \\[[^\\]]*cid".r.findFirstIn(p).nonEmpty, p)
+      assert(ran <= 1, s"queryApprox collect launched $ran jobs")
+      // one scan, of the data, pruned to the probed lists by partition
+      val scans = q.queryExecution.executedPlan.collect {
+        case f: org.apache.spark.sql.execution.FileSourceScanExec => f
+      }
+      assert(scans.size == 1 &&
+        scans.head.relation.location.rootPaths.map(_.getName) == Seq("data") &&
+        scans.head.partitionFilters.exists(_.references.exists(_.name == "cid")),
+        q.queryExecution.executedPlan)
     } finally sc.removeSparkListener(listener)
 
     def ids(df: org.apache.spark.sql.DataFrame) =
@@ -235,6 +243,131 @@ class KaerSpec extends SparkTestBase {
     assert(ids(c.query("job doc 12 topic 2", 1)) == Seq(41L))
     val after = ids(c.queryApprox("job doc 12 topic 2", 100, 4))
     assert(after == all, after)
+  }
+
+  test("queryApprox crash window: a clustered generation swapped in " +
+      "under the previous build's stale index answers by the data's own " +
+      "centroids, and the next ensureIndex rebuilds from the data") {
+    import org.apache.hadoop.fs.{FileUtil, Path}
+    import org.apache.spark.sql.functions.col
+    import graft.operators.IvfIndex
+    val root = tmpDir("kaer-ivf-crash")
+    val c = newSession(root).createCollection("v")
+    c.insert(Data()
+      .withDocuments((0 until 40).map(i => s"crash doc $i topic ${i % 5}"))
+      .withMetadatas((0 until 40).map(i => Map[String, Any]("g" -> i))))
+    val conf = spark.sparkContext.hadoopConfiguration
+    val index = new Path(s"$root/v/index")
+    val saved = new Path(s"$root/saved-index")
+    val fs = index.getFileSystem(conf)
+    c.buildIndex(nlist = 4, iters = 2)
+    assert(FileUtil.copy(fs, index, fs, saved, false, conf))
+    c.insert(Data()
+      .withDocuments((40 until 52).map(i => s"crash doc $i topic ${i % 5}"))
+      .withMetadatas((40 until 52).map(i => Map[String, Any]("g" -> i))))
+    c.buildIndex(nlist = 4, iters = 2)
+    // the crash: the rebuild's generation is live, but index/ still holds
+    // the first build (ids 1-40) under the stale sidecar written before
+    // the swap
+    fs.delete(index, true)
+    assert(FileUtil.copy(fs, saved, fs, index, false, conf))
+    Meta.writeIndex(spark, index.toString,
+      Meta.readIndex(spark, index.toString).get.copy(stale = true))
+    val dataCents =
+      IvfIndex.readCentroidTable(spark, s"$root/v/data/_centroids")
+    def bits(cs: Seq[(Long, Array[Float])]) =
+      cs.map { case (cid, cv) => (cid, cv.toSeq) }
+    assert(bits(dataCents) != bits(IvfIndex.readCentroids(spark, index.toString)),
+      "the two builds must cluster differently for this case to bite")
+
+    val r = newSession(root).getCollection("v")
+    val cidOf = spark.read.parquet(s"$root/v/data")
+      .select(col("_m_id"), col("cid").cast("long")).collect().map(row => row.getLong(0) -> row.getLong(1)).toMap
+    def ids(df: org.apache.spark.sql.DataFrame) =
+      df.select("_m_id").collect().map(_.getLong(0)).toSeq
+    for ((q, f) <- Seq("crash doc 12 topic 2" -> null,
+        "crash doc 31 topic 1" -> """{"g": {"$lt": 25}}""")) {
+      val probed = IvfIndex.nearestLists(dataCents,
+        HashingEmbedder(64).embedOne(q), 2).toSet
+      val want = ids(r.query(q, 52, f))
+        .filter(id => id <= 40 && probed(cidOf(id))).take(5)
+      assert(want.nonEmpty)
+      assert(ids(r.queryApprox(q, 5, 2, f)) == want)
+    }
+    r.ensureIndex(nlist = 4, iters = 2)
+    assert(r.indexRebuilds == 1 && r.indexAppends == 0)
+    val lists = spark.read.parquet(s"$root/v/index/lists")
+      .select(col("vec_id"), col("cid").cast("long")).collect().map(row =>
+        (row.getLong(0), row.getLong(1))).toSet
+    assert(lists == cidOf.toSet)
+    assert(!Meta.readIndex(spark, index.toString).get.stale)
+  }
+
+  test("queryApprox over a flat generation with an old-style index and a " +
+      "valid sidecar fails loudly; ensureIndex rebuilds it clustered") {
+    import graft.core.{IndexMeta, Schema}
+    import graft.operators.IvfIndex
+    import org.apache.spark.sql.functions.col
+    val root = tmpDir("kaer-ivf-flat")
+    val c = newSession(root).createCollection("v")
+    c.insert(Data()
+      .withDocuments((0 until 30).map(i => s"flat doc $i topic ${i % 4}"))
+      .withMetadatas((0 until 30).map(i => Map[String, Any]("g" -> i))))
+    // the index as builds before the clustered layout left it: lists with
+    // embeddings beside a flat generation, storage and sidecar both valid
+    val v = c.df.select(col(Schema.IdCol).as("vec_id"),
+      col(Schema.EmbeddingCol).as("embedding"))
+    IvfIndex.build(spark, v, s"$root/v/index", IvfIndex.kmeansFit(v, 4, 2))
+    Meta.writeIndex(spark, s"$root/v/index",
+      IndexMeta(c.watermark, c.rows, 4))
+    val e = intercept[IllegalArgumentException] {
+      c.queryApprox("flat doc 9 topic 1", 5, 4).collect()
+    }
+    assert(e.getMessage.contains("ensureIndex()"), e.getMessage)
+    c.ensureIndex(nlist = 4, iters = 2)
+    assert(c.indexRebuilds == 1 && c.indexAppends == 0,
+      s"rebuilds=${c.indexRebuilds} appends=${c.indexAppends}")
+    def ids(df: org.apache.spark.sql.DataFrame) =
+      df.select("_m_id").collect().map(_.getLong(0)).toSeq
+    for (f <- Seq(null, """{"g": {"$gte": 10}}"""))
+      assert(ids(c.queryApprox("flat doc 9 topic 1", 6, 4, f)) ==
+        ids(c.query("flat doc 9 topic 1", 6, f)))
+    assert(c.df.columns.toSeq == Seq(Schema.IdCol, Schema.DocCol,
+      Schema.EmbeddingCol, Schema.MetaCol))
+  }
+
+  test("queryApprox without a readable index sidecar fails loudly instead " +
+      "of serving ids the index does not cover") {
+    val root = tmpDir("kaer-ivf-side")
+    val c = newSession(root).createCollection("v")
+    c.insert(Data().withDocuments((0 until 20).map(i => s"side doc $i")))
+    c.ensureIndex(nlist = 2, iters = 1)
+    val side = new org.apache.hadoop.fs.Path(s"$root/v/index/${Meta.IndexFileName}")
+    val fs = side.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    for (torn <- Seq(None, Some("{\"indexedLa"), Some("not json"))) {
+      fs.delete(side, false)
+      torn.foreach { t =>
+        val out = fs.create(side, true)
+        try out.write(t.getBytes("UTF-8")) finally out.close()
+      }
+      val e = intercept[IllegalArgumentException] {
+        c.queryApprox("side doc 3", 3, 2).collect()
+      }
+      assert(e.getMessage.contains("ensureIndex()"), e.getMessage)
+    }
+    c.ensureIndex(nlist = 2, iters = 1)
+    assert(c.queryApprox("side doc 3", 3, 2).collect().length == 3)
+  }
+
+  test("explainQuery with nprobe shows queryApprox's plan: the data scan " +
+      "pruned by cid partition filters, without running the query") {
+    val c = newSession(tmpDir("kaer-explain-ann")).createCollection("c")
+    c.insert(Data().withDocuments((0 until 12).map(i => s"explain doc $i"))
+      .withMetadatas((0 until 12).map(i => Map[String, Any]("g" -> i))))
+    c.ensureIndex(nlist = 3, iters = 1)
+    val p = c.explainQuery("explain doc 4", 2, """{"g": {"$gte": 1}}""", 1)
+    assert("PartitionFilters: \\[[^\\]]*cid".r.findFirstIn(p).nonEmpty, p)
+    assert(p.contains("TakeOrderedAndProject") && !p.contains("Join"), p)
   }
 
   test("ensureIndex reuses a valid persisted index, rebuilds a stale one") {
