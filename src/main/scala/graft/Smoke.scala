@@ -31,6 +31,11 @@ object Smoke {
     check(c.query("hello", 3, """{"attr1": {"$eq": 999}}""").count() == 0,
       "filter matching nothing -> empty")
     check(c.query("hello", 10, "{}").count() == 2, "empty MQL {} -> all")
+    // the metadata is parsed once, at write: the flagship's Filter reads
+    // the stored VARIANT (try_parse_json prints as its runtime parseJson)
+    val plan = c.explainQuery("h, world", 1, """{"attr1": {"$eq": 1}}""")
+    check(!plan.contains("try_parse_json") && !plan.contains("parseJson"),
+      "main.go flagship plan: no per-row metadata parse")
 
     // 4. reopen-recovery: fresh session over the same dir continues ids
     val k2 = new api.KaerSession(s, root, embed.HashingEmbedder(64))

@@ -305,6 +305,15 @@ final class KaerSession(
   * commit step recomputes `cid`, an insert assigns it), so the ANN path
   * reads only the probed lists' documents. `cid` never appears in `df`.
   *
+  * Metadata is parsed once, at write: every generation the insert path
+  * starts and every commit writes carries `_m_meta_v = try_parse_json(
+  * _m_meta)` beside the unchanged `_m_meta` text (a VARIANT does not give
+  * the inserted text back), marked by `data/_meta_variant`. Every MQL
+  * filter of the collection path binds that column — no per-row parse,
+  * no lambda. A generation written before that form has no marker, is
+  * filtered through the per-row parse, and converts on its next commit.
+  * `_m_meta_v` never appears in `df`.
+  *
   * Recovery semantics (db/db.go:209-226): the id watermark is
   * max(sidecar.lastId, max(_m_id) in data) — the *intent* of the
   * reference's getNextID, not its min-id bug (db/db.go:145-174; SURVEY.md
@@ -778,6 +787,10 @@ final class Collection(
   // with; Spark's file listing skips `_`-prefixed paths
   private val centroidsDir = new Path(dataDir, "_centroids")
   private val CidCol = "cid"
+  // the metadata parsed at write (see the class doc); the marker rides
+  // the directory swap like `_centroids`
+  private val MetaVCol = "_m_meta_v"
+  private val variantMarker = new Path(dataDir, "_meta_variant")
   private def fs: FileSystem =
     new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
   // recovered watermark + row count — see class doc. When the sidecar is
@@ -823,12 +836,18 @@ final class Collection(
         centroidsDir.toString))
     else None
 
-  /** The stored rows: the public columns plus, in a clustered
-    * generation, the `cid` partition column. */
+  /** The stored rows: the public columns plus the storage-only ones —
+    * `_m_meta_v` in a VARIANT-form generation, the `cid` partition
+    * column in a clustered one. No rows when the collection is empty. */
   private def stored: DataFrame = {
     val schema = Schema.collectionSchema(embedder.dim)
+    if (!hasData) return spark.createDataFrame(
+      spark.sparkContext.emptyRDD[Row], schema)
+    val withV =
+      if (fs.exists(variantMarker)) schema.add(MetaVCol, VariantType)
+      else schema
     spark.read.schema(
-      if (fs.exists(centroidsDir)) schema.add(CidCol, LongType) else schema)
+      if (fs.exists(centroidsDir)) withV.add(CidCol, LongType) else withV)
       .parquet(dataDir)
   }
 
@@ -840,12 +859,8 @@ final class Collection(
     }
 
   /** The collection as a DataFrame (canonical schema, SURVEY.md §1.2;
-    * never the storage-only `cid`). */
-  def df: DataFrame =
-    if (hasData) publicCols(stored)
-    else spark.createDataFrame(
-      spark.sparkContext.emptyRDD[Row],
-      Schema.collectionSchema(embedder.dim))
+    * never the storage-only `cid` or `_m_meta_v`). */
+  def df: DataFrame = publicCols(stored)
 
   /** `rows` projected to the canonical schema. */
   private def publicCols(rows: DataFrame): DataFrame =
@@ -875,11 +890,8 @@ final class Collection(
       .getOrElse(Collection.MaxDistinctValues)
     require(cap >= 1, s"graft.distinct.max_values must be >= 1, got $cap")
     if (!hasData) return Nil
-    val base = if (filterJson == null || filterJson.trim.isEmpty) df
-    else df.filter(MqlFilter.toColumn(filterJson,
-      MqlFilter.JsonResolver(col(Schema.MetaCol))))
-    val out = base.select(MqlFilter.JsonResolver(col(Schema.MetaCol))
-        .str(field).as("v"))
+    val base = where(stored, filterJson)
+    val out = base.select(metaResolver(base).str(field).as("v"))
       .filter(col("v").isNotNull).distinct()
       .orderBy("v").limit(cap + 1).collect().map(_.getString(0)).toSeq
     if (out.length > cap) throw new IllegalStateException(
@@ -896,8 +908,7 @@ final class Collection(
   def count(filterJson: String): Long =
     if (!hasData) 0L
     else if (filterJson == null || filterJson.trim.isEmpty) count()
-    else df.filter(MqlFilter.toColumn(filterJson,
-      MqlFilter.JsonResolver(col(Schema.MetaCol)))).count()
+    else where(stored, filterJson).count()
 
   /** Insert path (db/db.go:60-100): validate lengths → embed → assign
     * dense monotone ids above the watermark → append parquet → sidecar
@@ -927,6 +938,15 @@ final class Collection(
         col(Schema.EmbeddingCol)))
       .repartition(col(CidCol))
       .write.mode(mode).partitionBy(CidCol).parquet(path)
+
+  /** `rows` with the storage-only `_m_meta_v`. `try_parse_json` takes
+    * any string — null, invalid or duplicate-key JSON parses to null,
+    * as the query-time parse does — so no write fails on it. */
+  private def withMetaV(rows: DataFrame): DataFrame =
+    rows.withColumn(MetaVCol, try_parse_json(col(Schema.MetaCol)))
+
+  /** Write the empty marker file `p` (replacing it). */
+  private def mark(p: Path): Unit = fs.create(p, true).close()
 
   /** Copy the generation's centroid table to `to`, replacing it: the
     * bytes move without a Spark job. */
@@ -959,12 +979,19 @@ final class Collection(
     * clustered without a rewrite. The rows are not in the index until
     * the next [[ensureIndex]]: [[queryApprox]] serves ids up to the
     * index's covered watermark only.
+    *
+    * The rows take the live generation's metadata form, so every file of
+    * a generation has one schema; the first insert into an empty
+    * collection starts a VARIANT-form one (marker first, then rows).
     */
   def insertDF(base: DataFrame): Unit = {
     val start = lastId
     val (withIds, n) = zipWithId(base, start)
     if (n > 0) {
-      val rows = embedded(withIds)
+      if (!hasData) mark(variantMarker)
+      val rows =
+        if (fs.exists(variantMarker)) withMetaV(embedded(withIds))
+        else embedded(withIds)
       dataCentroids match {
         case Some(cs) => writeClustered(rows, cs, dataDir, "append")
         case None => rows.write.mode("append").parquet(dataDir)
@@ -1253,7 +1280,7 @@ final class Collection(
     val hits = q.phrases.foldLeft(hits0)((h, ph) => h.join(
       graft.operators.TextIndex.phraseDocs(spark, textIndexDir, ph),
       "doc_id"))
-    df.filter(matching(filterJson))
+    publicCols(where(stored, filterJson))
       .join(hits, col(Schema.IdCol) === col("doc_id"))
       .orderBy(col("score").desc, col(Schema.IdCol).asc)
       .limit(k)
@@ -1297,12 +1324,8 @@ final class Collection(
     val probed = stored.filter(col(CidCol).isin(
         graft.operators.IvfIndex.nearestLists(cents, qv, nprobe): _*) &&
       col(Schema.IdCol) <= covered)
-    val base = publicCols(probed)
-    val filtered = if (filterJson == null || filterJson.trim.isEmpty) base
-    else base.filter(MqlFilter.toColumn(filterJson,
-      MqlFilter.JsonResolver(col(Schema.MetaCol))))
     val qlit = array(qv.map(v => lit(v)): _*)
-    filtered
+    publicCols(where(probed, filterJson))
       .withColumn(Schema.DistanceCol,
         graft.functions.VectorFunctions.l2(col(Schema.EmbeddingCol), qlit))
       // nulls LAST: a null/dim-mismatched embedding has null distance and
@@ -1506,8 +1529,10 @@ final class Collection(
     * delete, findOneAndDelete, replaceOne, the update paths and
     * [[Txn.commit]] (parquet is immutable; every lakehouse
     * DELETE/UPDATE is this under the hood) — and of [[buildIndex]]. It
-    * writes `next` (canonical columns) as a new generation. The layout
-    * carries forward: flat stays flat; a clustered generation's
+    * writes `next`'s canonical columns as a new generation, plus
+    * `_m_meta_v` parsed from them and the `_meta_variant` marker, so
+    * every commit leaves a VARIANT-form generation. The layout carries
+    * forward: flat stays flat; a clustered generation's
     * centroids are copied into the new one and every row's `cid` is
     * computed against them, so no caller handles `cid`. [[buildIndex]]
     * passes `fitted` centroids instead, which cluster a flat generation
@@ -1536,14 +1561,16 @@ final class Collection(
     val live = new Path(dataDir)
     val tmp = clearedTmp(live)
     val tmpCentroids = new Path(tmp, centroidsDir.getName)
+    val rowsV = withMetaV(publicCols(next))
     fitted.orElse(dataCentroids) match {
       case Some(cs) =>
-        writeClustered(next, cs, tmp.toString, "errorifexists")
+        writeClustered(rowsV, cs, tmp.toString, "errorifexists")
         if (fitted.isDefined) graft.operators.IvfIndex.writeCentroids(spark,
           cs, tmpCentroids.toString)
         else copyCentroids(tmpCentroids)
-      case None => next.write.parquet(tmp.toString)
+      case None => rowsV.write.parquet(tmp.toString)
     }
+    mark(new Path(tmp, variantMarker.getName))
     if (captureChanges) {
       // diff the old generation (still live) against the written one —
       // both are plain parquet scans, no recomputation of `next`'s plan
@@ -1611,11 +1638,25 @@ final class Collection(
     if (!fs.exists(live) && fs.exists(old)) fs.rename(old, live)
   }
 
-  /** Rows matching an MQL filter; a null verdict (missing field) is no
-    * match. */
-  private def matching(filterJson: String): Column =
-    coalesce(MqlFilter.toColumn(filterJson,
-      MqlFilter.JsonResolver(col(Schema.MetaCol))), lit(false))
+  /** How an MQL filter over `rows` reads the metadata: the stored
+    * `_m_meta_v` when `rows` carries it — no parse, no lambda, so the
+    * Filter compiles into whole-stage codegen — else one parse of
+    * `_m_meta` per row (a generation written before the VARIANT form,
+    * or a transaction's staged frame). */
+  private def metaResolver(rows: DataFrame): MqlFilter.FieldResolver =
+    if (rows.columns.contains(MetaVCol))
+      MqlFilter.VariantResolver(col(MetaVCol))
+    else MqlFilter.JsonResolver(col(Schema.MetaCol))
+
+  /** `rows` under an MQL filter; all of them when it is null or blank. */
+  private def where(rows: DataFrame, filterJson: String): DataFrame =
+    if (filterJson == null || filterJson.trim.isEmpty) rows
+    else rows.filter(MqlFilter.toColumn(filterJson, metaResolver(rows)))
+
+  /** Rows of `rows` matching an MQL filter; a null verdict (missing
+    * field) is no match. */
+  private def matching(rows: DataFrame, filterJson: String): Column =
+    coalesce(MqlFilter.toColumn(filterJson, metaResolver(rows)), lit(false))
 
   /** The FIRST document matching the filter — lowest `_m_id`, the
     * store's deterministic stand-in for Mongo's natural (storage)
@@ -1623,10 +1664,13 @@ final class Collection(
     * the findOneAnd* family. */
   private def firstMatch(filterJson: String): Option[(Long, String)] =
     if (!hasData) None
-    else df.filter(matching(filterJson))
-      .orderBy(col(Schema.IdCol).asc).limit(1)
-      .select(col(Schema.IdCol), col(Schema.MetaCol)).collect()
-      .headOption.map(r => (r.getLong(0), r.getString(1)))
+    else {
+      val rows = stored
+      rows.filter(matching(rows, filterJson))
+        .orderBy(col(Schema.IdCol).asc).limit(1)
+        .select(col(Schema.IdCol), col(Schema.MetaCol)).collect()
+        .headOption.map(r => (r.getLong(0), r.getString(1)))
+    }
 
   private def metaOf(id: Long): String =
     df.filter(col(Schema.IdCol) === id)
@@ -1641,12 +1685,13 @@ final class Collection(
     * capability a real user of a document+vector store expects. */
   def delete(filterJson: String): Long = {
     if (!hasData) return 0L
-    val pred = matching(filterJson)
-    val keep = df.filter(!pred)
+    val rows = stored
+    val pred = matching(rows, filterJson)
+    val keep = rows.filter(!pred)
     val kept = keep.count()
     val removed = rowsCount - kept
     if (removed > 0L) commitGeneration(keep, kept,
-      Collection.Removed(df.filter(pred).select(col(Schema.IdCol))))
+      Collection.Removed(rows.filter(pred).select(col(Schema.IdCol))))
     removed
   }
 
@@ -1801,7 +1846,7 @@ final class Collection(
   def updateDoc(filterJson: String, updateJson: String,
       arrayFiltersJson: String): Long = {
     if (!hasData) return 0L
-    val pred = matching(filterJson)
+    val pred = matching(stored, filterJson)
     // Mongo 4.2 update PIPELINES: `[{"$set": {f: <aggregation expr>}}]`
     // — values COMPUTED from the document itself (the literal-operand
     // operators above can't express "a = b + c"). Scope: $set stages
@@ -1896,8 +1941,9 @@ final class Collection(
       }
       m.writeValueAsString(base)
     }
-    val updated = df.filter(pred).count()
-    if (updated > 0L) commitGeneration(df.withColumn(Schema.MetaCol,
+    val rows = stored
+    val updated = rows.filter(pred).count()
+    if (updated > 0L) commitGeneration(rows.withColumn(Schema.MetaCol,
       when(pred, mergeUdf(col(Schema.MetaCol), patch))
         .otherwise(col(Schema.MetaCol))), rowsCount, Collection.Untouched)
     updated
@@ -2059,7 +2105,7 @@ final class Collection(
       * the staged frame — one count job, no write). */
     def updateMany(filterJson: String, updateJson: String): Long = {
       live()
-      val pred = matching(filterJson)
+      val pred = matching(frame, filterJson)
       val mergeUdf = validatedUpdateUdf(updateJson,
         arrayFiltersJson = null, queryFilterJson = filterJson)
       val matched = frame.filter(pred).count()
@@ -2076,7 +2122,7 @@ final class Collection(
       * returns the removed count. */
     def deleteMany(filterJson: String): Long = {
       live()
-      val pred = matching(filterJson)
+      val pred = matching(frame, filterJson)
       val removed = frame.filter(pred).count()
       if (removed > 0L) {
         stage(frame.filter(!pred))
@@ -2181,8 +2227,9 @@ final class Collection(
       queryFilterJson: String = null): Long = {
     val mergeUdf =
       validatedUpdateUdf(updateJson, arrayFiltersJson, queryFilterJson)
-    val updated = df.filter(pred).count()
-    if (updated > 0L) commitGeneration(df.withColumn(Schema.MetaCol,
+    val rows = stored
+    val updated = rows.filter(pred).count()
+    if (updated > 0L) commitGeneration(rows.withColumn(Schema.MetaCol,
       when(pred, mergeUdf(col(Schema.MetaCol)))
         .otherwise(col(Schema.MetaCol))), rowsCount, Collection.Untouched)
     updated
@@ -2264,8 +2311,9 @@ final class Collection(
   /** The flagship composite operator (db/db.go:111-143): metadata
     * pre-filter ∧ top-k nearest neighbors to the embedded query string.
     *
-    * One Catalyst plan: Scan(parquet) → Filter(translated MQL) →
-    * Project(+_distance) → TakeOrderedAndProject(k). The filter is a real
+    * One Catalyst plan: Scan(parquet) → Filter(translated MQL over the
+    * stored metadata VARIANT, whole-stage codegen) → Project(+_distance)
+    * → TakeOrderedAndProject(k). The filter is a real
     * Column (pushdown survives); top-k is per-partition heaps + driver
     * merge, never a full sort. Distance is L2, ascending, ties broken by
     * _m_id — a strict superset of the reference output, which emits
@@ -2285,10 +2333,7 @@ final class Collection(
       s"query vector dimension ${qv.length} != collection dimension " +
         s"${embedder.dim}")
     val qlit = array(qv.map(v => lit(v)): _*)
-    val base = if (filterJson == null || filterJson.trim.isEmpty) df
-    else df.filter(MqlFilter.toColumn(filterJson,
-      MqlFilter.JsonResolver(col(Schema.MetaCol))))
-    base
+    publicCols(where(stored, filterJson))
       .withColumn(Schema.DistanceCol,
         graft.functions.VectorFunctions.l2(col(Schema.EmbeddingCol), qlit))
       .orderBy(col(Schema.DistanceCol).asc_nulls_last,

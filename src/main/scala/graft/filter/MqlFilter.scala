@@ -123,6 +123,12 @@ object MqlFilter {
         (FieldResolver, JsonResolver) =
       throw new IllegalStateException(
         s"rebindJson on a resolver with no JSON root: $this")
+    /** A numeric literal (Long or Double) to compare a view against, or
+      * a `$regex` pattern (String): inlined by default, which keeps
+      * typed-column comparisons pushable to the scan. A resolver whose
+      * filters compile into whole-stage codegen reads it through a
+      * reference instead, so one compiled class serves every value. */
+    private[filter] def bindLit(v: Any): Column = lit(v)
     /** Dispatch a view by its recorded kind — the stage prelude's
       * materialization pass (r16). */
     private[filter] def viewOf(kind: String, f: String): Column =
@@ -144,10 +150,10 @@ object MqlFilter {
   }
 
   /** The VARIANT-rooted field views shared by [[JsonResolver]] (rooted at
-    * the whole metadata document) and [[ElementResolver]] (rooted at one
-    * array element inside an embedded-document $elemMatch). Uses VARIANT
-    * so that `{"a": "5"}` does NOT match a numeric filter on `a` — same
-    * bracketing as MQL. */
+    * the metadata document parsed from its JSON text) and
+    * [[VariantResolver]] (rooted at a VARIANT value already in the row).
+    * Uses VARIANT so that `{"a": "5"}` does NOT match a numeric filter on
+    * `a` — same bracketing as MQL. */
   sealed trait VariantViews extends FieldResolver {
     /** The VARIANT value fields resolve against (re-read per call so
       * [[toColumn]]'s lambda re-binding takes effect). */
@@ -282,15 +288,20 @@ object MqlFilter {
             org.apache.spark.sql.types.StringType))) }
   }
 
-  /** Resolver rooted at ONE array element (a VARIANT sub-document) —
-    * what an embedded-document $elemMatch predicate evaluates against.
-    * Nested scalar arrays resolve through the variant cast (strings
-    * only); deeper embedded arrays nest further ElementResolvers. */
-  final case class ElementResolver(elem: Column) extends VariantViews {
-    private[MqlFilter] def parsedV: Column = elem
+  /** Resolver rooted at a VARIANT value in the row: a collection's
+    * stored metadata column (parsed once, at write time, so a filter
+    * over it runs no parse and no lambda and compiles into whole-stage
+    * codegen), or ONE array element — what an embedded-document
+    * $elemMatch predicate evaluates against. Nested scalar arrays
+    * resolve through the variant cast (strings only); deeper embedded
+    * arrays nest further VariantResolvers. */
+  final case class VariantResolver(root: Column) extends VariantViews {
+    private[MqlFilter] def parsedV: Column = root
+    override private[filter] def bindLit(v: Any): Column =
+      graft.expr.BoundLiteral.column(v)
     def arr(f: String): Column =
       when(schemaOf(f).startsWith("ARRAY"),
-        try_variant_get(elem, path(f), "array<string>"))
+        try_variant_get(root, path(f), "array<string>"))
   }
 
   /** Resolver over real typed columns (materialized metadata). Type
@@ -358,7 +369,10 @@ object MqlFilter {
     * predicate leaves. Null/invalid metadata parses to a null VARIANT,
     * every leaf collapses exactly as in the unbound form, and a null
     * lambda result is false under `filter` — semantics unchanged, parse
-    * count drops from O(leaves) to 1. */
+    * count drops from O(leaves) to 1. A [[VariantResolver]] over a
+    * stored `try_parse_json` column has no JSON root: the predicate
+    * reads that column directly, with no parse and no lambda, and
+    * selects the same rows. */
   def toColumn(filterJson: String, r: FieldResolver): Column =
     bindAndTranslate(mapper.readTree(filterJson), r, identity)
 
@@ -1075,6 +1089,7 @@ object MqlFilter {
       val (ri, jr) = inner.rebindJson(parsed)
       (new CollatedResolver(ri, coll), jr)
     }
+    override private[filter] def bindLit(v: Any): Column = inner.bindLit(v)
     def num(f: String): Column = inner.num(f)
     def intNum(f: String): Column = inner.intNum(f)
     def ts(f: String): Column = inner.ts(f)
@@ -1414,9 +1429,9 @@ object MqlFilter {
       // double, where the float side already defines the precision.
       if (lit0.isIntegralNumber && lit0.canConvertToLong)
         tv(coalesce(
-          op(r.intNum(field), lit(lit0.asLong())),
-          op(r.num(field), lit(lit0.asDouble()))))
-      else tv(op(r.num(field), lit(lit0.asDouble())))
+          op(r.intNum(field), r.bindLit(lit0.asLong())),
+          op(r.num(field), r.bindLit(lit0.asDouble()))))
+      else tv(op(r.num(field), r.bindLit(lit0.asDouble())))
     }
     else if (lit0.isTextual) tv(op(r.str(field), lit(lit0.asText())))
     else if (lit0.isBoolean) tv(op(r.bool(field), lit(lit0.asBoolean())))
@@ -1456,7 +1471,7 @@ object MqlFilter {
     require(known.length == options.length,
       s"unsupported $$options flags: $options")
     val pat = if (known.isEmpty) pattern else s"(?$known)$pattern"
-    tv(r.str(field).rlike(pat))
+    tv(rlike(r.str(field), r.bindLit(pat)))
   }
 
   /** Bracketed comparison of ONE variant array element against a JSON
@@ -1523,11 +1538,12 @@ object MqlFilter {
       // integral args on an integral value → exact long arithmetic
       // (double % collapses dividends past 2^53); mixed falls to double
       if (args.forall(a => a.isIntegralNumber && a.canConvertToLong))
-        tv(coalesce(
-          r.intNum(field) % lit(args(0).asLong()) === lit(args(1).asLong()),
-          r.num(field) % lit(args(0).asDouble()) === lit(args(1).asDouble())))
-      else
-        tv(r.num(field) % lit(args(0).asDouble()) === lit(args(1).asDouble()))
+        tv(coalesce(r.intNum(field) % r.bindLit(args(0).asLong()) ===
+            r.bindLit(args(1).asLong()),
+          r.num(field) % r.bindLit(args(0).asDouble()) ===
+            r.bindLit(args(1).asDouble())))
+      else tv(r.num(field) % r.bindLit(args(0).asDouble()) ===
+        r.bindLit(args(1).asDouble()))
     case "$geoWithin" =>
       // Mongo's find-side geo containment: the field is an integral
       // [x, y] point ([lon, lat] microdegrees for the spherical shape),
@@ -1651,10 +1667,10 @@ object MqlFilter {
       // embedded-document form: {"items": {"$elemMatch": {"k": "a",
       // "n": {"$gt": 3}}}} — ONE element must satisfy the whole
       // sub-filter. The operand is a full MQL query evaluated against
-      // each element as its own document (ElementResolver), so nested
+      // each element as its own document (VariantResolver), so nested
       // $and/$or/$in/$regex/field-$not all work unchanged. Non-array /
       // missing fields give a null element array -> false under tv.
-      tv(exists(r.varr(field), e => translate(v, ElementResolver(e))))
+      tv(exists(r.varr(field), e => translate(v, VariantResolver(e))))
     case "$elemMatch" =>
       // operator-object form: {"tags": {"$elemMatch": {"$gt": 3}}} —
       // elements bracket per element (a string "5" never matches a

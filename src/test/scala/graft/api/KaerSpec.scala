@@ -1615,4 +1615,211 @@ class KaerSpec extends SparkTestBase {
       assert(lines.count(_.contains(d)) == 1, s"$d defined more than once")
     assert(!lines.exists(_.contains("rewriteData")))
   }
+
+  // ---- the stored metadata VARIANT ---------------------------------------
+
+  private def hfs = org.apache.hadoop.fs.FileSystem.get(
+    spark.sparkContext.hadoopConfiguration)
+  private def marked(dataDir: String) =
+    hfs.exists(new org.apache.hadoop.fs.Path(dataDir, "_meta_variant"))
+
+  /** Rewrite the generation at `dataDir` the way builds before the
+    * stored metadata VARIANT wrote it: the canonical columns (and `cid`,
+    * one file per list, with its `_centroids`, when clustered), no
+    * `_m_meta_v` and no marker. */
+  private def toStringForm(dataDir: String): Unit = {
+    import org.apache.hadoop.fs.{FileUtil, Path}
+    val cents = new Path(dataDir, "_centroids")
+    val clustered = hfs.exists(cents)
+    val base = graft.core.Schema.collectionSchema(64)
+    val rows = spark.read.schema(
+      if (clustered) base.add("cid", org.apache.spark.sql.types.LongType)
+      else base).parquet(dataDir)
+    val pre = s"${dataDir}_pre"
+    if (clustered) {
+      rows.write.partitionBy("cid").parquet(pre)
+      assert(FileUtil.copy(hfs, cents, hfs, new Path(pre, "_centroids"),
+        false, spark.sparkContext.hadoopConfiguration))
+    } else rows.write.parquet(pre)
+    hfs.delete(new Path(dataDir), true)
+    assert(hfs.rename(new Path(pre), new Path(dataDir)))
+    assert(!marked(dataDir))
+  }
+
+  /** Whether a formatted plan parses JSON per row: `try_parse_json`
+    * prints as its runtime form, `VariantExpressionEvalUtils.parseJson`. */
+  private def parsesJson(plan: String) =
+    plan.contains("try_parse_json") || plan.contains("parseJson")
+
+  private def contents(c: Collection) =
+    c.df.orderBy("_m_id").collect().map(r => (r.getLong(0), r.getString(1),
+      r.getSeq[Float](2), r.getString(3))).toSeq
+
+  test("stored metadata VARIANT: on a fresh collection the query Filter " +
+      "reads _m_meta_v — no try_parse_json, no lambda — inside whole-stage " +
+      "codegen, for exact and approximate queries") {
+    val c = newSession(tmpDir("kaer-metav-plan")).createCollection("c")
+    c.insert(Data().withDocuments((0 until 12).map(i => s"plan doc $i"))
+      .withMetadatas((0 until 12).map(i => Map[String, Any]("g" -> i,
+        "lang" -> (if (i % 2 == 0) "en" else "de")))))
+    c.ensureIndex(nlist = 3, iters = 1)
+    val codegenFilter = """Filter \[codegen id : \d+\]""".r
+    val readsV = """ReadSchema: struct<[^\n]*_m_meta_v""".r
+    for (f <- Seq("""{"g": {"$gte": 2}}""", """{"lang": "en", "g": {"$lt": 9}}""",
+        """{"$or": [{"lang": {"$regex": "^e"}}, {"g": {"$in": [3, 5]}}]}""");
+        p <- Seq(c.explainQuery("plan doc 3", 2, f),
+          c.explainQuery("plan doc 3", 2, f, 2))) {
+      assert(!parsesJson(p) && !p.contains("lambdafunction") &&
+        !p.contains("forall"), p)
+      assert(codegenFilter.findFirstIn(p).nonEmpty, p)
+      assert(readsV.findFirstIn(p).nonEmpty, p)
+    }
+  }
+
+  test("stored metadata VARIANT: df keeps the canonical schema and _m_meta " +
+      "comes back byte for byte through query, queryApprox, textFind and " +
+      "change events") {
+    import org.apache.spark.sql.functions.col
+    val c = newSession(tmpDir("kaer-metav-bytes")).createCollection("c")
+    c.enableChangeStream()
+    val bs = "\\"
+    val metas = Seq(
+      """{"lang":"en", "n":1e2,"a":1.50}""",
+      """  { "z" : [ 1,2 ] ,"a":"x",  "lang" : "en" }  """,
+      s"""{"u":"${bs}u00e9 ${bs}ud83d${bs}ude00 ${bs}"q${bs}"","lang":"en"}""",
+      "{\"lang\":\"en\",\"raw\":\"é – 😀\",\"n\":-0.0}",
+      """{"lang":"de","n":100}""")
+    import spark.implicits._
+    c.insertDF(metas.zipWithIndex.map { case (m, i) => (s"bytes doc $i", m) }
+      .toDF("_m_doc", "_m_meta"))
+    assert(marked(s"${c.dir}/data"))
+    c.ensureIndex(nlist = 2, iters = 1)
+    c.ensureTextIndex()
+    assert(c.df.schema.fields.map(f => f.name -> f.dataType.simpleString)
+      .toSeq == Seq("_m_id" -> "bigint", "_m_doc" -> "string",
+        "_m_embedding" -> "array<float>", "_m_meta" -> "string"))
+    val want = metas.zipWithIndex.map { case (m, i) => (i + 1L, m) }.toMap
+    def metaById(df: org.apache.spark.sql.DataFrame) =
+      df.select(col("_m_id"), col("_m_meta")).collect()
+        .map(r => r.getLong(0) -> r.getString(1)).toMap
+    val f = """{"lang": "en"}"""
+    val en = want.filter(_._1 <= 4L)
+    assert(metaById(c.df) == want)
+    assert(metaById(c.query("bytes doc", 10, f)) == en)
+    assert(metaById(c.queryApprox("bytes doc", 10, 2, f)) == en)
+    assert(metaById(c.textFind("bytes doc", 10, f)) == en)
+    assert(metaById(c.watch().filter(col("op") === "insert")) == want)
+    c.compact()
+    assert(metaById(c.df) == want && c.watch().count() == 5L)
+  }
+
+  test("stored metadata VARIANT: a generation written before it (no " +
+      "marker) answers query, queryApprox, count, delete and updateDoc " +
+      "through the per-row parse exactly as a VARIANT-form twin does, and " +
+      "carries the marker after compact()") {
+    val root = tmpDir("kaer-metav-old")
+    val k = newSession(root)
+    for (name <- Seq("old", "new")) {
+      val c = k.createCollection(name)
+      c.insert(Data().withDocuments((0 until 40).map(i => s"old doc $i topic ${i % 5}"))
+        .withMetadatas((0 until 40).map(i => Map[String, Any]("g" -> i,
+          "tag" -> (if (i % 3 == 0) "a" else "b")))))
+      c.ensureIndex(nlist = 4, iters = 2)
+    }
+    toStringForm(s"$root/old/data")
+    assert(marked(s"$root/new/data"))
+    def ids(df: org.apache.spark.sql.DataFrame) =
+      df.select("_m_id").collect().map(_.getLong(0)).toSeq
+    val filters = Seq(null, """{"g": {"$gte": 7}}""",
+      """{"$or": [{"tag": "a"}, {"g": {"$lt": 3}}]}""")
+    def answers(c: Collection) = filters.map(f => (
+      ids(c.query("old doc 12 topic 2", 6, f)),
+      ids(c.queryApprox("old doc 12 topic 2", 6, 2, f)),
+      if (f == null) c.count() else c.count(f)))
+    def parses(c: Collection) =
+      parsesJson(c.explainQuery("old doc 1", 2, filters(1)))
+    val o = newSession(root).getCollection("old")
+    val n = newSession(root).getCollection("new")
+    assert(parses(o) && !parses(n))
+    val before = answers(n)
+    assert(answers(o) == before)
+    assert(contents(o) == contents(n))
+    o.compact()
+    assert(marked(s"$root/old/data") && !parses(o) && answers(o) == before)
+
+    // and through the mutations, each starting from the string form
+    toStringForm(s"$root/old/data")
+    val o2 = newSession(root).getCollection("old")
+    assert(parses(o2))
+    val upd = """{"$set": {"tag": "c"}, "$inc": {"g": 100}}"""
+    assert(o2.updateDoc("""{"g": {"$mod": [4, 1]}}""", upd) ==
+      n.updateDoc("""{"g": {"$mod": [4, 1]}}""", upd))
+    assert(marked(s"$root/old/data") && contents(o2) == contents(n))
+    toStringForm(s"$root/old/data")
+    val o3 = newSession(root).getCollection("old")
+    assert(o3.delete("""{"tag": "c", "g": {"$lt": 120}}""") ==
+      n.delete("""{"tag": "c", "g": {"$lt": 120}}"""))
+    assert(marked(s"$root/old/data") && contents(o3) == contents(n))
+    assert(answers(o3) == answers(n))
+  }
+
+  test("stored metadata VARIANT: the marker rides the directory swap, so " +
+      "restoring data_old brings back the before-form") {
+    import org.apache.hadoop.fs.Path
+    val root = tmpDir("kaer-metav-swap")
+    val c = newSession(root).createCollection("c")
+    c.insert(Data().withDocuments((0 until 8).map(i => s"swap doc $i"))
+      .withMetadatas((0 until 8).map(i => Map[String, Any]("g" -> i))))
+    val data = s"$root/c/data"
+    val f = """{"g": {"$gte": 5}}"""
+    val want = contents(c)
+    def crashMidSwap(): Collection = {
+      // a commit died between its two renames: the before-state is at
+      // data_old and the next generation never arrived
+      assert(hfs.rename(new Path(data), new Path(s"${data}_old")))
+      newSession(root).getCollection("c")
+    }
+    // a VARIANT-form generation comes back VARIANT-form ...
+    val v = crashMidSwap()
+    assert(marked(data) && contents(v) == want)
+    assert(!parsesJson(v.explainQuery("swap doc 1", 3, f)))
+    assert(v.count(f) == 3L)
+    // ... and a string-form one comes back string-form
+    toStringForm(data)
+    val s0 = crashMidSwap()
+    assert(!marked(data) && contents(s0) == want)
+    assert(parsesJson(s0.explainQuery("swap doc 1", 3, f)))
+    assert(s0.count(f) == 3L)
+  }
+
+  test("stored metadata VARIANT: metadata try_parse_json cannot hold " +
+      "(null, invalid JSON, duplicate keys, nesting past the parser's " +
+      "depth limit) inserts without error, is stored as a null VARIANT, " +
+      "keeps its text, and filters as the per-row parse does") {
+    import graft.filter.MqlFilter
+    import org.apache.spark.sql.functions.col
+    val c = newSession(tmpDir("kaer-metav-odd")).createCollection("c")
+    val metas = Seq(null, "not json", """{"a": 1, "a": 2}""",
+      "[" * 2000 + "]" * 2000, """{"a": 1}""", """[1, 2]""", "")
+    import spark.implicits._
+    c.insertDF(metas.zipWithIndex.map { case (m, i) => (s"odd doc $i", m) }
+      .toDF("_m_doc", "_m_meta"))
+    assert(c.count() == metas.size.toLong)
+    assert(contents(c).map(_._4) == metas)
+    val v = spark.read.schema(graft.core.Schema.collectionSchema(64)
+        .add("_m_meta_v", org.apache.spark.sql.types.VariantType))
+      .parquet(s"${c.dir}/data").filter(col("_m_meta_v").isNull)
+      .select("_m_id").collect().map(_.getLong(0)).toSeq.sorted
+    assert(v == Seq(1L, 2L, 3L, 4L, 7L), v)
+    def ids(df: org.apache.spark.sql.DataFrame) =
+      df.select("_m_id").collect().map(_.getLong(0)).toSeq.sorted
+    for (f <- Seq("{}", """{"a": 1}""", """{"a": {"$exists": false}}""",
+        """{"a": {"$ne": 1}}""", """{"a": null}""")) {
+      val parsed = ids(c.df.filter(MqlFilter.toColumn(f,
+        MqlFilter.JsonResolver(col("_m_meta")))))
+      assert(ids(c.query("odd doc", 10, f)) == parsed, f)
+      assert(c.count(f) == parsed.size.toLong, f)
+    }
+    assert(ids(c.query("odd doc", 10, """{"a": 1}""")) == Seq(5L))
+  }
 }

@@ -8,9 +8,11 @@ import org.scalacheck.{Gen, Prop, Test => SCTest}
   * translation must agree with a direct in-memory evaluation over a
   * fixed corpus of JSON metadata rows — the SURVEY §5 fuzz contract.
   * One generator covers the comparison/membership/logical operator core
-  * over int-valued fields (the type-bracketing hot zone).
+  * over int-valued fields (the type-bracketing hot zone). Each predicate
+  * also selects the same rows through the stored-VARIANT binding
+  * ([[MetaForms]]).
   */
-class MqlFilterPropSpec extends SparkTestBase {
+class MqlFilterPropSpec extends SparkTestBase with MetaForms {
   import spark.implicits._
 
   // 2^53: the first long a double cannot distinguish from its neighbor —
@@ -155,9 +157,7 @@ class MqlFilterPropSpec extends SparkTestBase {
 
   test("random MQL predicates: Catalyst translation == in-memory model") {
     val prop = Prop.forAll(Gen.oneOf(genPred, genLeaf)) { p =>
-      val got = df.filter(MqlFilter.toColumn(p.json,
-          MqlFilter.JsonResolver(col("meta"))))
-        .select("id").collect().map(_.getLong(0)).toSet
+      val got = selectIds(df, p.json).toSet
       val want = model.collect {
         case (id, doc) if p.eval(doc) => id
       }.toSet
@@ -264,9 +264,7 @@ class MqlFilterPropSpec extends SparkTestBase {
       "model with two-valued collapse") {
     val prop = Prop.forAll(genB) { b =>
       val json = s"""{"$$expr": ${b.json}}"""
-      val got = df.filter(MqlFilter.toColumn(json,
-          MqlFilter.JsonResolver(col("meta"))))
-        .select("id").collect().map(_.getLong(0)).toSet
+      val got = selectIds(df, json).toSet
       val want = model.collect {
         case (id, (k, _)) if b.eval(k) => id
       }.toSet

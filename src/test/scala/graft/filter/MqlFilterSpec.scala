@@ -3,10 +3,12 @@ package graft.filter
 import graft.SparkTestBase
 import org.apache.spark.sql.functions.col
 
-/** Operator-by-operator spec of the MQL → Catalyst translator over the
-  * VARIANT JsonResolver, including MQL type bracketing (numbers never
-  * match strings), missing-field semantics, and the field-level $not. */
-class MqlFilterSpec extends SparkTestBase {
+/** Operator-by-operator spec of the MQL → Catalyst translator, including
+  * MQL type bracketing (numbers never match strings), missing-field
+  * semantics, and the field-level $not. Every selection runs through
+  * both metadata bindings — the per-row JSON parse and the stored
+  * VARIANT — and asserts they agree ([[MetaForms]]). */
+class MqlFilterSpec extends SparkTestBase with MetaForms {
   import spark.implicits._
 
   // id → metadata JSON
@@ -20,9 +22,7 @@ class MqlFilterSpec extends SparkTestBase {
   private lazy val df = rows.toDF("id", "meta")
 
   private def ids(filterJson: String): Seq[Long] =
-    df.filter(MqlFilter.toColumn(filterJson,
-        MqlFilter.JsonResolver(col("meta"))))
-      .select("id").collect().map(_.getLong(0)).toSeq.sorted
+    selectIds(df, filterJson)
 
   test("implicit equality") { assert(ids("""{"a": 1}""") == Seq(1L)) }
   test("$eq") { assert(ids("""{"a": {"$eq": 1}}""") == Seq(1L)) }
@@ -127,9 +127,7 @@ class MqlFilterSpec extends SparkTestBase {
     // whole doubles have bits (Mongo); fractional values never match
     val d2 = Seq((1L, """{"a": 6.0}"""), (2L, """{"a": 6.5}"""))
       .toDF("id", "meta")
-    assert(d2.filter(MqlFilter.toColumn("""{"a": {"$bitsAllSet": [1, 2]}}""",
-        MqlFilter.JsonResolver(col("meta"))))
-      .select("id").collect().map(_.getLong(0)).toSeq == Seq(1L))
+    assert(selectIds(d2, """{"a": {"$bitsAllSet": [1, 2]}}""") == Seq(1L))
     intercept[IllegalArgumentException] {
       ids("""{"a": {"$bitsAllSet": [64]}}""") }
     intercept[IllegalArgumentException] {
@@ -153,9 +151,7 @@ class MqlFilterSpec extends SparkTestBase {
   )
   private lazy val docDf = docRows.toDF("id", "meta")
   private def docIds(filterJson: String): Seq[Long] =
-    docDf.filter(MqlFilter.toColumn(filterJson,
-        MqlFilter.JsonResolver(col("meta"))))
-      .select("id").collect().map(_.getLong(0)).toSeq.sorted
+    selectIds(docDf, filterJson)
 
   test("embedded $elemMatch: one element must satisfy the WHOLE sub-filter") {
     // k=a AND n>5 must hold on the SAME element: row 1 has k=a(n=1) and
@@ -179,9 +175,7 @@ class MqlFilterSpec extends SparkTestBase {
   )
   private lazy val bigDf = bigRows.toDF("id", "meta")
   private def bigIds(filterJson: String): Seq[Long] =
-    bigDf.filter(MqlFilter.toColumn(filterJson,
-        MqlFilter.JsonResolver(col("meta"))))
-      .select("id").collect().map(_.getLong(0)).toSeq.sorted
+    selectIds(bigDf, filterJson)
 
   test("int64-exact: $eq/$ne/$lt at 2^53+1 do not round through double") {
     assert(bigIds("""{"id64": 9007199254740993}""") == Seq(2L))
@@ -217,9 +211,7 @@ class MqlFilterSpec extends SparkTestBase {
   )
   private lazy val dateDf = dateRows.toDF("id", "meta")
   private def dateIds(filterJson: String): Seq[Long] =
-    dateDf.filter(MqlFilter.toColumn(filterJson,
-        MqlFilter.JsonResolver(col("meta"))))
-      .select("id").collect().map(_.getLong(0)).toSeq.sorted
+    selectIds(dateDf, filterJson)
 
   test("$date literals: range compare as TIMESTAMP over ISO strings") {
     assert(dateIds(
@@ -253,9 +245,7 @@ class MqlFilterSpec extends SparkTestBase {
   )
   private lazy val numArrDf = numArrRows.toDF("id", "meta")
   private def numArrIds(filterJson: String): Seq[Long] =
-    numArrDf.filter(MqlFilter.toColumn(filterJson,
-        MqlFilter.JsonResolver(col("meta"))))
-      .select("id").collect().map(_.getLong(0)).toSeq.sorted
+    selectIds(numArrDf, filterJson)
 
   test("numeric $all brackets per element: 1 matches 1 and 1.0, not \"1\"") {
     assert(numArrIds("""{"xs": {"$all": [1]}}""") == Seq(1L, 2L))
@@ -346,9 +336,7 @@ class MqlFilterSpec extends SparkTestBase {
       (4L, "{}", "nothing relevant")
     ).toDF("id", "meta", "text")
     def tids(f: String): Seq[Long] =
-      tdf.filter(MqlFilter.toColumn(f,
-          MqlFilter.JsonResolver(col("meta"))))
-        .select("id").collect().map(_.getLong(0)).toSeq.sorted
+      selectIds(tdf, f)
     assert(tids("""{"$text": {"$search": "hash vector"}}""")
       == Seq(1L, 3L))
     // search terms tokenize/fold like the document side
@@ -381,10 +369,7 @@ class MqlFilterSpec extends SparkTestBase {
       (9L, """{"k": 5, "s": "ab", "e": "y"}""")  // e passes enum
     ).toDF("id", "meta")
     def jids(schema: String): Seq[Long] =
-      docs.filter(MqlFilter.toColumn(
-          s"""{"$$jsonSchema": $schema}""",
-          MqlFilter.JsonResolver(col("meta"))))
-        .select("id").collect().map(_.getLong(0)).toSeq.sorted
+      selectIds(docs, s"""{"$$jsonSchema": $schema}""")
     assert(jids(
       """{"bsonType": "object", "required": ["k"],
         | "properties": {
@@ -424,9 +409,7 @@ class MqlFilterSpec extends SparkTestBase {
       (7L, """{}""")                   // missing — never matches
     ).toDF("id", "meta")
     def gids(f: String): Seq[Long] =
-      pts.filter(MqlFilter.toColumn(f,
-          MqlFilter.JsonResolver(col("meta"))))
-        .select("id").collect().map(_.getLong(0)).toSeq.sorted
+      selectIds(pts, f)
     assert(gids("""{"loc": {"$geoWithin":
       | {"$box": [[0, 0], [10, 10]]}}}""".stripMargin)
       == Seq(1L, 2L, 3L))
@@ -458,9 +441,7 @@ class MqlFilterSpec extends SparkTestBase {
       (7L, """{"loc": [11, 5]}""")    // right of everything — outside
     ).toDF("id", "meta")
     def gids(f: String): Seq[Long] =
-      pts.filter(MqlFilter.toColumn(f,
-          MqlFilter.JsonResolver(col("meta"))))
-        .select("id").collect().map(_.getLong(0)).toSeq.sorted
+      selectIds(pts, f)
     assert(gids(s"""{"loc": {"$$geoWithin": {"$$polygon": $poly}}}""")
       == Seq(1L, 3L, 4L, 5L, 6L))
     // an explicitly closed ring is accepted
@@ -491,9 +472,7 @@ class MqlFilterSpec extends SparkTestBase {
       (4L, """{"loc": [0, 0]}""")          // half a world away
     ).toDF("id", "meta")
     def gids(f: String): Seq[Long] =
-      pts.filter(MqlFilter.toColumn(f,
-          MqlFilter.JsonResolver(col("meta"))))
-        .select("id").collect().map(_.getLong(0)).toSeq.sorted
+      selectIds(pts, f)
     assert(gids("""{"loc": {"$geoWithin":
       | {"$centerSphere": [[179999999, 0], 2]}}}""".stripMargin)
       == Seq(1L, 3L))
@@ -509,9 +488,7 @@ class MqlFilterSpec extends SparkTestBase {
       (1L, """{"loc": [2000, 60000000]}"""),
       (2L, """{"loc": [0, 60001000]}""")).toDF("id", "meta")
     def g60(f: String): Seq[Long] =
-      at60.filter(MqlFilter.toColumn(f,
-          MqlFilter.JsonResolver(col("meta"))))
-        .select("id").collect().map(_.getLong(0)).toSeq.sorted
+      selectIds(at60, f)
     assert(g60("""{"loc": {"$geoWithin":
       | {"$centerSphere": [[0, 60000000], 1000]}}}""".stripMargin)
       == Seq(1L, 2L))
@@ -707,6 +684,96 @@ class MqlFilterSpec extends SparkTestBase {
         MqlFilter.parseCollation(spec)
       }
       assert(e.getMessage.contains("unsupported collation locale"))
+    }
+  }
+
+  test("stored VARIANT: null, invalid and duplicate-key metadata parse to " +
+      "null on both bindings, so only $exists:false-style predicates see " +
+      "them the same way") {
+    val odd = Seq(
+      (1L, null: String),
+      (2L, "not json"),
+      (3L, """{"a": 1, "a": 2}"""),
+      (4L, """{"a": 1}"""),
+      (5L, "[1, 2]"),
+      (6L, "\"str\""),
+      (7L, ""),
+      (8L, "[" * 2000 + "]" * 2000)
+    ).toDF("id", "meta")
+    val stored = storedForm(odd).filter(col("meta_v").isNull)
+      .select("id").collect().map(_.getLong(0)).toSeq.sorted
+    assert(stored == Seq(1L, 2L, 3L, 7L, 8L), stored)
+    assert(selectIds(odd, """{"a": 1}""") == Seq(4L))
+    assert(selectIds(odd, "{}") == (1L to 8L))
+    for (f <- Seq("""{"a": {"$exists": false}}""", """{"a": {"$ne": 1}}""",
+        """{"a": null}""", """{"a": {"$nin": [1]}}""",
+        """{"$nor": [{"a": 1}]}""", """{"a": {"$type": "long"}}""",
+        """{"$expr": {"$eq": [{"$ifNull": ["$a", 0]}, 0]}}"""))
+      selectIds(odd, f)
+  }
+
+  test("stored VARIANT: number spellings and \"5\" vs 5 keep their " +
+      "types through the parquet round trip") {
+    val nums = Seq(
+      (1L, """{"n": 1e2}"""),
+      (2L, """{"n": 100}"""),
+      (3L, """{"n": 100.0}"""),
+      (4L, """{"n": 1.50}"""),
+      (5L, """{"n": "100"}"""),
+      (6L, """{"n": -0.0}"""),
+      (7L, """{"n": 9007199254740993}"""),
+      (8L, """{"n": 12345678901234567890}""")
+    ).toDF("id", "meta")
+    assert(selectIds(nums, """{"n": 100}""") == Seq(1L, 2L, 3L))
+    assert(selectIds(nums, """{"n": "100"}""") == Seq(5L))
+    assert(selectIds(nums, """{"n": 1.5}""") == Seq(4L))
+    assert(selectIds(nums, """{"n": 9007199254740993}""") == Seq(7L))
+    assert(selectIds(nums, """{"n": {"$type": "string"}}""") == Seq(5L))
+    for (f <- Seq("""{"n": {"$type": "double"}}""",
+        """{"n": {"$type": "long"}}""", """{"n": {"$gt": 1e19}}""",
+        """{"n": {"$lte": 0}}""", """{"n": {"$mod": [7, 2]}}"""))
+      selectIds(nums, f)
+  }
+
+  test("stored VARIANT: nested arrays, embedded $elemMatch over arrays, " +
+      "$all and $size") {
+    val nested = Seq(
+      (1L, """{"m": [[1, 2], [3]], "items": [{"tags": ["x", "y"]}]}"""),
+      (2L, """{"m": [["a"]], "items": [{"tags": []}, {"tags": ["y"]}]}"""),
+      (3L, """{"m": [], "items": [{"tags": "x"}]}"""),
+      (4L, """{"m": [1, [2]], "items": []}""")
+    ).toDF("id", "meta")
+    assert(selectIds(nested, """{"m": {"$size": 2}}""") == Seq(1L, 4L))
+    assert(selectIds(nested,
+      """{"items": {"$elemMatch": {"tags": {"$all": ["y"]}}}}""")
+      == Seq(1L, 2L))
+    assert(selectIds(nested,
+      """{"items": {"$elemMatch": {"tags": {"$size": 0}}}}""") == Seq(2L))
+    for (f <- Seq("""{"m": {"$all": [1]}}""", """{"m": {"$type": "array"}}""",
+        """{"m": {"$elemMatch": {"$gt": 0}}}""",
+        """{"items": {"$elemMatch": {"tags": {"$type": "string"}}}}"""))
+      selectIds(nested, f)
+  }
+
+  test("stored VARIANT under a collation: the collation-wrapped resolver " +
+      "selects the same rows from either binding") {
+    val words = Seq(
+      (1L, """{"s": "apple"}"""),
+      (2L, """{"s": "APPLE"}"""),
+      (3L, """{"s": "Äpple"}"""),
+      (4L, """{"s": "banana"}"""),
+      (5L, """{"s": 5}"""),
+      (6L, """{}""")
+    ).toDF("id", "meta")
+    for (strength <- Seq(1, 2, 3)) {
+      val coll = Some(MqlFilter.Collation("en", strength))
+      val eq = selectIds(words, """{"s": "Apple"}""", coll)
+      assert(eq == (if (strength == 3) Seq() else if (strength == 2)
+        Seq(1L, 2L) else Seq(1L, 2L, 3L)), s"strength $strength: $eq")
+      for (f <- Seq("""{"s": {"$in": ["BANANA", "x"]}}""",
+          """{"s": {"$gt": "b"}}""", """{"s": {"$regex": "^a"}}""",
+          """{"s": {"$ne": "apple"}}"""))
+        selectIds(words, f, coll)
     }
   }
 }

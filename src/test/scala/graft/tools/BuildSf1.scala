@@ -6,8 +6,8 @@ import org.apache.spark.sql.functions._
   * probe — 10× tiling of sf0.1 with offset keys so FK joins replicate
   * and true answers scale exactly; document text decorrelated per
   * replica by a substitution cipher so replicas share no shingles (see
-  * [[ScaleProbeR10]] for the rationale). Split out in r11 so the FULL
-  * 30x-gate bench can run against the replica via
+  * BASELINE.md's r10 headroom series for the rationale). Split out in
+  * r11 so the FULL 30x-gate bench can run against the replica via
   * `SPARK_GRAFT_SF_DIR=/tmp/graft-probe-sf1 runMain graft.Bench`
   * (the r11 queue's full-suite sf1 row) without re-timing the probe.
   *
