@@ -805,6 +805,10 @@ final class Collection(
   // capturing (single-writer contract, like the watermark)
   private var captureChanges: Boolean = false
   private var lastOpTime: Option[Long] = None
+  // [[stored]] of the live generation, built once: building it lists the
+  // data files, which costs a query about as much as planning it. Every
+  // write through this handle drops it (single-writer contract)
+  private var storedFrame: Option[DataFrame] = None
   locally {
     // crash-window repair for swapDir, before reading anything: a data
     // generation or change log that vanished between the swap's two
@@ -838,17 +842,21 @@ final class Collection(
 
   /** The stored rows: the public columns plus the storage-only ones —
     * `_m_meta_v` in a VARIANT-form generation, the `cid` partition
-    * column in a clustered one. No rows when the collection is empty. */
-  private def stored: DataFrame = {
+    * column in a clustered one. No rows when the collection is empty.
+    * Built once per generation (see `storedFrame`). */
+  private def stored: DataFrame = storedFrame.getOrElse {
     val schema = Schema.collectionSchema(embedder.dim)
-    if (!hasData) return spark.createDataFrame(
-      spark.sparkContext.emptyRDD[Row], schema)
     val withV =
       if (fs.exists(variantMarker)) schema.add(MetaVCol, VariantType)
       else schema
-    spark.read.schema(
-      if (fs.exists(centroidsDir)) withV.add(CidCol, LongType) else withV)
-      .parquet(dataDir)
+    val frame =
+      if (!hasData)
+        spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema)
+      else spark.read.schema(
+        if (fs.exists(centroidsDir)) withV.add(CidCol, LongType) else withV)
+        .parquet(dataDir)
+    storedFrame = Some(frame)
+    frame
   }
 
   private def maxIdInData(): Long =
@@ -945,6 +953,20 @@ final class Collection(
   private def withMetaV(rows: DataFrame): DataFrame =
     rows.withColumn(MetaVCol, try_parse_json(col(Schema.MetaCol)))
 
+  /** `rows` with `_m_meta` set to `meta` where `pred` holds: the one way
+    * a mutation changes stored metadata, so a carried `_m_meta_v` is
+    * re-parsed for exactly those rows ([[commitGeneration]] writes it
+    * as given). */
+  private def setMeta(rows: DataFrame, pred: Column,
+      meta: Column): DataFrame =
+    rows.select(rows.columns.toSeq.map {
+      case Schema.MetaCol =>
+        when(pred, meta).otherwise(col(Schema.MetaCol)).as(Schema.MetaCol)
+      case MetaVCol =>
+        when(pred, try_parse_json(meta)).otherwise(col(MetaVCol)).as(MetaVCol)
+      case c => col(c)
+    }: _*)
+
   /** Write the empty marker file `p` (replacing it). */
   private def mark(p: Path): Unit = fs.create(p, true).close()
 
@@ -992,6 +1014,7 @@ final class Collection(
       val rows =
         if (fs.exists(variantMarker)) withMetaV(embedded(withIds))
         else embedded(withIds)
+      storedFrame = None
       dataCentroids match {
         case Some(cs) => writeClustered(rows, cs, dataDir, "append")
         case None => rows.write.mode("append").parquet(dataDir)
@@ -1211,7 +1234,7 @@ final class Collection(
     * a rebuild. No-op on an empty collection. */
   def buildIndex(nlist: Int = 16, iters: Int = 3): Unit =
     ivf.rebuild(nlist) {
-      commitGeneration(df, rowsCount, Collection.Untouched, fitted =
+      commitGeneration(stored, rowsCount, Collection.Untouched, fitted =
         Some(graft.operators.IvfIndex.kmeansFit(vectors, nlist, iters)))
       copyCentroids(new Path(indexDir, "centroids"))
       writeLists(stored, "overwrite")
@@ -1515,8 +1538,8 @@ final class Collection(
     * are unchanged. */
   def compact(targetFiles: Int = 4): Unit = if (hasData)
     commitGeneration(
-      if (fs.exists(centroidsDir)) df
-      else df.repartitionByRange(targetFiles, col(Schema.IdCol)),
+      if (fs.exists(centroidsDir)) stored
+      else stored.repartitionByRange(targetFiles, col(Schema.IdCol)),
       rowsCount, Collection.Untouched)
 
   // ---- the write path ---------------------------------------------------
@@ -1530,9 +1553,11 @@ final class Collection(
     * [[Txn.commit]] (parquet is immutable; every lakehouse
     * DELETE/UPDATE is this under the hood) — and of [[buildIndex]]. It
     * writes `next`'s canonical columns as a new generation, plus
-    * `_m_meta_v` parsed from them and the `_meta_variant` marker, so
-    * every commit leaves a VARIANT-form generation. The layout carries
-    * forward: flat stays flat; a clustered generation's
+    * `_m_meta_v` and the `_meta_variant` marker, so every commit leaves
+    * a VARIANT-form generation: `next`'s own `_m_meta_v` when it has one
+    * (rows read from a VARIANT-form [[stored]], whose metadata changes
+    * went through [[setMeta]]), else parsed from `_m_meta`. The layout
+    * carries forward: flat stays flat; a clustered generation's
     * centroids are copied into the new one and every row's `cid` is
     * computed against them, so no caller handles `cid`. [[buildIndex]]
     * passes `fitted` centroids instead, which cluster a flat generation
@@ -1561,7 +1586,10 @@ final class Collection(
     val live = new Path(dataDir)
     val tmp = clearedTmp(live)
     val tmpCentroids = new Path(tmp, centroidsDir.getName)
-    val rowsV = withMetaV(publicCols(next))
+    val rowsV =
+      if (next.columns.contains(MetaVCol))
+        next.select(publicCols(next).columns.map(col) :+ col(MetaVCol): _*)
+      else withMetaV(publicCols(next))
     fitted.orElse(dataCentroids) match {
       case Some(cs) =>
         writeClustered(rowsV, cs, tmp.toString, "errorifexists")
@@ -1594,6 +1622,7 @@ final class Collection(
           col("doc_b").as(Schema.DocCol), col("meta_b").as(Schema.MetaCol)))
     }
     swapDir(tmp, live)
+    storedFrame = None
     lastId = watermark
     rowsCount = rows
     writeSidecar()
@@ -1943,9 +1972,9 @@ final class Collection(
     }
     val rows = stored
     val updated = rows.filter(pred).count()
-    if (updated > 0L) commitGeneration(rows.withColumn(Schema.MetaCol,
-      when(pred, mergeUdf(col(Schema.MetaCol), patch))
-        .otherwise(col(Schema.MetaCol))), rowsCount, Collection.Untouched)
+    if (updated > 0L) commitGeneration(
+      setMeta(rows, pred, mergeUdf(col(Schema.MetaCol), patch)),
+      rowsCount, Collection.Untouched)
     updated
   }
 
@@ -2183,7 +2212,7 @@ final class Collection(
     * matches. Copy-on-write rewrite like [[delete]]. */
   def findOneAndDelete(filterJson: String): Option[(Long, String)] =
     firstMatch(filterJson).map { hit =>
-      commitGeneration(df.filter(col(Schema.IdCol) =!= hit._1),
+      commitGeneration(stored.filter(col(Schema.IdCol) =!= hit._1),
         rowsCount - 1, Collection.Removed(
           spark.range(1).select(lit(hit._1).as(Schema.IdCol))))
       hit
@@ -2229,9 +2258,9 @@ final class Collection(
       validatedUpdateUdf(updateJson, arrayFiltersJson, queryFilterJson)
     val rows = stored
     val updated = rows.filter(pred).count()
-    if (updated > 0L) commitGeneration(rows.withColumn(Schema.MetaCol,
-      when(pred, mergeUdf(col(Schema.MetaCol)))
-        .otherwise(col(Schema.MetaCol))), rowsCount, Collection.Untouched)
+    if (updated > 0L) commitGeneration(
+      setMeta(rows, pred, mergeUdf(col(Schema.MetaCol))),
+      rowsCount, Collection.Untouched)
     updated
   }
 

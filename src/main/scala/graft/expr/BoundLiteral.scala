@@ -5,22 +5,20 @@ import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{LeafExpression, Literal}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodeGenerator, CodegenContext, ExprCode, FalseLiteral}
 import org.apache.spark.sql.catalyst.expressions.codegen.Block._
-import org.apache.spark.sql.types.{DataType, DoubleType, LongType, StringType}
-import org.apache.spark.unsafe.types.UTF8String
+import org.apache.spark.sql.types.{DataType, DoubleType, LongType}
 
-/** A long, double or string constant that generated code reads from the
+/** A long or double constant that generated code reads from the
   * references array instead of inlining. Spark writes a numeric
-  * `Literal` into the Java source, and `rlike` a literal pattern, so a
-  * filter compiled into whole-stage codegen is new source — a Janino
-  * compile and cold JIT code — for every distinct literal; read through
-  * a reference, the source is the same for every value and Spark's
-  * codegen cache compiles it once (`rlike` then compiles its pattern
-  * once per task). Not foldable: constant folding would turn it back
-  * into an inlined `Literal`. */
+  * `Literal` into the Java source, so a filter compiled into whole-stage
+  * codegen is new source — a Janino compile and cold JIT code — for
+  * every distinct number; read through a reference, the source is the
+  * same for every value and Spark's codegen cache compiles it once. Not
+  * foldable: constant folding would turn it back into an inlined
+  * `Literal`. */
 final case class BoundLiteral(value: Any, dataType: DataType)
     extends LeafExpression {
-  require(Seq(LongType, DoubleType, StringType).contains(dataType),
-    s"BoundLiteral holds a long, a double or a string, not $dataType")
+  require(dataType == LongType || dataType == DoubleType,
+    s"BoundLiteral holds a long or a double, not $dataType")
 
   override def foldable: Boolean = false
   override def nullable: Boolean = false
@@ -31,8 +29,7 @@ final case class BoundLiteral(value: Any, dataType: DataType)
     val jt = CodeGenerator.javaType(dataType)
     val ref = ctx.addReferenceObj("bound", value,
       CodeGenerator.boxedType(dataType))
-    val read = if (dataType == StringType) ref else s"$ref.${jt}Value()"
-    ev.copy(code = code"final $jt ${ev.value} = $read;",
+    ev.copy(code = code"final $jt ${ev.value} = $ref.${jt}Value();",
       isNull = FalseLiteral)
   }
 
@@ -41,14 +38,12 @@ final case class BoundLiteral(value: Any, dataType: DataType)
 }
 
 object BoundLiteral {
-  /** `v` (a Long, Double or String) as a Column read through a
-    * reference. */
+  /** `v` (a Long or a Double) as a Column read through a reference. */
   def column(v: Any): Column =
     org.apache.spark.sql.graft.ColumnBridge.column(v match {
       case l: Long => BoundLiteral(l, LongType)
       case d: Double => BoundLiteral(d, DoubleType)
-      case s: String => BoundLiteral(UTF8String.fromString(s), StringType)
       case other => throw new IllegalArgumentException(
-        s"BoundLiteral holds a long, a double or a string, not $other")
+        s"BoundLiteral holds a long or a double, not $other")
     })
 }

@@ -123,11 +123,13 @@ object MqlFilter {
         (FieldResolver, JsonResolver) =
       throw new IllegalStateException(
         s"rebindJson on a resolver with no JSON root: $this")
-    /** A numeric literal (Long or Double) to compare a view against, or
-      * a `$regex` pattern (String): inlined by default, which keeps
-      * typed-column comparisons pushable to the scan. A resolver whose
-      * filters compile into whole-stage codegen reads it through a
-      * reference instead, so one compiled class serves every value. */
+    /** A numeric literal (Long or Double) to compare a view against:
+      * inlined by default, which keeps typed-column comparisons pushable
+      * to the scan. A resolver whose filters compile into whole-stage
+      * codegen reads it through a reference instead, so one compiled
+      * class serves every value. (A `$regex` pattern stays a literal:
+      * `rlike` compiles a constant pattern once, any other once per
+      * row.) */
     private[filter] def bindLit(v: Any): Column = lit(v)
     /** Dispatch a view by its recorded kind — the stage prelude's
       * materialization pass (r16). */
@@ -1471,7 +1473,7 @@ object MqlFilter {
     require(known.length == options.length,
       s"unsupported $$options flags: $options")
     val pat = if (known.isEmpty) pattern else s"(?$known)$pattern"
-    tv(rlike(r.str(field), r.bindLit(pat)))
+    tv(r.str(field).rlike(pat))
   }
 
   /** Bracketed comparison of ONE variant array element against a JSON

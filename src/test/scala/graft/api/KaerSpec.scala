@@ -1822,4 +1822,41 @@ class KaerSpec extends SparkTestBase {
     }
     assert(ids(c.query("odd doc", 10, """{"a": 1}""")) == Seq(5L))
   }
+
+  test("stored metadata VARIANT: every commit keeps _m_meta_v equal to the " +
+      "parse of _m_meta — carried for unchanged rows, re-parsed for the " +
+      "rows an update rewrites — and a handle sees its own writes") {
+    import org.apache.spark.sql.functions.{col, to_json, try_parse_json}
+    val c = newSession(tmpDir("kaer-metav-carry")).createCollection("c")
+    c.insert(Data().withDocuments((0 until 30).map(i => s"carry doc $i"))
+      .withMetadatas((0 until 30).map(i => Map[String, Any]("g" -> i,
+        "tag" -> (if (i % 2 == 0) "a" else "b")))))
+    def stale() = spark.read.schema(graft.core.Schema.collectionSchema(64)
+        .add("_m_meta_v", org.apache.spark.sql.types.VariantType))
+      .parquet(s"${c.dir}/data")
+      .filter(!(to_json(col("_m_meta_v")) <=>
+        to_json(try_parse_json(col("_m_meta")))))
+      .count()
+    val f = """{"g": {"$gte": 100}}"""
+    def steps: Seq[(String, () => Unit)] = Seq(
+      "updateDoc" -> (() => c.updateDoc("""{"tag": "a"}""",
+        """{"$inc": {"g": 100}}""")),
+      "pipeline update" -> (() => c.updateDoc("""{"g": {"$lt": 5}}""",
+        """[{"$set": {"g": {"$add": ["$g", 200]}}}]""")),
+      "findOneAndUpdate" -> (() => c.findOneAndUpdate("""{"tag": "b"}""",
+        """{"$set": {"g": 150}}""")),
+      "delete" -> (() => c.delete("""{"g": {"$gte": 200}}""")),
+      "compact" -> (() => c.compact()),
+      "buildIndex" -> (() => c.buildIndex(nlist = 3, iters = 1)),
+      "update after index" -> (() => c.update("""{"g": 150}""",
+        Map("g" -> 1))))
+    for ((name, step) <- steps) {
+      step()
+      assert(stale() == 0L, s"after $name")
+      val parsed = c.df.filter(graft.filter.MqlFilter.toColumn(f,
+        graft.filter.MqlFilter.JsonResolver(col("_m_meta")))).count()
+      assert(c.count(f) == parsed, s"after $name")
+    }
+    assert(c.count(f) == 15L && c.count() == 29L)
+  }
 }

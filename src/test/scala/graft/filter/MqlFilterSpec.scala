@@ -776,4 +776,39 @@ class MqlFilterSpec extends SparkTestBase with MetaForms {
         selectIds(words, f, coll)
     }
   }
+
+  test("stored VARIANT: numbers reach generated code by reference, so a " +
+      "range, $gt or $mod with new values compiles no new class; a " +
+      "$regex pattern stays a constant, which rlike compiles once") {
+    import org.apache.spark.metrics.source.CodegenMetrics
+    import org.apache.spark.sql.catalyst.expressions.RLike
+    val nums = (1L to 40L).map(i =>
+      (i, s"""{"n": $i, "x": ${i * 1.5}, "s": "${if (i % 3 == 0) "ab" else "ba"}"}"""))
+      .toDF("id", "meta")
+    val stored = storedForm(nums)
+    def filtered(f: String) = stored.filter(
+      MqlFilter.toColumn(f, MqlFilter.VariantResolver(col("meta_v"))))
+    def viaStored(f: String) =
+      filtered(f).select("id").collect().map(_.getLong(0)).toSeq.sorted
+    val templates = Seq[Int => String](
+      i => s"""{"n": {"$$gte": $i, "$$lt": ${i + 7}}}""",
+      i => s"""{"x": {"$$gt": ${i + 0.25}}}""",
+      i => s"""{"n": {"$$mod": [${i + 2}, 1]}}""")
+    for (t <- templates) {
+      viaStored(t(1)) // the template's first value compiles its class
+      val compiles = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+      val got = (2 to 6).map(i => viaStored(t(i)))
+      assert(CodegenMetrics.METRIC_COMPILATION_TIME.getCount == compiles,
+        s"${t(2)}: a new value compiled a new class")
+      assert(got == (2 to 6).map(i => selectIds(nums, t(i))))
+      assert(got.distinct.size > 1, got)
+    }
+    val re = filtered("""{"s": {"$regex": "^a"}}""")
+    assert(re.queryExecution.optimizedPlan.flatMap(_.expressions).exists(_.exists {
+      case RLike(_, pattern) => pattern.foldable
+      case _ => false
+    }), re.queryExecution.optimizedPlan)
+    assert(viaStored("""{"s": {"$regex": "^a"}}""") ==
+      (3L to 39L by 3))
+  }
 }
