@@ -293,10 +293,10 @@ final class KaerSession(
   * `commitGeneration`: it writes the next generation, captures its
   * change events, swaps it in with `swapDir`, updates rows and
   * watermark, writes the sidecar once, then records the change in the
-  * side indexes (tombstones for removed ids, a `stale` poison for an
-  * in-place rewrite). `swapDir` also swaps the compacted change log, and
-  * one reopen repair restores either directory from its `_old` copy.
-  * Both side indexes keep coverage through one maintenance ladder,
+  * side indexes' sidecars (removed ids add to a `tombstones` count, an
+  * in-place rewrite sets `stale`). `swapDir` also swaps the compacted
+  * change log with its floor, and one reopen repair restores either
+  * directory from its `_old` copy. Both side indexes keep coverage through one maintenance ladder,
   * `SideIndex` (no-op → O(tail) append → rebuild).
   *
   * Layout: `data` is flat until the first IVF build. From then on every
@@ -770,9 +770,10 @@ object Collection {
   private[api] case object Untouched extends Change
   /** Document text and embedding rewritten under a live id. */
   private[api] case object Rewritten extends Change
-  /** These ids are gone. The frame may read the generation being
-    * replaced: the commit step materializes it before the swap. */
-  private[api] final case class Removed(ids: DataFrame) extends Change
+  /** These `n` ids are gone; the commit step reads the frame only when
+    * an index stops short of the watermark. */
+  private[api] final case class Removed(ids: DataFrame, n: Long)
+    extends Change
 }
 
 final class Collection(
@@ -1089,9 +1090,9 @@ final class Collection(
   // and storage trust check.
 
   /** One persisted side index under `root`, with its `IndexMeta`
-    * sidecar. `trusted(nlist, rows)` is its storage trust check,
-    * `appendTail(from)` adds the ids above `from` (O(tail)), and `idCol`
-    * names the id column of its tombstone table. The rest is shared:
+    * sidecar. `trusted(nlist, rows)` is its storage trust check and
+    * `appendTail(from)` adds the ids above `from` (O(tail)). The rest is
+    * shared:
     *
     * [[ensure]] takes the cheapest step that restores coverage —
     * reference parity with loadIndexIfExists + updateIndexFromLastId
@@ -1102,23 +1103,22 @@ final class Collection(
     *     trust check → no-op;
     *  2. a pure id-tail gap: live rows grew by exactly the id range
     *     above the covered watermark. Ids are dense by construction and
-    *     deletes of covered ids are counted by the tombstones, so a
-    *     delete of a NEW id breaks the equality. Both counters are
-    *     arithmetic: zero scans → append ONLY the tail;
+    *     deletes of covered ids are counted by `tombstones`, so a delete
+    *     of a NEW id breaks the equality. Both counters are arithmetic:
+    *     zero scans → append ONLY the tail;
     *  3. no sidecar, but storage trusted for the current rows (a
     *     pre-sidecar layout) → adopt it;
     *  4. anything else — another nlist, a `stale` sidecar, a NEW-id
     *     delete, missing or corrupt storage → rebuild (O(collection)).
     *
-    * Deletes ride the tombstone table ([[entomb]]): storage keeps the
-    * dead rows, the sidecar counts them out of the live coverage, and
-    * both query paths read the live collection (the text path joins
-    * back to it, the IVF path scans it), so dead ids never surface. A
-    * rebuild covers exactly the live rows and drops the tombstones. An
-    * in-place content rewrite [[poison]]s the sidecar. */
-  private final class SideIndex(root: String, idCol: String,
+    * A delete is a count ([[countDeleted]]): storage keeps the dead
+    * entries, the sidecar's `tombstones` counts them out of the live
+    * coverage, and both query paths read the live collection (the text
+    * path joins back to it, the IVF path scans it), so dead ids never
+    * surface. A rebuild covers exactly the live rows. An in-place
+    * content rewrite [[poison]]s the sidecar. */
+  private final class SideIndex(root: String,
       trusted: (Int, Long) => Boolean, appendTail: Long => Unit) {
-    private val tombDir = s"$root/tombstones"
     // how many times the ladder chose each path since this handle
     // opened — the spec's proof that inserts take the O(tail) append
     var rebuilds = 0L
@@ -1126,20 +1126,17 @@ final class Collection(
 
     def sidecar: Option[IndexMeta] = Meta.readIndex(spark, root)
 
-    private def storageTrusted(m: IndexMeta): Boolean =
-      trusted(m.nlist, m.indexedRows) && (m.tombstones == 0L ||
-        graft.core.Trust.parquetDir(spark, tombDir, m.tombstones))
-
     /** The ladder; `rebuildAll` is the index's full [[rebuild]]. */
     def ensure(nlist: Int)(rebuildAll: => Unit): Unit = sidecar match {
       case Some(m) if !m.stale && m.nlist == nlist &&
           m.indexedLastId == lastId &&
-          m.indexedRows - m.tombstones == rowsCount && storageTrusted(m) =>
+          m.indexedRows - m.tombstones == rowsCount &&
+          trusted(m.nlist, m.indexedRows) =>
         ()
       case Some(m) if !m.stale && m.nlist == nlist &&
           m.indexedLastId < lastId &&
           rowsCount - (m.indexedRows - m.tombstones) ==
-            lastId - m.indexedLastId && storageTrusted(m) =>
+            lastId - m.indexedLastId && trusted(m.nlist, m.indexedRows) =>
         appendTail(m.indexedLastId)
         Meta.writeIndex(spark, root, m.copy(indexedLastId = lastId,
           indexedRows = m.indexedRows + (lastId - m.indexedLastId)))
@@ -1158,25 +1155,21 @@ final class Collection(
         Meta.writeIndex(spark, root, sidecar
           .getOrElse(IndexMeta(lastId, rowsCount, nlist)).copy(stale = true))
         build
-        val tp = new Path(tombDir)
-        if (fs.exists(tp)) fs.delete(tp, true)
+        // the dead-id table of stores written before deletes were a count
+        val leftover = new Path(root, "tombstones")
+        if (fs.exists(leftover)) fs.delete(leftover, true)
         Meta.writeIndex(spark, root, IndexMeta(lastId, rowsCount, nlist))
         rebuilds += 1
       }
 
-    /** Record the removed ids the storage covers (id ≤ indexedLastId). */
-    def entomb(dead: DataFrame): Unit = sidecar.foreach { m =>
-      val covered = dead.filter(col(Schema.IdCol) <= m.indexedLastId)
-        .select(col(Schema.IdCol).as(idCol))
-      val n = covered.count()
-      if (n > 0) {
-        covered.coalesce(1).write.mode("append").parquet(tombDir)
-        Meta.writeIndex(spark, root, m.copy(tombstones = m.tombstones + n))
-      }
-    }
+    /** Count `n` deleted ids that the storage behind sidecar `m` covers
+      * (id ≤ its watermark) out of the live coverage. */
+    def countDeleted(m: IndexMeta, n: Long): Unit =
+      if (n > 0) Meta.writeIndex(spark, root,
+        m.copy(tombstones = m.tombstones + n))
 
-    /** Content changed under live ids, which neither counters nor
-      * tombstones can express: the next ensure must rebuild. */
+    /** Content changed under live ids, which no counter can express:
+      * the next ensure must rebuild. */
     def poison(): Unit = sidecar.foreach(m =>
       Meta.writeIndex(spark, root, m.copy(stale = true)))
   }
@@ -1185,11 +1178,11 @@ final class Collection(
   private def textIndexDir: String = new Path(dir, "textindex").toString
   // the IVF storage is trusted only over a generation clustered by the
   // index's own centroids; its tail append copies (id, cid) off the data
-  private val ivf = new SideIndex(indexDir, "vec_id",
+  private val ivf = new SideIndex(indexDir,
     (nlist, rows) => clusteredByIndex &&
       graft.operators.IvfIndex.trusted(spark, indexDir, nlist, rows),
     from => writeLists(stored.filter(col(Schema.IdCol) > from), "append"))
-  private val text = new SideIndex(textIndexDir, "doc_id",
+  private val text = new SideIndex(textIndexDir,
     (_, docs) => graft.operators.TextIndex.trusted(spark, textIndexDir, docs),
     from => graft.operators.TextIndex.appendTail(spark,
       docsFrame.filter(col("doc_id") > from), textIndexDir))
@@ -1270,11 +1263,11 @@ final class Collection(
     * distinct matched terms — bit-identical to the scan path's), the
     * MQL pre-filter composes on the live collection, and the result is
     * best-match-first ($meta textScore descending — Mongo contract),
-    * ties by id, top-k. Join-back to the live data drops tombstoned
-    * docs exactly like the IVF probe path. Loud without a built index
+    * ties by id, top-k. Join-back to the live data drops deleted docs,
+    * whose postings stay until a rebuild. Loud without a built index
     * (Mongo: $text requires a text index); with one, coverage is
-    * re-ensured first — an id-tail append, never a rebuild, on the
-    * insert-only path. */
+    * re-ensured first — a no-op after deletes, an id-tail append after
+    * inserts, never a rebuild on either path. */
   def textFind(search: String, k: Int = 10,
       filterJson: String = "{}"): DataFrame = {
     require(text.sidecar.isDefined,
@@ -1454,8 +1447,8 @@ final class Collection(
       }
     }
 
-  /** Write the floor with [[Meta]]'s temp + rename, never in place: a
-    * torn floor must not read as a lower one. */
+  /** Write the floor into `logDir`, a replacement log that [[swapDir]]
+    * swaps in whole: the live floor is never torn, absent or lowered. */
   private def writeChangeFloor(logDir: Path, v: Long): Unit =
     Meta.writeAtomic(spark, logDir.toString, "_floor",
       v.toString.getBytes(java.nio.charset.StandardCharsets.UTF_8))
@@ -1465,25 +1458,17 @@ final class Collection(
     * the new floor are written to a fresh directory that [[swapDir]]
     * swaps in, as [[commitGeneration]] does for the data
     * (underscore-prefixed floor marker rides the directory, invisible
-    * to the parquet scans). Floors never move backwards. Scale: the
-    * rewrite reads only the RETAINED tail — at a production cadence
-    * (compact up to the slowest consumer's checkpoint) that is the
-    * small live window, and the trimmed history is one directory
-    * delete. */
+    * to the parquet scans). Floors never move backwards, and an empty
+    * log swaps like any other. Scale: the rewrite reads only the
+    * RETAINED tail — at a production cadence (compact up to the slowest
+    * consumer's checkpoint) that is the small live window, and the
+    * trimmed history is one directory delete. */
   def compactChangeLog(retainAfter: Long): Unit = {
     require(captureChanges,
       s"change stream not enabled for collection '$name' — nothing " +
         "to compact")
     val newFloor = math.max(retainAfter, readChangeFloor())
     val live = new Path(changesDir)
-    // Empty log (capture enabled, nothing written yet — the dir holds
-    // at most the _floor marker): nothing to rewrite; just advance the
-    // floor. Guards the parquet read AND skips a no-op swap.
-    val hasEvents = fs.exists(live) && fs.listStatus(live).exists { st =>
-      val n = st.getPath.getName
-      !n.startsWith("_") && !n.startsWith(".")
-    }
-    if (!hasEvents) { writeChangeFloor(live, newFloor); return }
     val tmp = clearedTmp(live)
     spark.read.schema(changeSchema).parquet(changesDir)
       .filter(col("op_time") > retainAfter)
@@ -1569,19 +1554,25 @@ final class Collection(
     *     first when capture is on;
     *  2. sets the row count to `rows` and the watermark to `watermark`;
     *  3. writes the collection sidecar;
-    *  4. records `change` in each side index whose sidecar exists:
-    *     removed ids become tombstones, an in-place rewrite poisons it.
-    * Removed ids read the generation being replaced, so they are
-    * materialized before the swap — and only when an index will record
-    * them. */
+    *  4. records `change` in each side index whose sidecar exists: the
+    *     removed ids it covers join its `tombstones` count, an in-place
+    *     rewrite poisons it.
+    * When every index covers the pre-commit watermark, each counts the
+    * caller's `n`, with no job; else one aggregate counts the covered
+    * ids for all of them, before the swap (the ids may read the
+    * generation being replaced). */
   private def commitGeneration(next: DataFrame, rows: Long,
       change: Collection.Change, watermark: Long = lastId,
       fitted: Option[Seq[(Long, Array[Float])]] = None): Unit = {
-    val indexed = Seq(ivf, text).filter(_.sidecar.isDefined)
-    val dead = change match {
-      case Collection.Removed(ids) if indexed.nonEmpty =>
-        Some(ids.localCheckpoint())
-      case _ => None
+    val indexed = Seq(ivf, text).flatMap(ix => ix.sidecar.map(ix -> _))
+    val covered: Seq[Long] = change match {
+      case Collection.Removed(ids, _)
+          if indexed.exists(_._2.indexedLastId < lastId) =>
+        val r = ids.select(indexed.map(i =>
+          count_if(col(Schema.IdCol) <= i._2.indexedLastId)): _*).head()
+        indexed.indices.map(r.getLong)
+      case Collection.Removed(_, n) => indexed.map(_ => n)
+      case _ => indexed.map(_ => 0L)
     }
     val live = new Path(dataDir)
     val tmp = clearedTmp(live)
@@ -1626,9 +1617,9 @@ final class Collection(
     lastId = watermark
     rowsCount = rows
     writeSidecar()
-    indexed.foreach { ix =>
+    indexed.zip(covered).foreach { case ((ix, m), n) =>
       if (change == Collection.Rewritten) ix.poison()
-      dead.foreach(ix.entomb)
+      ix.countDeleted(m, n)
     }
   }
 
@@ -1719,8 +1710,8 @@ final class Collection(
     val keep = rows.filter(!pred)
     val kept = keep.count()
     val removed = rowsCount - kept
-    if (removed > 0L) commitGeneration(keep, kept,
-      Collection.Removed(rows.filter(pred).select(col(Schema.IdCol))))
+    if (removed > 0L) commitGeneration(keep, kept, Collection.Removed(
+      rows.filter(pred).select(col(Schema.IdCol)), removed))
     removed
   }
 
@@ -1743,9 +1734,9 @@ final class Collection(
     * rowcount, so both index families' coverage arithmetic still passes
     * while their entries describe the OLD content (stale postings would
     * keep matching the old text; the IVF entry pins the id to the old
-    * embedding's list). Tombstone+reinsert can't express this —
-    * tombstones drop dead ids at join-back, and this id stays live — so
-    * the commit poisons the sidecars and the next ensure rebuilds: the
+    * embedding's list). A delete count plus a reinsert can't express
+    * this — the id stays live, so its old entries would keep serving —
+    * so the commit poisons the sidecars and the next ensure rebuilds: the
     * same cost class as this O(n) copy-on-write, paid once, lazily, by
     * the next index consumer. */
   private def replaceId(id: Long, document: String,
@@ -2094,6 +2085,7 @@ final class Collection(
     private var nextId = lastId
     private var insertedN = 0L
     private var deletedN = 0L
+    private var deletedLiveN = 0L // of those, ids the live generation holds
     private var updatedAny = false
     private var done: Option[String] = None
     private def live(): Unit = require(done.isEmpty,
@@ -2152,10 +2144,13 @@ final class Collection(
     def deleteMany(filterJson: String): Long = {
       live()
       val pred = matching(frame, filterJson)
-      val removed = frame.filter(pred).count()
+      val hit = frame.filter(pred).select(count_if(lit(true)),
+        count_if(col(Schema.IdCol) <= startLastId)).head()
+      val removed = hit.getLong(0)
       if (removed > 0L) {
         stage(frame.filter(!pred))
         deletedN += removed
+        deletedLiveN += hit.getLong(1)
       }
       removed
     }
@@ -2165,8 +2160,9 @@ final class Collection(
       * begin; no-op commit when nothing was staged. Deleted ids are
       * the live ids missing from the staged frame — the conflict check
       * guarantees the live generation still holds exactly the ids the
-      * transaction began with — and become index tombstones, so the
-      * next ensure stays O(delta). */
+      * transaction began with. `deleteMany` counted them as it staged,
+      * and each index adds that count to its sidecar, so the next
+      * ensure stays O(delta). */
     def commit(): Unit = {
       live()
       require(lastId == startLastId && rowsCount == startRows,
@@ -2174,10 +2170,10 @@ final class Collection(
           "transaction began (watermark moved) — abort and retry")
       if (insertedN > 0 || deletedN > 0 || updatedAny)
         commitGeneration(frame, startRows + insertedN - deletedN,
-          if (deletedN == 0) Collection.Untouched
+          if (deletedLiveN == 0) Collection.Untouched
           else Collection.Removed(df.select(col(Schema.IdCol))
             .join(frame.select(col(Schema.IdCol)), Seq(Schema.IdCol),
-              "left_anti")),
+              "left_anti"), deletedLiveN),
           watermark = nextId)
       done = Some("committed")
     }
@@ -2214,7 +2210,7 @@ final class Collection(
     firstMatch(filterJson).map { hit =>
       commitGeneration(stored.filter(col(Schema.IdCol) =!= hit._1),
         rowsCount - 1, Collection.Removed(
-          spark.range(1).select(lit(hit._1).as(Schema.IdCol))))
+          spark.range(1).select(lit(hit._1).as(Schema.IdCol)), 1L))
       hit
     }
 

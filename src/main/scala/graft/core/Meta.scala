@@ -30,11 +30,11 @@ final case class CollectionMeta(
   * instead of rebuilding, as the reference replays the tail into its
   * HNSW.
   *
-  * `indexedRows` counts rows IN STORAGE, tombstoned ones included (the
+  * `indexedRows` counts rows IN STORAGE, deleted ones included (the
   * storage trust check compares against physical rows); live coverage
-  * is `indexedRows - tombstones`. `tombstones` counts deleted ids
-  * recorded in the index's tombstone table, so deletes stay O(delta)
-  * instead of forcing a rebuild. `stale` is the in-place-rewrite poison
+  * is `indexedRows - tombstones`. `tombstones` is the number of covered
+  * ids deleted since the last build — a count only, no id list, so a
+  * delete is one sidecar write. `stale` is the in-place-rewrite poison
   * pill: replaceOne swaps document text + embedding under an unchanged
   * id/watermark/rowcount, so every arithmetic coverage check still
   * passes while the entries describe the OLD content — a stale sidecar

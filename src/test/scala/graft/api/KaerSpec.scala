@@ -13,6 +13,13 @@ class KaerSpec extends SparkTestBase {
   private def newSession(root: String) =
     new KaerSession(spark, root, HashingEmbedder(64))
 
+  /** The delete count in the sidecar of the side index at `indexDir`,
+    * which keeps no table of dead ids beside it. */
+  private def deletedCount(indexDir: String): Long = {
+    assert(!new java.io.File(s"$indexDir/tombstones").exists())
+    Meta.readIndex(spark, indexDir).get.tombstones
+  }
+
   test("main.go scenario: filter ∧ top-1 returns the attr1==1 doc") {
     val r = graft.operators.KaerQuery
       .mainGoScenario(spark, tmpDir("kaer-maingo")).collect()
@@ -476,7 +483,7 @@ class KaerSpec extends SparkTestBase {
     assert(c.indexRebuilds == 1 && c.indexAppends == 0,
       s"delete forced index work: rebuilds=${c.indexRebuilds} " +
         s"appends=${c.indexAppends}")
-    assert(spark.read.parquet(s"$root/v/index/tombstones").count() == 5)
+    assert(deletedCount(s"$root/v/index") == 5)
     // lists still physically hold the dead rows (30); live coverage
     // arithmetic = 30 - 5 = 25 = collection rows
     assert(spark.read.parquet(s"$root/v/index/lists").count() == 30)
@@ -497,12 +504,12 @@ class KaerSpec extends SparkTestBase {
     c.ensureIndex(nlist = 4, iters = 2)
     assert(c.indexRebuilds == 1 && c.indexAppends == 1,
       s"rebuilds=${c.indexRebuilds} appends=${c.indexAppends}")
-    assert(spark.read.parquet(s"$root/v/index/tombstones").count() == 6)
+    assert(deletedCount(s"$root/v/index") == 6)
     // single-id delete paths record tombstones too
     assert(c.findOneAndDelete("""{"g": 25}""").isDefined)
     c.ensureIndex(nlist = 4, iters = 2)
     assert(c.indexRebuilds == 1 && c.indexAppends == 1)
-    assert(spark.read.parquet(s"$root/v/index/tombstones").count() == 7)
+    assert(deletedCount(s"$root/v/index") == 7)
     // explicit rebuild compacts: tombstones gone, lists = live rows
     c.buildIndex(nlist = 4, iters = 2)
     assert(!new org.apache.hadoop.fs.Path(s"$root/v/index/tombstones")
@@ -1368,8 +1375,7 @@ class KaerSpec extends SparkTestBase {
     val r3 = c.textFind("beta").collect()
     assert(r3.map(_.getLong(0)).toSeq == Seq(1L, 5L), r3.mkString("|"))
     assert(c.textIndexRebuilds == 1 && c.textIndexAppends == 1)
-    assert(spark.read.parquet(s"$root/c/textindex/tombstones")
-      .count() == 1)
+    assert(deletedCount(s"$root/c/textindex") == 1)
     // MQL pre-filter composes on the live collection
     val rf = c.textFind("beta alpha", 10, """{"g": {"$gte": 4}}""")
       .collect()
@@ -1531,10 +1537,8 @@ class KaerSpec extends SparkTestBase {
     c.ensureTextIndex()
     assert(counters == ((1L, 0L, 1L, 0L)),
       s"a transactional delete forced index work: $counters")
-    def tombs(d: String) =
-      spark.read.parquet(s"$root/c/$d/tombstones").collect()
-        .map(_.getLong(0)).toSet
-    assert(tombs("index") == dead && tombs("textindex") == dead)
+    assert(deletedCount(s"$root/c/index") == dead.size &&
+      deletedCount(s"$root/c/textindex") == dead.size)
     def ids(q: org.apache.spark.sql.DataFrame) =
       q.select("_m_id").collect().map(_.getLong(0)).toSeq
     val approx = ids(c.queryApprox("txn doc 7 topic 1", 100, nprobe = 2))
@@ -1605,7 +1609,8 @@ class KaerSpec extends SparkTestBase {
     only("CollectionMeta(",
       Set("createCollection", "getCollection", "writeSidecar"))
     only("writeSidecar()", Set("writeSidecar", "commitGeneration", "insertDF"))
-    only("Meta.writeIndex", Set("ensure", "rebuild", "entomb", "poison"))
+    only("Meta.writeIndex", Set("ensure", "rebuild", "countDeleted",
+      "poison"))
     val writers = sites("Meta.writeIndex")
     assert(writers.forall(_._2.contains("SideIndex")), writers)
     assert(!writers.exists(_._2.exists(n => n == "Txn" ||
@@ -1614,6 +1619,169 @@ class KaerSpec extends SparkTestBase {
         "class SideIndex("))
       assert(lines.count(_.contains(d)) == 1, s"$d defined more than once")
     assert(!lines.exists(_.contains("rewriteData")))
+    // a delete is a count in the index sidecar: no dead-id table is
+    // written or read, and only the rebuild names one, to remove a
+    // leftover
+    assert(!lines.exists(_.contains("entomb")))
+    val tombLiteral = "\"[^\"]*tombstones".r.unanchored
+    val tombSites = lines.indices.filter(i => !isComment(lines(i)) &&
+      tombLiteral.matches(lines(i)))
+    assert(tombSites.nonEmpty && tombSites.forall(enclosing(_).head ==
+      "rebuild"), tombSites.map(i => s"line ${i + 1}").mkString(", "))
+    // the change-log floor is written only into a cleared replacement
+    // log, never into the live one
+    val floorWrites = sites("writeChangeFloor(")
+      .filterNot(s => lines(s._1 - 1).contains("def writeChangeFloor("))
+    assert(floorWrites.nonEmpty)
+    for ((ln, encl) <- floorWrites) {
+      assert(lines(ln - 1).contains("writeChangeFloor(tmp,"),
+        s"line $ln: ${lines(ln - 1)}")
+      val start = lines.lastIndexWhere(_.contains(s"def ${encl.head}("),
+        ln - 1)
+      assert(start >= 0 && lines.slice(start, ln - 1)
+        .exists(_.contains("val tmp = clearedTmp(")),
+        s"line $ln: writeChangeFloor's tmp is not a clearedTmp")
+    }
+  }
+
+  test("change-log floor: compacting an emptied log keeps the floor " +
+      "monotone, and a reopened handle continues op_time above it") {
+    val root = tmpDir("kaer-floor-empty")
+    val c = newSession(root).createCollection("c")
+    c.insert(Data().withDocuments(Seq("a")).withMetadatas(Seq(Map("g" -> 1))))
+    c.enableChangeStream()
+    c.updateDoc("""{"g": 1}""", """{"$set": {"s": 1}}""") // op 1
+    c.updateDoc("""{"g": 1}""", """{"$set": {"s": 2}}""") // op 2
+    def floorIs(f: Long): Unit = {
+      val w = intercept[IllegalArgumentException] { c.watch(f - 1) }
+      assert(w.getMessage.contains(s"floor $f"), w.getMessage)
+      assert(c.watch(f).count() == 0)
+    }
+    c.compactChangeLog(5) // every event trimmed: the log is empty
+    floorIs(5)
+    c.compactChangeLog(3) // an empty log, a lower token: no step back
+    floorIs(5)
+    c.compactChangeLog(7) // an empty log, a higher token: moves up
+    floorIs(7)
+    val fs = new org.apache.hadoop.fs.Path(root).getFileSystem(
+      spark.sparkContext.hadoopConfiguration)
+    for (d <- Seq("changes_compact", "changes_old", "changes/_floor.tmp"))
+      assert(!fs.exists(new org.apache.hadoop.fs.Path(s"$root/c/$d")), d)
+    val r = newSession(root).getCollection("c")
+    r.updateDoc("""{"g": 1}""", """{"$set": {"s": 3}}""")
+    assert(r.watch(7).collect().map(_.getLong(0)).toSeq == Seq(8L))
+  }
+
+  test("index deletes are a count: with both indexes current, delete, " +
+      "findOneAndDelete and a transaction's deleteMany launch no more " +
+      "jobs than on an unindexed twin; textFind launches as many after a " +
+      "delete as before") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val root = tmpDir("kaer-del-jobs")
+    for (name <- Seq("ix", "twin")) {
+      val c = newSession(root).createCollection(name)
+      c.insert(Data()
+        .withDocuments((0 until 30).map(i => s"del doc $i topic ${i % 4}"))
+        .withMetadatas((0 until 30).map(i => Map[String, Any]("g" -> i))))
+      c.ensureIndex(nlist = 4, iters = 2)
+      c.ensureTextIndex()
+    }
+    // the twin keeps the clustered data layout, without side indexes
+    for (d <- Seq("index", "textindex"))
+      assert(hfs.delete(new org.apache.hadoop.fs.Path(s"$root/twin/$d"),
+        true))
+    val ix = newSession(root).getCollection("ix")
+    val twin = newSession(root).getCollection("twin")
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    def jobsOf(body: => Unit): Int = {
+      org.apache.spark.graft.ListenerBridge.drain(sc)
+      jobs.set(0)
+      body
+      org.apache.spark.graft.ListenerBridge.drain(sc)
+      jobs.get
+    }
+    def find(): Unit = assert(ix.textFind("topic", 100).collect().nonEmpty)
+    sc.addSparkListener(listener)
+    try {
+      find()
+      val findBefore = jobsOf(find())
+      val deletes = Seq(
+        "delete" -> ((c: Collection) =>
+          assert(c.delete("""{"g": {"$gte": 10, "$lt": 15}}""") == 5L)),
+        "findOneAndDelete" -> ((c: Collection) =>
+          assert(c.findOneAndDelete("""{"g": 20}""").isDefined)),
+        "deleteMany" -> ((c: Collection) => c.transaction(t =>
+          assert(t.deleteMany("""{"g": {"$lt": 3}}""") == 3L))))
+      for ((op, run) <- deletes) {
+        val (onIx, onTwin) = (jobsOf(run(ix)), jobsOf(run(twin)))
+        assert(onIx <= onTwin,
+          s"$op: $onIx jobs with both indexes, $onTwin without")
+      }
+      val findAfter = jobsOf(find())
+      assert(findAfter == findBefore,
+        s"textFind: $findBefore jobs before the deletes, $findAfter after")
+    } finally sc.removeSparkListener(listener)
+    assert(deletedCount(s"$root/ix/index") == 9 &&
+      deletedCount(s"$root/ix/textindex") == 9)
+    def counters = (ix.indexRebuilds, ix.indexAppends, ix.textIndexRebuilds,
+      ix.textIndexAppends)
+    assert(counters == ((0L, 0L, 0L, 0L)), counters)
+    // with both indexes behind the watermark, a delete counts the ids
+    // they cover, and the tail arithmetic still holds: both append
+    ix.insert(Data().withDocuments(Seq("del doc new a", "del doc new b"))
+      .withMetadatas(Seq(Map[String, Any]("g" -> 100),
+        Map[String, Any]("g" -> 101))))
+    assert(ix.delete("""{"g": 25}""") == 1L)
+    assert(deletedCount(s"$root/ix/index") == 10 &&
+      deletedCount(s"$root/ix/textindex") == 10)
+    ix.ensureIndex(nlist = 4, iters = 2)
+    ix.ensureTextIndex()
+    assert(counters == ((0L, 1L, 0L, 1L)), counters)
+  }
+
+  test("a store whose indexes keep a table of dead ids beside a sidecar " +
+      "count reopens with no index work and the same answers; a rebuild " +
+      "removes the table") {
+    import org.apache.spark.sql.functions.col
+    val root = tmpDir("kaer-tomb-compat")
+    val c = newSession(root).createCollection("c")
+    c.insert(Data()
+      .withDocuments((0 until 30).map(i => s"compat doc $i topic ${i % 4}"))
+      .withMetadatas((0 until 30).map(i => Map[String, Any]("g" -> i))))
+    c.ensureIndex(nlist = 4, iters = 2)
+    c.ensureTextIndex()
+    assert(c.delete("""{"g": {"$gte": 10, "$lt": 15}}""") == 5L)
+    def ids(q: org.apache.spark.sql.DataFrame) =
+      q.select("_m_id").collect().map(_.getLong(0)).toSeq
+    def answers(x: Collection) =
+      (ids(x.queryApprox("compat doc 12 topic 0", 100, nprobe = 2)),
+        ids(x.textFind("topic compat", 100)))
+    val before = answers(c)
+    // the earlier layout: the dead ids (doc i is id i + 1) as a parquet
+    // table under each index, counted in its sidecar
+    for ((d, idCol) <- Seq("index" -> "vec_id", "textindex" -> "doc_id")) {
+      assert(deletedCount(s"$root/c/$d") == 5)
+      spark.range(11, 16).select(col("id").as(idCol)).coalesce(1)
+        .write.parquet(s"$root/c/$d/tombstones")
+    }
+    val r = newSession(root).getCollection("c")
+    r.ensureIndex(nlist = 4, iters = 2)
+    r.ensureTextIndex()
+    def counters = (r.indexRebuilds, r.indexAppends, r.textIndexRebuilds,
+      r.textIndexAppends)
+    assert(counters == ((0L, 0L, 0L, 0L)), counters)
+    assert(answers(r) == before)
+    assert(counters == ((0L, 0L, 0L, 0L)), counters)
+    r.buildIndex(nlist = 4, iters = 2)
+    r.buildTextIndex()
+    for (d <- Seq("index", "textindex"))
+      assert(deletedCount(s"$root/c/$d") == 0)
+    assert(answers(r)._2 == before._2)
   }
 
   // ---- the stored metadata VARIANT ---------------------------------------
