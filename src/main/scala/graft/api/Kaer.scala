@@ -305,14 +305,13 @@ final class KaerSession(
   * commit step recomputes `cid`, an insert assigns it), so the ANN path
   * reads only the probed lists' documents. `cid` never appears in `df`.
   *
-  * Metadata is parsed once, at write: every generation the insert path
-  * starts and every commit writes carries `_m_meta_v = try_parse_json(
-  * _m_meta)` beside the unchanged `_m_meta` text (a VARIANT does not give
-  * the inserted text back), marked by `data/_meta_variant`. Every MQL
-  * filter of the collection path binds that column — no per-row parse,
-  * no lambda. A generation written before that form has no marker, is
-  * filtered through the per-row parse, and converts on its next commit.
-  * `_m_meta_v` never appears in `df`.
+  * Metadata is parsed once, at write: every generation carries
+  * `_m_meta_v = try_parse_json(_m_meta)` beside the unchanged `_m_meta`
+  * text (a VARIANT does not give the inserted text back), marked by
+  * `data/_meta_variant`. Every MQL filter of the collection path binds
+  * that column — no per-row parse, no lambda. A store written before
+  * that form is upgraded when opened ([[upgrade]]), so no read, write or
+  * transaction path knows another. `_m_meta_v` never appears in `df`.
   *
   * Recovery semantics (db/db.go:209-226): the id watermark is
   * max(sidecar.lastId, max(_m_id) in data) — the *intent* of the
@@ -792,6 +791,8 @@ final class Collection(
   // the directory swap like `_centroids`
   private val MetaVCol = "_m_meta_v"
   private val variantMarker = new Path(dataDir, "_meta_variant")
+  // how every MQL filter of the collection reads the metadata
+  private val metaFields = MqlFilter.VariantResolver(col(MetaVCol))
   private def fs: FileSystem =
     new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
   // recovered watermark + row count — see class doc. When the sidecar is
@@ -842,20 +843,15 @@ final class Collection(
     else None
 
   /** The stored rows: the public columns plus the storage-only ones —
-    * `_m_meta_v` in a VARIANT-form generation, the `cid` partition
-    * column in a clustered one. No rows when the collection is empty.
-    * Built once per generation (see `storedFrame`). */
+    * `_m_meta_v`, and the `cid` partition column in a clustered
+    * generation. One read, which an empty directory answers with no
+    * rows. Built once per generation (see `storedFrame`). */
   private def stored: DataFrame = storedFrame.getOrElse {
-    val schema = Schema.collectionSchema(embedder.dim)
-    val withV =
-      if (fs.exists(variantMarker)) schema.add(MetaVCol, VariantType)
-      else schema
-    val frame =
-      if (!hasData)
-        spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema)
-      else spark.read.schema(
-        if (fs.exists(centroidsDir)) withV.add(CidCol, LongType) else withV)
-        .parquet(dataDir)
+    val schema =
+      Schema.collectionSchema(embedder.dim).add(MetaVCol, VariantType)
+    val frame = spark.read.schema(
+      if (fs.exists(centroidsDir)) schema.add(CidCol, LongType) else schema)
+      .parquet(dataDir)
     storedFrame = Some(frame)
     frame
   }
@@ -899,8 +895,7 @@ final class Collection(
       .getOrElse(Collection.MaxDistinctValues)
     require(cap >= 1, s"graft.distinct.max_values must be >= 1, got $cap")
     if (!hasData) return Nil
-    val base = where(stored, filterJson)
-    val out = base.select(metaResolver(base).str(field).as("v"))
+    val out = where(stored, filterJson).select(metaFields.str(field).as("v"))
       .filter(col("v").isNotNull).distinct()
       .orderBy("v").limit(cap + 1).collect().map(_.getString(0)).toSeq
     if (out.length > cap) throw new IllegalStateException(
@@ -1003,18 +998,14 @@ final class Collection(
     * the next [[ensureIndex]]: [[queryApprox]] serves ids up to the
     * index's covered watermark only.
     *
-    * The rows take the live generation's metadata form, so every file of
-    * a generation has one schema; the first insert into an empty
-    * collection starts a VARIANT-form one (marker first, then rows).
+    * The rows carry `_m_meta_v`, as every file of a generation does (an
+    * empty collection's directory was marked when it was opened).
     */
   def insertDF(base: DataFrame): Unit = {
     val start = lastId
     val (withIds, n) = zipWithId(base, start)
     if (n > 0) {
-      if (!hasData) mark(variantMarker)
-      val rows =
-        if (fs.exists(variantMarker)) withMetaV(embedded(withIds))
-        else embedded(withIds)
+      val rows = withMetaV(embedded(withIds))
       storedFrame = None
       dataCentroids match {
         case Some(cs) => writeClustered(rows, cs, dataDir, "append")
@@ -1106,10 +1097,9 @@ final class Collection(
     *     deletes of covered ids are counted by `tombstones`, so a delete
     *     of a NEW id breaks the equality. Both counters are arithmetic:
     *     zero scans → append ONLY the tail;
-    *  3. no sidecar, but storage trusted for the current rows (a
-    *     pre-sidecar layout) → adopt it;
-    *  4. anything else — another nlist, a `stale` sidecar, a NEW-id
-    *     delete, missing or corrupt storage → rebuild (O(collection)).
+    *  3. anything else — no sidecar, another nlist, a `stale` sidecar,
+    *     a NEW-id delete, missing or corrupt storage → rebuild
+    *     (O(collection)).
     *
     * A delete is a count ([[countDeleted]]): storage keeps the dead
     * entries, the sidecar's `tombstones` counts them out of the live
@@ -1141,8 +1131,6 @@ final class Collection(
         Meta.writeIndex(spark, root, m.copy(indexedLastId = lastId,
           indexedRows = m.indexedRows + (lastId - m.indexedLastId)))
         appends += 1
-      case None if trusted(nlist, rowsCount) =>
-        Meta.writeIndex(spark, root, IndexMeta(lastId, rowsCount, nlist))
       case _ => rebuildAll
     }
 
@@ -1155,9 +1143,6 @@ final class Collection(
         Meta.writeIndex(spark, root, sidecar
           .getOrElse(IndexMeta(lastId, rowsCount, nlist)).copy(stale = true))
         build
-        // the dead-id table of stores written before deletes were a count
-        val leftover = new Path(root, "tombstones")
-        if (fs.exists(leftover)) fs.delete(leftover, true)
         Meta.writeIndex(spark, root, IndexMeta(lastId, rowsCount, nlist))
         rebuilds += 1
       }
@@ -1186,6 +1171,27 @@ final class Collection(
     (_, docs) => graft.operators.TextIndex.trusted(spark, textIndexDir, docs),
     from => graft.operators.TextIndex.appendTail(spark,
       docsFrame.filter(col("doc_id") > from), textIndexDir))
+  // opening ends here, once the side indexes a commit records into exist
+  locally { upgrade() }
+
+  /** Bring a store of an earlier layout to the current one when the
+    * handle opens. An unmarked generation with rows gets one
+    * [[commitGeneration]] that parses `_m_meta_v` from the canonical
+    * columns (never one read as null from files that lack it); an empty
+    * or missing one is only marked (the commit drops any [[stored]]
+    * frame built before it). The side indexes' dead-id tables, kept
+    * before deletes were a count, are removed. */
+  private def upgrade(): Unit = {
+    if (!fs.exists(variantMarker)) {
+      if (hasData)
+        commitGeneration(withMetaV(df), rowsCount, Collection.Untouched)
+      else mark(variantMarker)
+    }
+    for (ix <- Seq(indexDir, textIndexDir)) {
+      val leftover = new Path(ix, "tombstones")
+      if (fs.exists(leftover)) fs.delete(leftover, true)
+    }
+  }
 
   private def vectors: DataFrame = df.select(col(Schema.IdCol).as("vec_id"),
     col(Schema.EmbeddingCol).as("embedding"))
@@ -1536,15 +1542,15 @@ final class Collection(
   /** The ONE commit step of every copy-on-write mutation — compact,
     * delete, findOneAndDelete, replaceOne, the update paths and
     * [[Txn.commit]] (parquet is immutable; every lakehouse
-    * DELETE/UPDATE is this under the hood) — and of [[buildIndex]]. It
-    * writes `next`'s canonical columns as a new generation, plus
-    * `_m_meta_v` and the `_meta_variant` marker, so every commit leaves
-    * a VARIANT-form generation: `next`'s own `_m_meta_v` when it has one
-    * (rows read from a VARIANT-form [[stored]], whose metadata changes
-    * went through [[setMeta]]), else parsed from `_m_meta`. The layout
-    * carries forward: flat stays flat; a clustered generation's
-    * centroids are copied into the new one and every row's `cid` is
-    * computed against them, so no caller handles `cid`. [[buildIndex]]
+    * DELETE/UPDATE is this under the hood) — and of [[buildIndex]] and
+    * [[upgrade]]. It writes `next`'s canonical columns and its own
+    * `_m_meta_v` as a new generation, with the `_meta_variant` marker.
+    * `next` must carry an exact `_m_meta_v`: rows of [[stored]] whose
+    * metadata changed only through [[setMeta]], or rows parsed by
+    * [[withMetaV]]. The layout carries forward: flat stays flat; a
+    * clustered generation's centroids are copied into the new one and
+    * every row's `cid` is computed against them, so no caller handles
+    * `cid`. [[buildIndex]]
     * passes `fitted` centroids instead, which cluster a flat generation
     * or replace the old clustering. A clustered generation is written
     * `partitionBy(cid)`, one file per list, with its centroid table
@@ -1578,9 +1584,7 @@ final class Collection(
     val tmp = clearedTmp(live)
     val tmpCentroids = new Path(tmp, centroidsDir.getName)
     val rowsV =
-      if (next.columns.contains(MetaVCol))
-        next.select(publicCols(next).columns.map(col) :+ col(MetaVCol): _*)
-      else withMetaV(publicCols(next))
+      next.select(publicCols(next).columns.map(col) :+ col(MetaVCol): _*)
     fitted.orElse(dataCentroids) match {
       case Some(cs) =>
         writeClustered(rowsV, cs, tmp.toString, "errorifexists")
@@ -1658,25 +1662,17 @@ final class Collection(
     if (!fs.exists(live) && fs.exists(old)) fs.rename(old, live)
   }
 
-  /** How an MQL filter over `rows` reads the metadata: the stored
-    * `_m_meta_v` when `rows` carries it — no parse, no lambda, so the
-    * Filter compiles into whole-stage codegen — else one parse of
-    * `_m_meta` per row (a generation written before the VARIANT form,
-    * or a transaction's staged frame). */
-  private def metaResolver(rows: DataFrame): MqlFilter.FieldResolver =
-    if (rows.columns.contains(MetaVCol))
-      MqlFilter.VariantResolver(col(MetaVCol))
-    else MqlFilter.JsonResolver(col(Schema.MetaCol))
-
-  /** `rows` under an MQL filter; all of them when it is null or blank. */
+  /** `rows` under an MQL filter; all of them when it is null or blank.
+    * The filter reads the stored `_m_meta_v` — no parse, no lambda, so
+    * it compiles into whole-stage codegen. */
   private def where(rows: DataFrame, filterJson: String): DataFrame =
     if (filterJson == null || filterJson.trim.isEmpty) rows
-    else rows.filter(MqlFilter.toColumn(filterJson, metaResolver(rows)))
+    else rows.filter(MqlFilter.toColumn(filterJson, metaFields))
 
-  /** Rows of `rows` matching an MQL filter; a null verdict (missing
-    * field) is no match. */
-  private def matching(rows: DataFrame, filterJson: String): Column =
-    coalesce(MqlFilter.toColumn(filterJson, metaResolver(rows)), lit(false))
+  /** Rows matching an MQL filter; a null verdict (missing field) is no
+    * match. */
+  private def matching(filterJson: String): Column =
+    coalesce(MqlFilter.toColumn(filterJson, metaFields), lit(false))
 
   /** The FIRST document matching the filter — lowest `_m_id`, the
     * store's deterministic stand-in for Mongo's natural (storage)
@@ -1684,13 +1680,10 @@ final class Collection(
     * the findOneAnd* family. */
   private def firstMatch(filterJson: String): Option[(Long, String)] =
     if (!hasData) None
-    else {
-      val rows = stored
-      rows.filter(matching(rows, filterJson))
-        .orderBy(col(Schema.IdCol).asc).limit(1)
-        .select(col(Schema.IdCol), col(Schema.MetaCol)).collect()
-        .headOption.map(r => (r.getLong(0), r.getString(1)))
-    }
+    else stored.filter(matching(filterJson))
+      .orderBy(col(Schema.IdCol).asc).limit(1)
+      .select(col(Schema.IdCol), col(Schema.MetaCol)).collect()
+      .headOption.map(r => (r.getLong(0), r.getString(1)))
 
   private def metaOf(id: Long): String =
     df.filter(col(Schema.IdCol) === id)
@@ -1706,7 +1699,7 @@ final class Collection(
   def delete(filterJson: String): Long = {
     if (!hasData) return 0L
     val rows = stored
-    val pred = matching(rows, filterJson)
+    val pred = matching(filterJson)
     val keep = rows.filter(!pred)
     val kept = keep.count()
     val removed = rowsCount - kept
@@ -1738,7 +1731,8 @@ final class Collection(
     * this — the id stays live, so its old entries would keep serving —
     * so the commit poisons the sidecars and the next ensure rebuilds: the
     * same cost class as this O(n) copy-on-write, paid once, lazily, by
-    * the next index consumer. */
+    * the next index consumer. The metadata goes through [[setMeta]], so
+    * the replaced row's `_m_meta_v` is re-parsed. */
   private def replaceId(id: Long, document: String,
       metadata: Map[String, Any]): Unit = {
     val emb = embedder.embedOne(document)
@@ -1747,13 +1741,11 @@ final class Collection(
       if (metadata.isEmpty) lit(null).cast("string")
       else lit(Data.toJson(metadata))
     val isHit = col(Schema.IdCol) === id
-    commitGeneration(df
+    commitGeneration(setMeta(stored, isHit, metaJson)
       .withColumn(Schema.DocCol,
         when(isHit, lit(document)).otherwise(col(Schema.DocCol)))
       .withColumn(Schema.EmbeddingCol,
-        when(isHit, embLit).otherwise(col(Schema.EmbeddingCol)))
-      .withColumn(Schema.MetaCol,
-        when(isHit, metaJson).otherwise(col(Schema.MetaCol))),
+        when(isHit, embLit).otherwise(col(Schema.EmbeddingCol))),
       rowsCount, Collection.Rewritten)
   }
 
@@ -1866,7 +1858,7 @@ final class Collection(
   def updateDoc(filterJson: String, updateJson: String,
       arrayFiltersJson: String): Long = {
     if (!hasData) return 0L
-    val pred = matching(stored, filterJson)
+    val pred = matching(filterJson)
     // Mongo 4.2 update PIPELINES: `[{"$set": {f: <aggregation expr>}}]`
     // — values COMPUTED from the document itself (the literal-operand
     // operators above can't express "a = b + c"). Scope: $set stages
@@ -2072,6 +2064,8 @@ final class Collection(
   // multi-collection commit needs a generation-pointer manifest the
   // read path doesn't resolve through (documented divergence — Mongo
   // 4.0 shipped single-shard first for the same reason).
+  // The staged frame is the stored rows without `cid`; inserts parse
+  // `_m_meta_v` and updates go through setMeta, so it stays exact.
   // Scale: each staged op pays ONE localCheckpoint materialization
   // (lineage truncation — without it the per-op matched-count job
   // re-evaluates every prior staged op, O(N²) for N ops); commit pays
@@ -2079,7 +2073,7 @@ final class Collection(
   // amplification, which is why bulk maintenance at 100 TB should
   // prefer a transaction over N bulkWrite rewrites.
   final class Txn private[api] () {
-    private var frame = df
+    private var frame = stored.drop(CidCol)
     private val startLastId = lastId
     private val startRows = rowsCount
     private var nextId = lastId
@@ -2116,7 +2110,8 @@ final class Collection(
       val base = batchFrame(data)
       if (data.documents.isEmpty) return
       val n = data.documents.length.toLong
-      stage(frame.unionByName(embedded(zipWithId(base, nextId)._1)))
+      stage(frame.unionByName(
+        withMetaV(embedded(zipWithId(base, nextId)._1))))
       nextId += n
       insertedN += n
     }
@@ -2126,14 +2121,12 @@ final class Collection(
       * the staged frame — one count job, no write). */
     def updateMany(filterJson: String, updateJson: String): Long = {
       live()
-      val pred = matching(frame, filterJson)
+      val pred = matching(filterJson)
       val mergeUdf = validatedUpdateUdf(updateJson,
         arrayFiltersJson = null, queryFilterJson = filterJson)
       val matched = frame.filter(pred).count()
       if (matched > 0L) {
-        stage(frame.withColumn(Schema.MetaCol,
-          when(pred, mergeUdf(col(Schema.MetaCol)))
-            .otherwise(col(Schema.MetaCol))))
+        stage(setMeta(frame, pred, mergeUdf(col(Schema.MetaCol))))
         updatedAny = true
       }
       matched
@@ -2143,7 +2136,7 @@ final class Collection(
       * returns the removed count. */
     def deleteMany(filterJson: String): Long = {
       live()
-      val pred = matching(frame, filterJson)
+      val pred = matching(filterJson)
       val hit = frame.filter(pred).select(count_if(lit(true)),
         count_if(col(Schema.IdCol) <= startLastId)).head()
       val removed = hit.getLong(0)

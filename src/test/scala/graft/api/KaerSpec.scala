@@ -1620,14 +1620,19 @@ class KaerSpec extends SparkTestBase {
       assert(lines.count(_.contains(d)) == 1, s"$d defined more than once")
     assert(!lines.exists(_.contains("rewriteData")))
     // a delete is a count in the index sidecar: no dead-id table is
-    // written or read, and only the rebuild names one, to remove a
-    // leftover
+    // written or read, and only the upgrade at open names one, to remove
+    // a leftover
     assert(!lines.exists(_.contains("entomb")))
     val tombLiteral = "\"[^\"]*tombstones".r.unanchored
     val tombSites = lines.indices.filter(i => !isComment(lines(i)) &&
       tombLiteral.matches(lines(i)))
     assert(tombSites.nonEmpty && tombSites.forall(enclosing(_).head ==
-      "rebuild"), tombSites.map(i => s"line ${i + 1}").mkString(", "))
+      "upgrade"), tombSites.map(i => s"line ${i + 1}").mkString(", "))
+    // one storage format: only the upgrade at open tests for the
+    // metadata form, and no filter of the collection parses per row
+    assert(sites("JsonResolver").isEmpty, sites("JsonResolver"))
+    only("fs.exists(variantMarker)", Set("upgrade"))
+    assert(!lines.exists(_.contains("def metaResolver")))
     // the change-log floor is written only into a cleared replacement
     // log, never into the live one
     val floorWrites = sites("writeChangeFloor(")
@@ -1908,7 +1913,7 @@ class KaerSpec extends SparkTestBase {
       parsesJson(c.explainQuery("old doc 1", 2, filters(1)))
     val o = newSession(root).getCollection("old")
     val n = newSession(root).getCollection("new")
-    assert(parses(o) && !parses(n))
+    assert(marked(s"$root/old/data") && !parses(o) && !parses(n))
     val before = answers(n)
     assert(answers(o) == before)
     assert(contents(o) == contents(n))
@@ -1918,13 +1923,14 @@ class KaerSpec extends SparkTestBase {
     // and through the mutations, each starting from the string form
     toStringForm(s"$root/old/data")
     val o2 = newSession(root).getCollection("old")
-    assert(parses(o2))
+    assert(marked(s"$root/old/data") && !parses(o2))
     val upd = """{"$set": {"tag": "c"}, "$inc": {"g": 100}}"""
     assert(o2.updateDoc("""{"g": {"$mod": [4, 1]}}""", upd) ==
       n.updateDoc("""{"g": {"$mod": [4, 1]}}""", upd))
     assert(marked(s"$root/old/data") && contents(o2) == contents(n))
     toStringForm(s"$root/old/data")
     val o3 = newSession(root).getCollection("old")
+    assert(marked(s"$root/old/data") && !parses(o3))
     assert(o3.delete("""{"tag": "c", "g": {"$lt": 120}}""") ==
       n.delete("""{"tag": "c", "g": {"$lt": 120}}"""))
     assert(marked(s"$root/old/data") && contents(o3) == contents(n))
@@ -1952,11 +1958,13 @@ class KaerSpec extends SparkTestBase {
     assert(marked(data) && contents(v) == want)
     assert(!parsesJson(v.explainQuery("swap doc 1", 3, f)))
     assert(v.count(f) == 3L)
-    // ... and a string-form one comes back string-form
+    // ... and a string-form one is restored from data_old, then upgraded
+    // by the same reopen
     toStringForm(data)
     val s0 = crashMidSwap()
-    assert(!marked(data) && contents(s0) == want)
-    assert(parsesJson(s0.explainQuery("swap doc 1", 3, f)))
+    assert(!hfs.exists(new Path(s"${data}_old")))
+    assert(marked(data) && contents(s0) == want)
+    assert(!parsesJson(s0.explainQuery("swap doc 1", 3, f)))
     assert(s0.count(f) == 3L)
   }
 
@@ -2017,7 +2025,18 @@ class KaerSpec extends SparkTestBase {
       "compact" -> (() => c.compact()),
       "buildIndex" -> (() => c.buildIndex(nlist = 3, iters = 1)),
       "update after index" -> (() => c.update("""{"g": 150}""",
-        Map("g" -> 1))))
+        Map("g" -> 1))),
+      // staged rows: an insert, an update over staged and live rows, a
+      // delete; the count and the rows g >= 100 stay as they were
+      "transaction" -> (() => c.transaction { t =>
+        t.insert(Data().withDocuments(Seq("carry doc txn"))
+          .withMetadatas(Seq(Map[String, Any]("g" -> 40, "tag" -> "t"))))
+        assert(t.updateMany("""{"g": {"$lt": 100}}""",
+          """{"$set": {"txn": true}}""") == 15L)
+        assert(t.deleteMany("""{"g": 5}""") == 1L)
+      }),
+      "replaceOne" -> (() => assert(c.replaceOne("""{"tag": "t"}""",
+        "carry doc replaced", Map("g" -> 7, "tag" -> "r")) == 1L)))
     for ((name, step) <- steps) {
       step()
       assert(stale() == 0L, s"after $name")
@@ -2026,5 +2045,133 @@ class KaerSpec extends SparkTestBase {
       assert(c.count(f) == parsed, s"after $name")
     }
     assert(c.count(f) == 15L && c.count() == 29L)
+  }
+
+  // ---- one storage format: old stores upgrade once, when opened ----------
+
+  /** Spark jobs launched while `body` runs. */
+  private def jobsOf(body: => Unit): Int = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    org.apache.spark.graft.ListenerBridge.drain(sc)
+    sc.addSparkListener(listener)
+    try { body; org.apache.spark.graft.ListenerBridge.drain(sc) }
+    finally sc.removeSparkListener(listener)
+    jobs.get
+  }
+
+  /** Every file under `dir` with its modification time. */
+  private def filesOf(dir: String): Set[(String, Long)] = {
+    val it = hfs.listFiles(new org.apache.hadoop.fs.Path(dir), true)
+    val b = Set.newBuilder[(String, Long)]
+    while (it.hasNext) {
+      val f = it.next()
+      b += f.getPath.toString -> f.getModificationTime
+    }
+    b.result()
+  }
+
+  test("one storage format: a string-form store, clustered and indexed, " +
+      "is upgraded by its first reopen with no index work and the same " +
+      "answers as a VARIANT-form twin; a second reopen rewrites nothing; " +
+      "an empty unmarked directory is only marked, with no Spark job") {
+    val root = tmpDir("kaer-upgrade")
+    for (name <- Seq("old", "twin")) {
+      val c = newSession(root).createCollection(name)
+      c.insert(Data()
+        .withDocuments((0 until 30).map(i => s"upg doc $i topic ${i % 4}"))
+        .withMetadatas((0 until 30).map(i => Map[String, Any]("g" -> i,
+          "tag" -> (if (i % 3 == 0) "a" else "b")))))
+      c.ensureIndex(nlist = 4, iters = 2)
+      c.ensureTextIndex()
+    }
+    val data = s"$root/old/data"
+    toStringForm(data)
+    val before = filesOf(data)
+    def ids(df: org.apache.spark.sql.DataFrame) =
+      df.select("_m_id").collect().map(_.getLong(0)).toSeq
+    val filters = Seq(null, """{"g": {"$gte": 7}}""",
+      """{"$or": [{"tag": "a"}, {"g": {"$lt": 3}}]}""")
+    def answers(c: Collection) = filters.map(f => (
+      ids(c.query("upg doc 12 topic 0", 6, f)),
+      ids(c.queryApprox("upg doc 12 topic 0", 6, 2, f)),
+      ids(c.textFind("topic upg", 100, if (f == null) "{}" else f)),
+      if (f == null) c.count() else c.count(f)))
+    val o = newSession(root).getCollection("old")
+    val first = filesOf(data)
+    assert(marked(data) && first != before)
+    assert(!parsesJson(o.explainQuery("upg doc 1", 2, filters(1))))
+    o.ensureIndex(nlist = 4, iters = 2)
+    o.ensureTextIndex()
+    val twin = newSession(root).getCollection("twin")
+    assert(contents(o) == contents(twin))
+    assert(answers(o) == answers(twin))
+    assert((o.indexRebuilds, o.indexAppends, o.textIndexRebuilds,
+      o.textIndexAppends) == ((0L, 0L, 0L, 0L)))
+    newSession(root).getCollection("old")
+    assert(filesOf(data) == first)
+
+    val e = newSession(root).createCollection("empty")
+    val marker = new org.apache.hadoop.fs.Path(s"$root/empty/data",
+      "_meta_variant")
+    assert(marked(s"$root/empty/data") && hfs.delete(marker, false))
+    val opened = jobsOf(newSession(root).getCollection("empty"))
+    assert(opened == 0, s"opening an empty collection ran $opened jobs")
+    assert(marked(s"$root/empty/data") &&
+      hfs.listStatus(marker.getParent).map(_.getPath.getName).toSeq ==
+        Seq("_meta_variant"))
+  }
+
+  test("queryApprox on an IVF-clustered collection whose rows were all " +
+      "deleted returns no rows; after an insert and ensureIndex it serves " +
+      "the new row") {
+    val c = newSession(tmpDir("kaer-ivf-emptied")).createCollection("c")
+    c.insert(Data().withDocuments((0 until 30).map(i => s"doc $i"))
+      .withMetadatas((0 until 30).map(i => Map[String, Any]("g" -> i))))
+    c.ensureIndex(nlist = 4, iters = 2)
+    assert(c.delete("{}") == 30L)
+    assert(c.queryApprox("doc 1", 3, 2).collect().isEmpty)
+    assert(c.queryApprox("doc 1", 3, 2, """{"g": 1}""").collect().isEmpty)
+    assert(c.query("doc 1", 3, """{"g": 1}""").collect().isEmpty)
+    c.insert(Data().withDocuments(Seq("doc 1"))
+      .withMetadatas(Seq(Map[String, Any]("g" -> 1))))
+    c.ensureIndex(nlist = 4, iters = 2)
+    assert(c.queryApprox("doc 1", 3, 4).select("_m_id").collect()
+      .map(_.getLong(0)).toSeq == Seq(31L))
+  }
+
+  test("a side index whose sidecar is missing is rebuilt once by the next " +
+      "ensure, with the same answers") {
+    val root = tmpDir("kaer-no-sidecar")
+    val c = newSession(root).createCollection("c")
+    c.insert(Data()
+      .withDocuments((0 until 30).map(i => s"side doc $i topic ${i % 4}"))
+      .withMetadatas((0 until 30).map(i => Map[String, Any]("g" -> i))))
+    c.ensureIndex(nlist = 4, iters = 2)
+    c.ensureTextIndex()
+    def ids(df: org.apache.spark.sql.DataFrame) =
+      df.select("_m_id").collect().map(_.getLong(0)).toSeq
+    def answers(x: Collection) = Seq(null, """{"g": {"$gte": 10}}""").map(f =>
+      (ids(x.queryApprox("side doc 9 topic 1", 6, 4, f)),
+        ids(x.textFind("topic side", 100, if (f == null) "{}" else f))))
+    val before = answers(c)
+    for (d <- Seq("index", "textindex"))
+      assert(hfs.delete(new org.apache.hadoop.fs.Path(s"$root/c/$d",
+        Meta.IndexFileName), false))
+    val r = newSession(root).getCollection("c")
+    r.ensureIndex(nlist = 4, iters = 2)
+    r.ensureTextIndex()
+    def counters = (r.indexRebuilds, r.indexAppends, r.textIndexRebuilds,
+      r.textIndexAppends)
+    assert(counters == ((1L, 0L, 1L, 0L)), counters)
+    assert(answers(r) == before)
+    r.ensureIndex(nlist = 4, iters = 2)
+    r.ensureTextIndex()
+    assert(counters == ((1L, 0L, 1L, 0L)), counters)
   }
 }
