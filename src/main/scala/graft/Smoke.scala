@@ -36,6 +36,35 @@ object Smoke {
     val plan = c.explainQuery("h, world", 1, """{"attr1": {"$eq": 1}}""")
     check(!plan.contains("try_parse_json") && !plan.contains("parseJson"),
       "main.go flagship plan: no per-row metadata parse")
+    // the collection is small, so it answers on the driver: once the
+    // first query has read the generation, a query runs no Spark job,
+    // and the Spark path (threshold -1) returns the same rows
+    val f = """{"attr1": {"$eq": 1}}"""
+    c.query("h, world", 2, f).collect()
+    val sc = s.sparkContext
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val counter = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    org.apache.spark.graft.ListenerBridge.drain(sc)
+    sc.addSparkListener(counter)
+    val onDriver =
+      try {
+        val out = c.query("h, world", 2, f).collect().toSeq
+        org.apache.spark.graft.ListenerBridge.drain(sc)
+        out
+      } finally sc.removeSparkListener(counter)
+    check(jobs.get == 0, s"second query ran ${jobs.get} Spark jobs")
+    val threshold = "spark.sql.autoBroadcastJoinThreshold"
+    val old = s.conf.getOption(threshold)
+    s.conf.set(threshold, "-1")
+    val viaSpark =
+      try c.query("h, world", 2, f).collect().toSeq
+      finally old.fold(s.conf.unset(threshold))(s.conf.set(threshold, _))
+    check(onDriver.nonEmpty && onDriver == viaSpark,
+      "Spark path (threshold -1) returns the resident path's rows")
 
     // 4. reopen-recovery: fresh session over the same dir continues ids
     val k2 = new api.KaerSession(s, root, embed.HashingEmbedder(64))

@@ -7,7 +7,9 @@ import graft.embed.{BatchedEmbedder, Embedder, HashingEmbedder,
 import graft.filter.MqlFilter
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.PlanBridge
 import org.apache.spark.sql.types._
 
 /** Errors mirroring the reference's sentinel errors. */
@@ -142,9 +144,13 @@ final class KaerSession(
       }
     })
 
+  /** Forget the open handle of `name`, releasing what it holds on the
+    * driver. */
+  private def evict(name: String): Unit = cache.remove(name).foreach(_.release())
+
   /** db/kaer.go:65-76. */
   def dropCollection(name: String): Unit = {
-    cache.remove(name)
+    evict(name)
     val p = new Path(dir(name))
     if (fs.exists(p)) fs.delete(p, true)
   }
@@ -180,8 +186,8 @@ final class KaerSession(
           "(pass dropTarget = true to overwrite, Mongo semantics)")
       dropCollection(to)
     }
-    cache.remove(from)
-    cache.remove(to)
+    evict(from)
+    evict(to)
     require(fs.rename(src, dst),
       s"renameCollection: filesystem rename $src -> $dst failed")
     Meta.read(spark, dir(to)) match {
@@ -280,8 +286,9 @@ final class KaerSession(
   }
 
   /** db/kaer.go:78-82 — nothing to stop: the SparkSession is shared and
-    * parquet is the only durability point. */
-  def close(): Unit = cache.clear()
+    * parquet is the only durability point. The open handles release the
+    * generations they hold on the driver. */
+  def close(): Unit = cache.keys.foreach(evict)
 }
 
 /** A named collection: parquet data + JSON sidecar + embedder
@@ -312,6 +319,18 @@ final class KaerSession(
   * that column — no per-row parse, no lambda. A store written before
   * that form is upgraded when opened ([[upgrade]]), so no read, write or
   * transaction path knows another. `_m_meta_v` never appears in `df`.
+  *
+  * A small generation is answered on the driver. When its parquet bytes
+  * are at most `spark.sql.autoBroadcastJoinThreshold` (Spark's own
+  * measure of "small enough to hold whole on the driver"; −1 turns this
+  * off), the first query of the generation reads its rows once, as Spark
+  * internal rows grouped by list, and [[query]], [[queryVector]] and
+  * [[queryApprox]] then evaluate their Spark plan's own optimized
+  * expressions over that copy with no Spark job. Larger generations take
+  * the Spark plan. The copy lives in the per-generation state
+  * ([[Generation]]) beside the scan, the centroids and the IVF sidecar:
+  * a commit drops it, an insert extends it, and the session releases it
+  * on close, drop and rename.
   *
   * Recovery semantics (db/db.go:209-226): the id watermark is
   * max(sidecar.lastId, max(_m_id) in data) — the *intent* of the
@@ -773,6 +792,19 @@ object Collection {
     * an index stops short of the watermark. */
   private[api] final case class Removed(ids: DataFrame, n: Long)
     extends Change
+
+  /** A generation's rows on the driver, as Spark internal rows in the
+    * stored column order, grouped by IVF list (`cid`); a flat generation
+    * is one group. */
+  private[api] type Resident = Map[Long, Vector[InternalRow]]
+
+  /** `base` with `rows` added to their lists; `cid` is the ordinal of the
+    * list column, None in a flat generation. */
+  private[api] def grouped(base: Resident, rows: Array[InternalRow],
+      cid: Option[Int]): Resident =
+    rows.groupBy(r => cid.fold(0L)(r.getLong)).foldLeft(base) {
+      case (acc, (l, rs)) => acc.updated(l, acc.getOrElse(l, Vector.empty) ++ rs)
+    }
 }
 
 final class Collection(
@@ -807,10 +839,45 @@ final class Collection(
   // capturing (single-writer contract, like the watermark)
   private var captureChanges: Boolean = false
   private var lastOpTime: Option[Long] = None
-  // [[stored]] of the live generation, built once: building it lists the
-  // data files, which costs a query about as much as planning it. Every
-  // write through this handle drops it (single-writer contract)
-  private var storedFrame: Option[DataFrame] = None
+
+  /** What this handle keeps of the live data generation, each part built
+    * when first needed. [[commitGeneration]] drops it all
+    * (single-writer contract: after a change from outside, reopen). An
+    * insert adds files to the same generation: it relists the scan and
+    * extends the resident copy.
+    *  - `rows`: [[stored]]. Building it lists the data files, which
+    *    costs a query about as much as planning it.
+    *  - `centroids`: those of a clustered generation, read on the driver.
+    *  - `ivfSidecar`: the IVF index sidecar as [[queryApprox]] reads it.
+    *    Every [[SideIndex]] sidecar write through this handle drops it.
+    *  - `resident`: the stored rows on the driver, see [[residentRows]]. */
+  private final class Generation {
+    private var frame: Option[DataFrame] = None
+    def rows: DataFrame = frame.getOrElse {
+      val schema =
+        Schema.collectionSchema(embedder.dim).add(MetaVCol, VariantType)
+      val f = spark.read.schema(
+        if (centroids.isDefined) schema.add(CidCol, LongType) else schema)
+        .parquet(dataDir)
+      frame = Some(f)
+      f
+    }
+    /** The next [[rows]] lists the files again. */
+    def relist(): Unit = frame = None
+    lazy val centroids: Option[Seq[(Long, Array[Float])]] =
+      if (fs.exists(centroidsDir))
+        Some(graft.operators.IvfIndex.readCentroidTable(spark,
+          centroidsDir.toString))
+      else None
+    var ivfSidecar: Option[Option[IndexMeta]] = None
+    var resident: Option[Collection.Resident] = None
+  }
+  private var generation: Option[Generation] = None
+  private def gen: Generation = generation.getOrElse {
+    val g = new Generation
+    generation = Some(g)
+    g
+  }
   locally {
     // crash-window repair for swapDir, before reading anything: a data
     // generation or change log that vanished between the swap's two
@@ -835,26 +902,16 @@ final class Collection(
   }
 
   /** The centroids of the current generation when it is IVF-clustered
-    * (read on the driver, no job); None for a flat generation. */
+    * (read on the driver, no job, once per generation); None for a flat
+    * generation. */
   private def dataCentroids: Option[Seq[(Long, Array[Float])]] =
-    if (fs.exists(centroidsDir))
-      Some(graft.operators.IvfIndex.readCentroidTable(spark,
-        centroidsDir.toString))
-    else None
+    gen.centroids
 
   /** The stored rows: the public columns plus the storage-only ones —
     * `_m_meta_v`, and the `cid` partition column in a clustered
     * generation. One read, which an empty directory answers with no
-    * rows. Built once per generation (see `storedFrame`). */
-  private def stored: DataFrame = storedFrame.getOrElse {
-    val schema =
-      Schema.collectionSchema(embedder.dim).add(MetaVCol, VariantType)
-    val frame = spark.read.schema(
-      if (fs.exists(centroidsDir)) schema.add(CidCol, LongType) else schema)
-      .parquet(dataDir)
-    storedFrame = Some(frame)
-    frame
-  }
+    * rows. Built once per generation (see [[Generation]]). */
+  private def stored: DataFrame = gen.rows
 
   private def maxIdInData(): Long =
     if (!hasData) 0L
@@ -1000,13 +1057,19 @@ final class Collection(
     *
     * The rows carry `_m_meta_v`, as every file of a generation does (an
     * empty collection's directory was marked when it was opened).
+    *
+    * When the generation is resident on the driver ([[residentRows]]),
+    * the insert extends that copy with the rows it wrote, read back by
+    * one job (`_m_id > start`), if the grown generation is still within
+    * the limit; otherwise the copy is dropped. A failed write drops it.
     */
   def insertDF(base: DataFrame): Unit = {
     val start = lastId
     val (withIds, n) = zipWithId(base, start)
     if (n > 0) {
       val rows = withMetaV(embedded(withIds))
-      storedFrame = None
+      val copy = generation.flatMap(_.resident)
+      generation.foreach { g => g.resident = None; g.relist() }
       dataCentroids match {
         case Some(cs) => writeClustered(rows, cs, dataDir, "append")
         case None => rows.write.mode("append").parquet(dataDir)
@@ -1014,6 +1077,12 @@ final class Collection(
       lastId = start + n
       rowsCount += n
       writeSidecar()
+      copy.foreach { c =>
+        val g = gen
+        if (fits(g)) g.resident = Some(Collection.grouped(c,
+          PlanBridge.collectInternal(g.rows.filter(col(Schema.IdCol) > start)),
+          cidIndex(g)))
+      }
       if (captureChanges) {
         // insert events straight off the just-written id range: a
         // pushed-down rescan of the data dir, never a re-embed
@@ -1130,6 +1199,7 @@ final class Collection(
         appendTail(m.indexedLastId)
         Meta.writeIndex(spark, root, m.copy(indexedLastId = lastId,
           indexedRows = m.indexedRows + (lastId - m.indexedLastId)))
+        forgetIvfSidecar()
         appends += 1
       case _ => rebuildAll
     }
@@ -1142,21 +1212,43 @@ final class Collection(
       if (hasData && rowsCount > 0) {
         Meta.writeIndex(spark, root, sidecar
           .getOrElse(IndexMeta(lastId, rowsCount, nlist)).copy(stale = true))
+        forgetIvfSidecar()
         build
         Meta.writeIndex(spark, root, IndexMeta(lastId, rowsCount, nlist))
+        forgetIvfSidecar()
         rebuilds += 1
       }
 
     /** Count `n` deleted ids that the storage behind sidecar `m` covers
       * (id ≤ its watermark) out of the live coverage. */
     def countDeleted(m: IndexMeta, n: Long): Unit =
-      if (n > 0) Meta.writeIndex(spark, root,
-        m.copy(tombstones = m.tombstones + n))
+      if (n > 0) {
+        Meta.writeIndex(spark, root, m.copy(tombstones = m.tombstones + n))
+        forgetIvfSidecar()
+      }
 
     /** Content changed under live ids, which no counter can express:
       * the next ensure must rebuild. */
-    def poison(): Unit = sidecar.foreach(m =>
-      Meta.writeIndex(spark, root, m.copy(stale = true)))
+    def poison(): Unit = sidecar.foreach { m =>
+      Meta.writeIndex(spark, root, m.copy(stale = true))
+      forgetIvfSidecar()
+    }
+  }
+
+  /** A side index sidecar was written: drop the IVF sidecar
+    * [[queryApprox]] holds (either index's write drops it). */
+  private def forgetIvfSidecar(): Unit =
+    generation.foreach(_.ivfSidecar = None)
+
+  /** The IVF index sidecar, read once per generation and held until a
+    * sidecar write through this handle. */
+  private def ivfSidecar: Option[IndexMeta] = {
+    val g = gen
+    g.ivfSidecar.getOrElse {
+      val s = ivf.sidecar
+      g.ivfSidecar = Some(s)
+      s
+    }
   }
 
   private def indexDir: String = new Path(dir, "index").toString
@@ -1179,12 +1271,14 @@ final class Collection(
     * [[commitGeneration]] that parses `_m_meta_v` from the canonical
     * columns (never one read as null from files that lack it); an empty
     * or missing one is only marked (the commit drops any [[stored]]
-    * frame built before it). The side indexes' dead-id tables, kept
-    * before deletes were a count, are removed. */
+    * frame built before it). The commit changes no document, so it
+    * captures no change event and consumes no `op_time`. The side
+    * indexes' dead-id tables, kept before deletes were a count, are
+    * removed. */
   private def upgrade(): Unit = {
     if (!fs.exists(variantMarker)) {
-      if (hasData)
-        commitGeneration(withMetaV(df), rowsCount, Collection.Untouched)
+      if (hasData) commitGeneration(withMetaV(df), rowsCount,
+        Collection.Untouched, capture = false)
       else mark(variantMarker)
     }
     for (ix <- Seq(indexDir, textIndexDir)) {
@@ -1332,30 +1426,139 @@ final class Collection(
     * watermark (inserted after the last [[ensureIndex]]) are not
     * returned. Requires an index: without an index sidecar, or over a
     * generation that is not clustered (an index built before this
-    * layout), it fails naming [[ensureIndex]]. */
+    * layout), it fails naming [[ensureIndex]]. The sidecar and the
+    * centroids are read once per generation (see [[Generation]]).
+    *
+    * A resident generation ([[residentRows]]) answers on the driver with
+    * the same plan's expressions, over the probed lists' rows only, and
+    * runs no job (see [[query]] for the snapshot semantics). */
   def queryApprox(document: String, k: Int, nprobe: Int = 4,
       filterJson: String = null): DataFrame = {
+    val (q, lists) = approxQuery(document, k, nprobe, filterJson)
+    residentRows(gen).flatMap(r =>
+      onDriver(q, lists.iterator.flatMap(r.getOrElse(_, Vector.empty))))
+      .getOrElse(q)
+  }
+
+  /** [[queryApprox]]'s Spark plan, and the lists it probes. */
+  private def approxQuery(document: String, k: Int, nprobe: Int,
+      filterJson: String): (DataFrame, Seq[Long]) = {
     require(nprobe >= 1, s"queryApprox needs nprobe >= 1, got $nprobe")
-    val (covered, cents) = (ivf.sidecar, dataCentroids) match {
+    val (covered, cents) = (ivfSidecar, dataCentroids) match {
       case (Some(m), Some(cs)) => (m.indexedLastId, cs)
       case _ => throw new IllegalArgumentException(s"collection '$name' " +
         "has no IVF index over its current data — queryApprox needs " +
         "one; call ensureIndex() first")
     }
     val qv = embedder.embedOne(document)
-    val probed = stored.filter(col(CidCol).isin(
-        graft.operators.IvfIndex.nearestLists(cents, qv, nprobe): _*) &&
+    val lists = graft.operators.IvfIndex.nearestLists(cents, qv, nprobe)
+    val probed = stored.filter(col(CidCol).isin(lists: _*) &&
       col(Schema.IdCol) <= covered)
-    val qlit = array(qv.map(v => lit(v)): _*)
-    publicCols(where(probed, filterJson))
+    (ranked(probed, qv, k, filterJson), lists)
+  }
+
+  /** The top `k` of `rows` under an MQL filter by L2 distance to `qv`:
+    * the public columns plus `_distance`, nearest first, ties by id.
+    * Nulls LAST: a null/dim-mismatched embedding has null distance and
+    * must never outrank real matches (Spark asc defaults NULLS FIRST). */
+  private def ranked(rows: DataFrame, qv: Array[Float], k: Int,
+      filterJson: String): DataFrame =
+    publicCols(where(rows, filterJson))
       .withColumn(Schema.DistanceCol,
-        graft.functions.VectorFunctions.l2(col(Schema.EmbeddingCol), qlit))
-      // nulls LAST: a null/dim-mismatched embedding has null distance and
-      // must never outrank real matches (Spark asc defaults NULLS FIRST)
+        graft.functions.VectorFunctions.l2(col(Schema.EmbeddingCol),
+          array(qv.map(v => lit(v)): _*)))
       .orderBy(col(Schema.DistanceCol).asc_nulls_last,
         col(Schema.IdCol).asc)
       .limit(k)
+
+  // ---- driver-resident generations --------------------------------------
+
+  /** A generation within `spark.sql.autoBroadcastJoinThreshold` — its
+    * relation's `stats.sizeInBytes` (the parquet bytes Spark's broadcast
+    * decision reads) at most the threshold, which −1 turns off. */
+  private def fits(g: Generation): Boolean = {
+    val limit = PlanBridge.broadcastThreshold(spark)
+    limit >= 0 &&
+      g.rows.queryExecution.optimizedPlan.stats.sizeInBytes <= limit
   }
+
+  /** The ordinal of `cid` in a clustered generation's rows. */
+  private def cidIndex(g: Generation): Option[Int] =
+    g.centroids.map(_ => g.rows.schema.fieldIndex(CidCol))
+
+  /** The live generation's rows on the driver when it [[fits]]: read by
+    * one job on first use, then kept until [[commitGeneration]] (an
+    * insert extends them). Above the limit there is no copy, and one
+    * held from before the limit was lowered is dropped. */
+  private def residentRows(g: Generation): Option[Collection.Resident] =
+    if (!fits(g)) { g.resident = None; None }
+    else g.resident.orElse {
+      val r = Collection.grouped(Map.empty,
+        if (hasData) PlanBridge.collectInternal(g.rows) else Array.empty,
+        cidIndex(g))
+      g.resident = Some(r)
+      g.resident
+    }
+
+  /** Answer `q` — a plan [[ranked]] built over [[stored]] — from
+    * `rows` of that scan, with no Spark job. The plan is the
+    * session's optimization of `q` ([[PlanBridge.optimizedOverFullRows]]:
+    * no VARIANT field is pushed into the scan, as the rows hold the
+    * whole column). Its Filter condition is bound by `Predicate.create`,
+    * its Project (the `l2` distance among it) by `UnsafeProjection`, and
+    * Spark's ordering for its SortOrders keeps a top `k` in a bounded
+    * heap. An optimized Filter
+    * folded to true is gone (every row passes), one folded to false or
+    * null leaves an empty relation (no row). The answer is a local
+    * DataFrame with `q`'s schema. None when the optimized plan has
+    * another shape: the caller runs `q`. */
+  private def onDriver(q: DataFrame,
+      rows: Iterator[InternalRow]): Option[DataFrame] = {
+    import org.apache.spark.sql.catalyst.expressions.{IntegerLiteral,
+      Predicate, UnsafeProjection}
+    import org.apache.spark.sql.catalyst.expressions.codegen.GenerateOrdering
+    import org.apache.spark.sql.catalyst.plans.logical.{Filter, Limit,
+      LocalRelation, Project, Sort}
+    import org.apache.spark.sql.execution.datasources.LogicalRelation
+    def local(out: Seq[InternalRow]) = Some(PlanBridge.ofRows(spark,
+      LocalRelation(q.queryExecution.analyzed.output.map(_.newInstance()),
+        out)))
+    PlanBridge.optimizedOverFullRows(q) match {
+      case Limit(IntegerLiteral(k),
+          Sort(order, true, Project(list, below), _)) =>
+        val (cond, scan) = below match {
+          case Filter(c, l: LogicalRelation) => (Some(c), l)
+          case l: LogicalRelation => (None, l)
+          case _ => return None
+        }
+        if (scan.schema.map(_.dataType) != stored.schema.map(_.dataType))
+          return None
+        val pred = cond.map { c =>
+          val p = Predicate.create(c, scan.output)
+          p.initialize(0)
+          p
+        }
+        val project = UnsafeProjection.create(list, scan.output)
+        val ord = GenerateOrdering.generate(order, list.map(_.toAttribute))
+        // the k best rows so far, the worst on top
+        val top = new java.util.PriorityQueue[InternalRow](ord.reverse)
+        for (r <- rows if pred.forall(_.eval(r))) {
+          val p = project(r)
+          if (top.size < k) top.add(p.copy())
+          else if (ord.compare(p, top.peek) < 0) {
+            top.poll()
+            top.add(p.copy())
+          }
+        }
+        import scala.jdk.CollectionConverters._
+        local(top.asScala.toVector.sorted(ord))
+      case l: LocalRelation if l.data.isEmpty => local(Nil)
+      case _ => None
+    }
+  }
+
+  /** Release what this handle holds on the driver. */
+  private[api] def release(): Unit = generation = None
 
   // ---- change streams ---------------------------------------------------
   // Mongo `collection.watch()` analogue (the most-used Mongo API with no
@@ -1557,7 +1760,7 @@ final class Collection(
     * inside it at `_centroids`, so the swap commits assignments and
     * centroids together. Then, in order:
     *  1. swaps it in with [[swapDir]], appending its change events
-    *     first when capture is on;
+    *     first when `capture`;
     *  2. sets the row count to `rows` and the watermark to `watermark`;
     *  3. writes the collection sidecar;
     *  4. records `change` in each side index whose sidecar exists: the
@@ -1566,10 +1769,13 @@ final class Collection(
     * When every index covers the pre-commit watermark, each counts the
     * caller's `n`, with no job; else one aggregate counts the covered
     * ids for all of them, before the swap (the ids may read the
-    * generation being replaced). */
+    * generation being replaced). The handle's [[Generation]] state is
+    * dropped with the swap. `capture` is off only for [[upgrade]], which
+    * changes no document. */
   private def commitGeneration(next: DataFrame, rows: Long,
       change: Collection.Change, watermark: Long = lastId,
-      fitted: Option[Seq[(Long, Array[Float])]] = None): Unit = {
+      fitted: Option[Seq[(Long, Array[Float])]] = None,
+      capture: Boolean = captureChanges): Unit = {
     val indexed = Seq(ivf, text).flatMap(ix => ix.sidecar.map(ix -> _))
     val covered: Seq[Long] = change match {
       case Collection.Removed(ids, _)
@@ -1594,7 +1800,7 @@ final class Collection(
       case None => rowsV.write.parquet(tmp.toString)
     }
     mark(new Path(tmp, variantMarker.getName))
-    if (captureChanges) {
+    if (capture) {
       // diff the old generation (still live) against the written one —
       // both are plain parquet scans, no recomputation of `next`'s plan
       val t = nextOpTime()
@@ -1617,7 +1823,7 @@ final class Collection(
           col("doc_b").as(Schema.DocCol), col("meta_b").as(Schema.MetaCol)))
     }
     swapDir(tmp, live)
-    storedFrame = None
+    generation = None
     lastId = watermark
     rowsCount = rows
     writeSidecar()
@@ -2336,6 +2542,18 @@ final class Collection(
     * merge, never a full sort. Distance is L2, ascending, ties broken by
     * _m_id — a strict superset of the reference output, which emits
     * queue-pop order and drops distances (SURVEY.md §2.3).
+    *
+    * A small generation answers on the driver, the reference's own
+    * shape (an in-process index): when its parquet bytes are at most
+    * `spark.sql.autoBroadcastJoinThreshold`, the handle keeps its rows
+    * as Spark internal rows ([[residentRows]], one job per generation)
+    * and evaluates this plan's own optimized expressions over them — the
+    * Filter condition, the `l2` projection, the Sort order — into a
+    * bounded top-k, with no Spark job per query. The answer, rows and
+    * schema, is the Spark plan's. It is a local DataFrame computed at
+    * call time, a snapshot: a write after the call does not change it,
+    * where the Spark plan's DataFrame reads when it runs. A threshold
+    * of −1 turns the resident path off.
     */
   def query(document: String, k: Int, filterJson: String = null): DataFrame =
     queryVector(embedder.embedOne(document), k, filterJson)
@@ -2347,16 +2565,18 @@ final class Collection(
     * by a meaningless truncated distance). */
   def queryVector(qv: Array[Float], k: Int,
       filterJson: String = null): DataFrame = {
+    val q = exactQuery(qv, k, filterJson)
+    residentRows(gen).flatMap(r => onDriver(q, r.valuesIterator.flatten))
+      .getOrElse(q)
+  }
+
+  /** [[queryVector]]'s Spark plan. */
+  private def exactQuery(qv: Array[Float], k: Int,
+      filterJson: String): DataFrame = {
     require(qv.length == embedder.dim,
       s"query vector dimension ${qv.length} != collection dimension " +
         s"${embedder.dim}")
-    val qlit = array(qv.map(v => lit(v)): _*)
-    publicCols(where(stored, filterJson))
-      .withColumn(Schema.DistanceCol,
-        graft.functions.VectorFunctions.l2(col(Schema.EmbeddingCol), qlit))
-      .orderBy(col(Schema.DistanceCol).asc_nulls_last,
-        col(Schema.IdCol).asc)
-      .limit(k)
+    ranked(stored, qv, k, filterJson)
   }
 
   /** Mongo's `explain` cursor-method analogue (FerretDB exposes it
@@ -2364,18 +2584,19 @@ final class Collection(
     * Spark's formatted mode — the surface an operator uses to check
     * that the MQL filter translated to a pushdown-bearing Column and
     * the top-k compiled to TakeOrderedAndProject, without running the
-    * query. */
+    * query. It is always the Spark plan: a resident generation
+    * ([[query]]) answers with this plan's expressions on the driver. */
   def explainQuery(document: String, k: Int,
       filterJson: String = null): String =
-    formatted(query(document, k, filterJson))
+    formatted(exactQuery(embedder.embedOne(document), k, filterJson))
 
   /** [[explainQuery]] for [[queryApprox]] at `nprobe`: its formatted
     * plan, where the data scan's `PartitionFilters` show which lists'
     * documents the probe reads — the `cid` pruning, without running the
-    * query. */
+    * query. Like [[explainQuery]], always the Spark plan. */
   def explainQuery(document: String, k: Int, filterJson: String,
       nprobe: Int): String =
-    formatted(queryApprox(document, k, nprobe, filterJson))
+    formatted(approxQuery(document, k, nprobe, filterJson)._1)
 
   private def formatted(q: DataFrame): String =
     q.queryExecution.explainString(

@@ -13,6 +13,15 @@ class KaerSpec extends SparkTestBase {
   private def newSession(root: String) =
     new KaerSession(spark, root, HashingEmbedder(64))
 
+  /** `body` on the Spark path: a broadcast threshold of -1 keeps every
+    * generation off the driver. */
+  private def onSparkPath[T](body: => T): T = {
+    val key = "spark.sql.autoBroadcastJoinThreshold"
+    val old = spark.conf.getOption(key)
+    spark.conf.set(key, "-1")
+    try body finally old.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+  }
+
   /** The delete count in the sidecar of the side index at `indexDir`,
     * which keeps no table of dead ids beside it. */
   private def deletedCount(indexDir: String): Long = {
@@ -182,6 +191,7 @@ class KaerSpec extends SparkTestBase {
 
   test("queryApprox: no Spark job while building, at most 1 when run; " +
       "a job-free centroid read; tombstone and tail semantics kept") {
+      onSparkPath {
     import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
     val root = tmpDir("kaer-ivf-jobs")
     val c = newSession(root).createCollection("v")
@@ -250,7 +260,7 @@ class KaerSpec extends SparkTestBase {
     assert(ids(c.query("job doc 12 topic 2", 1)) == Seq(41L))
     val after = ids(c.queryApprox("job doc 12 topic 2", 100, 4))
     assert(after == all, after)
-  }
+  }}
 
   test("queryApprox crash window: a clustered generation swapped in " +
       "under the previous build's stale index answers by the data's own " +
@@ -2125,6 +2135,27 @@ class KaerSpec extends SparkTestBase {
     assert(marked(s"$root/empty/data") &&
       hfs.listStatus(marker.getParent).map(_.getPath.getName).toSeq ==
         Seq("_meta_variant"))
+  }
+
+  test("one storage format: the upgrade at open changes no document, so " +
+      "a capture-enabled store records no change event and consumes no " +
+      "op_time") {
+    val root = tmpDir("kaer-upgrade-capture")
+    val c = newSession(root).createCollection("c")
+    c.insert(Data().withDocuments(Seq("a", "b"))
+      .withMetadatas(Seq(Map("g" -> 1), Map("g" -> 2))))
+    c.enableChangeStream()
+    c.updateDoc("""{"g": 1}""", """{"$set": {"s": 1}}""") // op_time 1
+    assert(hfs.delete(new org.apache.hadoop.fs.Path(s"$root/c/data",
+      "_meta_variant"), false))
+    val changes = s"$root/c/changes"
+    val logged = filesOf(changes)
+    val r = newSession(root).getCollection("c")
+    assert(marked(s"$root/c/data"))
+    assert(filesOf(changes) == logged, "the upgrade wrote to changes/")
+    r.updateDoc("""{"g": 2}""", """{"$set": {"s": 2}}""")
+    assert(r.watch().collect().map(r => (r.getLong(0), r.getLong(2)))
+      .toSeq.sorted == Seq((1L, 1L), (2L, 2L)))
   }
 
   test("queryApprox on an IVF-clustered collection whose rows were all " +

@@ -14,11 +14,7 @@ import org.scalacheck.{Gen, Prop, Test => SCTest}
   */
 class MqlFilterPropSpec extends SparkTestBase with MetaForms {
   import spark.implicits._
-
-  // 2^53: the first long a double cannot distinguish from its neighbor —
-  // the int64-exactness hot zone (comparisons here MUST go through the
-  // long view, a double would collapse BIG and BIG+1)
-  private val Big = 9007199254740992L
+  import MqlFilterPropSpec._
 
   // 48 docs: k in 0..19, some with a second field, some missing k, and
   // 8 docs with k in the 2^53 neighborhood
@@ -41,119 +37,6 @@ class MqlFilterPropSpec extends SparkTestBase with MetaForms {
       val mt = "\"tag\": \"(t\\d)\"".r.findFirstMatchIn(j).map(_.group(1))
       (i, (mk, mt))
     }.toMap
-
-  sealed trait P {
-    def json: String
-    def eval(d: (Option[Long], Option[String])): Boolean
-  }
-  case class Cmp(op: String, v: Long) extends P {
-    def json = s"""{"k": {"$$$op": $v}}"""
-    def eval(d: (Option[Long], Option[String])) = { val k = d._1; k.exists { kk =>
-      op match {
-        case "eq" => kk == v; case "ne" => kk != v
-        case "gt" => kk > v; case "gte" => kk >= v
-        case "lt" => kk < v; case "lte" => kk <= v
-      }
-    } || (op == "ne" && k.isEmpty) } // MQL: $ne matches missing fields
-  }
-  case class In(vs: Seq[Long], neg: Boolean) extends P {
-    def json =
-      s"""{"k": {"${if (neg) "$nin" else "$in"}": [${vs.mkString(",")}]}}"""
-    def eval(d: (Option[Long], Option[String])) =
-      if (neg) !d._1.exists(vs.contains) // $nin matches missing too
-      else d._1.exists(vs.contains)
-  }
-  case class Logic(op: String, cs: Seq[P]) extends P {
-    def json = s"""{"$$$op": [${cs.map(_.json).mkString(",")}]}"""
-    def eval(d: (Option[Long], Option[String])) = op match {
-      case "and" => cs.forall(_.eval(d))
-      case "or"  => cs.exists(_.eval(d))
-      case "nor" => !cs.exists(_.eval(d))
-    }
-  }
-  case class Exists(want: Boolean) extends P {
-    def json = s"""{"k": {"$$exists": $want}}"""
-    def eval(d: (Option[Long], Option[String])) = d._1.isDefined == want
-  }
-  case class TagEq(v: String) extends P {
-    def json = s"""{"tag": "$v"}"""
-    def eval(d: (Option[Long], Option[String])) = d._2.contains(v)
-  }
-  case class TagRegex(prefixDigit: Int, ci: Boolean) extends P {
-    def json =
-      if (ci) s"""{"tag": {"$$regex": "^T$prefixDigit", "$$options": "i"}}"""
-      else s"""{"tag": {"$$regex": "^t$prefixDigit"}}"""
-    def eval(d: (Option[Long], Option[String])) =
-      d._2.exists(_.startsWith(s"t$prefixDigit"))
-  }
-  case class TagExists(want: Boolean) extends P {
-    def json = s"""{"tag": {"$$exists": $want}}"""
-    def eval(d: (Option[Long], Option[String])) = d._2.isDefined == want
-  }
-  case class Mod(m: Long, r: Long) extends P {
-    def json = s"""{"k": {"$$mod": [$m, $r]}}"""
-    def eval(d: (Option[Long], Option[String])) = d._1.exists(_ % m == r)
-  }
-  case class Bits(op: String, mask: Long, asPositions: Boolean) extends P {
-    def json =
-      if (asPositions) {
-        val ps = (0 to 63).filter(b => (mask & (1L << b)) != 0L)
-        s"""{"k": {"$$$op": [${ps.mkString(",")}]}}"""
-      } else s"""{"k": {"$$$op": $mask}}"""
-    def eval(d: (Option[Long], Option[String])) = d._1.exists { kk =>
-      op match {
-        case "bitsAllSet" => (kk & mask) == mask
-        case "bitsAllClear" => (kk & mask) == 0L
-        case "bitsAnySet" => (kk & mask) != 0L
-        case "bitsAnyClear" => (kk & mask) != mask
-      }
-    }
-  }
-
-  private val genCmp: Gen[P] = for {
-    op <- Gen.oneOf("eq", "ne", "gt", "gte", "lt", "lte")
-    // half the literals land in the 2^53 neighborhood where only an
-    // exact long comparison distinguishes adjacent values
-    v <- Gen.oneOf(Gen.choose(-2L, 21L), Gen.choose(Big - 2, Big + 3))
-  } yield Cmp(op, v)
-
-  private val genIn: Gen[P] = for {
-    vs <- Gen.nonEmptyListOf(Gen.oneOf(
-      Gen.choose(0L, 20L), Gen.choose(Big - 1, Big + 2)))
-      .map(_.distinct.take(5))
-    neg <- Gen.oneOf(true, false)
-  } yield In(vs, neg)
-
-  private val genMod: Gen[P] = for {
-    d <- Gen.choose(1L, 9L)
-    r <- Gen.choose(0L, d - 1)
-  } yield Mod(d, r)
-
-  private val genTag: Gen[P] = Gen.oneOf(
-    Gen.choose(0, 4).map(i => TagEq(s"t$i")),
-    for { i <- Gen.choose(0, 4); ci <- Gen.oneOf(true, false) }
-      yield TagRegex(i, ci),
-    Gen.oneOf(true, false).map(TagExists))
-
-  private val genBits: Gen[P] = for {
-    op <- Gen.oneOf("bitsAllSet", "bitsAllClear", "bitsAnySet",
-      "bitsAnyClear")
-    // small masks exercise k∈0..19; the 2^53 bit exercises the int64
-    // neighborhood where a double view would alias adjacent values
-    mask <- Gen.oneOf(Gen.choose(1L, 31L),
-      Gen.choose(1L, 7L).map(_ | (1L << 53)))
-    asPos <- Gen.oneOf(true, false)
-  } yield Bits(op, mask, asPos)
-
-  private val genLeaf: Gen[P] =
-    Gen.oneOf(genCmp, genIn, genMod, genTag, genBits,
-      Gen.oneOf(true, false).map(Exists))
-
-  private val genPred: Gen[P] = for {
-    op <- Gen.oneOf("and", "or", "nor")
-    n <- Gen.choose(1, 3)
-    cs <- Gen.listOfN(n, genLeaf)
-  } yield Logic(op, cs)
 
   test("random MQL predicates: Catalyst translation == in-memory model") {
     val prop = Prop.forAll(Gen.oneOf(genPred, genLeaf)) { p =>
@@ -276,4 +159,128 @@ class MqlFilterPropSpec extends SparkTestBase with MetaForms {
       SCTest.Parameters.default.withMinSuccessfulTests(60), prop)
     assert(res.passed, res.status.toString)
   }
+}
+
+/** The random MQL predicates of [[MqlFilterPropSpec]], with their
+  * in-memory model over documents `{k: <long>, tag: <string>}` (either
+  * field may be missing): shared with the collection specs, which run
+  * the same predicates through both query paths. */
+object MqlFilterPropSpec {
+  // 2^53: the first long a double cannot distinguish from its neighbor —
+  // the int64-exactness hot zone (comparisons here MUST go through the
+  // long view, a double would collapse BIG and BIG+1)
+  val Big = 9007199254740992L
+
+  sealed trait P {
+    def json: String
+    def eval(d: (Option[Long], Option[String])): Boolean
+  }
+  case class Cmp(op: String, v: Long) extends P {
+    def json = s"""{"k": {"$$$op": $v}}"""
+    def eval(d: (Option[Long], Option[String])) = { val k = d._1; k.exists { kk =>
+      op match {
+        case "eq" => kk == v; case "ne" => kk != v
+        case "gt" => kk > v; case "gte" => kk >= v
+        case "lt" => kk < v; case "lte" => kk <= v
+      }
+    } || (op == "ne" && k.isEmpty) } // MQL: $ne matches missing fields
+  }
+  case class In(vs: Seq[Long], neg: Boolean) extends P {
+    def json =
+      s"""{"k": {"${if (neg) "$nin" else "$in"}": [${vs.mkString(",")}]}}"""
+    def eval(d: (Option[Long], Option[String])) =
+      if (neg) !d._1.exists(vs.contains) // $nin matches missing too
+      else d._1.exists(vs.contains)
+  }
+  case class Logic(op: String, cs: Seq[P]) extends P {
+    def json = s"""{"$$$op": [${cs.map(_.json).mkString(",")}]}"""
+    def eval(d: (Option[Long], Option[String])) = op match {
+      case "and" => cs.forall(_.eval(d))
+      case "or"  => cs.exists(_.eval(d))
+      case "nor" => !cs.exists(_.eval(d))
+    }
+  }
+  case class Exists(want: Boolean) extends P {
+    def json = s"""{"k": {"$$exists": $want}}"""
+    def eval(d: (Option[Long], Option[String])) = d._1.isDefined == want
+  }
+  case class TagEq(v: String) extends P {
+    def json = s"""{"tag": "$v"}"""
+    def eval(d: (Option[Long], Option[String])) = d._2.contains(v)
+  }
+  case class TagRegex(prefixDigit: Int, ci: Boolean) extends P {
+    def json =
+      if (ci) s"""{"tag": {"$$regex": "^T$prefixDigit", "$$options": "i"}}"""
+      else s"""{"tag": {"$$regex": "^t$prefixDigit"}}"""
+    def eval(d: (Option[Long], Option[String])) =
+      d._2.exists(_.startsWith(s"t$prefixDigit"))
+  }
+  case class TagExists(want: Boolean) extends P {
+    def json = s"""{"tag": {"$$exists": $want}}"""
+    def eval(d: (Option[Long], Option[String])) = d._2.isDefined == want
+  }
+  case class Mod(m: Long, r: Long) extends P {
+    def json = s"""{"k": {"$$mod": [$m, $r]}}"""
+    def eval(d: (Option[Long], Option[String])) = d._1.exists(_ % m == r)
+  }
+  case class Bits(op: String, mask: Long, asPositions: Boolean) extends P {
+    def json =
+      if (asPositions) {
+        val ps = (0 to 63).filter(b => (mask & (1L << b)) != 0L)
+        s"""{"k": {"$$$op": [${ps.mkString(",")}]}}"""
+      } else s"""{"k": {"$$$op": $mask}}"""
+    def eval(d: (Option[Long], Option[String])) = d._1.exists { kk =>
+      op match {
+        case "bitsAllSet" => (kk & mask) == mask
+        case "bitsAllClear" => (kk & mask) == 0L
+        case "bitsAnySet" => (kk & mask) != 0L
+        case "bitsAnyClear" => (kk & mask) != mask
+      }
+    }
+  }
+
+  private val genCmp: Gen[P] = for {
+    op <- Gen.oneOf("eq", "ne", "gt", "gte", "lt", "lte")
+    // half the literals land in the 2^53 neighborhood where only an
+    // exact long comparison distinguishes adjacent values
+    v <- Gen.oneOf(Gen.choose(-2L, 21L), Gen.choose(Big - 2, Big + 3))
+  } yield Cmp(op, v)
+
+  private val genIn: Gen[P] = for {
+    vs <- Gen.nonEmptyListOf(Gen.oneOf(
+      Gen.choose(0L, 20L), Gen.choose(Big - 1, Big + 2)))
+      .map(_.distinct.take(5))
+    neg <- Gen.oneOf(true, false)
+  } yield In(vs, neg)
+
+  private val genMod: Gen[P] = for {
+    d <- Gen.choose(1L, 9L)
+    r <- Gen.choose(0L, d - 1)
+  } yield Mod(d, r)
+
+  private val genTag: Gen[P] = Gen.oneOf(
+    Gen.choose(0, 4).map(i => TagEq(s"t$i")),
+    for { i <- Gen.choose(0, 4); ci <- Gen.oneOf(true, false) }
+      yield TagRegex(i, ci),
+    Gen.oneOf(true, false).map(TagExists))
+
+  private val genBits: Gen[P] = for {
+    op <- Gen.oneOf("bitsAllSet", "bitsAllClear", "bitsAnySet",
+      "bitsAnyClear")
+    // small masks exercise k∈0..19; the 2^53 bit exercises the int64
+    // neighborhood where a double view would alias adjacent values
+    mask <- Gen.oneOf(Gen.choose(1L, 31L),
+      Gen.choose(1L, 7L).map(_ | (1L << 53)))
+    asPos <- Gen.oneOf(true, false)
+  } yield Bits(op, mask, asPos)
+
+  val genLeaf: Gen[P] =
+    Gen.oneOf(genCmp, genIn, genMod, genTag, genBits,
+      Gen.oneOf(true, false).map(Exists))
+
+  val genPred: Gen[P] = for {
+    op <- Gen.oneOf("and", "or", "nor")
+    n <- Gen.choose(1, 3)
+    cs <- Gen.listOfN(n, genLeaf)
+  } yield Logic(op, cs)
 }
