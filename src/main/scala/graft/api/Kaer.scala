@@ -328,9 +328,12 @@ final class KaerSession(
   * [[queryApprox]] then evaluate their Spark plan's own optimized
   * expressions over that copy with no Spark job. Larger generations take
   * the Spark plan. The copy lives in the per-generation state
-  * ([[Generation]]) beside the scan, the centroids and the IVF sidecar:
-  * a commit drops it, an insert extends it, and the session releases it
-  * on close, drop and rename.
+  * ([[Generation]]) beside the scan and the centroids: a commit drops
+  * it, the first query after an insert adds the inserted rows, and the
+  * session releases it on close, drop and rename. Decoded rows take more
+  * memory than their parquet bytes (3.0× for kaerbench's documents), so
+  * a higher threshold also means larger copies on the driver, one per
+  * open handle.
   *
   * Recovery semantics (db/db.go:209-226): the id watermark is
   * max(sidecar.lastId, max(_m_id) in data) — the *intent* of the
@@ -793,18 +796,21 @@ object Collection {
   private[api] final case class Removed(ids: DataFrame, n: Long)
     extends Change
 
-  /** A generation's rows on the driver, as Spark internal rows in the
-    * stored column order, grouped by IVF list (`cid`); a flat generation
-    * is one group. */
-  private[api] type Resident = Map[Long, Vector[InternalRow]]
-
-  /** `base` with `rows` added to their lists; `cid` is the ordinal of the
-    * list column, None in a flat generation. */
-  private[api] def grouped(base: Resident, rows: Array[InternalRow],
-      cid: Option[Int]): Resident =
-    rows.groupBy(r => cid.fold(0L)(r.getLong)).foldLeft(base) {
-      case (acc, (l, rs)) => acc.updated(l, acc.getOrElse(l, Vector.empty) ++ rs)
-    }
+  /** The rows of a generation's data `files` on the driver, as Spark
+    * internal rows in the stored column order, grouped by IVF list
+    * (`cid`; a flat generation is one group). */
+  private[api] final case class Resident(
+      lists: Map[Long, Vector[InternalRow]], files: Set[String]) {
+    /** With `rows`, those of the files `more`, added to their lists;
+      * `cid` is the ordinal of the list column, None in a flat
+      * generation. */
+    def plus(rows: Array[InternalRow], cid: Option[Int],
+        more: Set[String]): Resident = Resident(
+      rows.groupBy(r => cid.fold(0L)(r.getLong)).foldLeft(lists) {
+        case (acc, (l, rs)) =>
+          acc.updated(l, acc.getOrElse(l, Vector.empty) ++ rs)
+      }, files ++ more)
+  }
 }
 
 final class Collection(
@@ -843,13 +849,11 @@ final class Collection(
   /** What this handle keeps of the live data generation, each part built
     * when first needed. [[commitGeneration]] drops it all
     * (single-writer contract: after a change from outside, reopen). An
-    * insert adds files to the same generation: it relists the scan and
-    * extends the resident copy.
+    * insert adds files to the same generation: it relists the scan, and
+    * the next query adds those files' rows to the resident copy.
     *  - `rows`: [[stored]]. Building it lists the data files, which
     *    costs a query about as much as planning it.
     *  - `centroids`: those of a clustered generation, read on the driver.
-    *  - `ivfSidecar`: the IVF index sidecar as [[queryApprox]] reads it.
-    *    Every [[SideIndex]] sidecar write through this handle drops it.
     *  - `resident`: the stored rows on the driver, see [[residentRows]]. */
   private final class Generation {
     private var frame: Option[DataFrame] = None
@@ -869,7 +873,6 @@ final class Collection(
         Some(graft.operators.IvfIndex.readCentroidTable(spark,
           centroidsDir.toString))
       else None
-    var ivfSidecar: Option[Option[IndexMeta]] = None
     var resident: Option[Collection.Resident] = None
   }
   private var generation: Option[Generation] = None
@@ -1058,18 +1061,16 @@ final class Collection(
     * The rows carry `_m_meta_v`, as every file of a generation does (an
     * empty collection's directory was marked when it was opened).
     *
-    * When the generation is resident on the driver ([[residentRows]]),
-    * the insert extends that copy with the rows it wrote, read back by
-    * one job (`_m_id > start`), if the grown generation is still within
-    * the limit; otherwise the copy is dropped. A failed write drops it.
+    * A copy of the generation held on the driver ([[residentRows]])
+    * stays: the next query reads the files the insert wrote into it, by
+    * one job.
     */
   def insertDF(base: DataFrame): Unit = {
     val start = lastId
     val (withIds, n) = zipWithId(base, start)
     if (n > 0) {
       val rows = withMetaV(embedded(withIds))
-      val copy = generation.flatMap(_.resident)
-      generation.foreach { g => g.resident = None; g.relist() }
+      generation.foreach(_.relist())
       dataCentroids match {
         case Some(cs) => writeClustered(rows, cs, dataDir, "append")
         case None => rows.write.mode("append").parquet(dataDir)
@@ -1077,12 +1078,6 @@ final class Collection(
       lastId = start + n
       rowsCount += n
       writeSidecar()
-      copy.foreach { c =>
-        val g = gen
-        if (fits(g)) g.resident = Some(Collection.grouped(c,
-          PlanBridge.collectInternal(g.rows.filter(col(Schema.IdCol) > start)),
-          cidIndex(g)))
-      }
       if (captureChanges) {
         // insert events straight off the just-written id range: a
         // pushed-down rescan of the data dir, never a re-embed
@@ -1183,7 +1178,15 @@ final class Collection(
     var rebuilds = 0L
     var appends = 0L
 
-    def sidecar: Option[IndexMeta] = Meta.readIndex(spark, root)
+    // the sidecar as last read through this handle; each write below
+    // drops it (single-writer contract: after a change from outside,
+    // reopen)
+    private var held: Option[Option[IndexMeta]] = None
+    def sidecar: Option[IndexMeta] = held.getOrElse {
+      val s = Meta.readIndex(spark, root)
+      held = Some(s)
+      s
+    }
 
     /** The ladder; `rebuildAll` is the index's full [[rebuild]]. */
     def ensure(nlist: Int)(rebuildAll: => Unit): Unit = sidecar match {
@@ -1199,7 +1202,7 @@ final class Collection(
         appendTail(m.indexedLastId)
         Meta.writeIndex(spark, root, m.copy(indexedLastId = lastId,
           indexedRows = m.indexedRows + (lastId - m.indexedLastId)))
-        forgetIvfSidecar()
+        held = None
         appends += 1
       case _ => rebuildAll
     }
@@ -1212,10 +1215,10 @@ final class Collection(
       if (hasData && rowsCount > 0) {
         Meta.writeIndex(spark, root, sidecar
           .getOrElse(IndexMeta(lastId, rowsCount, nlist)).copy(stale = true))
-        forgetIvfSidecar()
+        held = None
         build
         Meta.writeIndex(spark, root, IndexMeta(lastId, rowsCount, nlist))
-        forgetIvfSidecar()
+        held = None
         rebuilds += 1
       }
 
@@ -1224,30 +1227,14 @@ final class Collection(
     def countDeleted(m: IndexMeta, n: Long): Unit =
       if (n > 0) {
         Meta.writeIndex(spark, root, m.copy(tombstones = m.tombstones + n))
-        forgetIvfSidecar()
+        held = None
       }
 
     /** Content changed under live ids, which no counter can express:
       * the next ensure must rebuild. */
     def poison(): Unit = sidecar.foreach { m =>
       Meta.writeIndex(spark, root, m.copy(stale = true))
-      forgetIvfSidecar()
-    }
-  }
-
-  /** A side index sidecar was written: drop the IVF sidecar
-    * [[queryApprox]] holds (either index's write drops it). */
-  private def forgetIvfSidecar(): Unit =
-    generation.foreach(_.ivfSidecar = None)
-
-  /** The IVF index sidecar, read once per generation and held until a
-    * sidecar write through this handle. */
-  private def ivfSidecar: Option[IndexMeta] = {
-    val g = gen
-    g.ivfSidecar.getOrElse {
-      val s = ivf.sidecar
-      g.ivfSidecar = Some(s)
-      s
+      held = None
     }
   }
 
@@ -1426,8 +1413,9 @@ final class Collection(
     * watermark (inserted after the last [[ensureIndex]]) are not
     * returned. Requires an index: without an index sidecar, or over a
     * generation that is not clustered (an index built before this
-    * layout), it fails naming [[ensureIndex]]. The sidecar and the
-    * centroids are read once per generation (see [[Generation]]).
+    * layout), it fails naming [[ensureIndex]]. The centroids are read
+    * once per generation (see [[Generation]]), the index sidecar once
+    * per write through this handle ([[SideIndex]]).
     *
     * A resident generation ([[residentRows]]) answers on the driver with
     * the same plan's expressions, over the probed lists' rows only, and
@@ -1436,7 +1424,7 @@ final class Collection(
       filterJson: String = null): DataFrame = {
     val (q, lists) = approxQuery(document, k, nprobe, filterJson)
     residentRows(gen).flatMap(r =>
-      onDriver(q, lists.iterator.flatMap(r.getOrElse(_, Vector.empty))))
+      onDriver(q, lists.iterator.flatMap(r.lists.getOrElse(_, Vector.empty))))
       .getOrElse(q)
   }
 
@@ -1444,7 +1432,7 @@ final class Collection(
   private def approxQuery(document: String, k: Int, nprobe: Int,
       filterJson: String): (DataFrame, Seq[Long]) = {
     require(nprobe >= 1, s"queryApprox needs nprobe >= 1, got $nprobe")
-    val (covered, cents) = (ivfSidecar, dataCentroids) match {
+    val (covered, cents) = (ivf.sidecar, dataCentroids) match {
       case (Some(m), Some(cs)) => (m.indexedLastId, cs)
       case _ => throw new IllegalArgumentException(s"collection '$name' " +
         "has no IVF index over its current data — queryApprox needs " +
@@ -1487,17 +1475,23 @@ final class Collection(
     g.centroids.map(_ => g.rows.schema.fieldIndex(CidCol))
 
   /** The live generation's rows on the driver when it [[fits]]: read by
-    * one job on first use, then kept until [[commitGeneration]] (an
-    * insert extends them). Above the limit there is no copy, and one
-    * held from before the limit was lowered is dropped. */
+    * one job on first use, then kept until [[commitGeneration]]. The
+    * files an insert adds are read by one job on the next call, and only
+    * those (a read of `_m_id` above the copy's ids would open every file
+    * of the generation). Above the limit there is no copy, and one held
+    * from before the limit was lowered is dropped. */
   private def residentRows(g: Generation): Option[Collection.Resident] =
     if (!fits(g)) { g.resident = None; None }
-    else g.resident.orElse {
-      val r = Collection.grouped(Map.empty,
-        if (hasData) PlanBridge.collectInternal(g.rows) else Array.empty,
-        cidIndex(g))
+    else {
+      val held =
+        g.resident.getOrElse(Collection.Resident(Map.empty, Set.empty))
+      val fresh = g.rows.inputFiles.toSet -- held.files
+      val r = if (fresh.isEmpty) held else held.plus(
+        PlanBridge.collectInternal(spark.read.schema(g.rows.schema)
+          .option("basePath", dataDir).parquet(fresh.toSeq: _*)),
+        cidIndex(g), fresh)
       g.resident = Some(r)
-      g.resident
+      Some(r)
     }
 
   /** Answer `q` — a plan [[ranked]] built over [[stored]] — from
@@ -2566,7 +2560,8 @@ final class Collection(
   def queryVector(qv: Array[Float], k: Int,
       filterJson: String = null): DataFrame = {
     val q = exactQuery(qv, k, filterJson)
-    residentRows(gen).flatMap(r => onDriver(q, r.valuesIterator.flatten))
+    residentRows(gen).flatMap(r =>
+      onDriver(q, r.lists.valuesIterator.flatten))
       .getOrElse(q)
   }
 

@@ -47,6 +47,25 @@ class ResidentQuerySpec extends SparkTestBase {
     } finally sc.removeSparkListener(listener)
   }
 
+  /** The records Spark tasks read while `body` runs, and its result. */
+  private def readOf[T](body: => T): (T, Long) = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
+    val sc = spark.sparkContext
+    val read = new java.util.concurrent.atomic.AtomicLong
+    val listener = new SparkListener {
+      override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+        Option(e.taskMetrics).foreach(m =>
+          read.addAndGet(m.inputMetrics.recordsRead))
+    }
+    org.apache.spark.graft.ListenerBridge.drain(sc)
+    sc.addSparkListener(listener)
+    try {
+      val out = body
+      org.apache.spark.graft.ListenerBridge.drain(sc)
+      (out, read.get)
+    } finally sc.removeSparkListener(listener)
+  }
+
   /** Whether `df` reads only rows held on the driver. */
   private def resident(df: DataFrame): Boolean =
     df.queryExecution.analyzed.collectLeaves()
@@ -65,13 +84,20 @@ class ResidentQuerySpec extends SparkTestBase {
 
   /** `q` on both paths: the resident answer is a local relation, the
     * Spark one is not, and they are equal. */
-  private def same(what: String)(q: => DataFrame): Unit = {
-    val local = q
-    val viaSpark = onSpark(q)
-    assert(resident(local) && !resident(viaSpark), what)
-    val (a, b) = (answer(local), answer(viaSpark))
-    assert(a._1 == b._1, s"$what: schema ${a._1} vs ${b._1}")
-    assert(a._2 == b._2, s"$what:\n resident ${a._2}\n spark    ${b._2}")
+  private def same(what: String)(q: => DataFrame): Unit =
+    sameAll(Seq(what -> (() => q)))
+
+  /** [[same]] for each of `qs`, every resident answer taken first (a
+    * query on the Spark path drops the copy). */
+  private def sameAll(qs: Seq[(String, () => DataFrame)]): Unit = {
+    val local = qs.map(_._2())
+    for (((what, q), l) <- qs.zip(local)) {
+      val viaSpark = onSpark(q())
+      assert(resident(l) && !resident(viaSpark), what)
+      val (a, b) = (answer(l), answer(viaSpark))
+      assert(a._1 == b._1, s"$what: schema ${a._1} vs ${b._1}")
+      assert(a._2 == b._2, s"$what:\n resident ${a._2}\n spark    ${b._2}")
+    }
   }
 
   private val langs = Seq("en", "de", "fr", "ja", "pt")
@@ -128,7 +154,8 @@ class ResidentQuerySpec extends SparkTestBase {
   test("parity: query, queryVector and queryApprox give the Spark path's " +
       "answer on the driver — random MQL filters and the kaerbench " +
       "templates, k >= n, tied distances, null embeddings, rows inserted " +
-      "after ensureIndex, and an emptied generation") {
+      "after ensureIndex and after the copy was built, and an emptied " +
+      "generation") {
     val c = new KaerSession(spark, tmpDir("resident-parity"),
       HashingEmbedder(64)).createCollection("c")
     c.insert(batch(0 until NoText))
@@ -160,7 +187,17 @@ class ResidentQuerySpec extends SparkTestBase {
     // the projection form rides the same answer
     same("query(project)")(c.query("doc 3", 4, templates(1), Seq("lang")))
 
-    assert(c.delete("{}") == 3000L)
+    // rows inserted after the copy was built: the next query adds them
+    assert(resident(c.query("doc 1", 3)))
+    c.insert(batch(3000 until 3300))
+    sameAll(filters.take(12).flatMap { case (f, i) =>
+      val text = texts(i % texts.size)
+      Seq(s"after insert: query($text, $f)" -> (() => c.query(text, 40, f)),
+        s"after insert: queryApprox($text, $f)" ->
+          (() => c.queryApprox(text, 40, 1 + i % 4, f)))
+    })
+
+    assert(c.delete("{}") == 3300L)
     for (f <- templates.take(3)) {
       same(s"emptied query($f)")(c.query("doc 1", 3, f))
       same(s"emptied queryApprox($f)")(c.queryApprox("doc 1", 3, 2, f))
@@ -221,11 +258,17 @@ class ResidentQuerySpec extends SparkTestBase {
     assert(onSpark(ids(c.queryApprox("doc 3 topic 3", 5, 2, f))) == near)
     assert(exact("doc 3 topic 3") == ((first, 1)), "rebuilt after -1")
 
-    // insertDF extends the copy (its read-back job runs in the insert)
+    // inserts keep the copy: the next query reads only the inserted
+    // rows, by one job, however many inserts came before it
     c.insert(Data().withDocuments(Seq("fresh words entirely"))
       .withMetadataJson(Seq("""{"n": 1}""")))
-    val (fresh, freshJobs) = exact("fresh words entirely")
-    assert(fresh.head == 41L && freshJobs == 0)
+    c.insert(Data().withDocuments(Seq("fresher words still"))
+      .withMetadataJson(Seq("""{"n": 2}""")))
+    val ((fresh, freshJobs), freshRead) =
+      readOf(exact("fresh words entirely"))
+    assert(fresh.head == 41L && freshJobs == 1 && freshRead == 2,
+      s"jobs=$freshJobs read=$freshRead")
+    assert(exact("fresh words entirely") == ((fresh, 0)))
     val (unindexed, _) = approx("fresh words entirely")
     assert(!unindexed.contains(41L))
     // ensureIndex's append: the next queryApprox covers the new row
