@@ -343,6 +343,11 @@ final class KaerSession(
   */
 object Collection {
 
+  /** The update operators a literal update document may use. */
+  private[api] val UpdateOperators = Seq("$set", "$inc", "$unset", "$min",
+    "$max", "$mul", "$push", "$addToSet", "$pull", "$pop", "$rename",
+    "$setOnInsert")
+
   /** Apply a literal update document to a metadata JSON string —
     * shared by the distributed rewrite (updateWhere's per-row UDF)
     * and the driver-side upsert insert path. `$setOnInsert` is a
@@ -1979,9 +1984,7 @@ final class Collection(
     require(opsCheck.isObject && opsCheck.properties().size() > 0,
       s"update document must be a non-empty object: $updateJson")
     opsCheck.properties().forEach(e =>
-      require(Seq("$set", "$inc", "$unset", "$min", "$max", "$mul",
-        "$push", "$addToSet", "$pull", "$pop", "$rename", "$setOnInsert")
-        .contains(e.getKey),
+      require(Collection.UpdateOperators.contains(e.getKey),
         s"unsupported update operator: ${e.getKey}"))
     val seed = m.createObjectNode()
     val f = m.readTree(filterJson)
@@ -2469,9 +2472,7 @@ final class Collection(
     val valueOps =
       Seq("$set", "$inc", "$unset", "$min", "$max", "$mul", "$setOnInsert")
     opsNode.properties().forEach { e =>
-      require(Seq("$set", "$inc", "$unset", "$min", "$max", "$mul",
-        "$push", "$addToSet", "$pull", "$pop", "$rename", "$setOnInsert")
-        .contains(e.getKey),
+      require(Collection.UpdateOperators.contains(e.getKey),
         s"unsupported update operator: ${e.getKey}")
       require(e.getValue.isObject,
         s"${e.getKey} operand must be an object: ${e.getValue}")

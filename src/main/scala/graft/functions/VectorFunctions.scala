@@ -45,4 +45,13 @@ object VectorFunctions {
 
   /** Cosine distance = 1 - cosine similarity. */
   def cosineDist(a: Column, b: Column): Column = lit(1.0) - cosineSim(a, b)
+
+  /** Random-hyperplane LSH banding of an embedding, as a generator of
+    * one `(band, bv)` row per band: `bv` packs the signs of the
+    * vector's projections onto hyperplanes `band·bits … band·bits +
+    * bits − 1` ([[graft.expr.TextHash.hyperBands]], one codegen'd pass,
+    * the same doubles as the oracles' list_sum fold). */
+  def hyperBands(embedding: Column, bitsPerBand: Int, nBands: Int): Column =
+    posexplode(toCol(graft.expr.HyperBandValues(toExpr(embedding),
+      bitsPerBand, nBands))).as(Seq("band", "bv"))
 }

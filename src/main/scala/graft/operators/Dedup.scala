@@ -115,32 +115,59 @@ object Dedup {
     * pairs — past any sane selectivity. Remedies in the message. */
   private[graft] val MaxBucketMembers = 10000
 
-  /** `ms` unchanged when under the cap; raises with a remediation
-    * message otherwise (raise_error's NullType coerces to ms's type in
-    * the otherwise branch, so the guard lives in the data path and
-    * cannot be pruned away). */
-  private def guardBucket(ms: Column, what: String): Column =
-    when(size(ms) <= MaxBucketMembers, ms)
-      .otherwise(raise_error(concat(
-        lit(s"$what LSH bucket overflow: "), size(ms).cast("string"),
-        lit(s" members > cap $MaxBucketMembers — raise bands/bits-per-band " +
-          "selectivity or run exact dedup first"))))
+  /** The remedy an overflowing band bucket names. */
+  private val LshRemedy =
+    "raise bands/bits-per-band selectivity or run exact dedup first"
 
-  /** LSH candidate pairs with hashed shingle sets attached, over any
-    * `(id, text)` corpus — the reusable core of the MinHash operators.
-    *
-    * Single-pass shape (the self-join alternative recomputes the whole
-    * shingle+minhash pipeline for both sides): fused native
-    * shingle/signature expression → explode one row per band →
-    * ONE shuffle on the (band, band-hash) bucket key → within-bucket
-    * pair expansion over the collected members → dedup pairs that
-    * collided in several bands. The quadratic step is confined to a
-    * bucket; at larger scale you add signature rows per band (higher
-    * selectivity) rather than change the plan. Shingle sets travel as
-    * 60-bit longs, not strings, so the bucket shuffle stays narrow.
-    */
+  /** The bucket guard: `v` while the bucket's member count `n` is within
+    * `cap`; past it, a raise_error reading "`what`: n members > cap …
+    * — `remedy`". raise_error's NullType coerces to v's type in the
+    * otherwise branch, so the guard lives in the data path and cannot
+    * be pruned away. The in-row form guards a collected member array
+    * (`guardBucket(ms, size(ms), …)`); [[guardJoinKey]] is the join
+    * form. */
+  private[graft] def guardBucket(v: Column, n: Column, cap: Long,
+      what: String, remedy: String): Column =
+    when(n <= cap, v).otherwise(raise_error(concat(
+      lit(s"$what: "), n.cast("string"),
+      lit(s" members > cap $cap — $remedy"))))
+
+  /** The join form of the bucket guard, for blockings that pair rows by
+    * an equi-join instead of an in-row expansion: `rows` with its `key`
+    * column wrapped in [[guardBucket]] over the key's row count. A join
+    * key must be evaluated to hash, so the guard cannot be pruned away
+    * (a guarded standalone column can be) and it fires before the join
+    * streams a single pair. Keys with fewer than `minMembers` rows drop
+    * out (2 where a lone row cannot pair). */
+  private[graft] def guardJoinKey(rows: DataFrame, key: String, cap: Long,
+      what: String, remedy: String, minMembers: Int): DataFrame = {
+    val counts = rows.groupBy(key).agg(count(lit(1)).as("_cn"))
+      .filter(col("_cn") >= minMembers)
+    rows.join(counts, key)
+      .select(rows.columns.toSeq.map(c =>
+        if (c == key) guardBucket(col(c), col("_cn"), cap, what, remedy).as(c)
+        else col(c)): _*)
+  }
+
+  /** The exact Jaccard verify of two shingle-hash sets, in integer
+    * arithmetic: |a ∩ b| / |a ∪ b| ≥ p/q, written
+    * (p + q)·|a ∩ b| ≥ p·(|a| + |b|) so that one intersection serves
+    * the compare. */
+  private def jaccardAtLeast(a: Column, b: Column, p: Int, q: Int): Column =
+    jaccardInter(a, b) * (p + q) >= (size(a) + size(b)).cast("long") * p
+
+  /** floor(1000 · |a ∩ b| / |a ∪ b|), the reported score. */
+  private def jaccardPermille(a: Column, b: Column): Column = {
+    val inter = jaccardInter(a, b)
+    floor(inter * lit(1000.0) /
+      (size(a).cast("long") + size(b).cast("long") - inter)).cast("long")
+  }
+
+  private def jaccardInter(a: Column, b: Column): Column =
+    size(array_intersect(a, b)).cast("long")
+
   /** (id, sh, band, bh): one row per (doc, band) with the band's bucket
-    * hash — the shared prefix of [[lshCandidates]] and the skew probe's
+    * hash — the shared prefix of [[jaccardPairs]] and the skew probe's
     * [[lshBucketSizes]]. */
   private def bandedSignatures(corpus: DataFrame): DataFrame = {
     val (k, bands) = textDials(corpus.sparkSession)
@@ -194,23 +221,9 @@ object Dedup {
   }
 
   private[graft] def embedBucketSizes(corpus: DataFrame,
-      bitsPerBand: Int, nBands: Int): DataFrame = {
-    import org.apache.spark.sql.graft.ColumnBridge.{column => toCol, expression => toExpr}
-    val bandVals = toCol(graft.expr.HyperBandValues(
-      toExpr(col("embedding")), bitsPerBand, nBands))
-    corpus.select(col("id"),
-        posexplode(bandVals).as(Seq("band", "bv")))
+      bitsPerBand: Int, nBands: Int): DataFrame =
+    corpus.select(col("id"), hyperBands(col("embedding"), bitsPerBand, nBands))
       .groupBy(col("band"), col("bv")).agg(count(lit(1)).as("n"))
-  }
-
-  private[graft] def lshCandidates(corpus: DataFrame): DataFrame = {
-    val (k, bands) = textDials(corpus.sparkSession)
-    lshCandidates(corpus, k, bands)
-  }
-
-  private[graft] def lshCandidates(corpus: DataFrame, k: Int,
-      bands: Int): DataFrame =
-    candidatesFromBands(bandedSignatures(corpus, k, bands))
 
   /** Pin the bucket shuffle at the session's shuffle-partition width
     * with an EXPLICIT numPartitions (r13): AQE coalesces post-shuffle
@@ -228,44 +241,61 @@ object Dedup {
     banded.repartition(n, cols: _*)
   }
 
-  private def candidatesFromBands(banded: DataFrame): DataFrame = {
-    pinBuckets(banded, Seq(col("band"), col("bh")))
-      .groupBy(col("band"), col("bh"))
-      .agg(collect_list(struct(col("id"), col("sh"))).as("ms"))
-      .filter(size(col("ms")) > 1)
-      .withColumn("ms", guardBucket(col("ms"), "text"))
-      .select(explode(flatten(transform(col("ms"), a =>
-        transform(filter(col("ms"), b => b("id") > a("id")), b =>
-          struct(a("id").as("id_a"), b("id").as("id_b"),
-            a("sh").as("sh_a"), b("sh").as("sh_b")))))).as("p"))
-      .select(col("p.id_a").as("id_a"), col("p.id_b").as("id_b"),
-        col("p.sh_a").as("sh_a"), col("p.sh_b").as("sh_b"))
+  /** The LSH family's one in-bucket pair expansion. `banded` holds one
+    * row per (member, bucket): an `id`, the `bucket` columns and the
+    * `carry` columns that `keep` and `out` read. Single-pass shape (the
+    * self-join alternative recomputes the whole signature pipeline for
+    * both sides): ONE pinned shuffle on the bucket collects its members,
+    * [[guardBucket]] caps the bucket, and each member pair a < b that
+    * `keep(a, b)` accepts becomes one (id_a, id_b, out(a, b)…) row;
+    * pairs that collided in several bands dedup last. The quadratic
+    * step is confined to a bucket; at larger scale you raise band
+    * selectivity rather than change the plan.
+    *
+    * `keep` runs inside the filter lambda, BEFORE the pair struct is
+    * allocated, so a rejected candidate costs its verify and nothing
+    * else (r19 `8df255c` on simhash: 4.0M candidates → 352k structs
+    * shuffled, 14.5 → 5.6 s), and only verified pairs ride the dedup
+    * shuffle. `keep` and `out` are pure in the pair, so verifying
+    * before or after the dedup selects the same rows. With no `carry`,
+    * a member is its bare id: ids-only buckets are ~50× smaller than
+    * id+shingle ones (at sf1 the humongous shingle bucket arrays drove
+    * ~40 s full-GC stalls on a 48g heap). */
+  private def bucketPairs(banded: DataFrame, bucket: Seq[String],
+      carry: Seq[String], what: String)(
+      keep: (Column, Column) => Column,
+      out: (Column, Column) => Seq[Column] = (_, _) => Nil): DataFrame = {
+    val ms = col("ms")
+    def id(m: Column) = if (carry.isEmpty) m else m("id")
+    pinBuckets(banded, bucket.map(col))
+      .groupBy(bucket.map(col): _*)
+      .agg(collect_list(
+        if (carry.isEmpty) col("id") else struct(("id" +: carry).map(col): _*))
+        .as("ms"))
+      .filter(size(ms) > 1)
+      .select(guardBucket(ms, size(ms), MaxBucketMembers,
+        s"$what LSH bucket overflow", LshRemedy).as("ms"))
+      .select(explode(flatten(transform(ms, a =>
+        transform(filter(ms, b => id(b) > id(a) && keep(a, b)), b =>
+          struct(id(a).as("id_a") +: id(b).as("id_b") +: out(a, b): _*)))))
+        .as("p"))
+      .select("p.*")
       .dropDuplicates("id_a", "id_b")
   }
 
-  /** ID-ONLY candidate pairs (r13) — the [[lshCandidates]] banding with
-    * the shingle arrays LEFT OUT of the bucket collect and the pair
-    * expansion: consumers that verify by a different metric
-    * ([[dedupEditDistance]] joins texts back by id) never need them,
-    * and carrying two ~50-element hash arrays per pair through the
-    * in-bucket quadratic expansion was this family's dominant
-    * allocation (at sf1 the humongous bucket arrays intermittently
-    * drove ~40 s full-GC stalls on a 48g heap; ids-only buckets are
-    * ~50× smaller). */
-  private[graft] def lshCandidateIds(corpus: DataFrame): DataFrame = {
-    val (k, bands) = textDials(corpus.sparkSession)
-    pinBuckets(bandedSignatures(corpus, k, bands),
-        Seq(col("band"), col("bh")))
-      .groupBy(col("band"), col("bh"))
-      .agg(collect_list(col("id")).as("ms"))
-      .filter(size(col("ms")) > 1)
-      .withColumn("ms", guardBucket(col("ms"), "text"))
-      .select(explode(flatten(transform(col("ms"), a =>
-        transform(filter(col("ms"), b => b > a), b =>
-          struct(a.as("id_a"), b.as("id_b")))))).as("p"))
-      .select(col("p.id_a").as("id_a"), col("p.id_b").as("id_b"))
-      .dropDuplicates("id_a", "id_b")
-  }
+  /** Jaccard ≥ 0.5 pairs of a MinHash-banded frame ([[bandSigs]]) that
+    * `keep` also accepts: [[bucketPairs]] with the exact verify. */
+  private def jaccardPairs(banded: DataFrame,
+      keep: (Column, Column) => Column = (_, _) => lit(true)): DataFrame =
+    bucketPairs(banded, Seq("band", "bh"), Seq("sh"), "text")((a, b) =>
+      keep(a, b) && jaccardAtLeast(a("sh"), b("sh"), 1, 2))
+
+  /** ID-ONLY candidate pairs (r13): the MinHash banding with no verify
+    * and no shingle sets in the buckets, for consumers that verify by a
+    * different metric ([[dedupEditDistance]] joins texts back by id). */
+  private[graft] def lshCandidateIds(corpus: DataFrame): DataFrame =
+    bucketPairs(bandedSignatures(corpus), Seq("band", "bh"), Nil, "text")(
+      (_, _) => lit(true))
 
   /** Near-duplicate pairs: LSH candidates verified at Jaccard >= 0.5
     * (integer-exact compare). */
@@ -275,14 +305,9 @@ object Dedup {
   }
 
   private[graft] def minhashPairs(corpus: DataFrame, k: Int,
-      bands: Int): DataFrame = {
-    val cand = lshCandidates(corpus, k, bands)
-    val inter = size(array_intersect(col("sh_a"), col("sh_b")))
-    val union = size(col("sh_a")) + size(col("sh_b")) - inter
-    cand.filter(inter * 2 >= union)
-      .select("id_a", "id_b")
+      bands: Int): DataFrame =
+    jaccardPairs(bandedSignatures(corpus, k, bands))
       .orderBy("id_a", "id_b")
-  }
 
   def dedupMinhashLsh(s: SparkSession, dir: String): DataFrame =
     nearPairs(s, dir).orderBy("id_a", "id_b")
@@ -372,22 +397,15 @@ object Dedup {
     }
     val deltaBands = bandedSignatures(delta, k, bands)
       .localCheckpoint(true) // probe side joins the union AND itself
-    val all = s.read.parquet(idxBands)
-      .unionByName(deltaBands.select("id", "band", "bh"))
-    // the same mega-bucket ceiling as the in-bucket expansion path
-    // (guardBucket): the raise_error wraps the JOIN KEY — a key must
-    // be evaluated to hash, so the guard can't be column-pruned and
-    // fires before the hot bucket streams a single candidate pair
-    val counts = all.groupBy("band", "bh").agg(count(lit(1)).as("_cn"))
-    val guarded = all.join(counts, Seq("band", "bh"))
-      .select(col("id"), col("band"),
-        when(col("_cn") <= MaxBucketMembers, col("bh"))
-          .otherwise(raise_error(concat(
-            lit("text LSH bucket overflow (incremental index): "),
-            col("_cn").cast("string"),
-            lit(s" members > cap $MaxBucketMembers — raise bands/" +
-              "bits-per-band selectivity or run exact dedup first"))))
-          .as("bh"))
+    def keyed(df: DataFrame): DataFrame =
+      df.select(col("id"), struct(col("band"), col("bh")).as("bk"))
+    // the same mega-bucket ceiling as the in-bucket expansion path, in
+    // its join form: it fires before the hot bucket streams a pair
+    val guarded = guardJoinKey(
+      keyed(s.read.parquet(idxBands)).unionByName(keyed(deltaBands)),
+      "bk", MaxBucketMembers,
+      "text LSH bucket overflow (incremental index)", LshRemedy,
+      minMembers = 2)
     // Only IDS ride the bucket join (r16 — the dedupEmbedCosine
     // device): the previous shape carried BOTH shingle arrays through
     // the band shuffle and the when()-swap pair rows (11.1 GB peak at
@@ -398,26 +416,21 @@ object Dedup {
     // recompute (the incremental contract: the base corpus is never
     // re-shingled).
     val lt = col("qid") < col("cid")
-    val cand = deltaBands
-      .select(col("id").as("qid"), col("band"), col("bh"))
-      .join(guarded.select(col("id").as("cid"),
-          col("band").as("band2"), col("bh").as("bh2")),
-        col("band") === col("band2") && col("bh") === col("bh2") &&
-          col("qid") =!= col("cid"))
+    val cand = keyed(deltaBands).withColumnRenamed("id", "qid")
+      .join(guarded.withColumnRenamed("id", "cid"), "bk")
+      .filter(col("qid") =!= col("cid"))
       .select(
         when(lt, col("qid")).otherwise(col("cid")).as("id_a"),
         when(lt, col("cid")).otherwise(col("qid")).as("id_b"))
       .dropDuplicates("id_a", "id_b")
     val shingles = s.read.parquet(idxSh).unionByName(
       deltaBands.filter(col("band") === 0).select(col("id"), col("sh")))
-    val inter = size(array_intersect(col("sh_a"), col("sh_b")))
-    val union = size(col("sh_a")) + size(col("sh_b")) - inter
     cand
       .join(shingles.select(col("id").as("id_a"), col("sh").as("sh_a")),
         "id_a")
       .join(shingles.select(col("id").as("id_b"), col("sh").as("sh_b")),
         "id_b")
-      .filter(inter * 2 >= union)
+      .filter(jaccardAtLeast(col("sh_a"), col("sh_b"), 1, 2))
       .select("id_a", "id_b")
       .orderBy("id_a", "id_b")
   }
@@ -472,11 +485,8 @@ object Dedup {
       eval: DataFrame): DataFrame = {
     val combined = train.select((col("id") * 2).as("id"), col("text"))
       .unionAll(eval.select((col("id") * 2 + 1).as("id"), col("text")))
-    val cand = lshCandidates(combined)
-    val inter = size(array_intersect(col("sh_a"), col("sh_b")))
-    val union = size(col("sh_a")) + size(col("sh_b")) - inter
-    cand.filter(pmod(col("id_a"), lit(2)) =!= pmod(col("id_b"), lit(2)))
-      .filter(inter * 2 >= union)
+    jaccardPairs(bandedSignatures(combined),
+        (a, b) => pmod(a("id"), lit(2)) =!= pmod(b("id"), lit(2)))
       .select(
         shiftright(when(pmod(col("id_a"), lit(2)) === 0, col("id_a"))
           .otherwise(col("id_b")), 1).as("train_id"),
@@ -1110,13 +1120,8 @@ object Dedup {
       if (bands == 4 && memoDial4)
         nearPairs(s, dir)
           .select(lit(4L).as("bands"), col("id_a"), col("id_b"))
-      else {
-        val cand = candidatesFromBands(bandSigs(sigs, 12, bands))
-        val inter = size(array_intersect(col("sh_a"), col("sh_b")))
-        val union = size(col("sh_a")) + size(col("sh_b")) - inter
-        cand.filter(inter * 2 >= union)
-          .select(lit(bands.toLong).as("bands"), col("id_a"), col("id_b"))
-      }
+      else jaccardPairs(bandSigs(sigs, 12, bands))
+        .select(lit(bands.toLong).as("bands"), col("id_a"), col("id_b"))
     }.reduce(_.unionByName(_)).localCheckpoint()
     // lpAll is materialized — the wide signature checkpoint has no
     // consumer left in this gate's plan; free its storage blocks NOW
@@ -1200,29 +1205,24 @@ object Dedup {
         * 3 >= col("a.n") + col("b.n"))
       .select(col("a.id").as("id_a"), col("b.id").as("id_b"))
       .dropDuplicates("id_a", "id_b")
-    val withSets = cand
+    cand
       .join(sets.select(col("id").as("id_a"), col("sh").as("sh_a")), "id_a")
       .join(sets.select(col("id").as("id_b"), col("sh").as("sh_b")), "id_b")
-    val inter = size(array_intersect(col("sh_a"), col("sh_b")))
-    val union = size(col("sh_a")) + size(col("sh_b")) - inter
-    withSets.filter(inter * 2 >= union)
+      .filter(jaccardAtLeast(col("sh_a"), col("sh_b"), 1, 2))
       .select("id_a", "id_b")
   }
 
   // ------------------------------------------------------------------
   // 3. n-gram Jaccard scores for LSH candidate pairs (permille, exact).
   // ------------------------------------------------------------------
-  def dedupJaccardNgram(s: SparkSession, dir: String): DataFrame = {
-    val cand = lshCandidates(nearCorpus(s, dir))
-    val inter = size(array_intersect(col("sh_a"), col("sh_b"))).cast("long")
-    val union = size(col("sh_a")).cast("long") +
-      size(col("sh_b")).cast("long") - inter
-    cand
-      .select(col("id_a"), col("id_b"),
-        floor(inter * lit(1000.0) / union).cast("long").as("jacc_permille"))
-      .filter(col("jacc_permille") >= 200)
+  // jaccard ≥ 1/5 in integers is permille ≥ 200: the double quotient
+  // rounds below 200 only when |a ∪ b| exceeds 7·10¹³
+  def dedupJaccardNgram(s: SparkSession, dir: String): DataFrame =
+    bucketPairs(bandedSignatures(nearCorpus(s, dir)), Seq("band", "bh"),
+        Seq("sh"), "text")(
+      (a, b) => jaccardAtLeast(a("sh"), b("sh"), 1, 5),
+      (a, b) => Seq(jaccardPermille(a("sh"), b("sh")).as("jacc_permille")))
       .orderBy("id_a", "id_b")
-  }
 
   // ------------------------------------------------------------------
   // 4. SimHash: 60-bit per-doc signature (near-dup blocking key family).
@@ -1241,37 +1241,23 @@ object Dedup {
     * on (band, 15-bit value), in-bucket pair expansion, exact hamming
     * verify on candidates only — the same never-all-pairs shape as the
     * other generators. */
-  def dedupSimhashPairs(s: SparkSession, dir: String): DataFrame = {
-    val hamming = graft.functions.TextFunctions.hamming _
-    // fused sig+bands: one md5 pass per row (the Column-space banding
-    // form re-evaluated simhash60 once per consuming projection)
-    val c = nearCorpus(s, dir)
-      .select(col("id"), simhashBands(tokens(col("text")), 15, 4).as("sb"))
-    c.select(col("id"), col("sb.sig").as("sim"),
-        posexplode(col("sb.bands")).as(Seq("band", "bv")))
-      .groupBy(col("band"), col("bv"))
-      .agg(collect_list(struct(col("id"), col("sim"))).as("ms"))
-      .filter(size(col("ms")) > 1)
-      .withColumn("ms", guardBucket(col("ms"), "simhash"))
-      // hamming-verify INSIDE the in-bucket expansion: candidates that
-      // fail the <=3 verify never leave the map side, so the
-      // dedup-across-bands shuffle carries only true pairs (measured at
-      // sf0.1: 4.0M candidates -> 352k verified rows shuffled).
-      // r19: verify BEFORE allocating the pair struct — the r18 shape
-      // built a (id_a, id_b, ham) struct for every one of the 4.0M
-      // candidates and filtered on the field, allocating ~3.6M structs
-      // it immediately dropped; filtering on the raw distance first
-      // re-computes hamming (one popcount over a 60-bit xor) only for
-      // the ~9% survivors, a trivial price for the allocation cut.
-      .select(explode(flatten(transform(col("ms"), a =>
-        transform(
-          filter(col("ms"), b =>
-            b("id") > a("id") && hamming(a("sim"), b("sim")) <= 3),
-          b => struct(a("id").as("id_a"), b("id").as("id_b"),
-            hamming(a("sim"), b("sim")).as("ham")))))).as("p"))
-      .select(col("p.id_a").as("id_a"), col("p.id_b").as("id_b"),
-        col("p.ham").as("ham"))
-      .dropDuplicates("id_a", "id_b")
+  def dedupSimhashPairs(s: SparkSession, dir: String): DataFrame =
+    simhashPairs(nearCorpus(s, dir))
+
+  /** The simhash pair core over any `(id, text)` corpus. The fused
+    * sig+bands expression is one md5 pass per row (the Column-space
+    * banding form re-evaluated simhash60 once per consuming projection);
+    * the hamming verify re-runs in the pair struct for the ~9% of
+    * candidates that pass it (one popcount over a 60-bit xor). */
+  private[graft] def simhashPairs(corpus: DataFrame): DataFrame = {
+    def ham(a: Column, b: Column) = hamming(a("sim"), b("sim"))
+    bucketPairs(
+      corpus.select(col("id"),
+          simhashBands(tokens(col("text")), 15, 4).as("sb"))
+        .select(col("id"), col("sb.sig").as("sim"),
+          posexplode(col("sb.bands")).as(Seq("band", "bv"))),
+      Seq("band", "bv"), Seq("sim"), "simhash")(
+      (a, b) => ham(a, b) <= 3, (a, b) => Seq(ham(a, b).as("ham")))
       .orderBy("id_a", "id_b")
   }
 
@@ -1400,12 +1386,6 @@ object Dedup {
 
   private[graft] def dedupEmbedCosine(c: DataFrame,
       bitsPerBand: Int, nBands: Int): DataFrame = {
-    import org.apache.spark.sql.graft.ColumnBridge.{column => toCol, expression => toExpr}
-    // native expression: signed projections + band packing in one
-    // codegen'd pass (graft.expr.HyperBandValues); identical doubles to
-    // the oracle's list_sum fold
-    val bandVals = toCol(graft.expr.HyperBandValues(
-      toExpr(col("embedding")), bitsPerBand, nBands))
     // Only IDS ride the bucket machinery; embeddings re-attach BY ID
     // once the candidate set exists. The previous shape —
     // collect_list(struct(id, embedding)) + an in-row M² pair
@@ -1418,28 +1398,15 @@ object Dedup {
     // candidates through the shuffle — constant memory per task,
     // spill-safe — the shape that survives 100 TB.
     val banded = c.select(col("id"),
-      posexplode(bandVals).as(Seq("band", "bv")))
-    // population guard (the Geo.geoJoinOver device): the bucket count
-    // rides ON one side's join key, so the guard cannot be pruned and
-    // fires before the expansion streams a single pair; singleton
-    // buckets never pair and drop before the join
-    val counts = banded.groupBy(col("band"), col("bv"))
-      .agg(count(lit(1)).as("_bn"))
-      .filter(col("_bn") > 1)
-    val bSide = banded.join(counts, Seq("band", "bv"))
-      .select(col("id").as("id_b"),
-        when(col("_bn") <= MaxBucketMembers,
-          struct(col("band"), col("bv")))
-          .otherwise(raise_error(concat(
-            lit("embedding LSH bucket overflow: "),
-            col("_bn").cast("string"),
-            lit(s" members > cap $MaxBucketMembers — raise bands/" +
-              "bits-per-band selectivity or run exact dedup first"))))
-          .as("bk"))
-    val aSide = banded.select(
-      struct(col("band"), col("bv")).as("bk"), col("id").as("id_a"))
+        hyperBands(col("embedding"), bitsPerBand, nBands))
+      .select(col("id"), struct(col("band"), col("bv")).as("bk"))
+    // the population guard on one side's join key; singleton buckets
+    // never pair and drop before the join
+    val bSide = guardJoinKey(banded, "bk", MaxBucketMembers,
+        "embedding LSH bucket overflow", LshRemedy, minMembers = 2)
+      .select(col("bk"), col("id").as("id_b"))
     val e = c.select(col("id"), col("embedding"))
-    aSide.join(bSide, "bk")
+    banded.select(col("bk"), col("id").as("id_a")).join(bSide, "bk")
       .filter(col("id_a") < col("id_b"))
       .select("id_a", "id_b")
       .dropDuplicates("id_a", "id_b")
@@ -1492,18 +1459,6 @@ object Dedup {
   /** Target expected in-cluster size for the grown k (N DIV this). */
   private val SemKTarget = 128L
 
-  /** Within-cluster membership cap — [[guardBucket]]'s twin with the
-    * clustering remediation: a cluster past the cap means k is too
-    * small for the corpus (the quadratic in-cluster compare would blow
-    * up), and the fix is more/better centroids, not band dials. */
-  private def guardCluster(ms: Column): Column =
-    when(size(ms) <= MaxBucketMembers, ms)
-      .otherwise(raise_error(concat(
-        lit("semantic cluster overflow: "), size(ms).cast("string"),
-        lit(s" members > cap $MaxBucketMembers — raise the cluster count" +
-          " k (or kmeans-refit centroids) so in-cluster compares stay" +
-          " bounded"))))
-
   /** SemDeDup: assign every vector to its nearest centroid by COSINE
     * (direction, not distance — a vector and its scaled copy must land
     * together), expand pairs within each cluster only, and drop the
@@ -1546,6 +1501,7 @@ object Dedup {
   private[graft] def dedupSemantic(corpus: DataFrame,
       cents: Seq[(Long, Array[Float])]): DataFrame = {
     import org.apache.spark.sql.graft.ColumnBridge.{column => toCol, expression => toExpr}
+    val ms = col("ms")
     val assigned = corpus
       .withColumn("cid", IvfIndex.assignCosCid(cents, col("embedding")))
     // within-cluster prune in ONE native call per cluster
@@ -1557,10 +1513,14 @@ object Dedup {
       .groupBy("cid")
       .agg(collect_list(struct(col("id"),
         col("embedding").cast("array<double>"))).as("ms"))
-      .filter(size(col("ms")) > 1)
-      .withColumn("ms", guardCluster(col("ms")))
-      .select(explode(toCol(CosineDupRemovedExpr(
-        toExpr(col("ms")), SemTau))).as("id"))
+      .filter(size(ms) > 1)
+      // a cluster past the cap means k is too small for the corpus: the
+      // fix is more (or better) centroids, not band dials
+      .select(explode(toCol(CosineDupRemovedExpr(toExpr(
+        guardBucket(ms, size(ms), MaxBucketMembers,
+          "semantic cluster overflow", "raise the cluster count k (or " +
+            "kmeans-refit centroids) so in-cluster compares stay bounded")),
+        SemTau))).as("id"))
     assigned.join(removed, Seq("id"), "left_anti")
       .select(col("id"), col("cid"), col("label"))
       .orderBy("id")

@@ -92,25 +92,16 @@ object Geo {
         explode(array((-1 to 1).flatMap(i => (-1 to 1).map(j =>
           struct((cell("x") + i).as("cx"),
             (cell("y") + j).as("cy")))): _*)).as("cell"))
-    // per-cell population guard: the count aggregate is cell-sized, and
-    // the raise_error wraps the JOIN KEY itself — a key must be
-    // evaluated to hash, so the guard cannot be pruned away (an earlier
-    // draft guarded a standalone column and Catalyst dropped it) and it
-    // fires BEFORE the in-cell expansion streams a single pair
-    val counts = p.groupBy(
-        struct(cell("x").as("cx"), cell("y").as("cy")).as("cell2"))
-      .agg(count(lit(1)).as("_cn"))
-    val b = p.select(col("id").as("id_b"), col("x").as("xb"),
-        col("y").as("yb"),
-        struct(cell("x").as("cx"), cell("y").as("cy")).as("cell2"))
-      .join(counts, "cell2")
-      .select(col("id_b"), col("xb"), col("yb"),
-        when(col("_cn") <= MaxCellMembers, col("cell2"))
-          .otherwise(raise_error(concat(
-            lit("geo cell overflow: "), col("_cn").cast("string"),
-            lit(s" members > cap $MaxCellMembers — dirty geocoding " +
-              "(point-mass cell) or radius too large; dedup " +
-              "coordinates or shrink the join radius")))).as("cell2"))
+    // per-cell population guard on the join key: the count aggregate is
+    // cell-sized, and the guard fires BEFORE the in-cell expansion
+    // streams a single pair. Singleton cells stay: a lone point still
+    // pairs with the eight neighbouring cells' points.
+    val b = Dedup.guardJoinKey(
+      p.select(col("id").as("id_b"), col("x").as("xb"), col("y").as("yb"),
+        struct(cell("x").as("cx"), cell("y").as("cy")).as("cell2")),
+      "cell2", MaxCellMembers, "geo cell overflow",
+      "dirty geocoding (point-mass cell) or radius too large; dedup " +
+        "coordinates or shrink the join radius", minMembers = 1)
     val dx = col("xa") - col("xb")
     val dy = col("ya") - col("yb")
     a.join(b, col("cell") === col("cell2") && col("id_a") < col("id_b"))

@@ -69,7 +69,10 @@ object IvfIndex {
     * index-order double math — same seed, same data ⇒ same centroids. */
   def kmeansFit(vectors: DataFrame, k: Int, iters: Int)
       : Seq[(Long, Array[Float])] = {
-    var cents: Seq[(Long, Array[Float])] = vectors
+    // a null embedding has no position: it seeds nothing and joins no
+    // cluster's mean (NearestCentroidExpr sends it to cid -1)
+    val vecs = vectors.filter(col("embedding").isNotNull)
+    var cents: Seq[(Long, Array[Float])] = vecs
       .orderBy("vec_id").limit(k)
       .select(col("embedding")).collect()
       .zipWithIndex
@@ -79,7 +82,7 @@ object IvfIndex {
       val dim = cents.head._2.length
       val meanCols = (0 until dim).map(i =>
         avg(element_at(col("embedding"), i + 1)).as(s"m$i"))
-      val means = vectors
+      val means = vecs
         .withColumn("cid", assignCid(cents, col("embedding")))
         .groupBy("cid")
         .agg(meanCols.head, meanCols.tail: _*)

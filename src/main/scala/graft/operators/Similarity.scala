@@ -325,11 +325,9 @@ object Similarity {
 
   private def annJoinLshCore(s: SparkSession, dir: String,
       bits: Int, bands: Int, cap: Option[Long] = None): DataFrame = {
-    import org.apache.spark.sql.graft.ColumnBridge.{column => toCol, expression => toExpr}
     def banded(df: DataFrame, idAs: String, embAs: String): DataFrame =
       df.select(col("vec_id").as(idAs), col("embedding").as(embAs),
-        posexplode(toCol(graft.expr.HyperBandValues(
-          toExpr(col("embedding")), bits, bands))).as(Seq("band", "bv")))
+        hyperBands(col("embedding"), bits, bands))
     val e = cap.foldLeft(emb(s, dir))((d, c) => d.filter(col("vec_id") < c))
     val q = banded(e.filter(col("vec_id") % 100 === 7), "qid", "qv")
     val c = banded(e.filter(col("vec_id") % 100 =!= 7), "vec_id", "cv")

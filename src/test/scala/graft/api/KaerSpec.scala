@@ -777,6 +777,28 @@ class KaerSpec extends SparkTestBase {
     assert(top.length == 1 && top(0).getString(0) == "real text")
   }
 
+  test("ensureIndex over a null-text document below the watermark: the " +
+      "fit skips its null embedding, and query and queryApprox rank the " +
+      "real matches on both paths") {
+    val c = newSession(tmpDir("kaer-nullindex")).createCollection("c")
+    c.insert(Data().withDocuments((0 until 40).map(i =>
+      if (i % 13 == 7) null else s"doc ${i % 9} topic ${i % 4}")))
+    c.ensureIndex(nlist = 4, iters = 2)
+    assert(c.count() == 40)
+    def docs(df: org.apache.spark.sql.DataFrame): Seq[String] =
+      df.select("_m_doc").collect().map(_.getString(0)).toSeq
+    for (sparkPath <- Seq(false, true)) {
+      def run[T](body: => T): T = if (sparkPath) onSparkPath(body) else body
+      val all = run(docs(c.query("doc 3 topic 3", 40)))
+      assert(all.head == "doc 3 topic 3" && all.length == 40, all)
+      assert(all.takeRight(3).forall(_ == null) &&
+        all.dropRight(3).forall(_ != null), all)
+      val approx = run(docs(c.queryApprox("doc 3 topic 3", 5, nprobe = 4)))
+      assert(approx.head == "doc 3 topic 3" && approx.forall(_ != null),
+        approx)
+    }
+  }
+
   test("distinctValues: Mongo distinct-command twin, with/without filter") {
     val root = tmpDir("kaer-distinct")
     val c = newSession(root).createCollection("c")

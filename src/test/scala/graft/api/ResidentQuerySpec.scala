@@ -124,12 +124,12 @@ class ResidentQuerySpec extends SparkTestBase {
   }
 
   /** Document `i`: 120 distinct texts, so equal texts tie on distance.
-    * A seventh of those from `NoText` on have no text, so a null
-    * embedding (not below it: building an index over a null embedding
-    * fails). */
+    * A seventh of them have no text, so a null embedding, both below
+    * and above the index's watermark. */
   private def doc(i: Int): String =
-    if (i >= NoText && i % 7 == 3) null else s"doc ${i % 24} topic ${i % 5}"
-  private val NoText = 2400
+    if (i % 7 == 3) null else s"doc ${i % 24} topic ${i % 5}"
+  /** The rows the index covers. */
+  private val Indexed = 2400
 
   private def batch(ids: Range): Data =
     Data().withDocuments(ids.map(doc)).withMetadataJson(ids.map(meta))
@@ -158,11 +158,11 @@ class ResidentQuerySpec extends SparkTestBase {
       "generation") {
     val c = new KaerSession(spark, tmpDir("resident-parity"),
       HashingEmbedder(64)).createCollection("c")
-    c.insert(batch(0 until NoText))
+    c.insert(batch(0 until Indexed))
     c.ensureIndex(nlist = 4, iters = 2)
     // above the index's covered watermark: exact search sees them,
     // queryApprox does not
-    c.insert(batch(NoText until 3000))
+    c.insert(batch(Indexed until 3000))
     val texts = Seq("doc 3 topic 3", "topic 1 doc 17", "doc 5")
     val filters = (templates ++ randomFilters ++
       Seq("{}", """{"k": {"$exists": false}}""", """{"nope": 1}""",
@@ -181,7 +181,7 @@ class ResidentQuerySpec extends SparkTestBase {
     val all = c.query("doc 3 topic 3", 5000)
     same("query(k >= n)")(c.query("doc 3 topic 3", 5000))
     val dist = all.collect().map(r => Option(r.getAs[Any]("_distance")))
-    val nulls = (NoText until 3000).count(i => doc(i) == null)
+    val nulls = (0 until 3000).count(i => doc(i) == null)
     assert(dist.length == 3000 && dist.takeRight(nulls).forall(_.isEmpty) &&
       dist.count(_.isEmpty) == nulls, dist.toSeq)
     // the projection form rides the same answer

@@ -189,15 +189,31 @@ class DedupSpec extends SparkTestBase {
     // a degenerate corpus (every doc identical) collapses ALL docs into
     // one band bucket — past the cap that must be a job failure with
     // remediation text, never a silent 50M-pair expansion in one task
-    val degenerate = spark.range(Dedup.MaxBucketMembers + 1L)
+    val n = Dedup.MaxBucketMembers + 1L
+    val degenerate = spark.range(n)
       .select(col("id"),
         lit("identical text body repeated for every document").as("text"))
-    val ex = intercept[Throwable] {
-      Dedup.minhashPairs(degenerate).count()
-    }
     def chain(t: Throwable): String =
       if (t == null) "" else t.getMessage + "|" + chain(t.getCause)
-    assert(chain(ex).contains("bucket overflow"), chain(ex).take(500))
+    def overflows(message: String)(run: => Long): Unit = {
+      val ex = intercept[Throwable](run)
+      assert(chain(ex).contains(message), chain(ex).take(500))
+    }
+    overflows("bucket overflow")(Dedup.minhashPairs(degenerate).count())
+    // every other guarded site on the same kind of input: the simhash
+    // and ids-only expansions, the embedding band join (one bucket of
+    // identical vectors) and the semantic clusters (one centroid)
+    overflows("simhash LSH bucket overflow")(
+      Dedup.simhashPairs(degenerate).count())
+    overflows("text LSH bucket overflow")(
+      Dedup.lshCandidateIds(degenerate).count())
+    val vec = (0 until 64).map(j => (j % 7 - 3) / 7f)
+    val same = spark.range(n).select(col("id"),
+      typedLit(vec).as("embedding"), lit("x").as("label"))
+    overflows("embedding LSH bucket overflow")(Dedup.dedupEmbedCosine(
+      same.select("id", "embedding"), 8, 2).count())
+    overflows("semantic cluster overflow")(
+      Dedup.dedupSemantic(same, Seq(0L -> vec.toArray)).count())
     // under the cap: same corpus shape passes (pairs are real)
     val small = spark.range(50)
       .select(col("id"), lit("identical text body").as("text"))
@@ -327,6 +343,64 @@ class DedupSpec extends SparkTestBase {
     assert(ids.forall(_ < 100000L), "a scaled copy survived")
     val n = spark.read.parquet(s"$sf0001/embeddings.parquet").count()
     assert(ids.size == n, s"expected all $n originals to survive")
+  }
+
+  test("source guard: operators/ has one in-bucket pair expansion, one " +
+      "Jaccard verify and one hyperplane banding, and every " +
+      "bucket-overflow raise_error sits in the guard helpers") {
+    import java.nio.file.{Files, Paths}
+    import scala.jdk.CollectionConverters._
+    val files = Seq("operators", "functions").flatMap { d =>
+      val w = Files.list(Paths.get(s"src/main/scala/graft/$d"))
+      try w.iterator.asScala.filter(_.toString.endsWith(".scala")).toList
+      finally w.close()
+    }
+    assert(files.exists(_.getFileName.toString == "Dedup.scala"), files)
+    val code = files.map(f => f.getFileName.toString ->
+      Files.readAllLines(f).asScala.toVector)
+    def isComment(l: String) = {
+      val t = l.trim
+      t.startsWith("*") || t.startsWith("//") || t.startsWith("/**")
+    }
+    def sites(re: scala.util.matching.Regex) = for {
+      (f, ls) <- code
+      (l, i) <- ls.zipWithIndex
+      if !isComment(l) && re.findFirstIn(l).isDefined
+    } yield (f, ls, i)
+    def where(ss: Seq[(String, Vector[String], Int)]) =
+      ss.map { case (f, ls, i) => s"$f:${i + 1}: ${ls(i).trim}" }
+        .mkString("\n")
+    // a pair expansion flattens a transform over a bucket's members
+    // (TextAnalysis's deletion neighbourhood flattens one over a
+    // sequence, which is not one)
+    for ((what, re) <- Seq(
+        "in-bucket pair expansion" ->
+          """flatten\(transform\((?!sequence)""".r,
+        "Jaccard verify" -> "array_intersect".r,
+        "hyperplane banding" -> """HyperBandValues\(""".r)) {
+      val ss = sites(re)
+      assert(ss.size == 1, s"$what written ${ss.size} times:\n${where(ss)}")
+    }
+    // the def enclosing line i: the nearest one above it, indented less
+    val decl =
+      """^(\s*)(?:(?:private|protected)(?:\[\w+\])?\s+)?def\s+(\w+)""".r
+    def enclosing(ls: Vector[String], i: Int): String = {
+      val indent = ls(i).takeWhile(_ == ' ').length
+      (i to 0 by -1).iterator.map(j => decl.findFirstMatchIn(ls(j)))
+        .collectFirst { case Some(m) if m.group(1).length < indent =>
+          m.group(2) }.getOrElse("")
+    }
+    // every raise_error of the LSH operators, and any raise_error in
+    // operators/ whose message names an overflow
+    val guards = sites("""raise_error\(""".r).filter { case (f, ls, i) =>
+      Set("Dedup.scala", "Geo.scala", "Similarity.scala")(f) ||
+        ls.slice(i, i + 4).exists(_.contains("overflow"))
+    }
+    assert(guards.nonEmpty)
+    val stray = guards.filterNot { case (_, ls, i) =>
+      Set("guardBucket", "guardJoinKey")(enclosing(ls, i)) }
+    assert(stray.isEmpty, "guard buckets with Dedup.guardBucket or " +
+      s"Dedup.guardJoinKey:\n${where(stray)}")
   }
 
   test("dedupTailHead: exactly the planted parent->child continuation " +
