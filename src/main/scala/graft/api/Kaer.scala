@@ -1445,8 +1445,11 @@ final class Collection(
     }
     val qv = embedder.embedOne(document)
     val lists = graft.operators.IvfIndex.nearestLists(cents, qv, nprobe)
-    val probed = stored.filter(col(CidCol).isin(lists: _*) &&
-      col(Schema.IdCol) <= covered)
+    // the probe ids read through references: one generated class
+    // serves every probe set on the resident path
+    val probed = stored.filter(
+      col(CidCol).isin(lists.map(graft.expr.BoundLiteral.column): _*) &&
+        col(Schema.IdCol) <= covered)
     (ranked(probed, qv, k, filterJson), lists)
   }
 
@@ -1503,18 +1506,20 @@ final class Collection(
     * `rows` of that scan, with no Spark job. The plan is the
     * session's optimization of `q` ([[PlanBridge.optimizedOverFullRows]]:
     * no VARIANT field is pushed into the scan, as the rows hold the
-    * whole column). Its Filter condition is bound by `Predicate.create`,
-    * its Project (the `l2` distance among it) by `UnsafeProjection`, and
-    * Spark's ordering for its SortOrders keeps a top `k` in a bounded
-    * heap. An optimized Filter
+    * whole column). Its Filter condition is bound by `Predicate.create`.
+    * Each passing row's sort keys (the Project's expressions that its
+    * SortOrders name: the `l2` distance and the id) are evaluated
+    * alone and compared, by Spark's ordering, with a bounded heap of
+    * the top `k`; only the `k` rows left at the end go through the
+    * whole Project (`UnsafeProjection`). An optimized Filter
     * folded to true is gone (every row passes), one folded to false or
     * null leaves an empty relation (no row). The answer is a local
     * DataFrame with `q`'s schema. None when the optimized plan has
     * another shape: the caller runs `q`. */
   private def onDriver(q: DataFrame,
       rows: Iterator[InternalRow]): Option[DataFrame] = {
-    import org.apache.spark.sql.catalyst.expressions.{IntegerLiteral,
-      Predicate, UnsafeProjection}
+    import org.apache.spark.sql.catalyst.expressions.{Alias, Attribute,
+      BoundReference, IntegerLiteral, Predicate, UnsafeProjection}
     import org.apache.spark.sql.catalyst.expressions.codegen.GenerateOrdering
     import org.apache.spark.sql.catalyst.plans.logical.{Filter, Limit,
       LocalRelation, Project, Sort}
@@ -1537,20 +1542,35 @@ final class Collection(
           p.initialize(0)
           p
         }
-        val project = UnsafeProjection.create(list, scan.output)
-        val ord = GenerateOrdering.generate(order, list.map(_.toAttribute))
-        // the k best rows so far, the worst on top
-        val top = new java.util.PriorityQueue[InternalRow](ord.reverse)
+        // the sort keys over the scan's rows, and their ordering
+        val defs = list.map(e => e.toAttribute -> e).toMap
+        val keys = order.map(_.child.transform {
+          case a: Attribute => defs.get(a) match {
+            case Some(Alias(e, _)) => e
+            case _ => a
+          }
+        })
+        val key = UnsafeProjection.create(keys, scan.output)
+        val ord = GenerateOrdering.generate(order.zip(keys).zipWithIndex
+          .map { case ((o, e), i) =>
+            o.copy(child = BoundReference(i, e.dataType, e.nullable)) },
+          Nil)
+        // the k best (key, row) pairs so far, the worst on top
+        val worstFirst: java.util.Comparator[(InternalRow, InternalRow)] =
+          (a, b) => ord.compare(b._1, a._1)
+        val top = new java.util.PriorityQueue(worstFirst)
         for (r <- rows if pred.forall(_.eval(r))) {
-          val p = project(r)
-          if (top.size < k) top.add(p.copy())
-          else if (ord.compare(p, top.peek) < 0) {
+          val kr = key(r)
+          if (top.size < k) top.add((kr.copy(), r))
+          else if (ord.compare(kr, top.peek._1) < 0) {
             top.poll()
-            top.add(p.copy())
+            top.add((kr.copy(), r))
           }
         }
         import scala.jdk.CollectionConverters._
-        local(top.asScala.toVector.sorted(ord))
+        val project = UnsafeProjection.create(list, scan.output)
+        local(top.asScala.toVector.sortWith((a, b) =>
+          ord.compare(a._1, b._1) < 0).map(p => project(p._2).copy()))
       case l: LocalRelation if l.data.isEmpty => local(Nil)
       case _ => None
     }

@@ -110,12 +110,14 @@ case class SignedProjExpr(child: Expression, projDim: Int)
   override def nullable: Boolean = true
   override protected def nullSafeEval(input: Any): Any =
     ProjMath.project(input.asInstanceOf[ArrayData], projDim)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val r = ctx.freshName("proj")
     nullSafeCodeGen(ctx, ev, c => s"""
-      Object r = graft.expr.ProjMath.project($c, $projDim);
-      if (r == null) { ${ev.isNull} = true; }
-      else { ${ev.value} = (org.apache.spark.sql.catalyst.util.ArrayData) r; }
+      Object $r = graft.expr.ProjMath.project($c, $projDim);
+      if ($r == null) { ${ev.isNull} = true; }
+      else { ${ev.value} = (org.apache.spark.sql.catalyst.util.ArrayData) $r; }
     """)
+  }
   override protected def withNewChildInternal(c: Expression): SignedProjExpr =
     copy(child = c)
 }
@@ -130,10 +132,11 @@ abstract class VectorBinary extends BinaryExpression {
   protected def call(a: ArrayData, b: ArrayData): Any
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
     val f = s"graft.expr.VectorMath.$staticName"
+    val r = ctx.freshName("vec")
     nullSafeCodeGen(ctx, ev, (a, b) => s"""
-      Object r = $f($a, $b);
-      if (r == null) { ${ev.isNull} = true; }
-      else { ${ev.value} = ((Double) r).doubleValue(); }
+      Object $r = $f($a, $b);
+      if ($r == null) { ${ev.isNull} = true; }
+      else { ${ev.value} = ((Double) $r).doubleValue(); }
     """)
   }
 }
@@ -392,12 +395,14 @@ case class NormSqExpr(child: Expression) extends UnaryExpression {
   override def nullable: Boolean = true
   override protected def nullSafeEval(input: Any): Any =
     VectorMath.normSq(input.asInstanceOf[ArrayData])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val r = ctx.freshName("normSq")
     nullSafeCodeGen(ctx, ev, c => s"""
-      Object r = graft.expr.VectorMath.normSq($c);
-      if (r == null) { ${ev.isNull} = true; }
-      else { ${ev.value} = ((Double) r).doubleValue(); }
+      Object $r = graft.expr.VectorMath.normSq($c);
+      if ($r == null) { ${ev.isNull} = true; }
+      else { ${ev.value} = ((Double) $r).doubleValue(); }
     """)
+  }
   override protected def withNewChildInternal(c: Expression): NormSqExpr =
     copy(child = c)
 }

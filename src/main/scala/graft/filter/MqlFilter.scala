@@ -154,8 +154,12 @@ object MqlFilter {
   /** The VARIANT-rooted field views shared by [[JsonResolver]] (rooted at
     * the metadata document parsed from its JSON text) and
     * [[VariantResolver]] (rooted at a VARIANT value already in the row).
-    * Uses VARIANT so that `{"a": "5"}` does NOT match a numeric filter on
-    * `a` — same bracketing as MQL. */
+    * Each typed view is one [[graft.expr.VariantView]] over the field's
+    * `variant_get(root, path, 'variant')`: it reads the value's type id
+    * and returns the value only where MQL brackets it with the view's
+    * type, so `{"a": "5"}` does NOT match a numeric filter on `a`. The
+    * views of one field share that `variant_get` (subexpression
+    * elimination on the driver, one pushed field on a Parquet scan). */
   sealed trait VariantViews extends FieldResolver {
     /** The VARIANT value fields resolve against (re-read per call so
       * [[toColumn]]'s lambda re-binding takes effect). */
@@ -172,48 +176,22 @@ object MqlFilter {
         (build: => Column): Column = build
     protected def path(f: String) = s"$$.$f"
     protected def v(f: String) = variant_get(parsedV, path(f), "variant")
-    protected def schemaOf(f: String) = schema_of_variant(v(f))
+    /** The `kind` [[graft.expr.VariantView]] of field `f`. */
+    protected def bracketed(kind: String, f: String): Column =
+      graft.expr.VariantView.column(v(f), kind)
 
-    // JSON numbers parse to BIGINT (integral) or DECIMAL(p,s) (with a
-    // point); DOUBLE/FLOAT appear via scientific notation
-    private def numericType(f: String): Column =
-      schemaOf(f).isin("BIGINT", "DOUBLE", "INT", "SMALLINT",
-        "TINYINT", "FLOAT") || schemaOf(f).startsWith("DECIMAL")
-    private def integralType(f: String): Column =
-      schemaOf(f).isin("BIGINT", "INT", "SMALLINT", "TINYINT") ||
-        (schemaOf(f).startsWith("DECIMAL") && schemaOf(f).endsWith(",0)"))
-
-    def num(f: String): Column = view("num", f) {
-      when(numericType(f), try_variant_get(parsedV, path(f), "double")) }
-    def intNum(f: String): Column = view("intNum", f) {
-      when(integralType(f), try_variant_get(parsedV, path(f), "long")) }
-    def ts(f: String): Column = view("ts", f) {
-      when(schemaOf(f) === "STRING",
-        try_to_timestamp(try_variant_get(parsedV, path(f), "string"))) }
-    def str(f: String): Column = view("str", f) {
-      when(schemaOf(f) === "STRING",
-        try_variant_get(parsedV, path(f), "string")) }
-    def bool(f: String): Column = view("bool", f) {
-      when(schemaOf(f) === "BOOLEAN",
-        try_variant_get(parsedV, path(f), "boolean")) }
-    def varr(f: String): Column = view("varr", f) {
-      try_variant_get(parsedV, path(f), "array<variant>") }
+    def num(f: String): Column = view("num", f) { bracketed("num", f) }
+    def intNum(f: String): Column =
+      view("intNum", f) { bracketed("intNum", f) }
+    def ts(f: String): Column =
+      view("ts", f) { try_to_timestamp(bracketed("str", f)) }
+    def str(f: String): Column = view("str", f) { bracketed("str", f) }
+    def bool(f: String): Column = view("bool", f) { bracketed("bool", f) }
+    def varr(f: String): Column = view("varr", f) { bracketed("varr", f) }
     def exists(f: String): Column = view("exists", f) {
       v(f).isNotNull || is_variant_null(v(f)) }
-    def typeName(f: String): Column = view("typeName", f) {
-      val s = schemaOf(f)
-      when(s === "STRING", "string")
-        .when(s === "BOOLEAN", "bool")
-        // DECIMAL(p,0) is an integral JSON number; any scale > 0 is MQL
-        // "double" (JSON has no long/double distinction beyond the point)
-        .when(s === "DOUBLE" || s === "FLOAT" ||
-          (s.startsWith("DECIMAL") && !s.endsWith(",0)")), "double")
-        .when(s.isin("BIGINT", "INT", "SMALLINT", "TINYINT") ||
-          s.startsWith("DECIMAL"), "long")
-        .when(s.startsWith("ARRAY"), "array")
-        .when(is_variant_null(v(f)) || s === "VOID", "null")
-        .otherwise(lit(null).cast("string"))
-    }
+    def typeName(f: String): Column =
+      view("typeName", f) { bracketed("typeName", f) }
   }
 
   /** Resolver over a schemaless JSON metadata column (`_m_meta` /
@@ -284,7 +262,7 @@ object MqlFilter {
       (b, b)
     }
     def arr(f: String): Column = view("arr", f) {
-      when(schemaOf(f).startsWith("ARRAY"),
+      when(bracketed("typeName", f) === "array",
         from_json(get_json_object(metaCol, path(f)),
           org.apache.spark.sql.types.ArrayType(
             org.apache.spark.sql.types.StringType))) }
@@ -301,9 +279,7 @@ object MqlFilter {
     private[MqlFilter] def parsedV: Column = root
     override private[filter] def bindLit(v: Any): Column =
       graft.expr.BoundLiteral.column(v)
-    def arr(f: String): Column =
-      when(schemaOf(f).startsWith("ARRAY"),
-        try_variant_get(root, path(f), "array<string>"))
+    def arr(f: String): Column = bracketed("arr", f)
   }
 
   /** Resolver over real typed columns (materialized metadata). Type
@@ -1483,25 +1459,18 @@ object MqlFilter {
     * the element's type doesn't bracket with the literal. */
   private def elemCmp(e: Column, lit0: JsonNode)(
       op: (Column, Column) => Column): Column = {
-    val s = schema_of_variant(e)
-    def root(t: String) = try_variant_get(e, "$", t)
-    val numeric = s.isin("BIGINT", "DOUBLE", "INT", "SMALLINT",
-      "TINYINT", "FLOAT") || s.startsWith("DECIMAL")
-    val integral = s.isin("BIGINT", "INT", "SMALLINT", "TINYINT") ||
-      (s.startsWith("DECIMAL") && s.endsWith(",0)"))
+    def view(kind: String) = graft.expr.VariantView.column(e, kind)
     if (lit0.isNumber) {
-      val dbl = when(numeric, op(root("double"), lit(lit0.asDouble())))
+      val dbl = op(view("num"), lit(lit0.asDouble()))
       if (lit0.isIntegralNumber && lit0.canConvertToLong)
-        coalesce(when(integral, op(root("long"), lit(lit0.asLong()))), dbl)
+        coalesce(op(view("intNum"), lit(lit0.asLong())), dbl)
       else dbl
     }
-    else if (lit0.isTextual)
-      when(s === "STRING", op(root("string"), lit(lit0.asText())))
-    else if (lit0.isBoolean)
-      when(s === "BOOLEAN", op(root("boolean"), lit(lit0.asBoolean())))
+    else if (lit0.isTextual) op(view("str"), lit(lit0.asText()))
+    else if (lit0.isBoolean) op(view("bool"), lit(lit0.asBoolean()))
     else if (isDateLiteral(lit0))
-      when(s === "STRING", op(try_to_timestamp(root("string")),
-        to_timestamp(lit(lit0.get("$date").asText()))))
+      op(try_to_timestamp(view("str")),
+        to_timestamp(lit(lit0.get("$date").asText())))
     else throw new IllegalArgumentException(
       s"unsupported array-element literal: $lit0")
   }

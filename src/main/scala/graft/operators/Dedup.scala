@@ -355,9 +355,17 @@ object Dedup {
     val delta = d.filter(col("doc_id") % 5 === 0)
       .select((col("doc_id") + 100000).as("id"),
         col("text").substr(lit(1), length(col("text")) - 15).as("text"))
-    incrementalPairs(s, base, delta,
-      graft.core.Scratch.dir("lshidx", dir), k, bands)
+    incrementalPairs(s, base, delta, incrementalIndex(dir, k, bands), k,
+      bands)
   }
+
+  /** Where [[dedupIncremental]] keeps the index of the corpus at `dir`
+    * built under `k` hash functions in `bands` bands. Both dials are in
+    * the key: the index's trust check counts rows only, and band hashes
+    * built under one `k` never match a delta hashed under another. */
+  private[graft] def incrementalIndex(dir: String, k: Int,
+      bands: Int): String =
+    graft.core.Scratch.dir("lshidx", s"$dir|minhash_k=$k|bands=$bands")
 
   /** The index-probe core over any base/delta corpora — split out so
     * the scale probe can grow the base while holding the delta fixed

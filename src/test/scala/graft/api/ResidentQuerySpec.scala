@@ -303,4 +303,107 @@ class ResidentQuerySpec extends SparkTestBase {
     k.close()
     assert(exact("doc 3 topic 3", everyone) == ((before, 1)))
   }
+
+  test("MQL type bracketing gives the same rows on both paths: integral " +
+      "and scaled decimals, doubles, a numeric string, booleans, JSON " +
+      "null against a missing field, nested paths, objects, arrays and " +
+      "their elements") {
+    val c = new KaerSession(spark, tmpDir("resident-bracket"),
+      HashingEmbedder(64)).createCollection("c")
+    // document i holds metas(i); ids are 1-based
+    val metas = Seq(
+      """{"d": 5}""", """{"d": 5.0}""", """{"d": 5.5}""", """{"d": 5e0}""",
+      """{"d": 12345678901234567890}""", """{"d": "5"}""", """{"d": true}""",
+      """{"d": null}""", """{}""", """{"d": {"x": 5}}""",
+      """{"d": [5, "5"]}""", """{"o": {"p": {"q": 5}}}""",
+      """{"arr": [1, 2.5, "x", true]}""",
+      """{"items": [{"k": "a", "n": 2}, {"k": "b", "n": 7}]}""",
+      """{"items": [{"k": "a", "n": 9}]}""", """{"d": false}""",
+      """{"d": 100.0}""", """{"d": -0.5}""")
+    c.insert(Data().withDocuments(metas.indices.map(i => s"doc $i"))
+      .withMetadataJson(metas))
+    def ids(df: DataFrame) =
+      df.select("_m_id").collect().map(_.getLong(0)).toSet
+    val cases = Seq(
+      """{"d": 5}""" -> Set(1L, 2L, 4L),
+      """{"d": {"$gt": 5}}""" -> Set(3L, 5L, 17L),
+      """{"d": {"$lt": 0}}""" -> Set(18L),
+      """{"d": {"$gte": 12345678901234567890}}""" -> Set(5L),
+      """{"d": 100}""" -> Set(17L),
+      """{"d": {"$in": [5.5, "5"]}}""" -> Set(3L, 6L),
+      """{"d": "5"}""" -> Set(6L),
+      """{"d": {"$regex": "^5"}}""" -> Set(6L),
+      """{"d": true}""" -> Set(7L),
+      """{"d": {"$ne": true}}""" -> ((1L to 18L).toSet - 7L),
+      """{"d": {"$exists": true}}""" ->
+        ((1L to 11L).toSet - 9L ++ Set(16L, 17L, 18L)),
+      """{"d": {"$exists": false}}""" -> Set(9L, 12L, 13L, 14L, 15L),
+      """{"d": null}""" -> Set(8L, 9L, 12L, 13L, 14L, 15L),
+      """{"d": {"$type": "null"}}""" -> Set(8L),
+      """{"d": {"$type": "long"}}""" -> Set(1L, 2L, 5L, 17L),
+      """{"d": {"$type": "double"}}""" -> Set(3L, 4L, 18L),
+      """{"d": {"$type": "string"}}""" -> Set(6L),
+      """{"d": {"$type": "bool"}}""" -> Set(7L, 16L),
+      """{"d": {"$type": "array"}}""" -> Set(11L),
+      """{"d": {"$size": 2}}""" -> Set(11L),
+      """{"o.p.q": 5}""" -> Set(12L),
+      """{"o.p": {"$exists": true}}""" -> Set(12L),
+      """{"d.x": {"$gte": 5}}""" -> Set(10L),
+      """{"arr": {"$all": [1, "x"]}}""" -> Set(13L),
+      """{"arr": {"$all": [1, "1"]}}""" -> Set.empty[Long],
+      """{"arr": {"$elemMatch": {"$gt": 2}}}""" -> Set(13L),
+      """{"arr": {"$elemMatch": {"$eq": true}}}""" -> Set(13L),
+      """{"d": {"$elemMatch": {"$eq": "5"}}}""" -> Set(11L),
+      """{"items": {"$elemMatch": {"k": "a", "n": {"$gt": 3}}}}""" ->
+        Set(15L),
+      """{"items": {"$elemMatch": {"n": {"$type": "long"}}}}""" ->
+        Set(14L, 15L))
+    sameAll(cases.map { case (f, _) =>
+      s"query($f)" -> (() => c.query("doc 1", 100, f)) })
+    for ((f, want) <- cases)
+      assert(ids(c.query("doc 1", 100, f)) == want, f)
+  }
+
+  test("plan guard: the range template over the stored VARIANT is one " +
+      "view per leaf — no schema_of_variant, at most 35 nodes") {
+    import org.apache.spark.sql.catalyst.plans.logical.Filter
+    import org.apache.spark.sql.functions.{col, lit, parse_json}
+    val rows = spark.range(2).select(parse_json(lit("""{"n": 1}""")).as("m"))
+    val q = rows.filter(graft.filter.MqlFilter.toColumn(
+      """{"n": {"$gte": 20, "$lt": 45}}""",
+      graft.filter.MqlFilter.VariantResolver(col("m"))))
+    val cond = q.queryExecution.analyzed.collectFirst {
+      case f: Filter => f.condition }.get
+    val nodes = cond.collect { case e => e.prettyName }
+    assert(!nodes.contains("schema_of_variant") && nodes.size <= 35,
+      s"${nodes.size} nodes: $cond")
+  }
+
+  test("queryApprox compiles no new class for a new probe set on the " +
+      "resident path; the Spark path still prunes by cid partition filters") {
+    import org.apache.spark.metrics.source.CodegenMetrics
+    val c = new KaerSession(spark, tmpDir("resident-probe"),
+      HashingEmbedder(64)).createCollection("c")
+    c.insert(batch(0 until 600))
+    c.ensureIndex(nlist = 4, iters = 2)
+    val f = templates(2)
+    val texts = (0 until 24).map(i => s"doc $i topic ${i % 5}")
+    val probed = """cid#\d+L? IN \(([^)]*)\)""".r
+    // the lists each text probes, read from the Spark plan
+    val lists = texts.map(t => onSpark {
+      val p = c.explainQuery(t, 5, f, 2)
+      assert("PartitionFilters: \\[[^\\]]*cid#\\d+L? IN \\(".r
+        .findFirstIn(p).nonEmpty, p)
+      probed.findFirstMatchIn(p).get.group(1)
+    })
+    assert(lists.distinct.size >= 2, lists)
+    c.queryApprox(texts.head, 5, 2, f).collect()
+    val compiles = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    for (t <- texts.tail) {
+      val q = c.queryApprox(t, 5, 2, f)
+      assert(resident(q))
+      q.collect()
+    }
+    assert(CodegenMetrics.METRIC_COMPILATION_TIME.getCount == compiles)
+  }
 }

@@ -36,4 +36,28 @@ class SignedProjSpec extends SparkTestBase {
       .filter(col("c") =!= col("n")).count()
     assert(mismatches == 0)
   }
+
+  test("vector kernels compile in one class: cosineSim (a dot product " +
+      "and two norms) and two projections, with no fallback to " +
+      "interpreted evaluation") {
+    import org.apache.spark.sql.graft.ColumnBridge.{column => toCol, expression => toExpr}
+    val v = spark.range(1, 6).select(
+      array(col("id").cast("float"), lit(1f), lit(2f)).as("a"),
+      array(lit(3f), col("id").cast("float"), lit(0.5f)).as("b"))
+    def proj(c: String) = toCol(graft.expr.SignedProjExpr(toExpr(col(c)), 2))
+    val q = Seq(VectorFunctions.cosineSim(col("a"), col("b")), proj("a"),
+      proj("b"))
+    // a failed compile throws: for an expression under CODEGEN_ONLY,
+    // for a whole stage with the fallback off
+    val keys = Seq("spark.sql.codegen.factoryMode",
+      "spark.sql.codegen.fallback")
+    def run(mode: String): Seq[Seq[Any]] = {
+      spark.conf.set(keys(0), mode)
+      spark.conf.set(keys(1), "false")
+      try v.select(q: _*).collect().toSeq.map(_.toSeq)
+      finally keys.foreach(spark.conf.unset)
+    }
+    val compiled = run("CODEGEN_ONLY")
+    assert(compiled.size == 5 && compiled == run("NO_CODEGEN"))
+  }
 }

@@ -236,6 +236,33 @@ class DedupSpec extends SparkTestBase {
     assert(chain(ex).contains("bucket overflow"), chain(ex).take(500))
   }
 
+  test("the incremental index is kept per minhash_k: a run under another " +
+      "k with the same band count returns the fresh-build pairs") {
+    import java.nio.file.{Files, Paths, StandardCopyOption}
+    /** A copy of sf0001's documents in a new directory. */
+    def corpus(name: String): String = {
+      val d = tmpDir(name)
+      Files.copy(Paths.get(s"$sf0001/documents.parquet"),
+        Paths.get(s"$d/documents.parquet"), StandardCopyOption.COPY_ATTRIBUTES)
+      d
+    }
+    val key = "graft.dedup.minhash_k"
+    def pairs(dir: String, k: Int): Seq[(Long, Long)] = {
+      spark.conf.set(key, k.toString)
+      try Dedup.dedupIncremental(spark, dir).collect()
+        .map(r => (r.getLong(0), r.getLong(1))).toSeq
+      finally spark.conf.unset(key)
+    }
+    val (a, b) = (corpus("inc-a"), corpus("inc-b"))
+    try {
+      val fresh = pairs(b, 16)
+      pairs(a, 12)
+      assert(fresh.nonEmpty && pairs(a, 16) == fresh)
+    } finally for (d <- Seq(a, b); k <- Seq(12, 16))
+      org.apache.commons.io.FileUtils.deleteQuietly(
+        new java.io.File(Dedup.incrementalIndex(d, k, 4)))
+  }
+
   test("dedupLshEval: precision is exactly 1 (both sides verify with " +
       "the same threshold), recall high, common bounded by both sides") {
     val r = Dedup.dedupLshEval(spark, "/root/testdata/sf0.001").head()
